@@ -245,6 +245,118 @@ HEADLINE = [
 ]
 
 
+def emit(result: dict, repo: str) -> None:
+    """Mirror the run's one-line JSON to BENCH_OUT.json and append its
+    entry to the BENCH_LOCAL history under *repo*, then print the line
+    as the last stdout line whatever the housekeeping raised."""
+    one_line = json.dumps(result)
+    runs = result["extended_runs"]
+
+    # Harden the one-line-JSON channel (r15 verdict task 1): the
+    # driver keeps only a ~2,000-char TAIL of stdout, which truncated
+    # the head of this (much longer) line for 12 straight rounds and
+    # made round-over-round PERF comparison impossible. Two defenses:
+    # (a) the line is mirrored VERBATIM to BENCH_OUT.json (atomic
+    # write), a fixed sidecar either channel can read; (b) the print
+    # moves to the very END of the run — after all history
+    # housekeeping — so it is the guaranteed-last stdout line and the
+    # kept tail ends exactly at its terminator. Content and
+    # methodology are byte-identical to r15; only the emit order and
+    # the sidecar are new.
+    try:
+        out_path = os.path.join(repo, "BENCH_OUT.json")
+        tmp_out = out_path + ".tmp"
+        with open(tmp_out, "w") as f:
+            f.write(one_line + "\n")
+        os.replace(tmp_out, out_path)
+    except OSError:
+        pass  # read-only checkout: the stdout line below still lands
+
+    # Durable full-per-query artifact (r6 verdict task 4): the driver
+    # stores only a 2,000-char tail of this stdout, which truncates
+    # the per-query map to ~40 rows — so round-over-round regression
+    # checks were limited to that overlap. BENCH_LOCAL.json keeps the
+    # COMPLETE map for every run, appended per invocation, so any
+    # per-lane drift is mechanically diffable across rounds.
+    try:
+        path = os.path.join(repo, "BENCH_LOCAL.json")
+        history = []
+        if os.path.exists(path):
+            try:
+                with open(path) as f:
+                    history = json.load(f)
+            except ValueError:
+                history = []  # corrupt/partial file: restart history, don't wedge
+        sys.path.insert(0, os.path.join(repo, "tools"))
+        try:
+            from bench_history import contended, entry_dict
+
+            # end-of-run load_1m INCLUDES the bench's own local[32]
+            # load (~4-6), hence the raised allowance; the per-lane
+            # loads carry the relative signal either way
+            is_contended = contended(
+                os.getloadavg()[0], result["loads"], load_allowance=8.0
+            )
+            # the canonical entry shape shared with the merge recorder
+            # (r14 verdict task 6) — note="" marks an unnoted
+            # per-invocation append
+            entry = entry_dict(
+                recorded_at=time.strftime("%Y-%m-%dT%H:%M:%S"),
+                runs=runs,
+                load_1m=os.getloadavg()[0],
+                contended=is_contended,
+                note="",
+                metric=result["metric"],
+                value=result["value"],
+                queries=result["queries"],
+                extended=result["extended"],
+                extended_runs=runs,
+                loads=result["loads"],
+                excluded={},
+                sf=result["sf"],
+            )
+        except Exception:
+            # history append must never fail on tooling import — fall
+            # back to the raw result with minimal context
+            entry = {
+                "recorded_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
+                "runs": runs,
+                "load_1m": os.getloadavg()[0],
+                "contended": False,
+                **result,
+            }
+        history.append(entry)
+        # write-to-tmp + atomic rename: an interrupted run must never
+        # leave a truncated file that poisons every later invocation
+        tmp = path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(history, f, indent=1)
+        os.replace(tmp, path)
+        # Rolling inline window (r11 task 7, policy tightened r12
+        # task 7): unnoted per-invocation entries older than the two
+        # newest NOTED recordings spill to BENCH_LOCAL_ARCHIVE.json —
+        # the full per-lane maps were dominating repo diffs.
+        # tools/bench_history.load_history() reads archive+inline as
+        # one list, so bench_diff indices and noted-entry lookups are
+        # unchanged. Best-effort housekeeping in its own guard (r13
+        # ADVICE): an ImportError (bench.py shipped without tools/)
+        # must not crash the run after all measurement work is done.
+        try:
+            from bench_history import spill
+
+            spill(repo)
+        except Exception:
+            pass
+    except Exception as e:
+        # a read-only checkout, or a history file that is not a JSON
+        # list: the run's result stands either way
+        print(f"WARNING: bench history not recorded ({type(e).__name__}: {e})", file=sys.stderr)
+    finally:
+        # guaranteed-last stdout line (see the BENCH_OUT.json note above)
+        print(one_line)
+        sys.stdout.flush()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from sf_etl_spark.queries import all_queries
@@ -350,112 +462,7 @@ def main() -> None:
         "excluded": {},  # every registered lane is timed above
         "sf": sf,
     }
-    one_line = json.dumps(result)
-
-    # Harden the one-line-JSON channel (r15 verdict task 1): the
-    # driver keeps only a ~2,000-char TAIL of stdout, which truncated
-    # the head of this (much longer) line for 12 straight rounds and
-    # made round-over-round PERF comparison impossible. Two defenses:
-    # (a) the line is mirrored VERBATIM to BENCH_OUT.json (atomic
-    # write), a fixed sidecar either channel can read; (b) the print
-    # moves to the very END of the run — after all history
-    # housekeeping — so it is the guaranteed-last stdout line and the
-    # kept tail ends exactly at its terminator. Content and
-    # methodology are byte-identical to r15; only the emit order and
-    # the sidecar are new.
-    try:
-        out_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_OUT.json"
-        )
-        tmp_out = out_path + ".tmp"
-        with open(tmp_out, "w") as f:
-            f.write(one_line + "\n")
-        os.replace(tmp_out, out_path)
-    except OSError:
-        pass  # read-only checkout: the stdout line below still lands
-
-    # Durable full-per-query artifact (r6 verdict task 4): the driver
-    # stores only a 2,000-char tail of this stdout, which truncates
-    # the per-query map to ~40 rows — so round-over-round regression
-    # checks were limited to that overlap. BENCH_LOCAL.json keeps the
-    # COMPLETE map for every run, appended per invocation, so any
-    # per-lane drift is mechanically diffable across rounds.
-    try:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        path = os.path.join(repo, "BENCH_LOCAL.json")
-        history = []
-        if os.path.exists(path):
-            try:
-                with open(path) as f:
-                    history = json.load(f)
-            except ValueError:
-                history = []  # corrupt/partial file: restart history, don't wedge
-        sys.path.insert(0, os.path.join(repo, "tools"))
-        try:
-            from bench_history import contended, entry_dict
-
-            # end-of-run load_1m INCLUDES the bench's own local[32]
-            # load (~4-6), hence the raised allowance; the per-lane
-            # loads carry the relative signal either way
-            is_contended = contended(
-                os.getloadavg()[0], loads, load_allowance=8.0
-            )
-            # the canonical entry shape shared with the merge recorder
-            # (r14 verdict task 6) — note="" marks an unnoted
-            # per-invocation append
-            entry = entry_dict(
-                recorded_at=time.strftime("%Y-%m-%dT%H:%M:%S"),
-                runs=runs,
-                load_1m=os.getloadavg()[0],
-                contended=is_contended,
-                note="",
-                metric=result["metric"],
-                value=result["value"],
-                queries=timings,
-                extended=extended,
-                extended_runs=runs,
-                loads=loads,
-                excluded={},
-                sf=sf,
-            )
-        except Exception:
-            # history append must never fail on tooling import — fall
-            # back to the raw result with minimal context
-            entry = {
-                "recorded_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
-                "runs": runs,
-                "load_1m": os.getloadavg()[0],
-                "contended": False,
-                **result,
-            }
-        history.append(entry)
-        # write-to-tmp + atomic rename: an interrupted run must never
-        # leave a truncated file that poisons every later invocation
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(history, f, indent=1)
-        os.replace(tmp, path)
-        # Rolling inline window (r11 task 7, policy tightened r12
-        # task 7): unnoted per-invocation entries older than the two
-        # newest NOTED recordings spill to BENCH_LOCAL_ARCHIVE.json —
-        # the full per-lane maps were dominating repo diffs.
-        # tools/bench_history.load_history() reads archive+inline as
-        # one list, so bench_diff indices and noted-entry lookups are
-        # unchanged. Best-effort housekeeping in its own guard (r13
-        # ADVICE): an ImportError (bench.py shipped without tools/)
-        # must not crash the run after all measurement work is done.
-        try:
-            from bench_history import spill
-
-            spill(repo)
-        except Exception:
-            pass
-    except OSError:
-        pass  # read-only checkout: the stdout line below still lands
-
-    # guaranteed-last stdout line (see the BENCH_OUT.json note above)
-    print(one_line)
-    sys.stdout.flush()
+    emit(result, os.path.dirname(os.path.abspath(__file__)))
 
     spark.stop()
 

@@ -1986,11 +1986,14 @@ def _pq_train_codebooks(
         # bounded collect (<= M*C = 128 rows) and re-entry as a literal
         # relation — identical convention to the expr shape: consumers
         # referencing the codebook several times must not re-run the
-        # training job, and the literal broadcasts for free
-        out = {
-            (r["m"], r["c"]): [float(x) for x in r["w"]]
+        # training job, and the literal broadcasts for free. Seeded from
+        # `code`: an empty training sample forms no groups, and the fit
+        # then degrades to the seed codebook as the expr shape does
+        out = dict(code)
+        out.update(
+            ((r["m"], r["c"]), [float(x) for x in r["w"]])
             for r in trained.collect()
-        }
+        )
         return spark.createDataFrame(
             [(m, c, w) for (m, c), w in sorted(out.items())],
             "m int, c int, w array<double>",

@@ -22,6 +22,18 @@ from pyspark.sql import SparkSession
 #:  - Arrow: every Pandas-UDF / toPandas boundary is Arrow-batched.
 #:  - autoBroadcastJoinThreshold: dims (region/nation/customer at small
 #:    SF) broadcast automatically; large fact-fact joins still shuffle.
+#:  - codegen.cache.maxEntries: the generated-class cache is an LRU, and
+#:    pipelines rerun the same queries in the same order, so a cache
+#:    smaller than one pass's classes misses on every rerun: Janino
+#:    recompiles each class and HotSpot JIT-compiles it again (Spark's
+#:    default of 100 entries recompiles 175 classes per steady pass of
+#:    the 9-op analytics benchmark). One pass of the 147-lane bench.py
+#:    headline at sf0.1 compiles 2,013 distinct classes with a
+#:    100,000-entry cache, and a second pass 92 new ones; metaspace grows
+#:    89 MB over the first pass and 3 MB over the second. 4096 entries
+#:    hold that working set twice over. The conf is static: `get_spark`
+#:    sets it when it builds the session, and `apply_engine_conf` cannot
+#:    set it on a session that is already running.
 ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -32,6 +44,7 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.python.filterPushdown.enabled": "true",  # connector pushFilters
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.cbo.enabled": "true",
+    "spark.sql.codegen.cache.maxEntries": "4096",
     "spark.sql.session.timeZone": "UTC",
     # TIMESTAMP(NANOS) parquet columns: Spark refuses them outright
     # ([PARQUET_TYPE_ILLEGAL]) unless surfaced as raw longs; the events

@@ -9,6 +9,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
@@ -16,6 +18,7 @@ from bench_history import (  # noqa: E402
     IN_RUN_LOAD_CEILING,
     contended,
     load_history,
+    noted_pair,
     split_for_spill,
 )
 
@@ -86,6 +89,60 @@ def test_split_for_spill_keeps_from_second_newest_noted():
     unnoted = [{"recorded_at": f"u{i}"} for i in range(20)]
     to_archive, inline = split_for_spill(unnoted, keep_fallback=12)
     assert len(inline) == 12 and len(to_archive) == 8
+
+
+def test_mixed_sf_history_pairs_and_spills_by_sf():
+    """sf1-leg entries (sf="1probe") are noted but never pair with an
+    sf0.1 entry, and do not count toward the spill's noted window."""
+    hist = [
+        {"recorded_at": "t0", "note": "r1", "sf": "0.1"},
+        {"recorded_at": "t1", "sf": "0.1"},
+        {"recorded_at": "t2", "note": "r2", "sf": "0.1"},
+        {"recorded_at": "t3", "note": "leg a", "sf": "1probe"},
+        {"recorded_at": "t4", "note": "r3", "sf": "0.1", "contended": True},
+        {"recorded_at": "t5", "note": "leg b", "sf": "1probe"},
+        {"recorded_at": "t6", "sf": "0.1"},
+    ]
+    old, new = noted_pair(hist)
+    assert (old["recorded_at"], new["recorded_at"]) == ("t3", "t5")
+    old, new = noted_pair(hist[:5])
+    assert (old["recorded_at"], new["recorded_at"]) == ("t0", "t2")
+    old, new = noted_pair(hist[:5], include_contended=True)
+    assert (old["recorded_at"], new["recorded_at"]) == ("t2", "t4")
+    with pytest.raises(ValueError, match="same sf"):
+        noted_pair(hist[2:4])
+    to_archive, inline = split_for_spill(hist)
+    assert [e["recorded_at"] for e in to_archive] == ["t0", "t1"]
+    assert [e["recorded_at"] for e in inline] == ["t2", "t3", "t4", "t5", "t6"]
+
+
+def test_bench_result_line_survives_history_failure(tmp_path, capsys):
+    """A history file that is valid JSON but not a list makes the
+    append raise a non-OS error; the result line must still be the
+    last stdout line, and BENCH_OUT.json must still hold it."""
+    import json
+
+    import bench
+
+    (tmp_path / "BENCH_LOCAL.json").write_text("{}")
+    result = {
+        "metric": "headline_queries_total_sec",
+        "value": 1.0,
+        "unit": "sec",
+        "queries": {"a": 1.0},
+        "extended": {"b": 2.0},
+        "extended_total_sec": 2.0,
+        "extended_runs": 3,
+        "loads": {"a": 0.1, "b": 0.2},
+        "excluded": {},
+        "sf": "0.1",
+    }
+    bench.emit(result, str(tmp_path))
+    captured = capsys.readouterr()
+    assert captured.out.splitlines()[-1] == json.dumps(result)
+    assert "bench history not recorded" in captured.err
+    assert (tmp_path / "BENCH_OUT.json").read_text() == json.dumps(result) + "\n"
+    assert (tmp_path / "BENCH_LOCAL.json").read_text() == "{}"
 
 
 def test_bench_headline_membership_invariants():

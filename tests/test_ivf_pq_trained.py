@@ -289,3 +289,24 @@ def test_train_codebooks_rejects_unknown_impl(spark):
 
     with pytest.raises(ValueError, match="impl"):
         _pq_train_codebooks(spark, normalized_vectors(spark, SF_DIR), impl="nope")
+
+
+def test_empty_training_sample_keeps_seed_codebook(spark):
+    """A sample that keeps no vector forms no Lloyd groups; the grouped
+    fit must return the seed codebook, as the expr shape does, not an
+    empty one."""
+    from sf_etl_spark.queries.similarity import (
+        _pq_codebook,
+        _pq_train_codebooks,
+        _train_sample,
+        normalized_vectors,
+    )
+
+    n = normalized_vectors(spark, SF_DIR)
+    mod = 1 << 62  # no xxhash64 of a fixture vec_id is a multiple
+    assert _train_sample(n, mod).count() == 0
+    seed = {(r["m"], r["c"]): [float(x) for x in r["w"]] for r in _pq_codebook(spark, n).collect()}
+    assert seed
+    for impl in ("grouped", "expr"):
+        cb = _pq_train_codebooks(spark, n, iters=2, train_sample_mod=mod, impl=impl)
+        assert {(r["m"], r["c"]): r["w"] for r in cb.collect()} == seed, impl

@@ -69,9 +69,12 @@ def test_construct_declarations_cover_eager_sources():
     a lane whose own source (or its operator helpers) writes temp
     targets, trains an ML model, collects, or localCheckpoints at
     construction time must declare the flag — catching the common
-    failure (a new write-side/eager lane forgetting it) without
-    relying on job counting, which can't distinguish eager work from
-    the one parquet footer-inference job every table read costs.
+    failure (a new write-side/eager lane forgetting it) from source
+    text alone. Table reads no longer run a job once a file's footer
+    has been checked in the session, so counting jobs at construction
+    could replace this text heuristic; it has not yet, because several
+    streaming lanes run micro-batches inside helpers at construction
+    without declaring the flag.
     The reverse direction (a declared lane going lazy) is reviewed by
     hand: over-declaring only makes the pure-analysis pass smaller,
     never incorrect."""

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Diff two BENCH_LOCAL.json entries per lane (default: the last two
-NOTED entries — the deliberate quiet-host recordings; bench.py also
-appends an unnoted entry per raw invocation, which are measurement
-inputs, not round markers). Usage:
+"""Diff two BENCH_LOCAL.json entries per lane (default: the newest
+NOTED entry and the newest noted one before it at the same sf — the
+deliberate quiet-host recordings; bench.py also appends an unnoted
+entry per raw invocation, which are measurement inputs, not round
+markers). Usage:
 
     python tools/bench_diff.py [idx_old idx_new] [--threshold 0.15]
 
@@ -18,7 +19,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench_history import load_history  # noqa: E402
+from bench_history import load_history, noted_pair  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -42,18 +43,10 @@ def main() -> None:
         # contended entries (recorder-flagged, r13 verdict task 7) are
         # not valid ratio denominators/numerators — skip them unless
         # explicitly requested; explicit indices bypass the filter
-        noted = [
-            e
-            for e in hist
-            if e.get("note")
-            and (ns.include_contended or not e.get("contended"))
-        ]
-        if len(noted) < 2:
-            raise SystemExit(
-                "need two noted non-contended entries "
-                "(--include-contended or pass two indices)"
-            )
-        old, new = noted[-2], noted[-1]
+        try:
+            old, new = noted_pair(hist, ns.include_contended)
+        except ValueError as e:
+            raise SystemExit(str(e)) from None
     print(f"old: {old.get('recorded_at')} {old.get('note', '')!r}")
     print(f"new: {new.get('recorded_at')} {new.get('note', '')!r}")
     for e, tag in ((old, "old"), (new, "new")):

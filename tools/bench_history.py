@@ -116,17 +116,25 @@ def contended(
     return busy >= max(3, len(vals) // 20)
 
 
+#: ``sf`` of the sf1-leg recordings (tools/sf1_leg.py): noted, but a
+#: separate trend from the sf0.1 bench rounds
+SF1_LEG = "1probe"
+
+
 def split_for_spill(history: list, keep_fallback: int = 12) -> tuple[list, list]:
     """Partition *history* (the inline BENCH_LOCAL list, recording
     order) into ``(to_archive, inline)`` under the r12-verdict-task-7
-    policy: everything older than the second-newest NOTED entry spills
-    — unnoted per-invocation entries are measurement inputs, not round
-    markers, and they were accreting inline between deliberate
-    recordings. With fewer than two noted entries, fall back to a
-    fixed newest-``keep_fallback`` window so the inline file is
-    bounded from the first run.
+    policy: everything older than the second-newest NOTED bench entry
+    spills — unnoted per-invocation entries are measurement inputs, not
+    round markers, and they were accreting inline between deliberate
+    recordings; sf1-leg entries are not round markers either. With
+    fewer than two noted entries, fall back to a fixed
+    newest-``keep_fallback`` window so the inline file is bounded from
+    the first run.
     """
-    noted = [i for i, e in enumerate(history) if e.get("note")]
+    noted = [
+        i for i, e in enumerate(history) if e.get("note") and e.get("sf") != SF1_LEG
+    ]
     if len(noted) >= 2:
         cut = noted[-2]
     else:
@@ -168,6 +176,26 @@ def spill(repo: str = REPO) -> None:
     with open(tmp, "w") as f:
         json.dump(inline, f, indent=1)
     os.replace(tmp, path)
+
+
+def noted_pair(history: list, include_contended: bool = False) -> tuple[dict, dict]:
+    """bench_diff's default (old, new) pair: *new* is the newest noted
+    entry with an earlier noted entry at the same ``sf``, and *old* the
+    newest of those — an sf1-leg entry against an sf0.1 one would show
+    every lane as a ~10x mover. Contended entries are skipped unless
+    *include_contended*."""
+    noted = [
+        e for e in history if e.get("note") and (include_contended or not e.get("contended"))
+    ]
+    for i in range(len(noted) - 1, 0, -1):
+        new = noted[i]
+        for old in reversed(noted[:i]):
+            if old.get("sf") == new.get("sf"):
+                return old, new
+    raise ValueError(
+        "need two noted non-contended entries at the same sf "
+        "(--include-contended or pass two indices)"
+    )
 
 
 def load_history(repo: str = REPO) -> list:

@@ -38,11 +38,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def pick_top_lanes(n: int) -> list[str]:
-    from bench_history import load_history
+    from bench_history import SF1_LEG, load_history
 
     for entry in reversed(load_history()):
         merged = {**entry.get("queries", {}), **entry.get("extended", {})}
-        if len(merged) > 100 and entry.get("sf") not in ("1probe",):
+        if len(merged) > 100 and entry.get("sf") != SF1_LEG:
             ranked = sorted(merged.items(), key=lambda kv: -kv[1])
             return [name for name, _ in ranked[:n]]
     raise SystemExit("no full per-lane BENCH_LOCAL entry to rank lanes from")
@@ -101,7 +101,7 @@ def main() -> None:
         print(f"{name}: {timings[name]} s", file=sys.stderr)
     spark.stop()
 
-    from bench_history import contended, entry_dict
+    from bench_history import SF1_LEG, contended, entry_dict
 
     entry = entry_dict(
         recorded_at=time.strftime("%Y-%m-%dT%H:%M:%S"),
@@ -116,7 +116,7 @@ def main() -> None:
         extended_runs=args.runs,
         loads=loads,
         excluded={},
-        sf="1probe",
+        sf=SF1_LEG,
     )
     path = os.path.join(REPO, "BENCH_LOCAL.json")
     history = []
