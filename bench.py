@@ -1,12 +1,21 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness and the lane-timing core the tools share.
 
-Each query is executed to completion with a cheap terminal action
-(count) so the full plan runs but no result set serializes to the
-driver — what matters is engine throughput, not toPandas cost.
+Run as a script, it times every registered lane at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test fixture) on local[$SPARK_GRAFT_CPUS]:
+best-of-$SPARK_GRAFT_BENCH_RUNS (default 3), each run built and
+executed to completion with count(), so the full plan runs but no
+result set serializes to the driver. It prints ONE JSON line as the
+last stdout line: {"metric": ..., "value": headline_total_sec,
+"unit": "sec", "queries": {name: sec}, "extended": {name: sec}, ...,
+"sf": ...}, mirrors it to BENCH_OUT.json, and appends the run's entry
+to the append-only history BENCH_LOCAL.jsonl.
+
+The core: warm_up, best_of and time_lanes time lanes; append_entry and
+load_history write and read the history. tools/sf1_leg.py,
+tools/opt_measure.py, tools/record_bench_local.py and
+tools/bench_diff.py import them from here, and bench.py needs nothing
+from tools/ to run.
 """
 
 from __future__ import annotations
@@ -245,24 +254,125 @@ HEADLINE = [
 ]
 
 
-def emit(result: dict, repo: str) -> None:
-    """Mirror the run's one-line JSON to BENCH_OUT.json and append its
-    entry to the BENCH_LOCAL history under *repo*, then print the line
-    as the last stdout line whatever the housekeeping raised."""
-    one_line = json.dumps(result)
-    runs = result["extended_runs"]
+#: the checkout this file lives in; BENCH_OUT.json and the history go here
+REPO = os.path.dirname(os.path.abspath(__file__))
 
-    # Harden the one-line-JSON channel (r15 verdict task 1): the
-    # driver keeps only a ~2,000-char TAIL of stdout, which truncated
-    # the head of this (much longer) line for 12 straight rounds and
-    # made round-over-round PERF comparison impossible. Two defenses:
-    # (a) the line is mirrored VERBATIM to BENCH_OUT.json (atomic
-    # write), a fixed sidecar either channel can read; (b) the print
-    # moves to the very END of the run — after all history
-    # housekeeping — so it is the guaranteed-last stdout line and the
-    # kept tail ends exactly at its terminator. Content and
-    # methodology are byte-identical to r15; only the emit order and
-    # the sidecar are new.
+#: append-only bench history: one JSON entry per line, oldest first
+HISTORY = "BENCH_LOCAL.jsonl"
+
+
+def append_entry(repo: str, entry: dict) -> None:
+    """Append *entry* as one line of the history under *repo*: a single
+    write, then flush and fsync, so earlier lines are never rewritten.
+    A torn last line (an interrupted writer) is terminated first, so it
+    stays one line that :func:`load_history` skips."""
+    with open(os.path.join(repo, HISTORY), "ab+") as f:
+        end = f.seek(0, os.SEEK_END)
+        f.seek(max(0, end - 1))
+        torn = end > 0 and f.read(1) != b"\n"
+        f.write((b"\n" if torn else b"") + json.dumps(entry).encode() + b"\n")
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def load_history(repo: str = REPO) -> list[dict]:
+    """The history's entries in recording order. A line that does not
+    parse is skipped with a warning on stderr."""
+    path = os.path.join(repo, HISTORY)
+    if not os.path.exists(path):
+        return []
+    out = []
+    with open(path) as f:
+        for n, line in enumerate(f, 1):
+            try:
+                out.append(json.loads(line))
+            except ValueError:
+                print(f"WARNING: {HISTORY} line {n} does not parse; skipped", file=sys.stderr)
+    return out
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the JVM and parquet footers with q5 at *sf_dir*, then the
+    session's streaming engine (~3 s) and Python DataSource bridge
+    (~4 s) with stream_sink_sfetl_native at the smallest fixture, so
+    timings measure steady state. Without the second step the spin-up
+    lands on whichever stream/sfetl lane is timed first (measured +9 s
+    on that lane). The smallest fixture is sf_dir's sibling sf0.001
+    when it exists, else sf_dir; a failed machinery warm-up is reported,
+    not raised, so the skew is visible."""
+    from sf_etl_spark.queries import all_queries
+
+    specs = all_queries()
+    specs["q5_revenue_by_nation"].fn(spark, sf_dir).count()
+    smallest = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    warm_dir = smallest if os.path.isdir(smallest) else sf_dir
+    try:
+        specs["stream_sink_sfetl_native"].fn(spark, warm_dir).count()
+    except Exception as e:  # warm-up must never fail the bench
+        print(
+            f"WARNING: machinery warm-up failed ({type(e).__name__}: {e}); "
+            "first stream/sfetl lane will absorb session spin-up",
+            file=sys.stderr,
+        )
+
+
+def best_of(spark, fn, sf_dir: str, runs: int, label: str, action: str = "count") -> float:
+    """Best wall time of *runs* repeats of a lane *fn*, each timed from
+    DataFrame construction through *action*: ``count`` (the driver's
+    terminal action) or ``noop`` (Spark's noop sink, which computes
+    every column of every row). Jobs carry *label* as their
+    description.
+
+    Best-of-N because the host shows multi-second CPU-contention bursts
+    (identical single-task stages vary 10-40x between runs); the
+    minimum measures the engine, not the neighbour."""
+    sc = spark.sparkContext
+    best = float("inf")
+    for _ in range(runs):
+        sc.setJobDescription(label)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        if action == "noop":
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            df.count()
+        best = min(best, time.perf_counter() - t0)
+        sc.setJobDescription(None)
+    return best
+
+
+def time_lanes(
+    spark, names, sf_dir: str, runs: int, action: str = "count"
+) -> tuple[dict[str, float], dict[str, float]]:
+    """Time each registered lane in *names* with :func:`best_of`,
+    printing each result to stderr. Returns ``(timings, loads)``: each
+    lane's best seconds rounded to the millisecond, and the host's
+    load_1m sampled as the lane finishes, so bench_diff can flag movers
+    recorded under contention."""
+    from sf_etl_spark.queries import all_queries
+
+    specs = all_queries()
+    timings: dict[str, float] = {}
+    loads: dict[str, float] = {}
+    for name in names:
+        timings[name] = round(best_of(spark, specs[name].fn, sf_dir, runs, name, action), 3)
+        loads[name] = round(os.getloadavg()[0], 2)
+        print(f"{name}: {timings[name]} s", file=sys.stderr)
+    return timings, loads
+
+
+def emit(result: dict, repo: str) -> None:
+    """Write the run's one-line JSON to BENCH_OUT.json under *repo*,
+    append the run's entry to the history there, then print the line as
+    the last stdout line whatever that housekeeping raised.
+
+    The driver keeps only a ~2,000-char tail of stdout, which truncated
+    the head of this line for 12 rounds. So the line is mirrored
+    verbatim to BENCH_OUT.json (atomic write), and it is printed last,
+    after all housekeeping, so the kept tail ends at its terminator.
+    The history keeps the complete per-lane map of every run, so any
+    lane's drift can be diffed across rounds (tools/bench_diff.py)."""
+    one_line = json.dumps(result)
     try:
         out_path = os.path.join(repo, "BENCH_OUT.json")
         tmp_out = out_path + ".tmp"
@@ -272,40 +382,30 @@ def emit(result: dict, repo: str) -> None:
     except OSError:
         pass  # read-only checkout: the stdout line below still lands
 
-    # Durable full-per-query artifact (r6 verdict task 4): the driver
-    # stores only a 2,000-char tail of this stdout, which truncates
-    # the per-query map to ~40 rows — so round-over-round regression
-    # checks were limited to that overlap. BENCH_LOCAL.json keeps the
-    # COMPLETE map for every run, appended per invocation, so any
-    # per-lane drift is mechanically diffable across rounds.
     try:
-        path = os.path.join(repo, "BENCH_LOCAL.json")
-        history = []
-        if os.path.exists(path):
-            try:
-                with open(path) as f:
-                    history = json.load(f)
-            except ValueError:
-                history = []  # corrupt/partial file: restart history, don't wedge
+        runs = result["extended_runs"]
+        load_1m = os.getloadavg()[0]
         sys.path.insert(0, os.path.join(repo, "tools"))
         try:
             from bench_history import contended, entry_dict
-
-            # end-of-run load_1m INCLUDES the bench's own local[32]
-            # load (~4-6), hence the raised allowance; the per-lane
-            # loads carry the relative signal either way
-            is_contended = contended(
-                os.getloadavg()[0], result["loads"], load_allowance=8.0
-            )
-            # the canonical entry shape shared with the merge recorder
-            # (r14 verdict task 6) — note="" marks an unnoted
-            # per-invocation append
+        except ImportError:
+            # bench.py shipped without tools/: record the raw result
+            entry = {
+                "recorded_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
+                "runs": runs,
+                "load_1m": load_1m,
+                "contended": False,
+                **result,
+            }
+        else:
             entry = entry_dict(
                 recorded_at=time.strftime("%Y-%m-%dT%H:%M:%S"),
                 runs=runs,
-                load_1m=os.getloadavg()[0],
-                contended=is_contended,
-                note="",
+                load_1m=load_1m,
+                # the end-of-run load includes the bench's own load
+                # (~4-6 at local[32]), hence the raised allowance
+                contended=contended(load_1m, result["loads"], load_allowance=8.0),
+                note="",  # an unnoted per-invocation entry
                 metric=result["metric"],
                 value=result["value"],
                 queries=result["queries"],
@@ -315,44 +415,12 @@ def emit(result: dict, repo: str) -> None:
                 excluded={},
                 sf=result["sf"],
             )
-        except Exception:
-            # history append must never fail on tooling import — fall
-            # back to the raw result with minimal context
-            entry = {
-                "recorded_at": time.strftime("%Y-%m-%dT%H:%M:%S"),
-                "runs": runs,
-                "load_1m": os.getloadavg()[0],
-                "contended": False,
-                **result,
-            }
-        history.append(entry)
-        # write-to-tmp + atomic rename: an interrupted run must never
-        # leave a truncated file that poisons every later invocation
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(history, f, indent=1)
-        os.replace(tmp, path)
-        # Rolling inline window (r11 task 7, policy tightened r12
-        # task 7): unnoted per-invocation entries older than the two
-        # newest NOTED recordings spill to BENCH_LOCAL_ARCHIVE.json —
-        # the full per-lane maps were dominating repo diffs.
-        # tools/bench_history.load_history() reads archive+inline as
-        # one list, so bench_diff indices and noted-entry lookups are
-        # unchanged. Best-effort housekeeping in its own guard (r13
-        # ADVICE): an ImportError (bench.py shipped without tools/)
-        # must not crash the run after all measurement work is done.
-        try:
-            from bench_history import spill
-
-            spill(repo)
-        except Exception:
-            pass
+        append_entry(repo, entry)
     except Exception as e:
-        # a read-only checkout, or a history file that is not a JSON
-        # list: the run's result stands either way
+        # a read-only checkout or an unwritable history: the run's
+        # result stands either way
         print(f"WARNING: bench history not recorded ({type(e).__name__}: {e})", file=sys.stderr)
     finally:
-        # guaranteed-last stdout line (see the BENCH_OUT.json note above)
         print(one_line)
         sys.stdout.flush()
 
@@ -364,89 +432,26 @@ def main() -> None:
 
     spark = get_spark("sf_etl_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = all_queries()
+    warm_up(spark, sf_dir)
 
-    # Warm the JVM + parquet footers once so timings measure steady
-    # state (the driver compares engine throughput, not JIT warmup).
-    specs["q5_revenue_by_nation"].fn(spark, sf_dir).count()
-    # Machinery warm-up at the SMALLEST available fixture: the first
-    # session use of the streaming engine (~3 s) and of the Python
-    # DataSource bridge (~4 s) is session-scoped spin-up, not operator
-    # work — without this it lands on whichever stream/sfetl lane
-    # happens to run first in the one-shot group (measured +9 s on
-    # that lane). The fixture is derived from sf_dir's parent (r11
-    # ADVICE: a hardcoded path silently no-ops on other hosts), and a
-    # skipped/failed warm-up is REPORTED so the skew is visible.
-    warm_dir = next(
-        (
-            d
-            for d in (
-                os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001"),
-                sf_dir,
-            )
-            if os.path.isdir(d)
-        ),
-        sf_dir,
-    )
-    try:
-        specs["stream_sink_sfetl_native"].fn(spark, warm_dir).count()
-    except Exception as e:  # warm-up must never fail the bench
-        print(
-            f"WARNING: machinery warm-up failed ({type(e).__name__}: {e}); "
-            "first stream/sfetl lane will absorb session spin-up",
-            file=sys.stderr,
-        )
-
-    # Best-of-N per query: the host VM exhibits multi-second CPU-
-    # contention bursts (identical single-task stages vary 10-40x
-    # between runs); min-of-N measures the engine, not the neighbor.
     # Default N=3: the r4 "1.44x drift vs r2" on UNCHANGED code fell to
     # 1.14x (zero queries >=1.5x) the moment best-of-2 became best-of-3
     # — adjudicated as contention noise, recorded in PLANS.md round 5.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    timings: dict[str, float] = {}
-    # Per-LANE host-load context (r10 verdict task 6): one load_1m
-    # sample as each lane finishes, so bench_diff can flag movers
-    # recorded under contention instead of trusting a single
-    # per-entry load taken at launch (the r10 one-shot trend was
-    # briefly polluted by a load-5 driver run).
-    loads: dict[str, float] = {}
-    for name in HEADLINE:
-        fn = specs[name].fn
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
-        loads[name] = round(os.getloadavg()[0], 2)
+    timings, loads = time_lanes(spark, HEADLINE, sf_dir, runs)
 
     # Every registered lane NOT in the headline runs best-of-N too
-    # ("extended", r13 verdict task 3 — known pre-r14 as the
-    # single-run "oneshot" group): the lanes under ACTIVE development
-    # are exactly the ones that land here first, and their
-    # round-over-round story was resting on 1-shot numbers on a host
-    # whose same-code totals swing 1.5x in a day. Construct-executing
-    # lanes (merges, streaming replays, ML fits) re-run their fixed
-    # machinery each repeat, so their min still contains it — that is
-    # the lane's real cost — but the min strips the host-contention
-    # bursts, which was the point. Membership is automatic: any future
-    # lane lands in `extended` unless promoted into HEADLINE; the
-    # headline map keeps its frozen 147-lane membership so `value`
-    # stays round-comparable across the whole history.
-    extended: dict[str, float] = {}
+    # ("extended"): the lanes under active development land here first.
+    # Construct-executing lanes (merges, streaming replays, ML fits)
+    # re-run their fixed machinery each repeat, so their min still
+    # contains it — that is the lane's real cost. Membership is
+    # automatic; the headline keeps its frozen 147-lane membership so
+    # `value` stays round-comparable across the whole history.
     headline_set = set(HEADLINE)
-    for name, spec in specs.items():
-        if name in headline_set:
-            continue
-        fn = spec.fn
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        extended[name] = round(best, 3)
-        loads[name] = round(os.getloadavg()[0], 2)
+    extended, extended_loads = time_lanes(
+        spark, [n for n in all_queries() if n not in headline_set], sf_dir, runs
+    )
+    loads.update(extended_loads)
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -462,7 +467,7 @@ def main() -> None:
         "excluded": {},  # every registered lane is timed above
         "sf": sf,
     }
-    emit(result, os.path.dirname(os.path.abspath(__file__)))
+    emit(result, REPO)
 
     spark.stop()
 

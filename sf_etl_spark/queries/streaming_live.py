@@ -72,6 +72,7 @@ def _stage(spark: SparkSession, sf_dir: str, duplicate: bool = False) -> str:
     ORDER BY window_start, event_type
     """,
     doc="REAL readStream replay of the 1h tumbling agg (complete mode)",
+    executes_on_construct=True,
 )
 def stream_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.streaming import events_stream, run_to_memory_table, stream_tumbling_agg
@@ -95,6 +96,7 @@ def stream_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id FROM events ORDER BY event_id
     """,
     doc="dropDuplicatesWithinWatermark under duplicated at-least-once replay",
+    executes_on_construct=True,
 )
 def stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.streaming import (
@@ -127,6 +129,7 @@ def stream_dedup_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY click_id, purchase_id
     """,
     doc="REAL stream-stream interval join (watermarked both sides, state-pruned)",
+    executes_on_construct=True,
 )
 def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.streaming import (
@@ -180,6 +183,7 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     ORDER BY user_id, session_start
     """,
     doc="REAL readStream session windows (F.session_window, 5m gap, append mode)",
+    executes_on_construct=True,
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live session-window aggregation — ``F.session_window`` is the
@@ -247,6 +251,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY click_id, purchase_id
     """,
     doc="stream-stream LEFT OUTER join: unmatched clicks emitted as NULL rows at watermark eviction",
+    executes_on_construct=True,
 )
 def stream_stream_left_join_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The OUTER leg of the watermarked interval join: conversions
@@ -288,6 +293,7 @@ def stream_stream_left_join_unmatched(spark: SparkSession, sf_dir: str) -> DataF
     FROM events GROUP BY user_id ORDER BY user_id
     """,
     doc="applyInPandasWithState running per-user counts; final state vs batch agg",
+    executes_on_construct=True,
 )
 def stream_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.streaming import (
@@ -832,6 +838,7 @@ def stream_sink_sfetl_failed_rows_fb(spark: SparkSession, sf_dir: str) -> DataFr
     ORDER BY click_id, purchase_id
     """,
     doc="stream-stream FULL OUTER join: unmatched clicks AND orphaned purchases null-emit at their state evictions",
+    executes_on_construct=True,
 )
 def stream_stream_full_join_unmatched(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.streaming import (

@@ -1,26 +1,34 @@
 """Unit tests for the bench bookkeeping that the round workflow leans
-on (r13 verdict task 7 + the r14 review-pass fixes): the entry-level
-contended flag, the spill policy, and the bench lane-set invariants.
-Pure-Python — no Spark session.
+on: bench.py's lane-timing core and driver output, the append-only
+history, the entry-level contended flag, and the bench lane-set
+invariants. Pure-Python — no Spark session: lanes, session and clock
+are stubs.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import sys
+import time
+import types
 
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
+import bench  # noqa: E402
+from bench import HISTORY, append_entry, load_history  # noqa: E402
 from bench_history import (  # noqa: E402
     IN_RUN_LOAD_CEILING,
     contended,
-    load_history,
     noted_pair,
-    split_for_spill,
 )
+
+GOLDEN = os.path.join(REPO, "tests", "golden", "bench_stub_line.json")
 
 
 def test_contended_launch_load_signal():
@@ -74,26 +82,9 @@ def test_contended_matches_history_ground_truth():
     assert found_contaminated  # the load-15.5 entry exists and flags
 
 
-def test_split_for_spill_keeps_from_second_newest_noted():
-    hist = [
-        {"recorded_at": "t0"},
-        {"recorded_at": "t1", "note": "a"},
-        {"recorded_at": "t2"},
-        {"recorded_at": "t3", "note": "b"},
-        {"recorded_at": "t4"},
-    ]
-    to_archive, inline = split_for_spill(hist)
-    assert [e["recorded_at"] for e in to_archive] == ["t0"]
-    assert [e["recorded_at"] for e in inline] == ["t1", "t2", "t3", "t4"]
-    # fewer than two noted entries: bounded fallback window
-    unnoted = [{"recorded_at": f"u{i}"} for i in range(20)]
-    to_archive, inline = split_for_spill(unnoted, keep_fallback=12)
-    assert len(inline) == 12 and len(to_archive) == 8
-
-
-def test_mixed_sf_history_pairs_and_spills_by_sf():
+def test_mixed_sf_history_pairs_by_sf():
     """sf1-leg entries (sf="1probe") are noted but never pair with an
-    sf0.1 entry, and do not count toward the spill's noted window."""
+    sf0.1 entry."""
     hist = [
         {"recorded_at": "t0", "note": "r1", "sf": "0.1"},
         {"recorded_at": "t1", "sf": "0.1"},
@@ -111,38 +102,191 @@ def test_mixed_sf_history_pairs_and_spills_by_sf():
     assert (old["recorded_at"], new["recorded_at"]) == ("t2", "t4")
     with pytest.raises(ValueError, match="same sf"):
         noted_pair(hist[2:4])
-    to_archive, inline = split_for_spill(hist)
-    assert [e["recorded_at"] for e in to_archive] == ["t0", "t1"]
-    assert [e["recorded_at"] for e in inline] == ["t2", "t3", "t4", "t5", "t6"]
+
+
+def test_migrated_history_loads_as_the_split_files_did():
+    """BENCH_LOCAL.jsonl holds the 89 entries the archive+inline JSON
+    pair held (85 archived, 4 inline), in the order the old loader
+    returned them, and bench_diff's default pair is unchanged. The
+    digest is of json.dumps over the old loader's list."""
+    hist = load_history(REPO)[:89]  # later runs append after these
+    assert len(hist) == 89
+    digest = hashlib.sha256(json.dumps(hist).encode()).hexdigest()
+    assert digest == "a0ad7ecd1fc529f4f8874a57b969549b2e9c7e147b2988aed37636dd0e7a67ed"
+    old, new = noted_pair(hist)
+    assert (old["recorded_at"], new["recorded_at"]) == (
+        "2026-08-18T06:05:01",
+        "2026-08-18T06:31:34",
+    )
+
+
+_RESULT = {
+    "metric": "headline_queries_total_sec",
+    "value": 1.0,
+    "unit": "sec",
+    "queries": {"a": 1.0},
+    "extended": {"b": 2.0},
+    "extended_total_sec": 2.0,
+    "extended_runs": 3,
+    "loads": {"a": 0.1, "b": 0.2},
+    "excluded": {},
+    "sf": "0.1",
+}
 
 
 def test_bench_result_line_survives_history_failure(tmp_path, capsys):
-    """A history file that is valid JSON but not a list makes the
-    append raise a non-OS error; the result line must still be the
+    """A history that cannot be appended (here a directory in its
+    place) makes the append raise; the result line must still be the
     last stdout line, and BENCH_OUT.json must still hold it."""
-    import json
-
-    import bench
-
-    (tmp_path / "BENCH_LOCAL.json").write_text("{}")
-    result = {
-        "metric": "headline_queries_total_sec",
-        "value": 1.0,
-        "unit": "sec",
-        "queries": {"a": 1.0},
-        "extended": {"b": 2.0},
-        "extended_total_sec": 2.0,
-        "extended_runs": 3,
-        "loads": {"a": 0.1, "b": 0.2},
-        "excluded": {},
-        "sf": "0.1",
-    }
-    bench.emit(result, str(tmp_path))
+    (tmp_path / HISTORY).mkdir()
+    bench.emit(_RESULT, str(tmp_path))
     captured = capsys.readouterr()
-    assert captured.out.splitlines()[-1] == json.dumps(result)
+    assert captured.out.splitlines()[-1] == json.dumps(_RESULT)
     assert "bench history not recorded" in captured.err
-    assert (tmp_path / "BENCH_OUT.json").read_text() == json.dumps(result) + "\n"
-    assert (tmp_path / "BENCH_LOCAL.json").read_text() == "{}"
+    assert (tmp_path / "BENCH_OUT.json").read_text() == json.dumps(_RESULT) + "\n"
+    assert (tmp_path / HISTORY).is_dir()
+
+
+def test_emit_appends_one_line_and_keeps_a_torn_history(tmp_path, capsys):
+    """An interrupted writer leaves a torn last line. The next emit
+    must keep every earlier byte, terminate the torn line, and append
+    exactly one entry; loading skips the torn line with a warning.
+    (The JSON-array history replaced an unparsable file with a
+    one-entry list, dropping every earlier entry.)"""
+    path = tmp_path / HISTORY
+    good = "".join(json.dumps({"recorded_at": f"t{i}", "note": ""}) + "\n" for i in range(3))
+    path.write_bytes(good.encode() + b'{"recorded_at": "t3", "que')
+    before = path.read_bytes()
+    bench.emit(_RESULT, str(tmp_path))
+    after = path.read_bytes()
+    assert after.startswith(before)
+    lines = after.decode().splitlines()
+    assert len(lines) == 5 and after.endswith(b"\n")
+    assert json.loads(lines[-1])["queries"] == _RESULT["queries"]
+    capsys.readouterr()
+    hist = load_history(str(tmp_path))
+    assert [e["recorded_at"] for e in hist[:3]] == ["t0", "t1", "t2"]
+    assert hist[3]["value"] == _RESULT["value"] and len(hist) == 4
+    assert "line 4 does not parse" in capsys.readouterr().err
+
+
+def test_append_entry_never_rewrites_earlier_lines(tmp_path):
+    """Each append adds bytes at the end only: the earlier content is a
+    byte prefix of the later file, whatever its size."""
+    append_entry(str(tmp_path), {"recorded_at": "t0"})
+    first = (tmp_path / HISTORY).read_bytes()
+    append_entry(str(tmp_path), {"recorded_at": "t1"})
+    assert (tmp_path / HISTORY).read_bytes() == first + b'{"recorded_at": "t1"}\n'
+    assert [e["recorded_at"] for e in load_history(str(tmp_path))] == ["t0", "t1"]
+
+
+class _StubLanes:
+    """Stub registry, session and clock for driving bench.py's timing
+    without Spark. Each count() advances a fake perf_counter by a
+    duration fixed by the lane and its repeat number, so the timings
+    do not depend on how often the timer reads the clock."""
+
+    def __init__(self, names):
+        self.now = 0.0
+        self.built: list[str] = []  # lanes in construction order
+        self.repeats: dict[str, int] = {}
+        self.specs = {n: types.SimpleNamespace(fn=self._lane(i, n)) for i, n in enumerate(names)}
+        self.sparkContext = self
+
+    def _lane(self, i, name):
+        stub = self
+
+        class DF:
+            def count(self):
+                r = stub.repeats.get(name, 0)
+                stub.repeats[name] = r + 1
+                stub.now += 0.05 + ((i * 37 + r * 11) % 97) * 0.0071
+                return 0
+
+            @property
+            def write(self):
+                save = types.SimpleNamespace(save=self.count)
+                mode = types.SimpleNamespace(mode=lambda _m: save)
+                return types.SimpleNamespace(format=lambda _f: mode)
+
+        def fn(spark, sf_dir):
+            stub.built.append(name)
+            return DF()
+
+        return fn
+
+    def setLogLevel(self, level):
+        pass
+
+    def setJobDescription(self, desc):
+        pass
+
+    def stop(self):
+        pass
+
+    def install(self, monkeypatch):
+        monkeypatch.setattr("sf_etl_spark.queries.all_queries", lambda: self.specs)
+        monkeypatch.setattr("sf_etl_spark.session.get_spark", lambda *a, **k: self)
+        monkeypatch.setattr(
+            bench, "time", types.SimpleNamespace(perf_counter=lambda: self.now, strftime=time.strftime)
+        )
+        monkeypatch.setattr(os, "getloadavg", lambda: (round(self.now % 7, 3), 0.0, 0.0))
+
+
+def test_bench_output_matches_golden(tmp_path, monkeypatch, capsys):
+    """bench.py's main() over stub lanes and a fixed clock prints, as
+    its last stdout line, and writes to BENCH_OUT.json exactly the
+    bytes the pre-core bench.py produced for the same timings (the
+    golden file was captured from that code), and appends one entry."""
+    names = ["ext_b", *bench.HEADLINE[:70], "stream_sink_sfetl_native", *bench.HEADLINE[70:], "ext_a"]
+    lanes = _StubLanes(names)
+    lanes.install(monkeypatch)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_RUNS", raising=False)
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    bench.main()
+    with open(GOLDEN) as f:
+        golden = f.read()
+    assert capsys.readouterr().out.splitlines()[-1] + "\n" == golden
+    assert (tmp_path / "BENCH_OUT.json").read_text() == golden
+    assert len(load_history(str(tmp_path))) == 1
+    assert lanes.built[:2] == ["q5_revenue_by_nation", "stream_sink_sfetl_native"]
+
+
+@pytest.mark.parametrize("tool", ["opt_measure", "sf1_leg"])
+def test_tools_time_through_the_bench_warm_up(tool, tmp_path, monkeypatch, capsys):
+    """opt_measure and sf1_leg warm up exactly as bench.py does (q5,
+    then the streaming/DataSource machinery) before timing their first
+    lane; opt_measure used to warm q5 only, so its first stream or
+    sfetl lane absorbed the session spin-up. sf1_leg appends its
+    entry to the history."""
+    import importlib
+
+    mod = importlib.import_module(tool)
+    lanes = _StubLanes(["q5_revenue_by_nation", "stream_sink_sfetl_native", "lane_a", "lane_b"])
+    lanes.install(monkeypatch)
+    monkeypatch.setattr(mod, "REPO", str(tmp_path), raising=False)
+    argv = (
+        ["lane_a", "lane_b", "--runs", "2", "--sf-dir", str(tmp_path)]
+        if tool == "opt_measure"
+        else ["--lanes", "lane_a,lane_b", "--runs", "2", "--sf-dir", str(tmp_path)]
+    )
+    monkeypatch.setattr(sys, "argv", [tool, *argv])
+    mod.main()
+    assert lanes.built == [
+        "q5_revenue_by_nation",
+        "stream_sink_sfetl_native",
+        "lane_a",
+        "lane_a",
+        "lane_b",
+        "lane_b",
+    ]
+    out = json.loads(capsys.readouterr().out.splitlines()[-1])
+    timings = out.get("timings", out.get("queries"))
+    assert set(timings) == {"lane_a", "lane_b"}
+    if tool == "sf1_leg":
+        (entry,) = load_history(str(tmp_path))
+        assert entry["sf"] == "1probe" and entry["queries"] == timings
 
 
 def test_bench_headline_membership_invariants():

@@ -423,6 +423,45 @@ def test_stream_reader_full_then_delta(spark, tmp_path):
         server.stop()
 
 
+def test_rest_and_stream_reads_give_the_same_boolean_strings(spark, tmp_path):
+    """A record holding a JSON boolean reads as the same wire string
+    through the REST batch scan and the sfetl streaming source
+    ("true"/"false", as bulk CSV and the sink write it); the REST scan
+    used to give Python's "True"/"False"."""
+    from sf_etl_spark.connector.datasource import register as register_fmt
+
+    server = MockSalesforce(n_rows=0, page_size=10)
+    server.rows = [
+        {"Id": f"500{i:015d}", "IsEscalated": i % 2 == 0, "NumCalls": str(i)}
+        for i in range(4)
+    ]
+    url = server.start()
+    try:
+        register_fmt(spark)
+        fields = {"fields": "Id,IsEscalated,NumCalls"}
+        rest = read_object(spark, {**sf_options(url), **fields, "mode": "rest"}, "Case", coerce=False)
+        q = (
+            spark.readStream.format("sfetl")
+            .options(**sf_options(url), **fields, object="Case", watermark_field="NumCalls")
+            .load()
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        streamed = spark.read.parquet(str(tmp_path / "out"))
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.select("Id", "IsEscalated").collect())
+
+        assert rows(rest) == rows(streamed)
+        assert {r[1] for r in rows(rest)} == {"true", "false"}
+    finally:
+        server.stop()
+
+
 def test_stream_reader_limit_is_tie_safe(mock_sf):
     """max_rows_per_batch must never advance the offset past rows it
     did not fetch. With duplicate watermark values at the LIMIT

@@ -12,11 +12,13 @@ again. Run it before any commit touching `sf_etl_spark/`:
 For most lanes, plan construction + `df.schema` drives Catalyst
 analysis (column resolution, type checking, UDF registration) but no
 jobs. The exceptions are the EXECUTE_ON_CONSTRUCT lanes below: their
-fn() performs real merges/writes at DataFrame-construction time
-(returning a read-back of the written target), so the gate runs real
+fn() performs real merges/writes, eager computation or streaming
+micro-batches at DataFrame-construction time, so the gate runs real
 jobs — and leaves tempdirs — for exactly those names. That is the
 price of gating them at all; the list keeps the cost visible and lets
-`-m "not smoke_exec"` skip them for a sub-minute pure-analysis pass.
+`-m "not smoke_exec"` skip them for a job-free pure-analysis pass.
+The declaration is checked by behaviour: every other lane must run no
+Spark job and leave no streaming query active while it is built.
 The full oracle suite (`test_queries_oracle.py`) remains the
 correctness authority.
 """
@@ -33,11 +35,12 @@ SPECS = all_queries()
 #: Derived FROM THE REGISTRY (each lane declares
 #: executes_on_construct=True at @register): fn() runs real Spark jobs
 #: at DataFrame-construction time — writes/merges (the returned df is
-#: a read-back of a just-written target) or eager computation (bloom
-#: collect, KMeans training, iterative localCheckpoints). The gate
+#: a read-back of a just-written target), eager computation (bloom
+#: collect, KMeans training, iterative localCheckpoints) or streaming
+#: micro-batches run to a memory table. The gate
 #: runs real jobs for exactly these; `-m "not smoke_exec"` is the
 #: pure-analysis pass. A new eager lane that forgets the flag fails
-#: test_construct_declarations_match_behavior below.
+#: test_query_plan_analyzes below.
 EXECUTE_ON_CONSTRUCT = {
     name for name, spec in SPECS.items() if spec.executes_on_construct
 }
@@ -49,6 +52,22 @@ def test_table_loads(spark, sf_dir, table):
     assert df.columns
 
 
+def _next_job_id(spark) -> int:
+    """The id the scheduler gives the next Spark job. Ids are global,
+    so the delta counts jobs from every thread and job group,
+    streaming micro-batches included."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.fixture(scope="module")
+def warm_footers(spark, sf_dir):
+    """A table's first ``load_table`` in a session checks its footer
+    with a Spark job; read every table once so that check is not
+    charged to whichever lane happens to read it first."""
+    for table in TABLES:
+        load_table(spark, sf_dir, table)
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -58,85 +77,19 @@ def test_table_loads(spark, sf_dir, table):
         for n in sorted(SPECS)
     ],
 )
-def test_query_plan_analyzes(spark, sf_dir, name):
+def test_query_plan_analyzes(spark, sf_dir, warm_footers, name):
+    """Construct the lane and force analysis. A lane that does not
+    declare executes_on_construct must run no Spark job and leave no
+    streaming query active while its DataFrame is built. Over-declaring
+    only makes the pure-analysis pass smaller, so it is not checked."""
+    streams_before = {q.id for q in spark.streams.active}
+    jobs_before = _next_job_id(spark)
     df = SPECS[name].fn(spark, sf_dir)
-    # forces analysis; executes jobs only for EXECUTE_ON_CONSTRUCT lanes
+    jobs = _next_job_id(spark) - jobs_before
+    left_active = [q.name or q.id for q in spark.streams.active if q.id not in streams_before]
+    if name not in EXECUTE_ON_CONSTRUCT:
+        assert not jobs and not left_active, (
+            f"{name} ran {jobs} Spark job(s) and left streams {left_active} "
+            "active at construction; declare executes_on_construct=True"
+        )
     assert df.schema.fields
-
-
-def test_construct_declarations_cover_eager_sources():
-    """Static drift check for the executes_on_construct declarations:
-    a lane whose own source (or its operator helpers) writes temp
-    targets, trains an ML model, collects, or localCheckpoints at
-    construction time must declare the flag — catching the common
-    failure (a new write-side/eager lane forgetting it) from source
-    text alone. Table reads no longer run a job once a file's footer
-    has been checked in the session, so counting jobs at construction
-    could replace this text heuristic; it has not yet, because several
-    streaming lanes run micro-batches inside helpers at construction
-    without declaring the flag.
-    The reverse direction (a declared lane going lazy) is reviewed by
-    hand: over-declaring only makes the pure-analysis pass smaller,
-    never incorrect."""
-    import inspect
-    import io
-    import tokenize
-
-    def _code_only(src: str) -> str:
-        """Drop comments and string literals so prose mentioning a
-        marker (e.g. a scale note saying 'production would
-        localCheckpoint …') can't false-positive; real eager calls are
-        NAME/OP tokens and survive."""
-        try:
-            toks = tokenize.generate_tokens(io.StringIO(src).readline)
-            # "" join keeps multi-token markers like '.collect()'
-            # contiguous; NAME tokens can't merge into a false marker
-            # because every marker contains punctuation or is a whole
-            # NAME that tokenize would have emitted intact.
-            return "".join(
-                t.string
-                for t in toks
-                if t.type not in (tokenize.COMMENT, tokenize.STRING)
-            )
-        except (tokenize.TokenError, IndentationError):
-            return src
-
-    EAGER_MARKERS = ("mkdtemp", ".fit(", "localCheckpoint", ".collect()")
-    # operator modules whose helpers are eager; appearing in a lane's
-    # source means the lane executes at construct
-    EAGER_HELPERS = (
-        "grouped_percentile_cont_twophase",
-        "grouped_median_twophase_double",
-        "grouped_exact_rank",
-        "merge_into_partitioned_parquet",
-        "scd2_apply",
-        "fold_into_rollup",
-        "maintain_hourly_rollup",
-        "upsert_partitioned_parquet",
-        "compact_parquet",
-        "zorder_write",
-        "bloom_prune_literal",
-        "connected_components",
-        "star_components",
-        "pagerank",
-        "write_parquet",
-        "write_csv",
-        "write_orc",
-        "write_json",
-    )
-    missing = []
-    for name, spec in SPECS.items():
-        if spec.executes_on_construct:
-            continue
-        try:
-            src = _code_only(inspect.getsource(spec.fn.__wrapped__))
-        except (TypeError, OSError, AttributeError):
-            continue
-        if any(m in src for m in EAGER_MARKERS) or any(
-            h in src for h in EAGER_HELPERS
-        ):
-            missing.append(name)
-    assert not missing, (
-        f"lanes look eager at construction but lack "
-        f"executes_on_construct=True: {missing}"
-    )

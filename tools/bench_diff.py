@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Diff two BENCH_LOCAL.json entries per lane (default: the newest
+"""Diff two BENCH_LOCAL.jsonl entries per lane (default: the newest
 NOTED entry and the newest noted one before it at the same sf — the
 deliberate quiet-host recordings; bench.py also appends an unnoted
 entry per raw invocation, which are measurement inputs, not round
@@ -17,11 +17,12 @@ import argparse
 import os
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench_history import load_history, noted_pair  # noqa: E402
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from bench import load_history  # noqa: E402
+from bench_history import noted_pair  # noqa: E402
 
 
 def main() -> None:
@@ -35,7 +36,6 @@ def main() -> None:
         "recorder flagged contended=true (explicit indices always win)",
     )
     ns = ap.parse_args()
-    # archive + inline as one list: indices stable across the split
     hist = load_history(REPO)
     if len(ns.indices) == 2:
         old, new = hist[ns.indices[0]], hist[ns.indices[1]]

@@ -1,18 +1,10 @@
 #!/usr/bin/env python
-"""Shared loader for the split bench history (r11 verdict task 7).
-
-bench.py keeps a rolling window of the newest entries inline in
-BENCH_LOCAL.json (small diffs) and spills older entries to
-BENCH_LOCAL_ARCHIVE.json. ``load_history()`` returns the full
-archive+inline list in recording order, so index-based and
-noted-entry tooling (bench_diff.py) behaves exactly as before the
-split.
+"""What a bench history entry holds and how the tools read it: the
+canonical entry shape, the entry-level contention flag, and the
+default pair bench_diff compares. The history file itself
+(BENCH_LOCAL.jsonl, one entry per line) is written and read by
+bench.append_entry and bench.load_history.
 """
-
-import json
-import os
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: the ONE canonical BENCH_LOCAL entry shape (r14 verdict task 6):
 #: bench.py's per-invocation append and record_bench_local.py's merged
@@ -55,8 +47,8 @@ def entry_dict(
     sf,
 ) -> dict:
     """Build a BENCH_LOCAL entry with the canonical key set/order.
-    ``note`` is "" for unnoted per-invocation appends (spill() keys on
-    note truthiness, so "" and absent behave identically). ``runs``
+    ``note`` is "" for unnoted per-invocation appends (noted_pair keys
+    on note truthiness, so "" and absent behave identically). ``runs``
     and ``extended_runs`` both mean the TOTAL repeats the group's
     per-lane minima are over — best-of-N for a single bench.py
     invocation, invocations × N for a merged recording — so
@@ -121,63 +113,6 @@ def contended(
 SF1_LEG = "1probe"
 
 
-def split_for_spill(history: list, keep_fallback: int = 12) -> tuple[list, list]:
-    """Partition *history* (the inline BENCH_LOCAL list, recording
-    order) into ``(to_archive, inline)`` under the r12-verdict-task-7
-    policy: everything older than the second-newest NOTED bench entry
-    spills — unnoted per-invocation entries are measurement inputs, not
-    round markers, and they were accreting inline between deliberate
-    recordings; sf1-leg entries are not round markers either. With
-    fewer than two noted entries, fall back to a fixed
-    newest-``keep_fallback`` window so the inline file is bounded from
-    the first run.
-    """
-    noted = [
-        i for i, e in enumerate(history) if e.get("note") and e.get("sf") != SF1_LEG
-    ]
-    if len(noted) >= 2:
-        cut = noted[-2]
-    else:
-        cut = max(0, len(history) - keep_fallback)
-    return history[:cut], history[cut:]
-
-
-def spill(repo: str = REPO) -> None:
-    """Apply :func:`split_for_spill` to the on-disk pair. Archive is
-    replaced BEFORE the inline file, so a crash in between re-spills
-    the same entries next run — deduped by ``recorded_at`` (second
-    resolution; runs take minutes)."""
-    path = os.path.join(repo, "BENCH_LOCAL.json")
-    if not os.path.exists(path):
-        return
-    try:
-        with open(path) as f:
-            history = json.load(f)
-    except ValueError:
-        return
-    to_archive, inline = split_for_spill(history)
-    if not to_archive:
-        return
-    apath = os.path.join(repo, "BENCH_LOCAL_ARCHIVE.json")
-    archive = []
-    if os.path.exists(apath):
-        try:
-            with open(apath) as f:
-                archive = json.load(f)
-        except ValueError:
-            archive = []
-    seen = {e.get("recorded_at") for e in archive}
-    archive.extend(e for e in to_archive if e.get("recorded_at") not in seen)
-    atmp = apath + ".tmp"
-    with open(atmp, "w") as f:
-        json.dump(archive, f, indent=1)
-    os.replace(atmp, apath)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(inline, f, indent=1)
-    os.replace(tmp, path)
-
-
 def noted_pair(history: list, include_contended: bool = False) -> tuple[dict, dict]:
     """bench_diff's default (old, new) pair: *new* is the newest noted
     entry with an earlier noted entry at the same ``sf``, and *old* the
@@ -196,22 +131,3 @@ def noted_pair(history: list, include_contended: bool = False) -> tuple[dict, di
         "need two noted non-contended entries at the same sf "
         "(--include-contended or pass two indices)"
     )
-
-
-def load_history(repo: str = REPO) -> list:
-    out, seen = [], set()
-    for name in ("BENCH_LOCAL_ARCHIVE.json", "BENCH_LOCAL.json"):
-        path = os.path.join(repo, name)
-        if os.path.exists(path):
-            with open(path) as f:
-                for e in json.load(f):
-                    # repair layer for a crash between the two spill
-                    # writes: an entry archived AND still inline must
-                    # count once (recorded_at is second-resolution and
-                    # bench runs take minutes — unique per entry)
-                    key = e.get("recorded_at")
-                    if key in seen:
-                        continue
-                    seen.add(key)
-                    out.append(e)
-    return out

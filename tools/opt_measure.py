@@ -6,6 +6,9 @@ Times individual registered lanes in ISOLATION with the noop sink
 guide §1.4) so the computation is measured rather than the terminal
 count()'s pruned plan, labels each job (§1.5), and captures
 `.explain("formatted")` per lane for the plans/r15/ evidence files.
+`--action count` times with bench.py's terminal action instead, the
+plain best-of-N wall time of a lane at `--sf-dir`. Warm-up and timing
+are bench.py's own (warm_up, time_lanes).
 
 This tool is measurement-only: it never feeds CORRECTNESS/BENCH
 artifacts (bench.py keeps its count()-based, round-comparable
@@ -14,6 +17,7 @@ methodology; see OPTIMIZATION_r15.md).
 Usage:
   python tools/opt_measure.py LANE [LANE...] [--runs 3] [--action noop|count]
                               [--explain plans/r15] [--suffix before]
+                              [--sf-dir DIR]
 """
 
 from __future__ import annotations
@@ -22,7 +26,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,36 +47,21 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from bench import time_lanes, warm_up
     from sf_etl_spark.queries import all_queries
     from sf_etl_spark.session import get_spark
 
     spark = get_spark("opt-measure")
     spark.sparkContext.setLogLevel("ERROR")
-    specs = all_queries()
-    # JVM/parquet-footer warm-up, same as bench.py
-    specs["q5_revenue_by_nation"].fn(spark, args.sf_dir).count()
-
-    out: dict[str, float] = {}
-    for name in args.lanes:
-        fn = specs[name].fn
-        if args.explain:
-            os.makedirs(args.explain, exist_ok=True)
-            df = fn(spark, args.sf_dir)
+    warm_up(spark, args.sf_dir)
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
+        specs = all_queries()
+        for name in args.lanes:
+            df = specs[name].fn(spark, args.sf_dir)
             with open(os.path.join(args.explain, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(formatted_plan(df))
-        best = float("inf")
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"opt_measure: {name}")
-            t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            if args.action == "noop":
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
-            best = min(best, time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
-        out[name] = round(best, 3)
-        print(f"{name}: {out[name]} s (best of {args.runs}, {args.action})", file=sys.stderr)
+    out, _ = time_lanes(spark, args.lanes, args.sf_dir, args.runs, args.action)
     print(json.dumps({"action": args.action, "runs": args.runs, "sf_dir": args.sf_dir, "timings": out}))
     spark.stop()
 

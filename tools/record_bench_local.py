@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Run bench.py N times (default 3), take the per-query best, and
-append a timestamped entry to BENCH_LOCAL.json — the end-of-round
+append a timestamped noted entry to BENCH_LOCAL.jsonl (after the N
+unnoted entries the bench runs append themselves) — the end-of-round
 checklist's quiet-host bench ritual as one command:
 
     python tools/record_bench_local.py [n_runs] [--note "..."]
@@ -18,6 +19,7 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -122,16 +124,9 @@ def main() -> None:
         runs.append(json.loads(line))
         print(f"run {i + 1}/{n_runs}: {runs[-1]['value']} s", file=sys.stderr)
     entry = merged_entry(runs, note, load1)
-    path = os.path.join(REPO, "BENCH_LOCAL.json")
-    hist = json.load(open(path))
-    hist.append(entry)
-    json.dump(hist, open(path, "w"), indent=1)
-    # spill unnoted entries older than the last two noted recordings
-    # (r12 verdict task 7) — this keeps the inline file to the current
-    # round's deliberate recordings plus their measurement inputs
-    from bench_history import spill
+    from bench import append_entry
 
-    spill(REPO)
+    append_entry(REPO, entry)
     print(json.dumps({k: entry[k] for k in entry if k != "queries"}))
 
 

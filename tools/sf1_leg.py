@@ -9,18 +9,19 @@ scale-up; tools/make_probe_sf1.py) where per-lane cost is data-bound
 again — all optimization claims on sub-2 s lanes must cite these
 numbers, not sf0.1.
 
-Methodology matches bench.py (best-of-N, count() terminal action, the
-engine's tuned session, same env-driven core count) so the numbers
-compose with the BENCH_LOCAL history; entries land in BENCH_LOCAL as
-NOTED recordings with sf="1probe" and their own metric name
-("sf1_leg_total_sec"), so the leg is mechanically distinguishable
-from the sf0.1 trend (and pick_top_lanes below skips them).
+It times through bench.py's own core (warm_up, time_lanes: best-of-N,
+count() terminal action, the engine's tuned session, same env-driven
+core count) so the numbers compose with the bench history; entries are
+appended to BENCH_LOCAL.jsonl as NOTED recordings with sf="1probe"
+and their own metric name ("sf1_leg_total_sec"), so the leg is
+mechanically distinguishable from the sf0.1 trend (and pick_top_lanes
+below skips them).
 
 Usage:
   python tools/sf1_leg.py [--top 20] [--runs 3] [--note "sf1 leg r16"]
                           [--lanes a,b,c] [--sf-dir .probe/sf1]
 
-Lane selection (--top): the slowest N lanes by the newest BENCH_LOCAL
+Lane selection (--top): the slowest N lanes by the newest history
 entry that has a full per-lane map (queries+extended merged).
 """
 
@@ -38,14 +39,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def pick_top_lanes(n: int) -> list[str]:
-    from bench_history import SF1_LEG, load_history
+    from bench import load_history
+    from bench_history import SF1_LEG
 
     for entry in reversed(load_history()):
         merged = {**entry.get("queries", {}), **entry.get("extended", {})}
         if len(merged) > 100 and entry.get("sf") != SF1_LEG:
             ranked = sorted(merged.items(), key=lambda kv: -kv[1])
             return [name for name, _ in ranked[:n]]
-    raise SystemExit("no full per-lane BENCH_LOCAL entry to rank lanes from")
+    raise SystemExit("no full per-lane history entry to rank lanes from")
 
 
 def main() -> None:
@@ -67,47 +69,26 @@ def main() -> None:
     if args.dry_run:
         return
 
+    from bench import append_entry, time_lanes, warm_up
+    from bench_history import SF1_LEG, contended, entry_dict
     from sf_etl_spark.queries import all_queries
     from sf_etl_spark.session import get_spark
 
-    spark = get_spark("sf1-leg")
-    spark.sparkContext.setLogLevel("ERROR")
-    specs = all_queries()
-    unknown = [l for l in lanes if l not in specs]
+    unknown = [l for l in lanes if l not in all_queries()]
     if unknown:
         raise SystemExit(f"not registered: {unknown}")
-
-    # same warm-up pair as bench.py: JVM/parquet footers + the
-    # session-scoped streaming/Python-DataSource machinery
-    specs["q5_revenue_by_nation"].fn(spark, args.sf_dir).count()
-    try:
-        specs["stream_sink_sfetl_native"].fn(spark, args.sf_dir).count()
-    except Exception as e:
-        print(f"WARNING: machinery warm-up failed ({e})", file=sys.stderr)
-
-    timings: dict[str, float] = {}
-    loads: dict[str, float] = {}
-    for name in lanes:
-        fn = specs[name].fn
-        best = float("inf")
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"sf1_leg: {name}")
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-            spark.sparkContext.setJobDescription(None)
-        timings[name] = round(best, 3)
-        loads[name] = round(os.getloadavg()[0], 2)
-        print(f"{name}: {timings[name]} s", file=sys.stderr)
+    spark = get_spark("sf1-leg")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, args.sf_dir)
+    timings, loads = time_lanes(spark, lanes, args.sf_dir, args.runs)
     spark.stop()
 
-    from bench_history import SF1_LEG, contended, entry_dict
-
+    load_1m = os.getloadavg()[0]
     entry = entry_dict(
         recorded_at=time.strftime("%Y-%m-%dT%H:%M:%S"),
         runs=args.runs,
-        load_1m=os.getloadavg()[0],
-        contended=contended(os.getloadavg()[0], loads, load_allowance=8.0),
+        load_1m=load_1m,
+        contended=contended(load_1m, loads, load_allowance=8.0),
         note=args.note,
         metric="sf1_leg_total_sec",
         value=round(sum(timings.values()), 3),
@@ -118,18 +99,7 @@ def main() -> None:
         excluded={},
         sf=SF1_LEG,
     )
-    path = os.path.join(REPO, "BENCH_LOCAL.json")
-    history = []
-    if os.path.exists(path):
-        try:
-            history = json.load(open(path))
-        except ValueError:
-            history = []
-    history.append(entry)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(history, f, indent=1)
-    os.replace(tmp, path)
+    append_entry(REPO, entry)
     print(json.dumps({"metric": "sf1_leg_total_sec", "value": entry["value"], "queries": timings}))
 
 
