@@ -339,13 +339,25 @@ class SfClient:
 
     # -- SOQL query scan (R2, client.rs:199-205) ---------------------------
 
-    def query_pages(self, soql: str) -> Iterator[QueryPage]:
-        """Yield every page of a SOQL query, following ``nextRecordsUrl``
-        until ``done`` (the pagination loop the reference lacks)."""
-        url = f"{self._base_path()}/query?{urllib.parse.urlencode({'q': soql})}"
+    def _pages(self, url: str) -> Iterator[dict[str, Any]]:
+        """GET *url*, then each ``nextRecordsUrl`` until ``done`` — the
+        pagination walk the reference lacks, shared by SOQL queries
+        and the ingest job list."""
         while True:
             obj = self._get_json(url)
-            page = QueryPage(
+            yield obj
+            nxt = obj.get("nextRecordsUrl")
+            if obj.get("done", True) or not nxt:
+                return
+            assert self.instance_url is not None
+            url = f"{self.instance_url}{nxt}"
+
+    def query_pages(self, soql: str) -> Iterator[QueryPage]:
+        """Yield every page of a SOQL query, following ``nextRecordsUrl``
+        until ``done``."""
+        url = f"{self._base_path()}/query?{urllib.parse.urlencode({'q': soql})}"
+        for obj in self._pages(url):
+            yield QueryPage(
                 total_size=obj.get("totalSize", 0),
                 done=obj.get("done", True),
                 records=[
@@ -354,11 +366,6 @@ class SfClient:
                 ],
                 next_records_url=obj.get("nextRecordsUrl"),
             )
-            yield page
-            if page.done or not page.next_records_url:
-                return
-            assert self.instance_url is not None
-            url = f"{self.instance_url}{page.next_records_url}"
 
     def query(self, soql: str) -> list[dict[str, Any]]:
         """All records of a SOQL query (every page, flattened)."""
@@ -398,26 +405,69 @@ class SfClient:
         )
         return BulkJob.from_json(obj)
 
-    def wait_for_job(
-        self, job_id: str, poll_interval: float = 0.2, timeout: float = 300.0
-    ) -> BulkJob:
-        """The poll loop the reference leaves to callers (SURVEY §3 E3.3),
-        with backoffed polling and a hard timeout."""
-        return self._wait(self.get_query_job_status, job_id, poll_interval, timeout)
+    def wait_for_job(self, job_id: str, timeout: float = 300.0) -> BulkJob:
+        """The poll loop the reference leaves to callers (SURVEY §3 E3.3):
+        poll a query job to a terminal state (see :meth:`_poll_jobs`)."""
+        return self._poll_jobs(self.get_query_job_status, [job_id], timeout)[job_id]
 
-    def _wait(
-        self, status_fn, job_id: str, poll_interval: float, timeout: float
-    ) -> BulkJob:
+    #: pending-set size above which a status sweep goes through the
+    #: paginated job-LIST endpoint (N statuses per page request)
+    #: instead of one GET per job — per-job polling of a thousand-job
+    #: fan-out would itself burn the org's request bucket every sweep
+    _SWEEP_VIA_LIST_THRESHOLD = 8
+
+    def _poll_jobs(
+        self,
+        status_fn: Callable[[str], BulkJob],
+        job_ids: Sequence[str],
+        timeout: float,
+        list_fn: Callable[[], list[BulkJob]] | None = None,
+    ) -> dict[str, BulkJob]:
+        """Round-robin poll of every job in *job_ids* to a terminal state.
+
+        One status sweep per sleep across every still-pending job, so
+        the wall-clock of an N-job wait is bounded by the SLOWEST job
+        (plus one sweep), not N × the sleep. With *list_fn*, a pending
+        set larger than ``_SWEEP_VIA_LIST_THRESHOLD`` sweeps via the
+        paginated job list (one request per page, not per job);
+        stragglers the list misses fall back to per-id GETs. Raises on
+        the first Failed job, and when the shared *timeout* deadline
+        passes with jobs still pending.
+
+        Cadence: the first sleep is 0.02 s and each sweep that leaves a
+        job pending sleeps 1.5× longer, capped at 10 s — a job that
+        completes at once costs one short sleep, and a real Bulk job
+        running minutes costs tens of status polls, not thousands.
+        """
+        pending = list(dict.fromkeys(j for j in job_ids if j))
+        done: dict[str, BulkJob] = {}
         deadline = time.monotonic() + timeout
-        while True:
-            job = status_fn(job_id)
-            if job.state == JobState.FAILED:
-                raise JobFailedError(f"bulk job {job_id} failed: {job.raw.get('errorMessage')}")
-            if job.state.terminal:
-                return job
-            if time.monotonic() > deadline:
-                raise HttpError(f"bulk job {job_id} not terminal after {timeout}s")
-            time.sleep(poll_interval)
+        sleep_for = 0.02
+        while pending:
+            listed: dict[str, BulkJob] = {}
+            if list_fn is not None and len(pending) > self._SWEEP_VIA_LIST_THRESHOLD:
+                listed = {j.id: j for j in list_fn()}
+            still_pending: list[str] = []
+            for jid in pending:
+                job = listed.get(jid) or status_fn(jid)
+                if job.state == JobState.FAILED:
+                    raise JobFailedError(
+                        f"bulk job {jid} failed: {job.raw.get('errorMessage')}"
+                    )
+                if job.state.terminal:
+                    done[jid] = job
+                else:
+                    still_pending.append(jid)
+            pending = still_pending
+            if pending:
+                if time.monotonic() > deadline:
+                    raise HttpError(
+                        f"{len(pending)} bulk jobs not terminal after "
+                        f"{timeout}s (first: {pending[:5]})"
+                    )
+                time.sleep(sleep_for)
+                sleep_for = min(sleep_for * 1.5, 10.0)
+        return done
 
     # -- bulk ingest lifecycle (the LOAD leg the extract-only reference
     # never ships; Bulk API 2.0 ingest wire shape) --------------------------
@@ -476,75 +526,19 @@ class SfClient:
     def get_ingest_job_status(self, job_id: str) -> BulkJob:
         return BulkJob.from_json(self._get_json(f"{self._base_path()}/jobs/ingest/{job_id}"))
 
-    def wait_for_ingest_job(
-        self, job_id: str, poll_interval: float = 0.2, timeout: float = 300.0
-    ) -> BulkJob:
-        return self._wait(self.get_ingest_job_status, job_id, poll_interval, timeout)
-
-    #: pending-set size above which a status sweep goes through the
-    #: paginated job-LIST endpoint (N statuses per page request)
-    #: instead of one GET per job — per-job polling of a thousand-job
-    #: fan-out would itself burn the org's request bucket every sweep
-    _SWEEP_VIA_LIST_THRESHOLD = 8
+    def wait_for_ingest_job(self, job_id: str, timeout: float = 300.0) -> BulkJob:
+        return self.wait_for_ingest_jobs([job_id], timeout)[job_id]
 
     def wait_for_ingest_jobs(
-        self,
-        job_ids: Sequence[str],
-        poll_interval: float = 0.2,
-        timeout: float = 3600.0,
-        max_poll_interval: float | None = None,
+        self, job_ids: Sequence[str], timeout: float = 3600.0
     ) -> dict[str, BulkJob]:
-        """Round-robin poll of MANY ingest jobs to a terminal state.
-
-        One status sweep per interval across every still-pending job,
-        so the wall-clock of an N-job commit barrier is bounded by the
-        SLOWEST job (plus one sweep), not N × poll_interval — the
-        difference between seconds and hours when a load fans out
-        thousands of size-bounded jobs. Large pending sets sweep via the
-        paginated list endpoint (one request per page, not per job);
-        stragglers the list misses fall back to per-id GETs. Raises on
-        the first Failed job; the shared ``timeout`` deadline covers the
-        whole SET (default 1 h — it bounds total commit wait, not one
-        job, so it must absorb org-side queueing of the entire load).
-
-        Cadence: sweeps run at ``poll_interval`` exactly unless
-        ``max_poll_interval`` is set HIGHER, in which case the interval
-        grows 1.5× per empty sweep up to that cap — real Bulk jobs take
-        minutes, and a fixed sub-second cadence over a long load is
-        thousands of wasted status sweeps against a rate-limited org.
-        A caller's explicit interval is never exceeded unless they also
-        opted into the cap.
-        """
-        pending = list(dict.fromkeys(j for j in job_ids if j))
-        done: dict[str, BulkJob] = {}
-        deadline = time.monotonic() + timeout
-        sleep_for = poll_interval
-        sleep_cap = max(poll_interval, max_poll_interval or 0.0)
-        while pending:
-            listed: dict[str, BulkJob] = {}
-            if len(pending) > self._SWEEP_VIA_LIST_THRESHOLD:
-                listed = {j.id: j for j in self.list_ingest_jobs()}
-            still_pending: list[str] = []
-            for jid in pending:
-                job = listed.get(jid) or self.get_ingest_job_status(jid)
-                if job.state == JobState.FAILED:
-                    raise JobFailedError(
-                        f"bulk job {jid} failed: {job.raw.get('errorMessage')}"
-                    )
-                if job.state.terminal:
-                    done[jid] = job
-                else:
-                    still_pending.append(jid)
-            pending = still_pending
-            if pending:
-                if time.monotonic() > deadline:
-                    raise HttpError(
-                        f"{len(pending)} ingest jobs not terminal after "
-                        f"{timeout}s (first: {pending[:5]})"
-                    )
-                time.sleep(sleep_for)
-                sleep_for = min(sleep_for * 1.5, sleep_cap)
-        return done
+        """Poll MANY ingest jobs to a terminal state (see
+        :meth:`_poll_jobs`). The ``timeout`` deadline covers the whole
+        SET (default 1 h — it bounds total commit wait, not one job, so
+        it must absorb org-side queueing of the entire load)."""
+        return self._poll_jobs(
+            self.get_ingest_job_status, job_ids, timeout, list_fn=self.list_ingest_jobs
+        )
 
     def get_ingest_failed_results(self, job_id: str) -> str:
         """GET ``/jobs/ingest/{id}/failedResults`` — CSV of the rows the
@@ -591,15 +585,7 @@ class SfClient:
         endpoint paginates, and a truncated sweep would silently skip
         whatever failed past page 1 (r11 ADVICE)."""
         url = f"{self._base_path()}/jobs/ingest"
-        jobs: list[BulkJob] = []
-        while True:
-            obj = self._get_json(url)
-            jobs.extend(BulkJob.from_json(r) for r in obj.get("records", []))
-            nxt = obj.get("nextRecordsUrl")
-            if obj.get("done", True) or not nxt:
-                return jobs
-            assert self.instance_url is not None
-            url = f"{self.instance_url}{nxt}"
+        return [BulkJob.from_json(r) for obj in self._pages(url) for r in obj.get("records", [])]
 
     def get_result_chunk(
         self, job_id: str, locator: str | None = None, max_records: int | None = None

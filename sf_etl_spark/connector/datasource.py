@@ -23,6 +23,10 @@ Two scan modes (option ``mode``):
   ``WHERE field >= lo AND field < hi`` SOQL clauses; executors run
   the paginated ``/query`` scan per split.
 
+``spark.readStream.format("sfetl")`` (:class:`SfIncrementalStreamReader`)
+is the connector's one incremental pull: a high-watermark delta per
+micro-batch, its offset kept in Spark's offset log.
+
 Rows are produced in the **wire schema** (every column a string, in
 describe order); callers get typed columns via
 :func:`sf_etl_spark.connector.read_object`, which applies the
@@ -36,7 +40,6 @@ import csv
 import datetime as _dt
 import io
 import json
-import os
 import re
 import threading
 from collections.abc import Iterator, Sequence
@@ -263,20 +266,19 @@ class SfScanReader(DataSourceReader):
         yield from filters  # Spark re-applies everything (see above)
 
     def partitions(self) -> Sequence[InputPartition]:
-        mode = self.options.get("mode", "bulk")
-        client = _client_from_options(self.options)
-        obj = self.options["object"]
-        if mode == "rest":
+        if self.options.get("mode", "bulk") == "rest":
             return self._rest_partitions()
-        job = client.create_query_job(obj, self.field_names, where=self.options.get("where"))
-        # fixture/mock backends complete in milliseconds; the default
-        # 0.2 s poll cadence is pure sleep there (option tunes it,
-        # production leaves the default)
-        job = client.wait_for_job(
-            job.id, poll_interval=float(self.options.get("poll_interval", "0.2"))
-        )
-        delim = _BULK_DELIMITERS.get(job.column_delimiter or "COMMA", ",")
+        # checked before the job is created: a bad option must not
+        # leave a bulk job behind on the org
         chunk = int(self.options.get("chunk_size", "100000"))
+        if chunk < 1:
+            raise ClientBuilderError(f"chunk_size must be >= 1, got {chunk}")
+        client = _client_from_options(self.options)
+        job = client.create_query_job(
+            self.options["object"], self.field_names, where=self.options.get("where")
+        )
+        job = client.wait_for_job(job.id)
+        delim = _BULK_DELIMITERS.get(job.column_delimiter or "COMMA", ",")
         if self.options.get("offset_locators", "true").lower() != "true":
             return [ChunkPartition(job.id, None, chunk, serial_walk=True, delimiter=delim)]
         total = job.number_records_processed or 0
@@ -292,8 +294,15 @@ class SfScanReader(DataSourceReader):
         extra = self.options.get("where")
         if not fld:
             return [RangePartition(base + (f" WHERE {extra}" if extra else ""))]
+        missing = [k for k in ("lower", "upper") if not self.options.get(k)]
+        if missing:
+            raise ClientBuilderError(
+                f"partition_field {fld!r} requires the {' and '.join(missing)} option"
+            )
         lo = int(self.options["lower"])
         hi = int(self.options["upper"])
+        if lo > hi:
+            raise ClientBuilderError(f"lower ({lo}) must not exceed upper ({hi})")
         n = max(1, int(self.options.get("num_partitions", "8")))
         step = max(1, (hi - lo + n) // n)
         parts = []
@@ -605,16 +614,11 @@ class SfIngestWriter(DataSourceWriter):
 
     def commit(self, messages) -> dict:
         """Poll every job of the write to a terminal state (round-robin
-        sweep). Returns {job_id: BulkJob} of the completed jobs so the
-        streaming twin can chain reject capture. ``commit_timeout``
-        (seconds, default 3600) bounds the WHOLE barrier — it must
-        absorb org-side queueing of the entire load, not one job.
-
-        Cadence: an EXPLICIT ``poll_interval`` is honored exactly (a
-        caller bounding commit latency gets what they asked for); with
-        the default, the sweep backs off toward ``max_poll_interval``
-        (default 10 s) so an hours-long load doesn't hammer the status
-        endpoint sub-second."""
+        sweep on the client's built-in backoff cadence). Returns
+        {job_id: BulkJob} of the completed jobs so the streaming twin
+        can chain reject capture. ``commit_timeout`` (seconds, default
+        3600) bounds the WHOLE barrier — it must absorb org-side
+        queueing of the entire load, not one job."""
         ids = [jid for msg in messages if msg for jid in msg.job_ids]
         if self.job_ids_path:
             # published BEFORE the poll barrier: a barrier failure
@@ -638,20 +642,8 @@ class SfIngestWriter(DataSourceWriter):
         if not ids:
             return {}
         client = _client_from_options(self.options)
-        interval = float(self.options.get("poll_interval", "0.2"))
-        explicit = "poll_interval" in self.options
-        cap = float(
-            self.options.get(
-                "max_poll_interval", interval if explicit else "10"
-            )
-        )
         deadline = float(self.options.get("commit_timeout", "3600"))
-        return client.wait_for_ingest_jobs(
-            ids,
-            poll_interval=interval,
-            timeout=deadline,
-            max_poll_interval=cap,
-        )
+        return client.wait_for_ingest_jobs(ids, timeout=deadline)
 
     def abort(self, messages) -> None:
         client = _client_from_options(self.options)
@@ -687,8 +679,10 @@ class SfIngestStreamWriter(DataSourceStreamWriter):
     jobs reporting ``numberRecordsFailed > 0``) and writes the batch's
     rejects as ONE JSON-lines file ``rejects-batch<id>.jsonl`` under
     the path — named by batchId so a replayed batch OVERWRITES its own
-    file (exactly-once on the side table), written tmp+rename (atomic
-    on local/HDFS; overwrite-converged on object stores). The path is
+    file (exactly-once on the side table), written by
+    :func:`sf_etl_spark.connector.fsutil.write_small_file_atomic`
+    (hidden tmp + move: atomic on local/HDFS, overwrite-converged on
+    object stores). The path is
     resolved through ``pyarrow.fs``
     (:func:`sf_etl_spark.connector.fsutil.filesystem_for`), so any
     URI the cluster's storage layer speaks works — ``s3://``, ``gs://``,
@@ -732,52 +726,36 @@ class SfIngestStreamWriter(DataSourceStreamWriter):
                         "fields": fields,
                     }
                 )
-        from pyarrow.fs import FileType
+        from pyarrow.fs import FileSelector, FileType
 
         # The DataSource commit() hook has no SparkSession, so the side
-        # table cannot be written through Spark — pyarrow.fs (shared
-        # with the incremental watermark state) keeps the batch-id
-        # overwrite contract deployable beyond driver-local POSIX paths.
-        # Custom schemes rebuild from the option-borne resolver spec
-        # first: this hook runs in a spawned worker whose registry
-        # starts empty (r14 verdict task 3).
+        # table cannot be written through Spark — pyarrow.fs keeps the
+        # batch-id overwrite contract deployable beyond driver-local
+        # POSIX paths. Custom schemes rebuild from the option-borne
+        # resolver spec first: this hook runs in a spawned worker whose
+        # registry starts empty (r14 verdict task 3).
         from sf_etl_spark.connector.fsutil import (
             apply_resolver_spec,
             filesystem_for,
+            write_small_file_atomic,
         )
 
         apply_resolver_spec(self._writer.fs_resolver)
         fs, root = filesystem_for(self.failed_results_path)
+        root = root.rstrip("/")
         fs.create_dir(root, recursive=True)
         base = f"rejects-batch{batchId:09d}.jsonl"
-        path = f"{root.rstrip('/')}/{base}"
-        # tmp naming (review pass, mirroring write_small_file_atomic's
-        # r14 ADVICE fix): '.'-PREFIXED so spark.read.json can never
-        # read a half-written or crashed attempt's tmp (it hides only
-        # '_'/'.'-prefixed files — a bare '*.tmp' suffix is NOT
-        # hidden), and per-attempt UNIQUIFIED so a zombie commit
-        # racing a replay cannot interleave writes on one tmp path and
-        # move a truncated file into place.
-        import uuid
-
-        tmp = (
-            f"{root.rstrip('/')}/.{base}.tmp."
-            f"{os.getpid():x}-{uuid.uuid4().hex[:8]}"
-        )
+        path = f"{root}/{base}"
         # best-effort sweep of THIS batch's orphaned tmps (crashed
-        # attempts) + the pre-upgrade fixed-name sibling, which was
-        # visible to spark.read.json and would resurrect a dead
-        # attempt's rejects. Deleting a LIVE zombie's tmp is correct:
-        # its move then fails loudly and the zombie batch fails —
-        # the committed attempt owns the batch.
-        from pyarrow.fs import FileSelector
-
+        # attempts' hidden '.'-prefixed ones) + the pre-upgrade
+        # fixed-name sibling, which was visible to spark.read.json and
+        # would resurrect a dead attempt's rejects. Deleting a LIVE
+        # zombie's tmp is correct: its move then fails loudly and the
+        # zombie batch fails — the committed attempt owns the batch.
         try:
             stale = [
                 info.path
-                for info in fs.get_file_info(
-                    FileSelector(root.rstrip("/"), allow_not_found=True)
-                )
+                for info in fs.get_file_info(FileSelector(root, allow_not_found=True))
                 if info.base_name.startswith((f".{base}.tmp", f"{base}.tmp"))
             ]
         except Exception:  # noqa: BLE001 - listing is hygiene, not correctness
@@ -794,30 +772,46 @@ class SfIngestStreamWriter(DataSourceStreamWriter):
             if fs.get_file_info(path).type != FileType.NotFound:
                 fs.delete_file(path)
             return
-        payload = "".join(json.dumps(rec) + "\n" for rec in rejects)
-        with fs.open_output_stream(tmp) as f:
-            f.write(payload.encode("utf-8"))
-        fs.move(tmp, path)
+        write_small_file_atomic(
+            f"{self.failed_results_path.rstrip('/')}/{base}",
+            "".join(json.dumps(rec) + "\n" for rec in rejects).encode("utf-8"),
+        )
 
     def abort(self, messages, batchId: int) -> None:
         self._writer.abort(messages)
 
 
+def _coerce(v: Any) -> Any:
+    """Numeric watermarks arrive as wire strings; compare them as
+    numbers (lexicographic '10' < '9' would move the watermark
+    BACKWARD and re-extract forever)."""
+    if isinstance(v, str):
+        try:
+            return int(v)
+        except ValueError:
+            try:
+                return float(v)
+            except ValueError:
+                return v
+    return v
+
+
 class SfIncrementalStreamReader(SimpleDataSourceStreamReader):
-    """``spark.readStream.format("sfetl")`` — the high-watermark delta
-    pull (`connector/incremental.py`) lifted into a Structured
-    Streaming source.
+    """``spark.readStream.format("sfetl")`` — the connector's one
+    incremental (high-watermark delta) pull, as a Structured Streaming
+    source. A scheduled one-shot pull runs it under
+    ``trigger(availableNow=True)``.
 
     Offsets ARE watermarks: each micro-batch fetches
     ``WHERE <watermark_field> > <last offset>`` remotely (the delta
     predicate rides the SOQL, so a trigger moves |changed rows|, not
     |object|) and advances the offset to the max value seen. Spark's
     checkpoint persists the offset and replays an uncommitted batch via
-    :meth:`readBetweenOffsets` — the same at-least-once contract the
-    batch module implements with its two-phase state file, here
-    inherited from the engine's own offset log. Exactly-once to a
-    transactional sink follows from Spark's sink-side idempotence
-    (e.g. the merge sink keyed by Id).
+    :meth:`readBetweenOffsets`, so the pull is at-least-once through
+    the engine's own offset log: a crash between fetch and sink
+    re-serves the delta. Exactly-once to a transactional sink follows
+    from Spark's sink-side idempotence (e.g. the merge sink keyed by
+    Id).
 
     A ``SimpleDataSourceStreamReader`` runs on the DRIVER (records are
     prefetched and shipped to executors) — the right shape for a
@@ -895,8 +889,6 @@ class SfIncrementalStreamReader(SimpleDataSourceStreamReader):
         return s
 
     def _fetch(self, lo, hi, limit: int | None = None) -> tuple[list[tuple], Any]:
-        from sf_etl_spark.connector.incremental import _coerce
-
         # the watermark column always rides the SELECT list — advancing
         # the offset from data we did not fetch would be a correctness
         # bug — but only schema columns are emitted
@@ -925,8 +917,6 @@ class SfIncrementalStreamReader(SimpleDataSourceStreamReader):
         return [tuple(r.get(n) for n in self.names) for r in records]
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        from sf_etl_spark.connector.incremental import _coerce
-
         records, new_wm = self._fetch(start.get("wm"), None, limit=self.max_rows)
         if new_wm is None:
             return iter([]), start  # no progress — offset unchanged

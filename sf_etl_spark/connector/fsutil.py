@@ -1,14 +1,15 @@
-"""Storage-agnostic small-file I/O for connector state artifacts.
+"""Storage-agnostic small-file I/O for connector side artifacts.
 
-Two connector features persist tiny driver-side files between runs:
-the streaming sink's reject side table (`datasource.SfIngestStreamWriter`)
-and the incremental extractor's watermark state (`incremental`). On a
-real cluster those paths live on object storage (s3a/abfs/gs), which
-``os.*`` cannot address — and the Python DataSource ``commit()`` hook
-has no SparkSession to write through. ``pyarrow.fs`` (shipped with
-PySpark) is the abstraction both use: URIs resolve via
-``FileSystem.from_uri``; scheme-less relative paths fall back to the
-local filesystem.
+The connector's commit hooks persist tiny files: the streaming sink's
+reject side table (`datasource.SfIngestStreamWriter`) and the
+writer's ``job_ids_path`` publish, which the ``foreachBatch`` reject
+capture (`ingest`) reads back. On a real cluster those paths live on
+object storage (s3a/abfs/gs), which ``os.*`` cannot address — and the
+Python DataSource ``commit()`` hook has no SparkSession to write
+through. ``pyarrow.fs`` (shipped with PySpark) is the abstraction all
+of them use: URIs resolve via ``FileSystem.from_uri``; scheme-less
+relative paths fall back to the local filesystem. Every write goes
+through :func:`write_small_file_atomic`.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import os
 # users address S3 as s3a:// (and legacy s3n://); pyarrow's S3
 # filesystem answers only to s3://. Aliased, not dropped — a
 # silently-wrong LocalFileSystem fallback here would lose the
-# watermark/reject artifacts on a real cluster.
+# reject/job-id artifacts on a real cluster.
 _SCHEME_ALIASES = {"s3a": "s3", "s3n": "s3"}
 
 # Caller-registered scheme resolvers (r13 verdict task 6): schemes
@@ -41,8 +42,7 @@ def register_scheme(scheme: str, resolver) -> None:
     so state persists across `filesystem_for` calls.
 
     The registry is PROCESS-LOCAL. A direct ``register_scheme`` call
-    therefore serves only the driver-process consumers — the
-    incremental extractor's watermark state and
+    therefore serves only the driver-process consumers —
     :func:`foreach_batch_ingest_with_rejects`' job-id read — and NOT
     the Python DataSource commit hooks (the streaming sink's reject
     side table, the writer's ``job_ids_path`` publish): PySpark runs
@@ -192,19 +192,23 @@ def read_small_file(path: str) -> bytes | None:
 def write_small_file_atomic(path: str, payload: bytes) -> None:
     """Write a small artifact via tmp + move (atomic on local/HDFS,
     overwrite-converged on object stores); parent dirs are created.
-    The tmp name carries a per-attempt uniquifier (r14 ADVICE): two
-    concurrent attempts of the same artifact — a zombie commit racing
-    a retry — must never interleave writes on one tmp path and move a
-    truncated file into place. A crashed attempt can orphan its tmp;
-    that is harmless clutter (consumers read the artifact by exact
+
+    The tmp sibling is ``.``-PREFIXED, so a directory reader that
+    hides '_'/'.'-prefixed files (``spark.read.json``) never reads a
+    half-written or crashed attempt's tmp — a bare ``*.tmp`` suffix is
+    NOT hidden. It also carries a per-attempt uniquifier (r14 ADVICE):
+    two concurrent attempts of the same artifact — a zombie commit
+    racing a retry — must never interleave writes on one tmp path and
+    move a truncated file into place. A crashed attempt can orphan its
+    tmp; that is harmless clutter (consumers read the artifact by exact
     name), preferred over the corruption the fixed name risked."""
     import uuid
 
     fs, p = filesystem_for(path)
-    parent = p.rsplit("/", 1)[0] if "/" in p else ""
+    parent, sep, name = p.rpartition("/")
     if parent:
         fs.create_dir(parent, recursive=True)
-    tmp = f"{p}.tmp.{os.getpid():x}-{uuid.uuid4().hex[:8]}"
+    tmp = f"{parent}{sep}.{name}.tmp.{os.getpid():x}-{uuid.uuid4().hex[:8]}"
     with fs.open_output_stream(tmp) as f:
         f.write(payload)
     fs.move(tmp, p)

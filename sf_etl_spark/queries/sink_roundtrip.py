@@ -1209,7 +1209,6 @@ def source_sfetl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "username": "user@test",
             "password": "pw",
             "chunk_size": "100",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         raw = read_object(spark, opts, "Customer", coerce=False).filter(
             F.col("Segment").isin(*_SFETL_SEGMENTS)
@@ -1295,7 +1294,6 @@ def sink_sfetl_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "username": "user@test",
             "password": "pw",
             "object": "Customer",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         out = (
             load_table(spark, sf_dir, "customer")
@@ -1390,7 +1388,6 @@ def sink_sfetl_failed_results(spark: SparkSession, sf_dir: str) -> DataFrame:
             "username": "user@test",
             "password": "pw",
             "object": "Customer",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         out = (
             load_table(spark, sf_dir, "customer")
@@ -1474,7 +1471,6 @@ def sink_sfetl_successful_results(spark: SparkSession, sf_dir: str) -> DataFrame
             "username": "user@test",
             "password": "pw",
             "object": "Customer",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         base = load_table(spark, sf_dir, "customer").filter(
             F.col("c_custkey") <= _SFETL_KEY_CAP
@@ -1704,7 +1700,6 @@ def sink_sfetl_delete_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "username": "user@test",
             "password": "pw",
             "object": "Customer",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         base = load_table(spark, sf_dir, "customer").filter(
             F.col("c_custkey") <= _SFETL_KEY_CAP
@@ -1809,7 +1804,6 @@ def sink_sfetl_resume_unprocessed(spark: SparkSession, sf_dir: str) -> DataFrame
             "username": "user@test",
             "password": "pw",
             "object": "Customer",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         src = (
             load_table(spark, sf_dir, "customer")

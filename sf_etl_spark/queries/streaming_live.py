@@ -369,7 +369,6 @@ def stream_sink_sfetl_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "username": "user@test",
             "password": "pw",
             "object": "UserAgg",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         register_sfetl(spark)
         src = _stage(spark, sf_dir)
@@ -498,7 +497,6 @@ def stream_sink_sfetl_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             "username": "user@test",
             "password": "pw",
             "object": "Event",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         register_sfetl(spark)
         src = _stage(spark, sf_dir)
@@ -598,7 +596,6 @@ def stream_sink_sfetl_failed_rows(spark: SparkSession, sf_dir: str) -> DataFrame
             "username": "user@test",
             "password": "pw",
             "object": "Event",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         register_sfetl(spark)
         src = _stage(spark, sf_dir)
@@ -714,7 +711,6 @@ def stream_sink_sfetl_failed_rows_fb(spark: SparkSession, sf_dir: str) -> DataFr
             "username": "user@test",
             "password": "pw",
             "object": "Event",
-            "poll_interval": "0.02",  # mock completes instantly
         }
         register_sfetl(spark)
         src = _stage(spark, sf_dir)

@@ -8,6 +8,7 @@ top of them.
 
 from __future__ import annotations
 
+import contextlib
 import decimal
 
 import pytest
@@ -182,7 +183,7 @@ def test_bulk_job_lifecycle(client, mock_sf):
     server, _ = mock_sf
     job = client.create_query_job("Case", ["Id", "CaseNumber", "Amount"])
     assert job.state in (JobState.UPLOAD_COMPLETE, JobState.IN_PROGRESS)
-    done = client.wait_for_job(job.id, poll_interval=0.01)
+    done = client.wait_for_job(job.id)
     assert done.state == JobState.JOB_COMPLETE
     assert done.number_records_processed == server.n_rows
     assert done.concurrency_mode == "Parallel"  # response.rs:39 parity
@@ -511,6 +512,118 @@ def test_stream_reader_limit_is_tie_safe(mock_sf):
         server.stop()
 
 
+@contextlib.contextmanager
+def _versioned_org(n_rows: int):
+    """A mock org whose Case rows carry a monotonic integer ``Version``
+    watermark, served as wire strings like every other mock value;
+    page_size=10 so a full pull spans several pages."""
+    server = MockSalesforce(n_rows=0, page_size=10)
+    server.rows = [_versioned_row(i) for i in range(n_rows)]
+    url = server.start()
+    try:
+        yield server, url
+    finally:
+        server.stop()
+
+
+def _versioned_row(i: int) -> dict[str, str]:
+    return {"Id": f"500{i:015d}", "Priority": ["Low", "High"][i % 2], "Version": str(i)}
+
+
+def _version_stream(url: str, names: list[str]):
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sf_etl_spark.connector.datasource import SfIncrementalStreamReader
+
+    schema = StructType([StructField(n, StringType()) for n in names])
+    return SfIncrementalStreamReader(
+        schema, {**sf_options(url), "object": "Case", "watermark_field": "Version"}
+    )
+
+
+def test_stream_reader_offset_stays_without_new_rows():
+    """Full first pull; with no new rows upstream the next read returns
+    nothing and the SAME offset; new rows move only the delta."""
+    with _versioned_org(25) as (server, url):
+        reader = _version_stream(url, ["Id", "Priority", "Version"])
+        rows, offset = reader.read(reader.initialOffset())
+        assert len(list(rows)) == 25 and offset == {"wm": 24}
+        rows, again = reader.read(offset)
+        assert list(rows) == [] and again == offset
+
+        server.rows.extend(_versioned_row(i) for i in range(25, 30))
+        rows, offset = reader.read(offset)
+        assert sorted(int(r[2]) for r in rows) == [25, 26, 27, 28, 29]
+        assert offset == {"wm": 29}
+        rows, again = reader.read(offset)
+        assert list(rows) == [] and again == offset
+
+
+def test_stream_reader_watermark_advances_numerically():
+    """Wire-string watermarks '9' -> '10' advance the offset to 10: a
+    lexicographic max would keep '9' and re-serve row 10 forever."""
+    with _versioned_org(10) as (server, url):
+        reader = _version_stream(url, ["Id", "Version"])
+        _, offset = reader.read(reader.initialOffset())
+        assert offset == {"wm": 9}
+        server.rows.append(_versioned_row(10))
+        rows, offset = reader.read(offset)
+        assert [r[1] for r in rows] == ["10"] and offset == {"wm": 10}
+        rows, again = reader.read(offset)
+        assert list(rows) == [] and again == offset
+
+
+def test_stream_reader_fetches_but_does_not_emit_an_unprojected_watermark():
+    """A watermark field outside the schema still rides the SELECT
+    list (the offset advances from fetched data) but is not emitted."""
+    with _versioned_org(25) as (server, url):
+        reader = _version_stream(url, ["Id", "Priority"])
+        rows, offset = reader.read(reader.initialOffset())
+        rows = list(rows)
+        assert offset == {"wm": 24}
+        assert {len(r) for r in rows} == {2}
+        assert sorted(rows) == sorted((r["Id"], r["Priority"]) for r in server.rows)
+
+
+# -- scan partitioning options are checked at planning time ----------------
+
+
+def _scan_reader(url: str, **opts):
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sf_etl_spark.connector.datasource import SfScanReader
+
+    schema = StructType([StructField("Id", StringType()), StructField("NumCalls", StringType())])
+    return SfScanReader(schema, {**sf_options(url), "object": "Case", **opts})
+
+
+def test_rest_partition_field_requires_lower_and_upper(mock_sf):
+    _, url = mock_sf
+    reader = _scan_reader(url, mode="rest", partition_field="NumCalls", lower="0")
+    with pytest.raises(ClientBuilderError, match="upper"):
+        reader.partitions()
+    reader = _scan_reader(url, mode="rest", partition_field="NumCalls")
+    with pytest.raises(ClientBuilderError, match="lower and upper"):
+        reader.partitions()
+
+
+def test_rest_partition_lower_above_upper_is_rejected(mock_sf):
+    _, url = mock_sf
+    reader = _scan_reader(
+        url, mode="rest", partition_field="NumCalls", lower="10", upper="5"
+    )
+    with pytest.raises(ClientBuilderError, match="lower"):
+        reader.partitions()
+
+
+def test_bulk_chunk_size_zero_is_rejected_before_a_job_is_created(mock_sf):
+    server, url = mock_sf
+    n_jobs = len(server.jobs)
+    with pytest.raises(ClientBuilderError, match="chunk_size"):
+        _scan_reader(url, chunk_size="0").partitions()
+    assert len(server.jobs) == n_jobs
+
+
 def test_session_refresh_uses_rotated_credentials(mock_sf):
     """A second login() with new credentials must update the captured
     refresh provider: after a password rotation the 401 re-login has
@@ -572,7 +685,7 @@ def test_bulk_ingest_lifecycle_and_abort():
         assert job.state == JobState.OPEN
         c.upload_ingest_batch(job.id, "CaseNumber,Priority\nA1,Low\nA2,High\n")
         c.close_ingest_job(job.id)
-        done = c.wait_for_ingest_job(job.id, poll_interval=0.01)
+        done = c.wait_for_ingest_job(job.id)
         assert done.state == JobState.JOB_COMPLETE
         assert done.number_records_processed == 2
         assert len(server.rows) == 2
@@ -651,7 +764,7 @@ def test_bulk_upsert_updates_not_duplicates():
         csv_text = "Ext__c,Val\nK1,new1\nK3,new3\n"
         c.upload_ingest_batch(job.id, csv_text)
         c.close_ingest_job(job.id)
-        done = c.wait_for_ingest_job(job.id, poll_interval=0.01)
+        done = c.wait_for_ingest_job(job.id)
         assert done.number_records_processed == 2
         assert done.number_records_failed == 0
         by_ext = {r["Ext__c"]: r for r in server.rows}
@@ -665,7 +778,7 @@ def test_bulk_upsert_updates_not_duplicates():
         j2 = c.create_ingest_job("Case", operation="upsert", external_id_field="Ext__c")
         c.upload_ingest_batch(j2.id, csv_text)
         c.close_ingest_job(j2.id)
-        c.wait_for_ingest_job(j2.id, poll_interval=0.01)
+        c.wait_for_ingest_job(j2.id)
         assert len(server.rows) == 3
     finally:
         server.stop()
@@ -692,7 +805,7 @@ def test_bulk_delete_and_failed_results():
         job = c.create_ingest_job("Case", operation="delete")
         c.upload_ingest_batch(job.id, "Id\n500D1\n500D3\nNOPE\n")
         c.close_ingest_job(job.id)
-        done = c.wait_for_ingest_job(job.id, poll_interval=0.01)
+        done = c.wait_for_ingest_job(job.id)
         assert done.number_records_processed == 2
         assert done.number_records_failed == 1
         assert sorted(r["Id"] for r in server.rows) == ["500D0", "500D2"]
@@ -712,7 +825,7 @@ def test_bulk_upsert_empty_key_rows_fail_not_insert():
         job = c.create_ingest_job("Case", operation="upsert", external_id_field="Ext__c")
         c.upload_ingest_batch(job.id, "Ext__c,Val\nK1,a\n,b\n")
         c.close_ingest_job(job.id)
-        done = c.wait_for_ingest_job(job.id, poll_interval=0.01)
+        done = c.wait_for_ingest_job(job.id)
         assert done.number_records_processed == 1
         assert done.number_records_failed == 1
         assert len(server.rows) == 1
@@ -873,7 +986,7 @@ def test_bulk_upsert_missing_key_column_fails_all_rows():
         job = c.create_ingest_job("Case", operation="upsert", external_id_field="Ext__c")
         c.upload_ingest_batch(job.id, "Val\na\nb\n")
         c.close_ingest_job(job.id)
-        done = c.wait_for_ingest_job(job.id, poll_interval=0.01)
+        done = c.wait_for_ingest_job(job.id)
         assert done.number_records_processed == 0
         assert done.number_records_failed == 2
         assert len(server.rows) == 0
@@ -942,7 +1055,7 @@ def test_commit_poll_round_robin_is_one_sleep_per_sweep(monkeypatch):
     monkeypatch.setattr(
         "sf_etl_spark.connector.client.time.sleep", lambda s: sleeps.append(s)
     )
-    done = c.wait_for_ingest_jobs(list(sweeps_left), poll_interval=0.01)
+    done = c.wait_for_ingest_jobs(list(sweeps_left))
     assert set(done) == set(sweeps_left)
     # serial polling would sleep ~10 times (2 per job); round-robin
     # sleeps once per sweep -> exactly 2 here
@@ -961,7 +1074,7 @@ def test_commit_poll_raises_on_failed_job(monkeypatch):
 
     monkeypatch.setattr(c, "get_ingest_job_status", fake_status)
     with pytest.raises(JobFailedError, match="bad"):
-        c.wait_for_ingest_jobs(["ok", "bad"], poll_interval=0.01)
+        c.wait_for_ingest_jobs(["ok", "bad"])
 
 
 def test_spark_write_commit_polls_round_robin_not_serially(spark):
@@ -985,7 +1098,7 @@ def test_spark_write_commit_polls_round_robin_not_serially(spark):
     try:
         register_sfetl(spark)
         df = spark.createDataFrame([(i,) for i in range(40)], ["Key"]).repartition(4)
-        opts = {**sf_options(url), "object": "Thing", "poll_interval": "0.05"}
+        opts = {**sf_options(url), "object": "Thing"}
         df.write.format("sfetl").options(**opts).mode("append").save()
         n_jobs = sum(1 for j in server.jobs.values() if j.get("kind") == "ingest")
         assert n_jobs == 4
@@ -1016,7 +1129,7 @@ def test_insert_with_id_column_fails_job():
         c.upload_ingest_batch(job.id, "Id,Priority\nA1,Low\n")
         c.close_ingest_job(job.id)
         with pytest.raises(JobFailedError, match="Id column not allowed"):
-            c.wait_for_ingest_job(job.id, poll_interval=0.01)
+            c.wait_for_ingest_job(job.id)
         assert len(server.rows) == 0
     finally:
         server.stop()
@@ -1033,7 +1146,7 @@ def test_upsert_empty_cell_preserves_field_na_sentinel_nulls():
         job = c.create_ingest_job("Case", operation="upsert", external_id_field="Ext__c")
         c.upload_ingest_batch(job.id, "Ext__c,Val,Note\nK1,,#N/A\n")
         c.close_ingest_job(job.id)
-        done = c.wait_for_ingest_job(job.id, poll_interval=0.01)
+        done = c.wait_for_ingest_job(job.id)
         assert done.number_records_processed == 1
         (row,) = server.rows
         assert row["Val"] == "keepme"  # empty cell skipped, not wiped
@@ -1058,7 +1171,7 @@ def test_list_ingest_jobs_paginates_and_sweep_scopes_by_object(spark):
             bad = ",nokey\n" if i == 3 else ""
             c.upload_ingest_batch(job.id, f"Ext__c,Val\nK{i},v{i}\n{bad}")
             c.close_ingest_job(job.id)
-            c.wait_for_ingest_job(job.id, poll_interval=0.01)
+            c.wait_for_ingest_job(job.id)
         jobs = c.list_ingest_jobs()
         assert len(jobs) == 5  # all pages walked
         pages = [r for r in server.requests_seen if "queryLocator" in r]
@@ -1088,7 +1201,7 @@ def test_failed_results_sweep_includes_failed_state_jobs(spark):
         c.upload_ingest_batch(job.id, "Id,Priority\nA1,Low\n")  # job-level reject
         c.close_ingest_job(job.id)
         with pytest.raises(Exception):
-            c.wait_for_ingest_job(job.id, poll_interval=0.01)
+            c.wait_for_ingest_job(job.id)
         listed = {j.id: j.state for j in c.list_ingest_jobs()}
         assert listed[job.id] == JS.FAILED
         # the CSV is servable for the Failed job (no 400)
@@ -1433,7 +1546,7 @@ def test_successful_results_created_vs_updated():
         job = c.create_ingest_job("Case", operation="upsert", external_id_field="Ext__c")
         c.upload_ingest_batch(job.id, "Ext__c,Val\nK1,new\nK2,b\n")
         c.close_ingest_job(job.id)
-        c.wait_for_ingest_job(job.id, poll_interval=0.01)
+        c.wait_for_ingest_job(job.id)
         lines = c.get_ingest_successful_results(job.id).strip().split("\n")
         assert lines[0] == "sf__Id,sf__Created,Ext__c,Val"
         by_key = {ln.split(",")[2]: ln for ln in lines[1:]}
@@ -1456,7 +1569,7 @@ def test_unprocessed_records_on_job_level_failure_and_abort():
         c.upload_ingest_batch(bad.id, "Id,Priority\nA1,Low\nA2,High\n")
         c.close_ingest_job(bad.id)
         with pytest.raises(Exception):
-            c.wait_for_ingest_job(bad.id, poll_interval=0.01)
+            c.wait_for_ingest_job(bad.id)
         lines = c.get_ingest_unprocessed_records(bad.id).strip().split("\n")
         assert lines == ["Id,Priority", "A1,Low", "A2,High"]
 
@@ -1539,7 +1652,7 @@ def test_results_routes_reject_query_job_ids():
     try:
         c = _login(url)
         qjob = c.create_query_job("Case", ["Id"])
-        c.wait_for_job(qjob.id, poll_interval=0.01)  # JobComplete
+        c.wait_for_job(qjob.id)  # JobComplete
         for call in (
             c.get_ingest_failed_results,
             c.get_ingest_successful_results,
@@ -1551,31 +1664,40 @@ def test_results_routes_reject_query_job_ids():
         server.stop()
 
 
-def test_explicit_poll_interval_is_honored_exactly(monkeypatch):
-    """A caller bounding commit latency with an explicit poll_interval
-    must get a FIXED cadence — backoff only applies when they opt into
-    max_poll_interval (or left the default)."""
+def test_job_waits_back_off_on_the_built_in_cadence(monkeypatch):
+    """A query-job wait and an ingest-jobs wait share one cadence: the
+    first sleep is 0.02 s, each sweep that leaves a job pending sleeps
+    1.5x longer, capped at 10 s — no caller-tunable interval."""
     from sf_etl_spark.connector.client import BulkJob
 
     c = SfClient(client_id="a", client_secret="b", login_url="http://unused")
-    sweeps_left = {"j0": 5}
+    pending_sweeps = 20
+    sweeps_left: dict[str, int] = {}
 
     def fake_status(jid):
         sweeps_left[jid] -= 1
-        state = JobState.JOB_COMPLETE if sweeps_left[jid] <= 0 else JobState.IN_PROGRESS
+        state = JobState.JOB_COMPLETE if sweeps_left[jid] < 0 else JobState.IN_PROGRESS
         return BulkJob(id=jid, state=state)
 
     sleeps = []
+    monkeypatch.setattr(c, "get_query_job_status", fake_status)
     monkeypatch.setattr(c, "get_ingest_job_status", fake_status)
     monkeypatch.setattr(
         "sf_etl_spark.connector.client.time.sleep", lambda s: sleeps.append(s)
     )
-    c.wait_for_ingest_jobs(["j0"], poll_interval=0.5)  # no cap -> fixed
-    assert sleeps == [0.5, 0.5, 0.5, 0.5]
+    expected = [min(0.02 * 1.5**k, 10.0) for k in range(pending_sweeps)]
+    assert expected[:3] == pytest.approx([0.02, 0.03, 0.045])
+    assert expected[-1] == 10.0  # the cap binds within the run
+
+    sweeps_left["q"] = pending_sweeps
+    assert c.wait_for_job("q").state == JobState.JOB_COMPLETE
+    assert sleeps == pytest.approx(expected)
+
     sleeps.clear()
-    sweeps_left["j0"] = 5
-    c.wait_for_ingest_jobs(["j0"], poll_interval=0.5, max_poll_interval=2.0)
-    assert sleeps == [0.5, 0.75, 1.125, 1.6875]  # 1.5x growth toward the cap
+    sweeps_left.update(i1=pending_sweeps, i2=pending_sweeps)
+    done = c.wait_for_ingest_jobs(["i1", "i2"])
+    assert set(done) == {"i1", "i2"}
+    assert sleeps == pytest.approx(expected)  # one sleep per sweep
 
 
 # -- injected (non-local) pyarrow filesystems through fsutil ----------------
@@ -1607,8 +1729,8 @@ def test_fsutil_scheme_registry_injected_fs(tmp_path):
         assert f is mem and p == "deep/dir/a.json"
         fsutil.write_small_file_atomic("mem://deep/dir/a.json", b'{"v": 1}')
         assert fsutil.read_small_file("mem://deep/dir/a.json") == b'{"v": 1}'
-        info = mem.get_file_info("deep/dir/a.json.tmp")
-        assert info.type == pafs.FileType.NotFound  # tmp consumed by move
+        listed = mem.get_file_info(pafs.FileSelector("deep/dir"))
+        assert [i.base_name for i in listed] == ["a.json"]  # tmp consumed by move
         assert not os.path.exists("mem:")  # nothing leaked locally
         # replay convergence: a fixed-name artifact overwrites in place
         fsutil.write_small_file_atomic("mem://deep/dir/a.json", b'{"v": 2}')
@@ -1663,41 +1785,6 @@ def test_fsutil_subtree_fs_rebases_paths(tmp_path):
         fsutil.unregister_scheme("sub")
 
 
-def test_watermark_state_through_injected_fs():
-    """The incremental extractor's two-phase watermark state must run
-    entirely on an injected in-memory filesystem — the object-store
-    stand-in where any os.* fallback in the state path would surface
-    as a NotFound/local-file divergence."""
-    import json as _json
-
-    from pyarrow import fs as pafs
-
-    from sf_etl_spark.connector import fsutil
-    from sf_etl_spark.connector.incremental import extract_incremental
-
-    server = MockSalesforce(n_rows=0, page_size=10)
-    server.rows = [
-        {"Id": f"500{i:015d}", "Version": str(i)} for i in range(12)
-    ]
-    url = server.start()
-    mem = pafs._MockFileSystem()
-    fsutil.register_scheme("mem", lambda rest: (mem, rest))
-    try:
-        c = _login(url)
-        state = "mem://ckpt/case/wm.json"
-        recs, res = extract_incremental(c, "Case", ["Id"], "Version", state)
-        assert res.n_rows == 12
-        res.commit()
-        raw = fsutil.read_small_file(state)
-        assert _json.loads(raw)["watermark"] == 11
-        # delta pull READS the committed state from the injected fs
-        recs2, res2 = extract_incremental(c, "Case", ["Id"], "Version", state)
-        assert res2.n_rows == 0 and res2.committed
-    finally:
-        fsutil.unregister_scheme("mem")
-        server.stop()
-
-
 def test_reject_side_table_through_injected_fs():
     """The streaming sink's reject side table — download, tmp+move
     write, zero-rejects erase INCLUDING a crashed attempt's stale .tmp
@@ -1736,7 +1823,6 @@ def test_reject_side_table_through_injected_fs():
                 "object": "Thing",
                 "operation": "upsert",
                 "externalIdFieldName": "K",
-                "poll_interval": "0.02",
                 "failed_results_path": "mem://side/rejects",
             },
         )
@@ -1809,9 +1895,6 @@ def test_foreach_batch_rejects_ignore_concurrent_loader(spark, tmp_path):
             "object": "Thing",
             "operation": "upsert",
             "externalIdFieldName": "K",
-            # a real (if short) poll cadence keeps the batch window
-            # open long enough for the interferer to land jobs inside it
-            "poll_interval": "0.05",
         }
         side = str(tmp_path / "rejects")
         handle = foreach_batch_ingest_with_rejects(spark, opts, side)
@@ -1830,7 +1913,7 @@ def test_foreach_batch_rejects_ignore_concurrent_loader(spark, tmp_path):
                 # drive it to its terminal state (a real concurrent
                 # loader polls its own jobs) so the final sweep below
                 # can see its rejects
-                c.wait_for_ingest_job(j.id, poll_interval=0.01)
+                c.wait_for_ingest_job(j.id)
                 n_interfering[0] += 1
                 _time.sleep(0.01)
 
@@ -2060,9 +2143,31 @@ def test_write_small_file_atomic_survives_stale_foreign_tmp(tmp_path):
     # two writes in a row: artifact converges, no tmp siblings leak
     fsutil.write_small_file_atomic(str(p), b'{"v": 2}')
     assert p.read_bytes() == b'{"v": 2}'
-    leftovers = [
-        f
-        for f in os.listdir(tmp_path)
-        if f.startswith("wm.json.tmp.") and f != "wm.json.tmp.deadbeef"
-    ]
-    assert leftovers == []
+    assert sorted(os.listdir(tmp_path)) == ["wm.json", "wm.json.tmp.deadbeef"]
+
+
+def test_write_small_file_atomic_crashed_tmp_is_hidden(tmp_path, monkeypatch):
+    """A crashed attempt's orphaned tmp is '.'-prefixed, so a directory
+    reader that hides '_'/'.'-prefixed files (spark.read.json) never
+    picks up a half-written artifact."""
+    import os
+
+    from pyarrow import fs as pafs
+
+    from sf_etl_spark.connector import fsutil
+
+    class CrashBeforeMove:
+        def __init__(self):
+            self.fs = pafs.LocalFileSystem()
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def move(self, src, dest):
+            raise OSError("crash before move")
+
+    monkeypatch.setattr(fsutil, "filesystem_for", lambda path: (CrashBeforeMove(), path))
+    with pytest.raises(OSError, match="crash before move"):
+        fsutil.write_small_file_atomic(str(tmp_path / "a.jsonl"), b"{}\n")
+    (orphan,) = os.listdir(tmp_path)
+    assert orphan.startswith(".a.jsonl.tmp.")

@@ -5,8 +5,9 @@ so far was a read/compute lane; this one measures the ingest leg.
 Writes a customer slice through the ``sfetl`` sink at 1x and 10x the
 key cap with a FIXED partition count, a small ``target_job_mb`` (so
 the size-governed chunking actually splits at 10x), and the mock's
-delayed-completion polls (fail_first_polls=2, poll_interval=0.2 — a
-realistic ~0.6 s processing window).
+delayed-completion polls (fail_first_polls=2: each job completes on
+its third status sweep, after the client's built-in 0.02 s and 0.03 s
+backoff sleeps).
 
 What the ratio proves: job COUNT must scale ~linearly with volume
 (chunking fans out instead of buffering), while WALL time stays near
@@ -70,7 +71,6 @@ def run_once(spark, sf_dir: str, cap: int) -> tuple[int, int, float]:
             "username": "user@test",
             "password": "pw",
             "object": "Customer",
-            "poll_interval": "0.2",
             "target_job_mb": str(TARGET_JOB_MB),
         }
         t0 = time.perf_counter()
