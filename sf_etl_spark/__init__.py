@@ -11,4 +11,10 @@ partition-aware shuffles) so the same code scales from local testing
 to 100 TB clusters.
 """
 
+from sf_etl_spark import _zipimport_compat
+
 __version__ = "0.1.0"
+
+# Spark's Python workers import this package to unpickle the program's
+# classes and UDFs; see the module for what it saves them per call.
+_zipimport_compat.install()

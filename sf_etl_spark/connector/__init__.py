@@ -13,8 +13,6 @@ Spark data source plus a schema pipeline.
 
 from __future__ import annotations
 
-from dataclasses import replace
-
 from pyspark.sql import DataFrame, SparkSession
 
 from sf_etl_spark.connector.client import (
@@ -69,25 +67,27 @@ def read_object(
     expressions — the describe-driven equivalent of the reference's
     per-caller serde structs (``response.rs:4-10``).
     """
-    from sf_etl_spark.connector.datasource import _client_from_options
+    from sf_etl_spark.connector.datasource import (
+        _client_from_options,
+        project_fields,
+        wire_schema,
+    )
     from sf_etl_spark.schema.ingest import coerce_dataframe
 
     register(spark)
     reader = spark.read.format(FORMAT_NAME).option("object", object_name)
     for k, v in options.items():
         reader = reader.option(k, v)
-    raw = reader.load()
     if not coerce:
-        return raw
-    schema = _client_from_options(options).describe(object_name)
-    if options.get("fields"):
-        # projected read: coerce only the selected fields (otherwise the
-        # cast lane would re-add dropped columns as typed nulls)
-        keep = {f.strip() for f in options["fields"].split(",")}
-        schema = replace(
-            schema, fields=tuple(f for f in schema.fields if f.name in keep)
-        )
-    return coerce_dataframe(raw, schema)
+        return reader.load()
+    # one describe, on the driver: handing Spark the wire schema keeps
+    # the planner from describing the object a second time. A projected
+    # read coerces only the selected fields (the cast lane would re-add
+    # dropped columns as typed nulls).
+    schema = project_fields(
+        _client_from_options(options).describe(object_name), options.get("fields")
+    )
+    return coerce_dataframe(reader.schema(wire_schema(schema)).load(), schema)
 
 
 def generate_table_ddl(

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import math
+import threading
 import time
 import urllib.error
 import urllib.parse
@@ -48,6 +49,10 @@ _RETRYABLE_STATUSES = {429, 500, 502, 503, 504}
 # longer falls back to it capped (a misconfigured proxy must not be
 # able to park an executor task for an hour on one header)
 _RETRY_AFTER_CAP = 30.0
+# Guards the transport counters of every client: one client serves all
+# threads of its process through the datasource's client cache. Kept
+# off the instance so clients stay picklable.
+_COUNTERS_LOCK = threading.Lock()
 
 
 class JobState(str, Enum):
@@ -175,6 +180,13 @@ class SfClient:
         # overwritten) from the login()-captured fallback (refreshed
         # on every successful login so rotation works)
         self._provider_is_custom = False
+        # Transport counters, cumulative over this client's life: HTTP
+        # attempts sent, attempts retried after a transient failure, 429
+        # responses received, and seconds slept between retries.
+        self.requests = 0
+        self.retries = 0
+        self.http_429 = 0
+        self.backoff_s = 0.0
 
     def set_credential_provider(
         self, provider: Callable[[], tuple[str, str]] | None
@@ -224,11 +236,16 @@ class SfClient:
         while attempt <= self.max_retries:
             req = urllib.request.Request(url, data=body, headers=hdrs, method=method)
             retry_after: float | None = None
+            with _COUNTERS_LOCK:
+                self.requests += 1
             try:
                 with urllib.request.urlopen(req, timeout=self.timeout) as resp:
                     return resp.status, resp.read(), dict(resp.headers.items())
             except urllib.error.HTTPError as e:
                 payload = e.read()
+                if e.code == 429:
+                    with _COUNTERS_LOCK:
+                        self.http_429 += 1
                 if (
                     e.code == 401
                     and not refreshed
@@ -274,7 +291,12 @@ class SfClient:
             except urllib.error.URLError as e:
                 last_err = e
             delay = self.backoff_base * (2**attempt)
-            time.sleep(delay if retry_after is None else max(retry_after, 0.0))
+            if retry_after is not None:
+                delay = max(retry_after, 0.0)
+            time.sleep(delay)
+            with _COUNTERS_LOCK:
+                self.retries += 1
+                self.backoff_s += delay
             attempt += 1
         raise HttpError(f"{method} {url} failed after {self.max_retries + 1} attempts: {last_err}")
 

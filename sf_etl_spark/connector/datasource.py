@@ -43,7 +43,7 @@ import json
 import re
 import threading
 from collections.abc import Iterator, Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any
 
 from pyspark.sql.datasource import (
@@ -69,6 +69,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from sf_etl_spark.connector.client import SfClient
 from sf_etl_spark.connector.errors import ClientBuilderError, IngestBudgetError
+from sf_etl_spark.schema.field_types import ObjectSchema
 
 FORMAT_NAME = "sfetl"
 
@@ -366,6 +367,31 @@ class SfScanReader(DataSourceReader):
             )
 
 
+def project_fields(described: ObjectSchema, fields: str | None) -> ObjectSchema:
+    """*described* narrowed to the comma-separated ``fields`` option, in
+    describe order; no option keeps every field.
+
+    Projection pushdown (reference R4, `client.rs:217`): the Python
+    DataSource API has no pruneColumns hook (4.1), so the `fields`
+    option narrows the wire schema, and with it the SOQL SELECT list,
+    explicitly. Transfer volume scales with |fields|.
+    """
+    if not fields:
+        return described
+    keep = {f.strip() for f in fields.split(",") if f.strip()}
+    unknown = sorted(keep - set(described.field_names()))
+    if unknown:
+        raise ClientBuilderError(f"unknown fields for projection: {unknown}")
+    return replace(described, fields=tuple(f for f in described.fields if f.name in keep))
+
+
+def wire_schema(described: ObjectSchema) -> StructType:
+    """The scan's row schema: every field a string, in describe order.
+    Typed casts are applied post-scan by read_object() so they run
+    JVM-side."""
+    return StructType([StructField(f.name, StringType(), True) for f in described.fields])
+
+
 class SfEtlDataSource(DataSource):
     """``spark.read.format("sfetl")`` front door.
 
@@ -379,22 +405,10 @@ class SfEtlDataSource(DataSource):
         return FORMAT_NAME
 
     def schema(self) -> StructType:
-        client = _client_from_options(self.options)
-        obj_schema = client.describe(self.options["object"])
-        # Wire schema: all strings, describe order; typed casts are applied
-        # post-scan by read_object() so they run JVM-side.
-        names = [f.name for f in obj_schema.fields]
-        # Projection pushdown (reference R4, `client.rs:217`): the Python
-        # DataSource API has no pruneColumns hook (4.1), so the `fields`
-        # option narrows the wire schema — and with it the SOQL SELECT
-        # list — explicitly. Transfer volume scales with |fields|.
-        if self.options.get("fields"):
-            keep = [f.strip() for f in self.options["fields"].split(",") if f.strip()]
-            unknown = sorted(set(keep) - set(names))
-            if unknown:
-                raise ClientBuilderError(f"unknown fields for projection: {unknown}")
-            names = [n for n in names if n in keep]
-        return StructType([StructField(n, StringType(), True) for n in names])
+        # Spark calls this only when the caller gave no schema;
+        # read_object() passes the one it described
+        described = _client_from_options(self.options).describe(self.options["object"])
+        return wire_schema(project_fields(described, self.options.get("fields")))
 
     def reader(self, schema: StructType) -> SfScanReader:
         return SfScanReader(schema, dict(self.options))

@@ -259,13 +259,23 @@ def test_tools_time_through_the_bench_warm_up(tool, tmp_path, monkeypatch, capsy
     then the streaming/DataSource machinery) before timing their first
     lane; opt_measure used to warm q5 only, so its first stream or
     sfetl lane absorbed the session spin-up. sf1_leg appends its
-    entry to the history."""
+    entry to the history; opt_measure reports each lane's Python-worker
+    CPU per run, read under the JVM around that lane's runs."""
     import importlib
 
     mod = importlib.import_module(tool)
     lanes = _StubLanes(["q5_revenue_by_nation", "stream_sink_sfetl_native", "lane_a", "lane_b"])
     lanes.install(monkeypatch)
     monkeypatch.setattr(mod, "REPO", str(tmp_path), raising=False)
+    if tool == "opt_measure":
+        # one fake CPU second per count() of lane_b, none for lane_a
+        monkeypatch.setattr(mod, "_jvm_pid", lambda spark: 4242)
+        monkeypatch.setattr(
+            "perfbench.procfs.tree_cpu_s",
+            lambda root, prefix: float(lanes.repeats.get("lane_b", 0))
+            if (root, prefix) == (4242, "python")
+            else -1.0,
+        )
     argv = (
         ["lane_a", "lane_b", "--runs", "2", "--sf-dir", str(tmp_path)]
         if tool == "opt_measure"
@@ -284,6 +294,8 @@ def test_tools_time_through_the_bench_warm_up(tool, tmp_path, monkeypatch, capsy
     out = json.loads(capsys.readouterr().out.splitlines()[-1])
     timings = out.get("timings", out.get("queries"))
     assert set(timings) == {"lane_a", "lane_b"}
+    if tool == "opt_measure":
+        assert out["pyworker_cpu_s"] == {"lane_a": 0.0, "lane_b": 1.0}
     if tool == "sf1_leg":
         (entry,) = load_history(str(tmp_path))
         assert entry["sf"] == "1probe" and entry["queries"] == timings

@@ -291,6 +291,17 @@ def test_catalyst_filter_pushdown_to_soql(spark, mock_sf):
     assert any("NumCalls" in r for r in pushed)
 
 
+def test_read_object_describes_the_object_once(spark, mock_sf):
+    """A typed read describes the object once, on the driver, and hands
+    Spark the wire schema, so the planner does not describe it again."""
+    server, url = mock_sf
+    n_before = len(server.requests_seen)
+    df = read_object(spark, {**sf_options(url), "mode": "rest"}, "Case")
+    assert df.count() == server.n_rows
+    describes = [r for r in server.requests_seen[n_before:] if r.endswith("/describe")]
+    assert len(describes) == 1, describes
+
+
 def test_filter_to_soql_rendering():
     from pyspark.sql.datasource import (
         EqualTo,
@@ -1226,6 +1237,32 @@ def test_429_burst_retried_with_retry_after(client, mock_sf):
     # two honored Retry-After sleeps of 0.05s, not exponential seconds
     assert elapsed < 2.0
     server.n_429_served = 0
+
+
+def test_client_counts_requests_retries_429s_and_backoff(mock_sf, monkeypatch):
+    """SfClient keeps its own transport counters, so a run against a
+    real org shows its retries and backoff, not only the mock's tally:
+    a burst of three 429s reads 3 retries, 3 429s, 4 requests and the
+    seconds actually slept."""
+    import sf_etl_spark.connector.client as client_mod
+
+    server, url = mock_sf
+    c = SfClient(client_id="app", client_secret="shhh", login_url=url, backoff_base=0.01)
+    c.login("user@test", "pw")
+    assert (c.requests, c.retries, c.http_429, c.backoff_s) == (1, 0, 0, 0.0)
+    slept: list[float] = []
+    monkeypatch.setattr(client_mod.time, "sleep", slept.append)
+    with server.lock:
+        server.inject_429_remaining = 3
+    try:
+        assert len(c.query("SELECT Id FROM Case LIMIT 3")) == 3
+    finally:
+        with server.lock:
+            server.inject_429_remaining = 0
+            server.n_429_served = 0
+    assert (c.requests, c.retries, c.http_429) == (1 + 4, 3, 3)
+    assert len(slept) == 3 and c.backoff_s == pytest.approx(sum(slept))
+    assert c.backoff_s > 0
 
 
 def test_429_exhaustion_raises_response_error(mock_sf):

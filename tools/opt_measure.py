@@ -8,7 +8,11 @@ count()'s pruned plan, labels each job (§1.5), and captures
 `.explain("formatted")` per lane for the plans/r15/ evidence files.
 `--action count` times with bench.py's terminal action instead, the
 plain best-of-N wall time of a lane at `--sf-dir`. Warm-up and timing
-are bench.py's own (warm_up, time_lanes).
+are bench.py's own (warm_up, time_lanes). Next to each lane's time it
+reports the CPU seconds per run of Spark's Python workers (the JVM's
+`python*` descendants, read from /proc by perfbench/procfs.py), which
+shows the lanes whose cost sits in pandas/Arrow UDFs, Python data
+sources or worker start-up.
 
 This tool is measurement-only: it never feeds CORRECTNESS/BENCH
 artifacts (bench.py keeps its count()-based, round-comparable
@@ -37,6 +41,10 @@ def formatted_plan(df) -> str:
     return jdf.queryExecution().explainString(mode)
 
 
+def _jvm_pid(spark) -> int:
+    return int(spark._jvm.java.lang.ProcessHandle.current().pid())
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("lanes", nargs="+")
@@ -48,6 +56,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from bench import time_lanes, warm_up
+    from perfbench.procfs import tree_cpu_s
     from sf_etl_spark.queries import all_queries
     from sf_etl_spark.session import get_spark
 
@@ -61,8 +70,25 @@ def main() -> None:
             df = specs[name].fn(spark, args.sf_dir)
             with open(os.path.join(args.explain, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(formatted_plan(df))
-    out, _ = time_lanes(spark, args.lanes, args.sf_dir, args.runs, args.action)
-    print(json.dumps({"action": args.action, "runs": args.runs, "sf_dir": args.sf_dir, "timings": out}))
+    jvm_pid = _jvm_pid(spark)
+    out: dict[str, float] = {}
+    pyworker: dict[str, float] = {}
+    for name in args.lanes:
+        cpu0 = tree_cpu_s(jvm_pid, "python")
+        out.update(time_lanes(spark, [name], args.sf_dir, args.runs, args.action)[0])
+        pyworker[name] = round((tree_cpu_s(jvm_pid, "python") - cpu0) / args.runs, 3)
+        print(f"{name}: Python workers {pyworker[name]} cpu s per run", file=sys.stderr)
+    print(
+        json.dumps(
+            {
+                "action": args.action,
+                "runs": args.runs,
+                "sf_dir": args.sf_dir,
+                "timings": out,
+                "pyworker_cpu_s": pyworker,
+            }
+        )
+    )
     spark.stop()
 
 
