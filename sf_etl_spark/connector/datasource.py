@@ -25,10 +25,15 @@ Two scan modes (option ``mode``):
 
 ``spark.readStream.format("sfetl")`` (:class:`SfIncrementalStreamReader`)
 is the connector's one incremental pull: a high-watermark delta per
-micro-batch, its offset kept in Spark's offset log.
+micro-batch, its offset kept in Spark's offset log, its rows read by
+executor tasks like the batch scan's.
 
-Rows are produced in the **wire schema** (every column a string, in
-describe order); callers get typed columns via
+Every data path is columnar. Readers yield ``pyarrow.RecordBatch``es,
+which PySpark forwards without per-cell work: bulk CSV chunks are
+parsed by ``pyarrow.csv.read_csv`` and REST pages are built column by
+column. The sinks are Arrow writers whose CSV comes from
+``pyarrow.csv.write_csv``. Batches are in the **wire schema** (every
+column a string, in describe order); callers get typed columns via
 :func:`sf_etl_spark.connector.read_object`, which applies the
 Catalyst cast lane (`schema/ingest.py`) — JVM-side, codegen'd, no
 Python in the hot path after the fetch itself.
@@ -48,9 +53,10 @@ from typing import Any
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceStreamArrowWriter,
+    DataSourceStreamReader,
     EqualTo,
     Filter,
     GreaterThan,
@@ -61,7 +67,6 @@ from pyspark.sql.datasource import (
     IsNull,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     StringStartsWith,
     WriterCommitMessage,
 )
@@ -130,11 +135,11 @@ def _client_from_options(options: dict[str, str]) -> SfClient:
     return client
 
 
-# Bulk API CSV dialect enums → csv.reader parameters. The reference
+# Bulk API CSV dialect enums → parser delimiters. The reference
 # deserializes lineEnding/columnDelimiter (``response.rs:37-38``) but
 # never feeds them to a parser; here the declared dialect actually
 # reaches the chunk parse (r9 verdict "missing" item 1). Line endings
-# need no mapping: Python's csv reader accepts LF and CRLF rows alike.
+# need no mapping: pyarrow's CSV parser accepts LF and CRLF rows alike.
 _BULK_DELIMITERS = {
     "COMMA": ",",
     "PIPE": "|",
@@ -325,17 +330,10 @@ class SfScanReader(DataSourceReader):
 
     # -- execution (one task per partition) --------------------------------
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
+    def read(self, partition: InputPartition) -> Iterator[Any]:
         client = _client_from_options(self.options)
         if isinstance(partition, RangePartition):
-            for page in client.query_pages(partition.soql):
-                for rec in page.records:
-                    # JSON booleans read as "true"/"false", the wire
-                    # string every other read mode and the sink use
-                    yield tuple(
-                        None if rec.get(n) is None else _format_cell(rec.get(n))
-                        for n in self.field_names
-                    )
+            yield from _rest_batches(client, partition.soql, self.field_names)
             return
         assert isinstance(partition, ChunkPartition)
         if partition.serial_walk:
@@ -349,22 +347,61 @@ class SfScanReader(DataSourceReader):
                 )
             ]
         for chunk in chunks:
-            yield from self._parse_csv(chunk.csv_text, partition.delimiter)
+            yield from _csv_batches(chunk.csv_text, self.field_names, partition.delimiter)
 
-    def _parse_csv(self, text: str, delimiter: str = ",") -> Iterator[tuple]:
-        # newline='' semantics: the StringIO holds the payload verbatim,
-        # and csv.reader consumes LF and CRLF row endings alike — the
-        # declared lineEnding needs no branch, only the delimiter does
-        rows = csv.reader(io.StringIO(text), delimiter=delimiter)
-        header = next(rows, None)
-        if header is None:
-            return
-        idx = {name: i for i, name in enumerate(header)}
-        order = [idx.get(n) for n in self.field_names]
-        for row in rows:
-            yield tuple(
-                None if i is None or i >= len(row) or row[i] == "" else row[i] for i in order
+
+def _csv_batches(text: str, names: list[str], delimiter: str = ",") -> Iterator[Any]:
+    """One bulk result chunk as wire-schema RecordBatches.
+
+    The header selects the columns, so a column the chunk lacks reads
+    as nulls; an empty or quoted-empty field is null; quoted fields may
+    hold the delimiter and newlines; LF and CRLF rows parse alike.
+    """
+    if not text.strip():
+        return
+    import pyarrow as pa
+    from pyarrow import csv as pa_csv
+
+    table = pa_csv.read_csv(
+        pa.py_buffer(text.encode("utf-8")),
+        # one task is one core: Spark parallelises across partitions
+        read_options=pa_csv.ReadOptions(use_threads=False),
+        parse_options=pa_csv.ParseOptions(delimiter=delimiter, newlines_in_values=True),
+        convert_options=pa_csv.ConvertOptions(
+            column_types={n: pa.string() for n in names},
+            include_columns=names,
+            include_missing_columns=True,
+            null_values=[""],
+            strings_can_be_null=True,
+        ),
+    )
+    for batch in table.to_batches():
+        if batch.num_rows:
+            yield batch
+
+
+def _rest_batches(client: SfClient, soql: str, names: list[str]) -> Iterator[Any]:
+    """Each page of a SOQL query as one wire-schema RecordBatch, so
+    memory is bounded by the page size. Built column by column; a JSON
+    value that is not a string (a boolean, a number) is rendered by
+    :func:`_format_cell`, so booleans read as "true"/"false", the wire
+    string bulk CSV and the sink use."""
+    import pyarrow as pa
+
+    string = pa.string()
+    for page in client.query_pages(soql):
+        if not page.records:
+            continue
+        columns = []
+        for n in names:
+            values = [rec.get(n) for rec in page.records]
+            columns.append(
+                pa.array(
+                    [v if v is None or type(v) is str else _format_cell(v) for v in values],
+                    type=string,
+                )
             )
+        yield pa.RecordBatch.from_arrays(columns, names=names)
 
 
 def project_fields(described: ObjectSchema, fields: str | None) -> ObjectSchema:
@@ -421,7 +458,7 @@ class SfEtlDataSource(DataSource):
             )
         return SfIngestWriter(schema, dict(self.options))
 
-    def simpleStreamReader(self, schema: StructType) -> "SfIncrementalStreamReader":
+    def streamReader(self, schema: StructType) -> "SfIncrementalStreamReader":
         return SfIncrementalStreamReader(schema, dict(self.options))
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> "SfIngestStreamWriter":
@@ -464,21 +501,61 @@ def _format_cell(v: Any) -> str:
     return str(v)
 
 
-class SfIngestWriter(DataSourceWriter):
+def _wire_batch(batch: Any) -> Any:
+    """*batch* with every column as Bulk CSV wire strings, cell for
+    cell what :func:`_format_cell` gives. Strings pass through,
+    booleans and integers are cast in Arrow (the same text), any other
+    type is formatted per cell. An empty string becomes null, so it is
+    written as an empty field, as None is."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    columns = []
+    for col in batch.columns:
+        t = col.type
+        if pa.types.is_string(t) or pa.types.is_large_string(t):
+            out = col
+        elif pa.types.is_boolean(t) or pa.types.is_integer(t):
+            out = pc.cast(col, pa.string())
+        else:
+            out = pa.array(
+                [None if v is None else _format_cell(v) for v in col.to_pylist()],
+                type=pa.string(),
+            )
+        empty = pc.equal(out, "")
+        if pc.any(empty).as_py():
+            out = pc.replace_with_mask(out, empty, pa.nulls(len(out), out.type))
+        columns.append(out)
+    return pa.RecordBatch.from_arrays(columns, names=batch.schema.names)
+
+
+def _csv_rows(wire: Any) -> bytes:
+    """A wire batch's rows as headerless CSV."""
+    import pyarrow as pa
+    from pyarrow import csv as pa_csv
+
+    sink = pa.BufferOutputStream()
+    pa_csv.write_csv(wire, sink, write_options=pa_csv.WriteOptions(include_header=False))
+    return sink.getvalue().to_pybytes()
+
+
+class SfIngestWriter(DataSourceArrowWriter):
     """``df.write.format("sfetl").mode("append")`` — the LOAD leg the
     extract-only reference never ships, as a Spark batch sink.
 
     Parallelism model: Bulk API 2.0 ingest takes ONE CSV upload per
-    job, so each task streams its partition into size-bounded CSV
-    chunks and maps each chunk to its own job (create → PUT batch →
-    PATCH UploadComplete). Load parallelism scales with partitions —
-    the write-side mirror of the chunked scan — and per-job payload is
-    governed by the ``target_job_mb`` option (default 100, inside
-    Bulk 2.0's ~150 MB upload cap): a skewed partition opens more
-    jobs instead of materializing itself in executor memory, so task
-    memory stays O(target_job_mb) regardless of partition size. The
-    driver's ``commit`` then polls ALL jobs in a round-robin sweep
-    (wall time bounded by the slowest job, not job count); ``abort``
+    job, so each task streams its partition's Arrow batches into
+    size-bounded CSV chunks (``pyarrow.csv.write_csv``, cells as
+    :func:`_format_cell` renders them) and maps each chunk to its own
+    job (create → PUT batch → PATCH UploadComplete). Load parallelism
+    scales with partitions — the write-side mirror of the chunked scan
+    — and per-job payload is governed by the ``target_job_mb`` option
+    (default 100, inside Bulk 2.0's ~150 MB upload cap): a skewed
+    partition opens more jobs instead of materializing itself in
+    executor memory, so task memory stays O(target_job_mb + one Arrow
+    batch) regardless of partition size. The driver's ``commit`` then
+    polls ALL jobs in a round-robin sweep (wall time bounded by the
+    slowest job, not job count); ``abort``
     PATCHes unprocessed jobs to Aborted, so a failed Spark write
     leaves no half-applied jobs *that the backend had not already
     started processing*. (Bulk 2.0 offers no cross-job transaction —
@@ -518,9 +595,7 @@ class SfIngestWriter(DataSourceWriter):
                     f"externalIdFieldName {self.external_id_field!r} is not a "
                     f"column of the written DataFrame {self.field_names}"
                 )
-        # per-JOB CSV payload budget: StringIO.tell() counts characters
-        # (== bytes for the ASCII-dominant Bulk CSV; multibyte text can
-        # overshoot slightly, which the 100-vs-150 MB headroom absorbs)
+        # per-JOB CSV payload budget, in bytes of the uploaded CSV
         self.target_job_mb = float(options.get("target_job_mb", "100"))
         if not self.target_job_mb > 0:
             raise ClientBuilderError(
@@ -566,15 +641,18 @@ class SfIngestWriter(DataSourceWriter):
                     f"invalid fs_resolver option {self.fs_resolver!r}: {e}"
                 ) from e
 
-    def write(self, iterator: Iterator) -> SfIngestCommit:
+    def write(self, iterator: Iterator[Any]) -> SfIngestCommit:
         client = _client_from_options(self.options)
-        limit = int(self.target_job_mb * 1024 * 1024)
         hdr = io.StringIO()
         csv.writer(hdr, lineterminator="\n").writerow(self.field_names)
-        header = hdr.getvalue()
+        header = hdr.getvalue().encode("utf-8")
+        room = int(self.target_job_mb * 1024 * 1024) - len(header)
         job_ids: list[str] = []
+        parts: list[bytes] = []
+        size = 0
 
-        def flush(csv_text: str) -> None:
+        def flush() -> None:
+            nonlocal parts, size
             if len(job_ids) >= self.max_jobs_per_task:
                 raise IngestBudgetError(
                     f"partition would exceed max_jobs_per_task="
@@ -591,29 +669,35 @@ class SfIngestWriter(DataSourceWriter):
             # registered before upload so a mid-upload failure still
             # reaches the cleanup sweep below
             job_ids.append(job.id)
-            client.upload_ingest_batch(job.id, csv_text)
+            client.upload_ingest_batch(job.id, b"".join([header, *parts]).decode("utf-8"))
             client.close_ingest_job(job.id)
+            parts, size = [], 0
 
-        def fresh_buf() -> tuple[io.StringIO, Any]:
-            buf = io.StringIO()
-            buf.write(header)
-            return buf, csv.writer(buf, lineterminator="\n")
+        def add(wire: Any) -> None:
+            # a job's CSV stays within target_job_mb: a batch that would
+            # overshoot the open chunk is halved until its rows fit; a
+            # single row larger than the budget goes alone
+            nonlocal size
+            rows = _csv_rows(wire)
+            if size + len(rows) > room:
+                if wire.num_rows > 1:
+                    half = wire.num_rows // 2
+                    add(wire.slice(0, half))
+                    add(wire.slice(half))
+                    return
+                if parts:
+                    flush()
+            parts.append(rows)
+            size += len(rows)
 
-        buf, w = fresh_buf()
-        n_chunk = 0
         total = 0
-        width = len(self.field_names)
         try:
-            for row in iterator:
-                w.writerow([_format_cell(row[i]) for i in range(width)])
-                n_chunk += 1
-                total += 1
-                if buf.tell() >= limit:
-                    flush(buf.getvalue())
-                    buf, w = fresh_buf()
-                    n_chunk = 0
-            if n_chunk:
-                flush(buf.getvalue())
+            for batch in iterator:
+                if batch.num_rows:
+                    add(_wire_batch(batch))
+                    total += batch.num_rows
+            if parts:
+                flush()
         except Exception:
             # fail-fast cleanup of THIS task's jobs — including chunks
             # already closed (abort is legal from Open/UploadComplete);
@@ -669,17 +753,18 @@ class SfIngestWriter(DataSourceWriter):
                     pass
 
 
-class SfIngestStreamWriter(DataSourceStreamWriter):
+class SfIngestStreamWriter(DataSourceStreamArrowWriter):
     """``df.writeStream.format("sfetl")`` — the NATIVE streaming sink
     (the batch writer's micro-batch twin; ``foreachBatch`` is no
     longer required to stream into the backend).
 
-    Per micro-batch: each partition maps its size-bounded CSV chunks
-    to their own Bulk 2.0 ingest jobs (identical mechanics to
-    :class:`SfIngestWriter.write`), and ``commit(batchId)`` round-robin
-    polls every job to JobComplete before the engine records the batch
-    in its offset log. Delivery contract: Spark replays an uncommitted
-    batch after restart, so ``operation='insert'`` is at-least-once;
+    Per micro-batch: each partition maps the size-bounded CSV chunks
+    of its Arrow batches to their own Bulk 2.0 ingest jobs (identical
+    mechanics to :class:`SfIngestWriter.write`), and
+    ``commit(batchId)`` round-robin polls every job to JobComplete
+    before the engine records the batch in its offset log. Delivery
+    contract: Spark replays an uncommitted batch after restart, so
+    ``operation='insert'`` is at-least-once;
     ``operation='upsert'`` with ``externalIdFieldName`` is the
     exactly-once-by-idempotence configuration (a replayed batch
     converges to the same backend state). ``abort(batchId)`` aborts
@@ -714,7 +799,7 @@ class SfIngestStreamWriter(DataSourceStreamWriter):
         self._writer = SfIngestWriter(schema, options)
         self.failed_results_path = options.get("failed_results_path")
 
-    def write(self, iterator: Iterator) -> SfIngestCommit:
+    def write(self, iterator: Iterator[Any]) -> SfIngestCommit:
         return self._writer.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
@@ -810,65 +895,46 @@ def _coerce(v: Any) -> Any:
     return v
 
 
-class SfIncrementalStreamReader(SimpleDataSourceStreamReader):
+class SfIncrementalStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("sfetl")`` — the connector's one
     incremental (high-watermark delta) pull, as a Structured Streaming
     source. A scheduled one-shot pull runs it under
     ``trigger(availableNow=True)``.
 
-    Offsets ARE watermarks: each micro-batch fetches
-    ``WHERE <watermark_field> > <last offset>`` remotely (the delta
-    predicate rides the SOQL, so a trigger moves |changed rows|, not
-    |object|) and advances the offset to the max value seen. Spark's
-    checkpoint persists the offset and replays an uncommitted batch via
-    :meth:`readBetweenOffsets`, so the pull is at-least-once through
-    the engine's own offset log: a crash between fetch and sink
-    re-serves the delta. Exactly-once to a transactional sink follows
-    from Spark's sink-side idempotence (e.g. the merge sink keyed by
-    Id).
+    Offsets ARE watermarks, ``{"wm": <value>}``. ``latestOffset`` asks
+    the org for its current maximum watermark in one one-row query
+    (``SELECT <wm> FROM <obj> ORDER BY <wm> DESC NULLS LAST LIMIT 1``);
+    a micro-batch is the closed range ``(start, end]`` between two
+    offsets, planned as one partition whose SOQL carries the range
+    predicate (so a trigger moves |changed rows|, not |object|). The
+    executor task that reads it pages the REST cursor and yields one
+    Arrow batch per page, so task memory is bounded by the page size
+    and no row passes through the driver. Spark's checkpoint persists
+    the offsets and replays an uncommitted batch by re-planning the
+    same range, so the pull is at-least-once through the engine's own
+    offset log: a crash between fetch and sink re-serves the delta.
+    Exactly-once to a transactional sink follows from Spark's
+    sink-side idempotence (e.g. the merge sink keyed by Id).
 
-    A ``SimpleDataSourceStreamReader`` runs on the DRIVER (records are
-    prefetched and shipped to executors) — the right shape for a
-    delta poll, which is small by construction; the partition-planned
-    batch reader stays the bulk-backfill path. Two knobs bound the one
-    batch that is NOT small by construction, the bootstrap (no prior
-    offset ⇒ the whole object):
-
-    * ``initial_watermark`` — start the stream at a given watermark
-      instead of the beginning of time (the usual production choice:
-      bulk-backfill first, stream from the backfill's high-water mark);
-    * ``max_rows_per_batch`` — LIMIT-driven offset advance: each
-      micro-batch pulls at most N rows in watermark order, so a cold
-      start drains the object in bounded driver-memory chunks instead
-      of one unbounded list. Tie-safety: when the LIMIT is hit, rows
-      sharing the boundary watermark may have been cut off
-      server-side, so the batch delivers only rows strictly below the
-      boundary and advances the offset to the largest delivered value
-      — never past rows it did not fetch. A tie run of >= N rows (one
-      bulk update stamping everything at once) is re-fetched
-      range-bounded and delivered whole: bounded memory in every case
-      EXCEPT a single watermark value carrying more rows than fit,
-      where correctness wins over the bound.
-      Known defect: under ``trigger(availableNow=True)`` or
-      ``trigger(once=True)`` Spark runs a Python streaming source as
-      ONE micro-batch, so with this option set only the first batch
-      lands (2,499 of 10,000 rows in one measured run) and the query
-      stops. Use a processing-time trigger to drain with a row limit,
-      or leave the option unset for a one-shot drain.
+    ``initial_watermark`` starts the stream at a given watermark
+    instead of the beginning of time (the usual production choice:
+    bulk-backfill first, stream from the backfill's high-water mark).
+    The reader holds options only; every call builds (or reuses) its
+    process's cached client, so it pickles into executor tasks.
 
     Watermark type contract: the offset is interpolated into the SOQL
     UNQUOTED, which is valid for numeric and datetime/date watermarks
     (SOQL datetime literals are bare ISO-8601 — Salesforce convention
     ``SystemModstamp``). A free-string watermark field would produce
-    malformed SOQL and is rejected at fetch time.
+    malformed SOQL and is rejected when the batch is planned.
 
-    Replay caveat (at-least-once fine print): ``readBetweenOffsets``
-    re-serves the ``(start, end]`` delta from the LIVE source — a row
-    whose watermark advanced past ``end`` since the original batch no
-    longer falls in the replayed range and surfaces in a LATER batch
-    instead. Rows are never lost, but a replayed batch is not
-    byte-identical; exactly-once sinks must key on Id, not batch
-    contents (which the merge sink does).
+    Replay caveat (at-least-once fine print): a replayed ``(start,
+    end]`` range is read from the LIVE source — a row whose watermark
+    advanced past ``end`` since the original batch no longer falls in
+    the replayed range and surfaces in a LATER batch instead. Rows are
+    never lost, but a replayed batch is not byte-identical;
+    exactly-once sinks must key on Id, not batch contents (which the
+    merge sink does).
     """
 
     #: unquoted-SOQL-safe offset literal: integer/decimal, ISO date, or
@@ -878,7 +944,14 @@ class SfIncrementalStreamReader(SimpleDataSourceStreamReader):
     )
 
     def __init__(self, schema: StructType, options: dict[str, str]):
-        self.names = [f.name for f in schema.fields]
+        if "max_rows_per_batch" in options:
+            raise ClientBuilderError(
+                "the max_rows_per_batch option was removed: every micro-batch "
+                "now reads its whole watermark range in executor tasks, one "
+                "REST page at a time"
+            )
+        self.options = options
+        self.names = schema.fieldNames()
         self.object_name = options["object"]
         self.wm_field = options.get("watermark_field")
         if not self.wm_field:
@@ -886,9 +959,6 @@ class SfIncrementalStreamReader(SimpleDataSourceStreamReader):
                 "streaming reads require the watermark_field option"
             )
         self.initial_wm = options.get("initial_watermark")
-        max_rows = options.get("max_rows_per_batch")
-        self.max_rows = int(max_rows) if max_rows else None
-        self.client = _client_from_options(options)
 
     def initialOffset(self) -> dict:
         return {"wm": self.initial_wm}
@@ -902,64 +972,42 @@ class SfIncrementalStreamReader(SimpleDataSourceStreamReader):
             )
         return s
 
-    def _fetch(self, lo, hi, limit: int | None = None) -> tuple[list[tuple], Any]:
-        # the watermark column always rides the SELECT list — advancing
-        # the offset from data we did not fetch would be a correctness
-        # bug — but only schema columns are emitted
-        select = self.names if self.wm_field in self.names else [*self.names, self.wm_field]
-        soql = f"SELECT {', '.join(select)} FROM {self.object_name}"
-        conds = []
+    def latestOffset(self) -> dict:
+        # a stream started at initial_watermark never reports less, so
+        # rows below it stay unread
+        where = (
+            f" WHERE {self.wm_field} > {self._wm_literal(self.initial_wm)}"
+            if self.initial_wm is not None
+            else ""
+        )
+        soql = (
+            f"SELECT {self.wm_field} FROM {self.object_name}{where} "
+            f"ORDER BY {self.wm_field} DESC NULLS LAST LIMIT 1"
+        )
+        client = _client_from_options(self.options)
+        for page in client.query_pages(soql):
+            for rec in page.records:
+                if rec.get(self.wm_field) is not None:
+                    # numeric wire strings compare as numbers
+                    return {"wm": _coerce(rec[self.wm_field])}
+        return self.initialOffset()
+
+    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        lo, hi = start.get("wm"), end.get("wm")
+        if hi is None or _coerce(lo) == _coerce(hi):
+            return []
+        conds = [f"{self.wm_field} <= {self._wm_literal(hi)}"]
         if lo is not None:
-            conds.append(f"{self.wm_field} > {self._wm_literal(lo)}")
-        if hi is not None:
-            conds.append(f"{self.wm_field} <= {self._wm_literal(hi)}")
-        if conds:
-            soql += " WHERE " + " AND ".join(conds)
-        if limit is not None:
-            # watermark order makes the LIMIT prefix a CONTIGUOUS delta:
-            # everything ≤ the new offset was fetched, nothing skipped
-            soql += f" ORDER BY {self.wm_field} LIMIT {limit}"
-        records: list[dict] = []
-        for page in self.client.query_pages(soql):
-            records.extend(page.records)
-        if not records:
-            return [], None
-        new_wm = max(_coerce(r[self.wm_field]) for r in records)
-        return records, new_wm
+            conds.insert(0, f"{self.wm_field} > {self._wm_literal(lo)}")
+        soql = (
+            f"SELECT {', '.join(self.names)} FROM {self.object_name} "
+            f"WHERE {' AND '.join(conds)}"
+        )
+        return [RangePartition(soql)]
 
-    def _project(self, records: list[dict]) -> list[tuple]:
-        return [tuple(r.get(n) for n in self.names) for r in records]
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        records, new_wm = self._fetch(start.get("wm"), None, limit=self.max_rows)
-        if new_wm is None:
-            return iter([]), start  # no progress — offset unchanged
-        if self.max_rows is None or len(records) < self.max_rows:
-            # complete prefix: nothing beyond new_wm was cut off
-            return iter(self._project(records)), {"wm": new_wm}
-        # LIMIT was hit, so rows SHARING the boundary watermark may have
-        # been cut off server-side — advancing the offset to the
-        # boundary would skip them forever (the next batch filters
-        # wm > offset). Deliver only rows strictly below the boundary
-        # and advance to the largest delivered watermark.
-        below = [r for r in records if _coerce(r[self.wm_field]) < new_wm]
-        if below:
-            kept_wm = max(_coerce(r[self.wm_field]) for r in below)
-            return iter(self._project(below)), {"wm": kept_wm}
-        # The entire LIMIT prefix shares one watermark (a tie run at
-        # least max_rows long — e.g. a bulk update stamping everything
-        # with one SystemModstamp). Dropping the boundary can't make
-        # progress; fetch the complete tie run range-bounded (finite:
-        # exactly the rows at <= new_wm) and deliver it whole.
-        records, _ = self._fetch(start.get("wm"), new_wm)
-        return iter(self._project(records)), {"wm": new_wm}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        # crash replay: re-serve the (start, end] delta (see the replay
-        # caveat in the class doc — live-source replay, keyed dedup
-        # downstream). No LIMIT: the range is already bounded by `end`.
-        records, _ = self._fetch(start.get("wm"), end.get("wm"))
-        return iter(self._project(records))
+    def read(self, partition: InputPartition) -> Iterator[Any]:
+        assert isinstance(partition, RangePartition)
+        yield from _rest_batches(_client_from_options(self.options), partition.soql, self.names)
 
 
 def register(spark: Any) -> None:

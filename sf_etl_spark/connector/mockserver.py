@@ -596,10 +596,13 @@ class MockSalesforce:
         """Trivial SOQL evaluation: field list + integer range / string
         IN-list WHERE conditions (enough for the partitioned-reader and
         pushdown tests — a pushed filter the server actually honors
-        shrinks the wire payload, which is the point of pushdown)."""
+        shrinks the wire payload, which is the point of pushdown), and
+        ``ORDER BY <integer field> [ASC|DESC] [NULLS FIRST|LAST]``
+        with ``LIMIT``."""
         m = re.match(
             r"SELECT (.+) FROM (\w+)(?: WHERE (.+?))?"
-            r"(?: ORDER BY (\w+))?(?: LIMIT (\d+))?$",
+            r"(?: ORDER BY (\w+)(?: (ASC|DESC))?(?: NULLS (FIRST|LAST))?)?"
+            r"(?: LIMIT (\d+))?$",
             soql,
             re.I,
         )
@@ -627,9 +630,19 @@ class MockSalesforce:
                 }[op]
                 rows = [r for r in rows if ops(int(r[fld]), val)]
         if m.group(4):  # ORDER BY <numeric field>
-            rows = sorted(rows, key=lambda r: int(r[m.group(4)]))
-        if m.group(5):  # LIMIT n — applied after ordering, like SOQL
-            rows = rows[: int(m.group(5))]
+            fld = m.group(4)
+            desc = (m.group(5) or "ASC").upper() == "DESC"
+            # SOQL puts nulls first unless told NULLS LAST
+            nulls_last = (m.group(6) or "FIRST").upper() == "LAST"
+            nulls = [r for r in rows if r.get(fld) in (None, "")]
+            vals = sorted(
+                (r for r in rows if r.get(fld) not in (None, "")),
+                key=lambda r: int(r[fld]),
+                reverse=desc,
+            )
+            rows = vals + nulls if nulls_last else nulls + vals
+        if m.group(7):  # LIMIT n — applied after ordering, like SOQL
+            rows = rows[: int(m.group(7))]
         return fields, rows
 
     def handle_query(self, h, soql, offset):

@@ -1555,6 +1555,7 @@ _SFETL_STREAM_FIELDS = [
 )
 def source_sfetl_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
+    from urllib.parse import unquote_plus
 
     from sf_etl_spark.connector.datasource import register as register_sfetl
     from sf_etl_spark.connector.mockserver import MockSalesforce
@@ -1624,10 +1625,12 @@ def source_sfetl_stream_incremental(spark: SparkSession, sf_dir: str) -> DataFra
         server.n_rows = len(server.rows)
         run_once()  # delta pull from the same checkpoint
         with server.lock:
-            since = server.requests_seen[n_before:]
-        if not any(
-            "Key" in r and ("%3E" in r or ">" in r) for r in since
-        ):
+            since = [unquote_plus(r) for r in server.requests_seen[n_before:]]
+        # the second pass reads rows only above the first pass's
+        # watermark (the latest-watermark query selects Key alone)
+        reads = [r for r in since if "/query?" in r and "Segment" in r]
+        floor = f"Key > {max(int(r['Key']) for r in initial)}"
+        if (delta and not reads) or any(floor not in r for r in reads):
             raise ValueError(
                 "second pass did not carry the remote watermark delta "
                 f"predicate; requests: {since[-5:]}"

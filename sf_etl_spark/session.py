@@ -57,6 +57,12 @@ ENGINE_CONF: dict[str, str] = {
     "spark.ui.enabled": "false",
 }
 
+#: The ``spark.sql.*`` keys of ``ENGINE_CONF`` that Spark fixes when the
+#: session starts. Setting one on a running session raises inside the
+#: JVM, and building that exception costs more py4j round trips than
+#: setting every other key, so `apply_engine_conf` skips them.
+STATIC_SQL_CONF = frozenset({"spark.sql.codegen.cache.maxEntries"})
+
 
 def get_spark(app_name: str = "sf_etl_spark", master: str | None = None) -> SparkSession:
     """Create (or fetch) a SparkSession with the engine's tuned config.
@@ -76,13 +82,13 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine configs to an existing session.
 
     Used when the caller (e.g. the verification driver) owns session
-    construction: static configs (memory) are skipped, SQL configs
-    applied.
+    construction: static configs (memory, `STATIC_SQL_CONF`) are
+    skipped, the other SQL configs applied, one py4j call each.
     """
     for k, v in ENGINE_CONF.items():
-        if k.startswith("spark.sql."):
+        if k.startswith("spark.sql.") and k not in STATIC_SQL_CONF:
             try:
                 spark.conf.set(k, v)
             except Exception:
-                pass  # static or restricted conf under this deployment
+                pass  # restricted conf under this deployment
     return spark

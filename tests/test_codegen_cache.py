@@ -41,3 +41,31 @@ def test_rerun_compiles_no_new_classes(spark, sf_dir):
         f"rerun compiled {rerun} classes; cache holds "
         f"{spark.conf.get('spark.sql.codegen.cache.maxEntries')} entries"
     )
+
+
+def test_apply_engine_conf_sets_only_runtime_keys(spark, monkeypatch):
+    """On a running session `apply_engine_conf` makes one py4j call per
+    settable SQL key and none that fails: the static cache size is
+    skipped, not tried and caught. `STATIC_SQL_CONF` names exactly the
+    SQL keys Spark refuses to change at runtime."""
+    from py4j.protocol import ERROR, RETURN_MESSAGE
+
+    from sf_etl_spark.session import ENGINE_CONF, STATIC_SQL_CONF, apply_engine_conf
+
+    sql_keys = [k for k in ENGINE_CONF if k.startswith("spark.sql.")]
+    assert {k for k in sql_keys if not spark.conf.isModifiable(k)} == STATIC_SQL_CONF
+
+    client = spark.sparkContext._gateway._gateway_client
+    answers: list[str] = []
+    send = client.send_command
+
+    def counting_send(command, *args, **kwargs):
+        answer = send(command, *args, **kwargs)
+        answers.append(answer)
+        return answer
+
+    monkeypatch.setattr(client, "send_command", counting_send)
+    apply_engine_conf(spark)
+    monkeypatch.undo()
+    assert not [a for a in answers if a.startswith(RETURN_MESSAGE + ERROR)]
+    assert len(answers) <= len(sql_keys) - len(STATIC_SQL_CONF)

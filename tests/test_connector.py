@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import decimal
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -474,61 +475,12 @@ def test_rest_and_stream_reads_give_the_same_boolean_strings(spark, tmp_path):
         server.stop()
 
 
-def test_stream_reader_limit_is_tie_safe(mock_sf):
-    """max_rows_per_batch must never advance the offset past rows it
-    did not fetch. With duplicate watermark values at the LIMIT
-    boundary the batch delivers only rows strictly below the boundary
-    (advancing to the largest delivered value); a tie run >= the limit
-    is re-fetched range-bounded and delivered whole. Union of all
-    batches == all rows, exactly once."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from sf_etl_spark.connector.datasource import SfIncrementalStreamReader
-
-    server = MockSalesforce(n_rows=0, page_size=50)
-    # watermarks: a 3-row tie run at 1 (>= limit), pairs and singles after
-    wms = [1, 1, 1, 2, 2, 3, 4, 4, 5]
-    server.rows = [
-        {"Id": f"500{i:015d}", "NumCalls": str(w)} for i, w in enumerate(wms)
-    ]
-    url = server.start()
-    try:
-        schema = StructType(
-            [StructField("Id", StringType()), StructField("NumCalls", StringType())]
-        )
-        reader = SfIncrementalStreamReader(
-            schema,
-            {
-                **sf_options(url),
-                "object": "Case",
-                "watermark_field": "NumCalls",
-                "max_rows_per_batch": "2",
-            },
-        )
-        seen: list[tuple] = []
-        offset = reader.initialOffset()
-        for _ in range(20):
-            rows, new_offset = reader.read(offset)
-            rows = list(rows)
-            if not rows and new_offset == offset:
-                break
-            seen.extend(rows)
-            offset = new_offset
-        assert sorted(r[0] for r in seen) == sorted(r["Id"] for r in server.rows)
-        assert len(seen) == len(server.rows)  # exactly once, no dupes
-        # the 3-row tie run at wm=1 exceeded the limit of 2 and was
-        # still delivered completely in one batch
-        assert offset == {"wm": 5}
-    finally:
-        server.stop()
-
-
 @contextlib.contextmanager
-def _versioned_org(n_rows: int):
+def _versioned_org(n_rows: int, page_size: int = 10):
     """A mock org whose Case rows carry a monotonic integer ``Version``
     watermark, served as wire strings like every other mock value;
     page_size=10 so a full pull spans several pages."""
-    server = MockSalesforce(n_rows=0, page_size=10)
+    server = MockSalesforce(n_rows=0, page_size=page_size)
     server.rows = [_versioned_row(i) for i in range(n_rows)]
     url = server.start()
     try:
@@ -552,48 +504,166 @@ def _version_stream(url: str, names: list[str]):
     )
 
 
+def _stream_batches(reader, start: dict, end: dict) -> list:
+    """What the executor tasks of one (start, end] micro-batch read."""
+    return [b for p in reader.partitions(start, end) for b in reader.read(p)]
+
+
+def _stream_rows(reader, start: dict, end: dict) -> list[tuple]:
+    return [
+        tuple(r.values()) for b in _stream_batches(reader, start, end) for r in b.to_pylist()
+    ]
+
+
+def _soql_seen(server, since: int = 0) -> list[str]:
+    """The SOQL text of every ``/query`` request the mock served
+    (cursor continuations carry no SOQL)."""
+    from urllib.parse import parse_qs, urlparse
+
+    out = []
+    for req in server.requests_seen[since:]:
+        u = urlparse(req.split(" ", 1)[1])
+        if u.path.endswith("/query"):
+            out.append(parse_qs(u.query)["q"][0])
+    return out
+
+
 def test_stream_reader_offset_stays_without_new_rows():
-    """Full first pull; with no new rows upstream the next read returns
-    nothing and the SAME offset; new rows move only the delta."""
+    """Full first pull, one batch per REST page; with no new rows
+    upstream the latest offset stays put and plans nothing; new rows
+    move only the delta."""
     with _versioned_org(25) as (server, url):
         reader = _version_stream(url, ["Id", "Priority", "Version"])
-        rows, offset = reader.read(reader.initialOffset())
-        assert len(list(rows)) == 25 and offset == {"wm": 24}
-        rows, again = reader.read(offset)
-        assert list(rows) == [] and again == offset
+        start = reader.initialOffset()
+        offset = reader.latestOffset()
+        assert offset == {"wm": 24}
+        batches = _stream_batches(reader, start, offset)
+        assert [b.num_rows for b in batches] == [10, 10, 5]
+        assert len(_stream_rows(reader, start, offset)) == 25
+        again = reader.latestOffset()
+        assert again == offset and reader.partitions(offset, again) == []
 
         server.rows.extend(_versioned_row(i) for i in range(25, 30))
-        rows, offset = reader.read(offset)
+        new = reader.latestOffset()
+        assert new == {"wm": 29}
+        rows = _stream_rows(reader, offset, new)
         assert sorted(int(r[2]) for r in rows) == [25, 26, 27, 28, 29]
-        assert offset == {"wm": 29}
-        rows, again = reader.read(offset)
-        assert list(rows) == [] and again == offset
+        assert reader.latestOffset() == new and reader.partitions(new, new) == []
 
 
 def test_stream_reader_watermark_advances_numerically():
     """Wire-string watermarks '9' -> '10' advance the offset to 10: a
-    lexicographic max would keep '9' and re-serve row 10 forever."""
+    lexicographic max would keep '9' and re-serve row 10 forever. An
+    offset read back from the checkpoint's JSON plans the same range."""
     with _versioned_org(10) as (server, url):
         reader = _version_stream(url, ["Id", "Version"])
-        _, offset = reader.read(reader.initialOffset())
+        offset = reader.latestOffset()
         assert offset == {"wm": 9}
         server.rows.append(_versioned_row(10))
-        rows, offset = reader.read(offset)
-        assert [r[1] for r in rows] == ["10"] and offset == {"wm": 10}
-        rows, again = reader.read(offset)
-        assert list(rows) == [] and again == offset
+        new = reader.latestOffset()
+        assert new == {"wm": 10}
+        resumed = json.loads(json.dumps(offset))
+        assert [r[1] for r in _stream_rows(reader, resumed, new)] == ["10"]
+        assert reader.latestOffset() == new
 
 
-def test_stream_reader_fetches_but_does_not_emit_an_unprojected_watermark():
-    """A watermark field outside the schema still rides the SELECT
-    list (the offset advances from fetched data) but is not emitted."""
+def test_stream_reader_does_not_emit_an_unprojected_watermark():
+    """A watermark field outside the schema still drives the offset (the
+    max-watermark query selects it) but is not emitted."""
     with _versioned_org(25) as (server, url):
         reader = _version_stream(url, ["Id", "Priority"])
-        rows, offset = reader.read(reader.initialOffset())
-        rows = list(rows)
+        offset = reader.latestOffset()
         assert offset == {"wm": 24}
+        rows = _stream_rows(reader, reader.initialOffset(), offset)
         assert {len(r) for r in rows} == {2}
         assert sorted(rows) == sorted((r["Id"], r["Priority"]) for r in server.rows)
+
+
+def _stream_to_parquet(spark, url: str, out: str, ckpt: str) -> None:
+    from sf_etl_spark.connector.datasource import register as register_fmt
+
+    register_fmt(spark)
+    q = (
+        spark.readStream.format("sfetl")
+        .schema("Id string, Priority string, Version string")
+        .options(**sf_options(url), object="Case", watermark_field="Version")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
+MAX_WM_SOQL = "SELECT Version FROM Case ORDER BY Version DESC NULLS LAST LIMIT 1"
+
+
+def test_stream_available_now_reads_every_row_in_executor_tasks(spark, tmp_path):
+    """availableNow over 10,000 rows in 2,000-row pages delivers all of
+    them. The driver asks only for the latest watermark (one one-row
+    query); the rows are read once, by the micro-batch's partition."""
+    with _versioned_org(10_000, page_size=2_000) as (server, url):
+        out = str(tmp_path / "out")
+        _stream_to_parquet(spark, url, out, str(tmp_path / "ckpt"))
+        back = spark.read.parquet(out)
+        assert back.count() == 10_000
+        assert back.select("Id").distinct().count() == 10_000
+        soql = _soql_seen(server)
+        assert soql[-1] == "SELECT Id, Priority, Version FROM Case WHERE Version <= 9999"
+        assert soql[:-1] and set(soql[:-1]) == {MAX_WM_SOQL}
+
+
+def test_stream_rerun_on_checkpoint_delivers_only_new_rows(spark, tmp_path):
+    """A second availableNow run on the same checkpoint, after 500 rows
+    were added upstream, delivers exactly those 500, read as one closed
+    watermark range."""
+    with _versioned_org(10_000, page_size=2_000) as (server, url):
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        _stream_to_parquet(spark, url, out, ckpt)
+        before = {r.Id for r in spark.read.parquet(out).select("Id").collect()}
+        server.rows.extend(_versioned_row(i) for i in range(10_000, 10_500))
+        n_seen = len(server.requests_seen)
+        _stream_to_parquet(spark, url, out, ckpt)
+        back = spark.read.parquet(out)
+        assert back.count() == 10_500
+        added = {r.Id for r in back.select("Id").collect()} - before
+        assert added == {_versioned_row(i)["Id"] for i in range(10_000, 10_500)}
+        soql = _soql_seen(server, n_seen)
+        assert soql[-1] == (
+            "SELECT Id, Priority, Version FROM Case WHERE Version > 9999 AND Version <= 10499"
+        )
+        assert set(soql[:-1]) == {MAX_WM_SOQL}
+
+
+def test_stream_max_rows_per_batch_is_rejected():
+    """The removed row-limit option fails loudly instead of being
+    silently ignored."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sf_etl_spark.connector.datasource import SfEtlDataSource
+
+    opts = {**sf_options("http://unused"), "object": "Case", "watermark_field": "Version"}
+    schema = StructType([StructField("Id", StringType())])
+    with pytest.raises(ClientBuilderError, match="max_rows_per_batch"):
+        SfEtlDataSource({**opts, "max_rows_per_batch": "2"}).streamReader(schema)
+
+
+def test_mock_order_by_desc_with_limit():
+    """The mock org sorts ORDER BY <field> DESC (nulls first unless
+    NULLS LAST, as SOQL does) and applies LIMIT after the sort."""
+    server = MockSalesforce(n_rows=0)
+    server.rows = [{"Id": str(i), "V": v} for i, v in enumerate(["3", "10", None, "7"])]
+    _, rows = server.select_rows("SELECT V FROM Case ORDER BY V DESC LIMIT 1")
+    assert [r["V"] for r in rows] == [None]
+    _, rows = server.select_rows("SELECT V FROM Case ORDER BY V DESC NULLS LAST LIMIT 1")
+    assert [r["V"] for r in rows] == ["10"]
+    _, rows = server.select_rows("SELECT V FROM Case ORDER BY V ASC NULLS LAST")
+    assert [r["V"] for r in rows] == ["3", "7", "10", None]
+    server.rows = [r for r in server.rows if r["V"] is not None]
+    _, rows = server.select_rows("SELECT V FROM Case WHERE V < 10 ORDER BY V DESC LIMIT 1")
+    assert [r["V"] for r in rows] == ["7"]
 
 
 # -- scan partitioning options are checked at planning time ----------------
@@ -906,6 +976,130 @@ def test_spark_write_upsert_option_validation(spark):
             df.write.format("sfetl").options(**opts, operation="merge").mode(
                 "append"
             ).save()
+    finally:
+        server.stop()
+
+
+def _csv_cells(text: str, names: list[str], delimiter: str = ",") -> list[tuple]:
+    from sf_etl_spark.connector.datasource import _csv_batches
+
+    return [
+        tuple(r[n] for n in names)
+        for b in _csv_batches(text, names, delimiter)
+        for r in b.to_pylist()
+    ]
+
+
+def test_bulk_csv_chunk_parses_to_wire_cells():
+    """A bulk result chunk reads as the wire cells: quoted delimiters
+    and newlines kept, empty and quoted-empty fields null, columns
+    picked by header name (a missing one reads null), the declared
+    delimiter used, CRLF rows alike, an empty chunk gives no rows."""
+    names = ["Id", "Name", "Note"]
+    text = 'Name,Id\n"a,b",1\n"line1\nline2",2\n,3\n"",4\n'
+    assert _csv_cells(text, names) == [
+        ("1", "a,b", None),
+        ("2", "line1\nline2", None),
+        ("3", None, None),
+        ("4", None, None),
+    ]
+    assert _csv_cells("Id|Name|Note\r\n1|x,y|\r\n2|\"p|q\"|z\r\n", names, "|") == [
+        ("1", "x,y", None),
+        ("2", "p|q", "z"),
+    ]
+    assert _csv_cells("Id\tName\n1\tx y\n", names, "\t") == [("1", "x y", None)]
+    assert _csv_cells("", names) == []
+    assert _csv_cells("Id,Name\n", names) == []
+
+
+def test_rest_page_renders_json_scalars_as_wire_strings():
+    """REST records are built column by column; JSON booleans and
+    numbers read as the strings bulk CSV carries, strings and nulls
+    pass through."""
+    from types import SimpleNamespace
+
+    from sf_etl_spark.connector.datasource import _rest_batches
+
+    records = [
+        {"Id": "1", "IsEscalated": True, "NumCalls": 3, "Amount": 10.5},
+        {"Id": "2", "IsEscalated": False, "NumCalls": None, "Amount": 0},
+    ]
+    client = SimpleNamespace(query_pages=lambda soql: iter([SimpleNamespace(records=records)]))
+    names = ["Id", "IsEscalated", "NumCalls", "Amount", "Absent"]
+    (batch,) = _rest_batches(client, "SELECT ...", names)
+    assert batch.schema.names == names
+    assert [tuple(r.values()) for r in batch.to_pylist()] == [
+        ("1", "true", "3", "10.5", None),
+        ("2", "false", None, "0", None),
+    ]
+
+
+def test_sink_csv_matches_format_cell_per_value():
+    """The sink's Arrow CSV parses back, with csv.reader, to exactly
+    _format_cell of every value, for every column type the sink meets;
+    an empty string is written as a bare empty field."""
+    import csv
+    import datetime
+    import io
+
+    import pyarrow as pa
+
+    from sf_etl_spark.connector.datasource import _csv_rows, _format_cell, _wire_batch
+
+    ts = datetime.datetime(2024, 1, 5, 12, 30, 15, 250999)
+    utc = ts.replace(tzinfo=datetime.timezone.utc)
+    day, old_day = datetime.date(2024, 1, 5), datetime.date(999, 12, 31)
+    dec = decimal.Decimal
+    columns = {
+        "s": (pa.string(), ["a,b", 'say "hi"', "l1\nl2", None, ""]),
+        "b": (pa.bool_(), [True, False, None, True, False]),
+        "i": (pa.int64(), [7, -3, None, 0, 10**15]),
+        "f": (pa.float64(), [1.0, 0.1, None, 1e20, -2.5]),
+        "d": (pa.decimal128(12, 2), [dec("3.50"), None, dec("0.00"), None, dec("-1.00")]),
+        "day": (pa.date32(), [day, None, old_day, None, None]),
+        "ts": (pa.timestamp("us", tz="UTC"), [utc, None, utc, None, None]),
+        "ntz": (pa.timestamp("us"), [ts, None, None, ts, None]),
+    }
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(v, type=t) for t, v in columns.values()], names=list(columns)
+    )
+    out = _csv_rows(_wire_batch(batch)).decode("utf-8")
+    expected = [[_format_cell(c) for c in r.values()] for r in batch.to_pylist()]
+    assert list(csv.reader(io.StringIO(out))) == expected
+    assert out.splitlines()[-1].startswith(',"false",')  # "" → bare empty field
+
+
+def test_sink_slices_a_batch_over_target_job_mb():
+    """One Arrow batch larger than target_job_mb opens several ingest
+    jobs, each within the budget, holding every row once."""
+    import csv
+    import io
+
+    import pyarrow as pa
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sf_etl_spark.connector.datasource import SfIngestWriter
+
+    server = MockSalesforce(object_name="Thing", rows=[])
+    url = server.start()
+    try:
+        names = ["Key", "Val"]
+        schema = StructType([StructField(n, StringType()) for n in names])
+        limit = 2048
+        writer = SfIngestWriter(
+            schema, {**sf_options(url), "object": "Thing", "target_job_mb": str(limit / 2**20)}
+        )
+        keys = [f"K{i:04d}" for i in range(300)]
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(keys), pa.array([f"payload-{i:06d}" for i in range(300)])], names=names
+        )
+        commit = writer.write(iter([batch, batch.slice(0, 0)]))
+        assert commit.n_rows == 300 and len(commit.job_ids) >= 3
+        csvs = [server.jobs[j]["csv"] for j in commit.job_ids]
+        assert all(len(c.encode()) <= limit for c in csvs)
+        assert all(c.startswith("Key,Val\n") for c in csvs)
+        rows = [r for c in csvs for r in list(csv.reader(io.StringIO(c)))[1:]]
+        assert [r[0] for r in rows] == keys
     finally:
         server.stop()
 
