@@ -539,6 +539,16 @@ def _csv_rows(wire: Any) -> bytes:
     return sink.getvalue().to_pybytes()
 
 
+# Options of earlier releases that now raise instead of being ignored:
+# the streaming sink's failed_results_path is the one reject capture.
+_REMOVED_WRITER_OPTIONS = {
+    "job_ids_path": "capture rejects with the streaming sink's "
+    "failed_results_path, or read them with ingest.failed_results_df",
+    "fs_resolver": "failed_results_path resolves URIs through "
+    "pyarrow.fs.FileSystem.from_uri",
+}
+
+
 class SfIngestWriter(DataSourceArrowWriter):
     """``df.write.format("sfetl").mode("append")`` — the LOAD leg the
     extract-only reference never ships, as a Spark batch sink.
@@ -571,6 +581,9 @@ class SfIngestWriter(DataSourceArrowWriter):
     """
 
     def __init__(self, schema: StructType, options: dict[str, str]):
+        for removed, use in _REMOVED_WRITER_OPTIONS.items():
+            if removed in options:
+                raise ClientBuilderError(f"the {removed} option was removed: {use}")
         self.options = options
         self.field_names = schema.fieldNames()
         self.operation = options.get("operation", "insert")
@@ -613,34 +626,6 @@ class SfIngestWriter(DataSourceArrowWriter):
             raise ClientBuilderError(
                 f"max_jobs_per_task must be >= 1, got {self.max_jobs_per_task}"
             )
-        # optional side channel (r13 verdict task 4): commit() publishes
-        # the EXACT job-id set this write created to the given path
-        # (fsutil tmp+move, any pyarrow.fs URI), so callers that need
-        # to correlate per-write backend artifacts — the foreachBatch
-        # reject capture — read the writer's own ids instead of
-        # diffing the org's job LIST around the write (which
-        # misattributes a concurrent loader's jobs on the same object).
-        self.job_ids_path = options.get("job_ids_path")
-        # optional scheme-resolver spec (r14 verdict task 3): commit()
-        # runs in a freshly spawned worker whose fsutil registry is
-        # empty, so custom schemes for job_ids_path / the streaming
-        # sink's failed_results_path ride along as an importable spec
-        # the hook re-applies. Validated HERE (driver, plan time) by a
-        # dry parse+import — a typo must not surface minutes later
-        # inside the commit barrier after the upload already ran.
-        self.fs_resolver = options.get("fs_resolver")
-        if self.fs_resolver:
-            from sf_etl_spark.connector.fsutil import parse_resolver_spec
-
-            try:
-                # parse+import only — validation must not mutate the
-                # driver's registry; the commit hooks APPLY the spec
-                parse_resolver_spec(self.fs_resolver)
-            except Exception as e:
-                raise ClientBuilderError(
-                    f"invalid fs_resolver option {self.fs_resolver!r}: {e}"
-                ) from e
-
     def write(self, iterator: Iterator[Any]) -> SfIngestCommit:
         client = _client_from_options(self.options)
         hdr = io.StringIO()
@@ -718,25 +703,6 @@ class SfIngestWriter(DataSourceArrowWriter):
         3600) bounds the WHOLE barrier — it must absorb org-side
         queueing of the entire load, not one job."""
         ids = [jid for msg in messages if msg for jid in msg.job_ids]
-        if self.job_ids_path:
-            # published BEFORE the poll barrier: a barrier failure
-            # (timeout, job-level reject) still leaves the attempt's
-            # exact ids observable for reject/unprocessed sweeps. An
-            # empty write publishes [] — "no jobs" is a result, not a
-            # missing file.
-            from sf_etl_spark.connector.fsutil import (
-                apply_resolver_spec,
-                write_small_file_atomic,
-            )
-
-            # this may be a freshly spawned commit worker with an
-            # empty scheme registry — rebuild custom schemes from the
-            # option-borne spec before resolving the path
-            apply_resolver_spec(self.fs_resolver)
-            write_small_file_atomic(
-                self.job_ids_path,
-                json.dumps({"job_ids": sorted(ids)}).encode("utf-8"),
-            )
         if not ids:
             return {}
         client = _client_from_options(self.options)
@@ -786,10 +752,12 @@ class SfIngestStreamWriter(DataSourceStreamArrowWriter):
     (:func:`sf_etl_spark.connector.fsutil.filesystem_for`), so any
     URI the cluster's storage layer speaks works — ``s3://``, ``gs://``,
     ``hdfs://``, ``file://`` or a bare local path. Rejects are the
-    bounded sliver of a load, so a driver-side download is the right
-    shape; the path should live on storage the downstream reader sees
-    (the side table reads back with ``spark.read.json``, schema =
-    ``connector.ingest.FAILED_RESULTS_SCHEMA`` plus ``batch_id``).
+    bounded sliver of a load, so downloading them in the commit hook is
+    the right shape; the path should live on storage the downstream reader sees
+    (the side table reads back with
+    ``spark.read.schema(connector.ingest.REJECTS_SCHEMA).json(path)``).
+    This is the connector's one reject capture; a batch write's rejects
+    are read with :func:`sf_etl_spark.connector.ingest.failed_results_df`.
     """
 
     def __init__(self, schema: StructType, options: dict[str, str]):
@@ -806,40 +774,27 @@ class SfIngestStreamWriter(DataSourceStreamArrowWriter):
         done = self._writer.commit(messages)
         if not self.failed_results_path:
             return
-        from sf_etl_spark.connector.ingest import _parse_failed_csv
+        from sf_etl_spark.connector.ingest import REJECTS_SCHEMA, _parse_failed_csv
 
         client = _client_from_options(self._writer.options)
-        rejects: list[dict[str, Any]] = []
-        for jid, job in done.items():
-            if not job.number_records_failed:
-                continue
-            for job_id, sf_id, sf_error, fields in _parse_failed_csv(
-                jid, client.get_ingest_failed_results(jid)
-            ):
-                rejects.append(
-                    {
-                        "batch_id": batchId,
-                        "job_id": job_id,
-                        "sf_id": sf_id,
-                        "sf_error": sf_error,
-                        "fields": fields,
-                    }
-                )
+        names = REJECTS_SCHEMA.fieldNames()
+        rejects = [
+            dict(zip(names, (batchId, *rec)))
+            for jid, job in done.items()
+            if job.number_records_failed
+            for rec in _parse_failed_csv(jid, client.get_ingest_failed_results(jid))
+        ]
         from pyarrow.fs import FileSelector, FileType
 
         # The DataSource commit() hook has no SparkSession, so the side
         # table cannot be written through Spark — pyarrow.fs keeps the
         # batch-id overwrite contract deployable beyond driver-local
-        # POSIX paths. Custom schemes rebuild from the option-borne
-        # resolver spec first: this hook runs in a spawned worker whose
-        # registry starts empty (r14 verdict task 3).
+        # POSIX paths.
         from sf_etl_spark.connector.fsutil import (
-            apply_resolver_spec,
             filesystem_for,
             write_small_file_atomic,
         )
 
-        apply_resolver_spec(self._writer.fs_resolver)
         fs, root = filesystem_for(self.failed_results_path)
         root = root.rstrip("/")
         fs.create_dir(root, recursive=True)

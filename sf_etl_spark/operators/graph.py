@@ -235,7 +235,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     sum_scale: int = 10,
-    checkpoint_interval: int = 1,
 ) -> DataFrame:
     """Synchronous power-iteration PageRank over a directed edge set,
     in plain DataFrame ops (no GraphFrames).
@@ -275,17 +274,11 @@ def pagerank(
     promote the edges⋈ranks join to a broadcast; in the lazy chain the
     rank subtree has no runtime size and the joins fall back to
     sort-merge (customer↔supplier graph at sf0.1: lazy 5.6 s vs
-    per-round cuts 3.3 s, interleaved best-of-3). So the default stays
-    ``checkpoint_interval=1``; the one free win kept from the A/B is
-    skipping the cut after the FINAL iteration — the caller's terminal
-    action consumes that chain immediately, and AQE still broadcasts
-    because the PREVIOUS round was materialized. The arithmetic — and
-    therefore the result — is identical at any interval.
+    per-round cuts 3.3 s, interleaved best-of-3). So every round is
+    cut except the FINAL one — the caller's terminal action consumes
+    that chain immediately, and AQE still broadcasts because the
+    PREVIOUS round was materialized.
     """
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
-        )
     # Materialize the edge relation ONCE at entry: callers hand in a
     # lazy edge derivation (joins/distincts), and deg, n, the rank
     # init, e2, and every iteration would otherwise each re-execute it
@@ -338,12 +331,10 @@ def pagerank(
                 (F.lit(teleport) + F.lit(damping) * F.col("s")).alias("pr"),
             )
         )
-        # Cut the lineage only every `checkpoint_interval` rounds: the
-        # rank vector is referenced once per iteration, so the lazy
-        # chain between cuts executes as one job — no replay (see
-        # docstring). Never cut after the LAST iteration: the caller's
+        # Cut the lineage after every round so AQE sees the ranks'
+        # true size (see docstring) — except the LAST: the caller's
         # terminal action is about to consume the chain anyway.
-        if (it + 1) % checkpoint_interval == 0 and it + 1 < iterations:
+        if it + 1 < iterations:
             ranks = ranks.localCheckpoint()
     return ranks
 

@@ -96,16 +96,17 @@ def register(
 # listed names that are not registered are ignored (so reordering
 # never hides a query).
 #
-# Round-16 window (r15 verdict task 8), 17+33 = 50: (1) the 17 lanes
+# Round-16 window, 16+34 = 50: (1) the 16 lanes
 # this optimization round TOUCHED — triangle_count (pair derivation
 # reshaped), the dedup-cluster pair (edge derivation reshaped),
 # linkage_survivorship (star verts-from-edges),
 # ann_ivf_pq_trained_agreement (grouped Lloyd fold), asof_pandas_merge
-# (collision + bucket-budget guards), and the 11 sfetl sink/source/
-# stream lanes riding the mockserver teardown fix; (2) 33 lanes of the
-# r11-stale block (the standing scheme: stalest evidence first),
-# filling to 50. Below the boundary, names keep their prior RELATIVE
-# order (the rotation tool does not re-sort them); the remaining
+# (collision + bucket-budget guards), and the 10 sfetl sink/source/
+# stream lanes riding the mockserver teardown fix; (2) 34 lanes of the
+# stale block (the standing scheme, stalest evidence first: the
+# r11-stale lanes, then the next lane in rotation), filling to 50.
+# Below the boundary, names keep their prior RELATIVE order (the
+# rotation tool does not re-sort them); the remaining
 # r11-evidence lanes are first in line for the next rotation. This
 # comment and the matching one in tests/test_registry_order.py must
 # agree on the counts (r12 ADVICE).
@@ -126,7 +127,6 @@ _PRIORITY_ORDER = [
     "stream_sink_sfetl_upsert",
     "stream_sink_sfetl_native",
     "stream_sink_sfetl_failed_rows",
-    "stream_sink_sfetl_failed_rows_fb",
     "ann_matryoshka_recall",
     "ann_recall_metrics",
     "asof_nearest_click",
@@ -160,8 +160,8 @@ _PRIORITY_ORDER = [
     "rolling_median_7d",
     "seasonal_anomaly_slots",
     "stream_dedup_exactly_once",
-    # --- below the driver window (auto-rotated) ---
     "stream_stream_join_attribution",
+    # --- below the driver window (auto-rotated) ---
     "quality_gopher_repetition",
     "window_suite",
     "agg_having",

@@ -577,6 +577,7 @@ def stream_sink_sfetl_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sink_sfetl_failed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.connector import read_object
     from sf_etl_spark.connector.datasource import register as register_sfetl
+    from sf_etl_spark.connector.ingest import REJECTS_SCHEMA
     from sf_etl_spark.connector.mockserver import MockSalesforce
     from sf_etl_spark.streaming import events_stream
 
@@ -642,116 +643,8 @@ def stream_sink_sfetl_failed_rows(spark: SparkSession, sf_dir: str) -> DataFrame
                 f"expected per-batch reject files across >= 2 micro-batches, "
                 f"got {n_files}"
             )
-        rejects = spark.read.schema(
-            "batch_id long, job_id string, sf_id string, "
-            "sf_error string, fields map<string,string>"
-        ).json(side)
+        rejects = spark.read.schema(REJECTS_SCHEMA).json(side)
         # belt-and-braces: the healthy keys really landed on the backend
-        n_ok = read_object(
-            spark, {**opts, "chunk_size": "5000"}, "Event", coerce=False
-        ).count()
-        back = rejects.localCheckpoint(eager=True)
-        if back.count() + n_ok == 0:
-            raise ValueError("neither rejects nor applied rows — sink no-op")
-    finally:
-        server.stop()
-    return (
-        back.select(F.col("fields")["EKey"].cast("bigint").alias("event_id"))
-        .orderBy("event_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# foreachBatch twin of `stream_sink_sfetl_failed_rows` (r12 verdict
-# task 1's session-access alternative): same poisoned-key stream, same
-# upsert sink — but the reject side table is written BY SPARK from
-# inside foreachBatch (connector.ingest.foreach_batch_ingest_with_
-# rejects): the writer's commit() publishes the batch's EXACT job-id
-# set through the job_ids_path side channel (r13 verdict task 4 —
-# replacing the LIST-diff-around-the-write design, whose window
-# misattributed a concurrent loader's jobs), those jobs'
-# /failedResults download as a distributed DataFrame, and the batch's
-# rejects OVERWRITE the side table's batch_id=<n> partition. On a
-# cluster this rides the session's own committers/filesystem (object
-# stores included) — the property the native sink's commit() hook,
-# having no session, approximates with pyarrow.fs. Same oracle as the
-# native lane: the side table must surface exactly the poisoned keys.
-# ---------------------------------------------------------------------------
-@register(
-    "stream_sink_sfetl_failed_rows_fb",
-    f"""
-    SELECT CAST(event_id AS BIGINT) AS event_id
-    FROM events
-    WHERE user_id < {_NATIVE_SINK_USER_CAP} AND event_id % 7 = 0
-    ORDER BY event_id
-    """,
-    doc="foreachBatch upsert with poisoned keys -> Spark-written parquet reject side table (batch_id partition overwrite) = exactly the poisoned keys",
-    executes_on_construct=True,
-)
-def stream_sink_sfetl_failed_rows_fb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sf_etl_spark.connector import read_object
-    from sf_etl_spark.connector.datasource import register as register_sfetl
-    from sf_etl_spark.connector.ingest import foreach_batch_ingest_with_rejects
-    from sf_etl_spark.connector.mockserver import MockSalesforce
-    from sf_etl_spark.streaming import events_stream
-
-    fields = [
-        {"name": "Id", "type": "id", "length": 18, "nillable": False},
-        {"name": "ExtKey", "type": "string", "length": 24},
-        {"name": "EKey", "type": "long"},
-        {"name": "Cents", "type": "long"},
-    ]
-    server = MockSalesforce(object_name="Event", fields=fields, rows=[])
-    url = server.start()
-    try:
-        opts = {
-            "login_url": url,
-            "client_id": "app",
-            "client_secret": "shhh",
-            "username": "user@test",
-            "password": "pw",
-            "object": "Event",
-        }
-        register_sfetl(spark)
-        src = _stage(spark, sf_dir)
-        side = tempfile.mkdtemp(prefix="sfetl_rejects_fb_")
-        out = (
-            events_stream(
-                spark, src, max_files_per_trigger=_REPLAY_FILES_PER_TRIGGER
-            )
-            .filter(F.col("user_id") < _NATIVE_SINK_USER_CAP)
-            .select(
-                F.when(
-                    F.col("event_id") % 7 != 0,
-                    F.col("event_id").cast("string"),
-                ).alias("ExtKey"),
-                F.col("event_id").alias("EKey"),
-                F.floor(F.col("value") * 100 + F.lit(0.5))
-                .cast("bigint")
-                .alias("Cents"),
-            )
-            .repartition(2)  # 2 ingest jobs per micro-batch
-        )
-        handler = foreach_batch_ingest_with_rejects(
-            spark,
-            {**opts, "operation": "upsert", "externalIdFieldName": "ExtKey"},
-            side,
-        )
-        q = (
-            out.writeStream.foreachBatch(handler)
-            .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        batch_dirs = [d for d in os.listdir(side) if d.startswith("batch_id=")]
-        if len(batch_dirs) < 2:
-            raise ValueError(
-                f"expected per-batch reject partitions across >= 2 "
-                f"micro-batches, got {batch_dirs}"
-            )
-        rejects = spark.read.parquet(side)  # batch_id = partition column
         n_ok = read_object(
             spark, {**opts, "chunk_size": "5000"}, "Event", coerce=False
         ).count()

@@ -24,6 +24,7 @@ from sf_etl_spark.connector import (
     read_object,
 )
 from sf_etl_spark.connector.errors import ClientBuilderError
+from sf_etl_spark.connector.ingest import REJECTS_SCHEMA
 from sf_etl_spark.connector.mockserver import MockSalesforce
 
 
@@ -648,6 +649,24 @@ def test_stream_max_rows_per_batch_is_rejected():
     schema = StructType([StructField("Id", StringType())])
     with pytest.raises(ClientBuilderError, match="max_rows_per_batch"):
         SfEtlDataSource({**opts, "max_rows_per_batch": "2"}).streamReader(schema)
+
+
+def test_removed_writer_options_are_rejected():
+    """job_ids_path and fs_resolver served only the removed foreachBatch
+    reject capture; passing either to the batch or the streaming sink
+    fails loudly instead of being silently ignored."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sf_etl_spark.connector.datasource import SfEtlDataSource
+
+    opts = {**sf_options("http://unused"), "object": "Thing"}
+    schema = StructType([StructField("K", StringType())])
+    for removed in ("job_ids_path", "fs_resolver"):
+        source = SfEtlDataSource({**opts, removed: "x"})
+        with pytest.raises(ClientBuilderError, match=removed):
+            source.writer(schema, False)
+        with pytest.raises(ClientBuilderError, match=removed):
+            source.streamWriter(schema, False)
 
 
 def test_mock_order_by_desc_with_limit():
@@ -1553,10 +1572,7 @@ def test_native_stream_writer_captures_failed_rows(spark, tmp_path):
         q.awaitTermination()
         files = sorted(os.listdir(side))
         assert len(files) == 2 and all(f.startswith("rejects-batch") for f in files)
-        rej = spark.read.schema(
-            "batch_id long, job_id string, sf_id string, "
-            "sf_error string, fields map<string,string>"
-        ).json(str(side))
+        rej = spark.read.schema(REJECTS_SCHEMA).json(str(side))
         rows = rej.collect()
         assert sorted(r["fields"]["Tag"] for r in rows) == ["poison1", "poison2"]
         assert all("empty external id" in r["sf_error"] for r in rows)
@@ -1599,15 +1615,24 @@ def test_filesystem_for_resolves_schemes(tmp_path, monkeypatch):
         filesystem_for("bogus://bucket/state.json")
 
 
-def test_native_stream_writer_side_table_via_fs_uri(spark, tmp_path):
+def test_native_stream_writer_side_table_via_fs_uri(spark, tmp_path, monkeypatch):
     """failed_results_path given as a file:// URI must land the reject
     files at the URI's path — proof the commit hook writes through the
     pyarrow.fs handle, with no os.* path dependency (the old os.makedirs
     on 'file:///…' would have created a literal 'file:' directory under
-    the driver's CWD and never touched the target)."""
+    the driver's CWD and never touched the target). The hook runs in
+    the Python worker Spark spawns for streaming-sink commits, not in
+    this process: the side-file write is disabled here, and the file
+    still lands."""
     import os
 
+    from sf_etl_spark.connector import fsutil
     from sf_etl_spark.connector.datasource import register as register_sfetl
+
+    def not_here(path, payload):
+        raise AssertionError("the sink's commit ran in the test process")
+
+    monkeypatch.setattr(fsutil, "write_small_file_atomic", not_here)
 
     fields = [
         {"name": "Id", "type": "id", "length": 18, "nillable": False},
@@ -1646,10 +1671,7 @@ def test_native_stream_writer_side_table_via_fs_uri(spark, tmp_path):
         files = sorted(os.listdir(side))
         assert files == ["rejects-batch000000000.jsonl"]
         assert not os.path.exists("file:")
-        rej = spark.read.schema(
-            "batch_id long, job_id string, sf_id string, "
-            "sf_error string, fields map<string,string>"
-        ).json(str(side))
+        rej = spark.read.schema(REJECTS_SCHEMA).json(str(side))
         rows = rej.collect()
         assert [r["fields"]["Tag"] for r in rows] == ["poison"]
         assert [r["K"] for r in server.rows] == ["k1"]
@@ -1941,6 +1963,11 @@ def test_job_waits_back_off_on_the_built_in_cadence(monkeypatch):
 # bucket-scoped store).
 
 
+def _read_bytes(fs, path):
+    with fs.open_input_stream(path) as f:
+        return f.read()
+
+
 def test_fsutil_scheme_registry_injected_fs(tmp_path):
     """register_scheme routes a URI scheme to a caller-supplied
     pyarrow filesystem instance (fsspec-wrapped stores, test doubles);
@@ -1959,13 +1986,13 @@ def test_fsutil_scheme_registry_injected_fs(tmp_path):
         f, p = fsutil.filesystem_for("mem://deep/dir/a.json")
         assert f is mem and p == "deep/dir/a.json"
         fsutil.write_small_file_atomic("mem://deep/dir/a.json", b'{"v": 1}')
-        assert fsutil.read_small_file("mem://deep/dir/a.json") == b'{"v": 1}'
+        assert _read_bytes(mem, "deep/dir/a.json") == b'{"v": 1}'
         listed = mem.get_file_info(pafs.FileSelector("deep/dir"))
         assert [i.base_name for i in listed] == ["a.json"]  # tmp consumed by move
         assert not os.path.exists("mem:")  # nothing leaked locally
         # replay convergence: a fixed-name artifact overwrites in place
         fsutil.write_small_file_atomic("mem://deep/dir/a.json", b'{"v": 2}')
-        assert fsutil.read_small_file("mem://deep/dir/a.json") == b'{"v": 2}'
+        assert _read_bytes(mem, "deep/dir/a.json") == b'{"v": 2}'
     finally:
         fsutil.unregister_scheme("mem")
     with pytest.raises(Exception):  # back to raise-on-unknown-scheme
@@ -2010,8 +2037,6 @@ def test_fsutil_subtree_fs_rebases_paths(tmp_path):
     try:
         fsutil.write_small_file_atomic("sub://a/b/wm.json", b'{"watermark": 7}')
         assert (tmp_path / "a" / "b" / "wm.json").read_bytes() == b'{"watermark": 7}'
-        assert fsutil.read_small_file("sub://a/b/wm.json") == b'{"watermark": 7}'
-        assert fsutil.read_small_file("sub://a/b/missing.json") is None
     finally:
         fsutil.unregister_scheme("sub")
 
@@ -2062,7 +2087,7 @@ def test_reject_side_table_through_injected_fs():
         c.upload_ingest_batch(job.id, "K,Tag\nk1,ok\n,poison\n")
         c.close_ingest_job(job.id)
         writer.commit([SfIngestCommit(job_ids=(job.id,), n_rows=2)], 3)
-        raw = fsutil.read_small_file("mem://side/rejects/rejects-batch000000003.jsonl")
+        raw = _read_bytes(mem, "side/rejects/rejects-batch000000003.jsonl")
         recs = [_json.loads(line) for line in raw.decode().splitlines()]
         assert len(recs) == 1 and recs[0]["fields"]["Tag"] == "poison"
         assert recs[0]["batch_id"] == 3
@@ -2098,19 +2123,26 @@ def test_reject_side_table_through_injected_fs():
         server.stop()
 
 
-def test_foreach_batch_rejects_ignore_concurrent_loader(spark, tmp_path):
-    """r13 verdict task 4: the foreachBatch reject capture correlates
-    rejects by the EXACT job ids its own write created (published by
-    the writer's commit through the job_ids_path side channel), so a
-    concurrent loader hammering the SAME object with poisoned rows
-    throughout the batch window contributes zero misattributed rows to
-    the side table — the failure mode of the old before/after job-LIST
-    diff."""
+def test_reject_side_table_ignores_concurrent_loader(spark):
+    """The streaming sink's side table holds only the rejects of the
+    jobs its own micro-batch created: a concurrent loader that keeps
+    loading poisoned rows into the SAME object throughout the batch's
+    commit contributes nothing to it. Those intruding rejects are still
+    reachable the object-wide way, through failed_results_df — so they
+    exist and were excluded, not merely never created."""
+    import json as _json
     import threading
     import time as _time
 
-    from sf_etl_spark.connector.datasource import register as register_sfetl
-    from sf_etl_spark.connector.ingest import foreach_batch_ingest_with_rejects
+    from pyarrow import fs as pafs
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sf_etl_spark.connector import fsutil
+    from sf_etl_spark.connector.datasource import (
+        SfIngestCommit,
+        SfIngestStreamWriter,
+    )
+    from sf_etl_spark.connector.ingest import failed_results_df
 
     fields = [
         {"name": "Id", "type": "id", "length": 18, "nillable": False},
@@ -2119,241 +2151,61 @@ def test_foreach_batch_rejects_ignore_concurrent_loader(spark, tmp_path):
     ]
     server = MockSalesforce(object_name="Thing", fields=fields, rows=[])
     url = server.start()
+    mem = pafs._MockFileSystem()
+    fsutil.register_scheme("mem", lambda rest: (mem, rest))
+    stop = threading.Event()
+    landed = threading.Event()
+    n_intruders = [0]
+
+    def intrude():
+        c = _login(url)
+        while not stop.is_set():
+            j = c.create_ingest_job("Thing", "upsert", external_id_field="K")
+            # empty external id -> one reject per intruding job
+            c.upload_ingest_batch(j.id, "K,Tag\n,INTRUDER\n")
+            c.close_ingest_job(j.id)
+            c.wait_for_ingest_job(j.id)
+            n_intruders[0] += 1
+            landed.set()
+            _time.sleep(0.01)
+
     try:
-        register_sfetl(spark)
         opts = {
             **sf_options(url),
             "object": "Thing",
             "operation": "upsert",
             "externalIdFieldName": "K",
         }
-        side = str(tmp_path / "rejects")
-        handle = foreach_batch_ingest_with_rejects(spark, opts, side)
-
-        stop = threading.Event()
-        n_interfering = [0]
-
-        def interfere():
-            c = _login(url)
-            while not stop.is_set():
-                j = c.create_ingest_job("Thing", "upsert", external_id_field="K")
-                # poisoned row (empty external id) -> a reject that the
-                # old LIST-diff design would have swept into the table
-                c.upload_ingest_batch(j.id, "K,Tag\n,INTRUDER\n")
-                c.close_ingest_job(j.id)
-                # drive it to its terminal state (a real concurrent
-                # loader polls its own jobs) so the final sweep below
-                # can see its rejects
-                c.wait_for_ingest_job(j.id)
-                n_interfering[0] += 1
-                _time.sleep(0.01)
-
-        t = threading.Thread(target=interfere, daemon=True)
+        schema = StructType(
+            [StructField("K", StringType()), StructField("Tag", StringType())]
+        )
+        writer = SfIngestStreamWriter(
+            schema, {**opts, "failed_results_path": "mem://side"}
+        )
+        t = threading.Thread(target=intrude, daemon=True)
         t.start()
         try:
-            _time.sleep(0.05)  # interferer provably active before the write
-            batch = spark.createDataFrame(
-                [("k1", "ok1"), (None, "mine"), ("k2", "ok2")],
-                "K string, Tag string",
-            )
-            handle(batch, 0)
+            # a finished intruding job exists before the batch commits
+            assert landed.wait(30)
+            c = _login(url)
+            job = c.create_ingest_job("Thing", "upsert", external_id_field="K")
+            c.upload_ingest_batch(job.id, "K,Tag\nk1,ok1\n,mine\nk2,ok2\n")
+            c.close_ingest_job(job.id)
+            writer.commit([SfIngestCommit(job_ids=(job.id,), n_rows=3)], 0)
         finally:
             stop.set()
             t.join()
-        assert n_interfering[0] >= 2  # jobs really landed during the window
-        rej = spark.read.parquet(side)
-        rows = rej.collect()
-        assert [r["fields"]["Tag"] for r in rows] == ["mine"]
-        assert {r["batch_id"] for r in rows} == {0}
-        # the side channel carries exactly this batch's job ids
-        import json as _json
-
-        ids = _json.loads((tmp_path / "rejects" / "_jobids" / "batch-0.json").read_text())
-        assert len(ids["job_ids"]) >= 1
-        # and the interfering rejects are still retrievable the right
-        # way — by their own job ids — proving they exist and were
-        # deliberately excluded, not merely never created
-        from sf_etl_spark.connector.ingest import failed_results_df
-
-        all_rejects = failed_results_df(spark, opts)  # sweep = every finished job
-        tags = [r["fields"]["Tag"] for r in all_rejects.collect()]
+        raw = _read_bytes(mem, "side/rejects-batch000000000.jsonl")
+        recs = [_json.loads(line) for line in raw.decode().splitlines()]
+        assert [(r["batch_id"], r["job_id"], r["fields"]["Tag"]) for r in recs] == [
+            (0, job.id, "mine")
+        ]
+        assert n_intruders[0] >= 1
+        tags = [r["fields"]["Tag"] for r in failed_results_df(spark, opts).collect()]
         assert "INTRUDER" in tags and "mine" in tags
     finally:
+        fsutil.unregister_scheme("mem")
         server.stop()
-
-
-def test_apply_resolver_spec_parses_registers_and_fails_loud(tmp_path):
-    """`fs_resolver` spec strings ('scheme=module:attr[,…]') register
-    importable resolvers idempotently; malformed entries and
-    unimportable targets raise with the offending entry named — the
-    spec is what a writer option carries into the freshly spawned
-    DataSource commit worker, so a typo must surface loudly, not as a
-    silently empty registry."""
-    from sf_etl_spark.connector import fsutil
-
-    fsutil.apply_resolver_spec(None)  # no-op
-    fsutil.apply_resolver_spec("")  # no-op
-    spec = "passx=sf_etl_spark.connector.fsutil:local_passthrough_resolver"
-    fsutil.apply_resolver_spec(spec)
-    try:
-        f, p = fsutil.filesystem_for(f"passx://{tmp_path}/a.json")
-        assert p == f"{tmp_path}/a.json"
-        fsutil.apply_resolver_spec(spec)  # idempotent re-register
-        fsutil.write_small_file_atomic(f"passx://{tmp_path}/a.json", b"x")
-        assert (tmp_path / "a.json").read_bytes() == b"x"
-    finally:
-        fsutil.unregister_scheme("passx")
-    with pytest.raises(ValueError, match="malformed"):
-        fsutil.apply_resolver_spec("no-equals-sign")
-    with pytest.raises(ValueError, match="malformed"):
-        fsutil.apply_resolver_spec("s=module_without_attr")
-    with pytest.raises(ModuleNotFoundError):
-        fsutil.apply_resolver_spec("s=nonexistent_mod_xyz:fn")
-    with pytest.raises(AttributeError):
-        fsutil.apply_resolver_spec("s=sf_etl_spark.connector.fsutil:nope")
-
-
-def test_writer_validates_fs_resolver_at_plan_time():
-    """A bad fs_resolver option must fail at writer CONSTRUCTION on
-    the driver (plan time), not minutes later inside the commit
-    worker after the upload already ran."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    from sf_etl_spark.connector.datasource import (
-        ClientBuilderError,
-        SfIngestWriter,
-    )
-
-    schema = StructType([StructField("K", StringType())])
-    base = {
-        "url": "http://localhost:1",
-        "client_id": "i",
-        "client_secret": "s",
-        "username": "u",
-        "password": "p",
-        "object": "Thing",
-    }
-    with pytest.raises(ClientBuilderError, match="fs_resolver"):
-        SfIngestWriter(schema, {**base, "fs_resolver": "garbage-entry"})
-    with pytest.raises(ClientBuilderError, match="fs_resolver"):
-        SfIngestWriter(
-            schema, {**base, "fs_resolver": "s=nonexistent_mod_xyz:fn"}
-        )
-    # a valid spec constructs fine
-    SfIngestWriter(
-        schema,
-        {
-            **base,
-            "fs_resolver": "p=sf_etl_spark.connector.fsutil:local_passthrough_resolver",
-        },
-    )
-
-
-def test_stream_writer_commit_worker_resolves_registered_scheme(spark, tmp_path):
-    """r14 verdict task 3: the fs_resolver option carries a scheme
-    resolver into the DataSource commit hook, which PySpark runs in a
-    freshly spawned Python worker whose process-local fsutil registry
-    starts EMPTY. Both commit-hook write paths — the streaming sink's
-    reject side table AND the batch writer's job_ids_path publish —
-    land through the resolver-registered scheme with zero
-    unknown-scheme raises. The driver deliberately never registers the
-    scheme: only the spec riding the writer options can make the
-    worker resolve it."""
-    import json as _json
-    import os
-
-    from sf_etl_spark.connector.datasource import register as register_sfetl
-
-    fields = [
-        {"name": "Id", "type": "id", "length": 18, "nillable": False},
-        {"name": "K", "type": "string", "length": 8},
-        {"name": "Tag", "type": "string", "length": 8},
-    ]
-    server = MockSalesforce(object_name="Thing", fields=fields, rows=[])
-    url = server.start()
-    try:
-        register_sfetl(spark)
-        src = tmp_path / "src"
-        src.mkdir()
-        spark.createDataFrame(
-            [("k1", "good"), (None, "poison")], "K string, Tag string"
-        ).coalesce(1).write.parquet(str(src / "batch0"))
-        side = tmp_path / "rejects"
-        ids_file = tmp_path / "ids" / "batch.json"
-        q = (
-            spark.readStream.schema("K string, Tag string")
-            .parquet(str(src / "batch0"))
-            .writeStream.format("sfetl")
-            .options(
-                **sf_options(url),
-                object="Thing",
-                operation="upsert",
-                externalIdFieldName="K",
-                failed_results_path=f"wrkfs://{side}",
-                job_ids_path=f"wrkfs://{ids_file}",
-                fs_resolver=(
-                    "wrkfs=sf_etl_spark.connector.fsutil:"
-                    "local_passthrough_resolver"
-                ),
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # reject side table landed at the resolver-mapped local path
-        files = sorted(os.listdir(side))
-        assert files == ["rejects-batch000000000.jsonl"]
-        rej = spark.read.schema(
-            "batch_id long, job_id string, sf_id string, "
-            "sf_error string, fields map<string,string>"
-        ).json(str(side))
-        assert [r["fields"]["Tag"] for r in rej.collect()] == ["poison"]
-        # job-id publish landed too, with the batch's real job ids
-        ids = _json.loads(ids_file.read_text())
-        assert len(ids["job_ids"]) >= 1
-        assert [r["K"] for r in server.rows] == ["k1"]
-    finally:
-        server.stop()
-
-
-def test_fb_rejects_registered_scheme_without_resolver_spec(spark, tmp_path):
-    """r14 ADVICE: foreach_batch_ingest_with_rejects derives its
-    job-id side channel from rejects_path, but the writer publishes it
-    from a commit WORKER whose registry is empty — a rejects_path on a
-    driver-registered scheme with no fs_resolver spec would fail at
-    the first batch's commit. The helper must raise at CONSTRUCTION,
-    naming the fix."""
-    from pyarrow import fs as pafs
-
-    from sf_etl_spark.connector import fsutil
-    from sf_etl_spark.connector.ingest import (
-        foreach_batch_ingest_with_rejects,
-    )
-
-    mem = pafs._MockFileSystem()
-    fsutil.register_scheme("memfb", lambda rest: (mem, rest))
-    try:
-        with pytest.raises(ValueError, match="fs_resolver"):
-            foreach_batch_ingest_with_rejects(
-                spark, {"object": "Thing"}, "memfb://side/rejects"
-            )
-        # with a resolver spec the construction is accepted — the
-        # worker can rebuild the scheme from the spec
-        foreach_batch_ingest_with_rejects(
-            spark,
-            {
-                "object": "Thing",
-                "fs_resolver": (
-                    "memfb=sf_etl_spark.connector.fsutil:"
-                    "local_passthrough_resolver"
-                ),
-            },
-            "memfb://side/rejects",
-        )
-    finally:
-        fsutil.unregister_scheme("memfb")
 
 
 def test_write_small_file_atomic_survives_stale_foreign_tmp(tmp_path):

@@ -148,10 +148,12 @@ def test_pagerank_keeps_zero_indegree_nodes(spark):
     assert got["b"] > got["c"] > got["a"]
 
 
-def test_pagerank_checkpoint_interval_invariant(spark):
-    """r15 optimization: the lazy iteration chain (cut only every
-    `checkpoint_interval` rounds) must be BIT-identical to cutting
-    after every round — same arithmetic, different lineage."""
+def test_pagerank_golden_ranks(spark):
+    """Golden ranks for a 5-node graph at iterations=5, captured before
+    the checkpoint_interval knob was removed and identical at local[1]
+    and local[4]. Exact equality, not approx: the fan-in sum is an
+    exact DECIMAL fold, so neither the shuffle partition count nor the
+    edges' partitioning may move a bit."""
     from sf_etl_spark.operators.graph import pagerank
 
     pairs = spark.createDataFrame(
@@ -161,15 +163,22 @@ def test_pagerank_checkpoint_interval_invariant(spark):
     edges = pairs.selectExpr("l AS src", "r AS dst").unionAll(
         pairs.selectExpr("r AS src", "l AS dst")
     )
-    lazy = {
-        r.node: r.pr
-        for r in pagerank(edges, iterations=5, checkpoint_interval=5).collect()
+    golden = {
+        "a": 0.105016995905,
+        "b": 0.18115909567,
+        "c": 0.18115909567,
+        "x": 0.31899651738000007,
+        "y": 0.21366829512,
     }
-    cut = {
-        r.node: r.pr
-        for r in pagerank(edges, iterations=5, checkpoint_interval=1).collect()
-    }
-    assert lazy == cut  # exact equality, not approx
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for parts in (1, 7):
+            spark.conf.set(key, str(parts))
+            got = pagerank(edges.repartition(parts), iterations=5).collect()
+            assert {r.node: r.pr for r in got} == golden, parts
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_bfs_lazy_visited_union(spark):

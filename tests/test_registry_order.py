@@ -15,11 +15,12 @@ DRIVER_WINDOW = 50
 # Queries whose driver CORRECTNESS row most needs refreshing THIS round
 # (round 16 ordering) — they must sit inside the driver's ~50-row
 # window. Rank is by information value (the r15 verdict's task 8):
-# (1) the 17 lanes the r16 optimization round TOUCHED (dedup-cluster
+# (1) the 16 lanes the r16 optimization round TOUCHED (dedup-cluster
 # pair, linkage_survivorship, ann_ivf_pq_trained_agreement,
-# asof_pandas_merge, and the 11 sfetl lanes riding the mockserver
+# asof_pandas_merge, and the 10 sfetl lanes riding the mockserver
 # teardown fix, plus triangle_count's reshaped pair derivation);
-# (2) 33 lanes of the r11-stale block, filling to 50. 17+33 = 50.
+# (2) 34 lanes of the stale block (the r11-stale lanes, then the next
+# in rotation), filling to 50. 16+34 = 50.
 # Everything re-proven in r12-r15 rotates behind the
 # boundary.
 MUST_BE_IN_WINDOW = [
@@ -39,7 +40,6 @@ MUST_BE_IN_WINDOW = [
     "stream_sink_sfetl_upsert",
     "stream_sink_sfetl_native",
     "stream_sink_sfetl_failed_rows",
-    "stream_sink_sfetl_failed_rows_fb",
     "ann_matryoshka_recall",
     "ann_recall_metrics",
     "asof_nearest_click",
@@ -73,6 +73,7 @@ MUST_BE_IN_WINDOW = [
     "rolling_median_7d",
     "seasonal_anomaly_slots",
     "stream_dedup_exactly_once",
+    "stream_stream_join_attribution",
 ]
 
 
