@@ -6,9 +6,9 @@ Spark data source plus a schema pipeline.
 * :mod:`datasource` — Spark Python DataSource: partitioned parallel
   extraction (bulk chunk / PK-range splits).
 * :func:`read_object` — scan + typed coercion in one call.
-* :func:`generate_table_ddl` — the ``sf-sql`` CLI pipeline
-  (login → describe → DDL text, ``sql-builder/src/main.rs:51-82``)
-  as a library function.
+
+The ``sf-sql`` pipeline (login → describe → DDL text,
+``sql-builder/src/main.rs:51-82``) is ``sf_etl_spark.cli``.
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ __all__ = [
     "SfClient",
     "SfEtlDataSource",
     "TokenError",
-    "generate_table_ddl",
     "read_object",
     "register",
 ]
@@ -88,24 +87,3 @@ def read_object(
         _client_from_options(options).describe(object_name), options.get("fields")
     )
     return coerce_dataframe(reader.schema(wire_schema(schema)).load(), schema)
-
-
-def generate_table_ddl(
-    client: SfClient,
-    object_name: str,
-    dialect: str = "postgres",
-    output_path: str | None = None,
-) -> str:
-    """E1 pipeline: describe → StructType → CREATE TABLE text.
-
-    Deterministic column order (describe order) — unlike the
-    reference's HashMap-keyed table (``sql/table.rs:11``).
-    """
-    from sf_etl_spark.schema.ddl import create_table_ddl
-
-    schema = client.describe(object_name)
-    ddl = create_table_ddl(object_name, schema.to_struct_type(), dialect=dialect)
-    if output_path:
-        with open(output_path, "w", encoding="utf-8") as fh:
-            fh.write(ddl + "\n")
-    return ddl

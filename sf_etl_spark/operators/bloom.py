@@ -14,14 +14,15 @@ this module builds the same structure from public DataFrame ops:
   build side:  k=3 seeded xxhash64 positions per key →
                (word = pos/64, mask = 1 << pos%64) →
                groupBy(word).bit_or(mask) → one MAP<INT,BIGINT> row
-  probe side:  crossJoin(broadcast(1-row map)) + an AND of k bit
-               tests — a codegen'd narrow filter, no Python, no UDF.
+  probe side:  the bitmap as a dense ARRAY<BIGINT> literal + an AND of
+               k bit tests — a codegen'd narrow filter, no Python, no
+               UDF.
 
 The filter is one-sided (false positives only), so callers MUST keep
-the exact join afterwards; ``bloom_prune`` is a bandwidth optimization,
-never a correctness device. With m bits / n keys / k=3 the false-
-positive rate is ≈ (1 - e^{-kn/m})^k — the default m=2^17 holds ~1%
-up to ~15k keys and costs 16 KiB broadcast.
+the exact join afterwards; ``bloom_prune_literal`` is a bandwidth
+optimization, never a correctness device. With m bits / n keys / k=3
+the false-positive rate is ≈ (1 - e^{-kn/m})^k — the default m=2^17
+holds ~1% up to ~15k keys and costs 16 KiB broadcast.
 
 Reference parity: the reference has no joins (SURVEY.md §2.2); this is
 engine scale surface, same family as operators/skew.py.
@@ -70,46 +71,19 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 1 << 17) -> DataFra
     )
 
 
-def bloom_prune(
-    probe: DataFrame, key_col: str, bloom: DataFrame, m_bits: int = 1 << 17
-) -> DataFrame:
-    """Filter probe rows whose key cannot be in the build set.
-
-    The 1-row bloom map rides in via broadcast crossJoin; the bit tests
-    compile to a narrow whole-stage-codegen'd filter over the scan, so
-    pruned rows never reach any downstream exchange. False positives
-    pass through — follow with the exact join.
-    """
-    tests = [
-        (
-            F.coalesce(
-                F.element_at(F.col("__bloom"), (p / 64).cast("int")), F.lit(0).cast("long")
-            ).bitwiseAND(
-                F.call_function(
-                    "shiftleft", F.lit(1).cast("long"), F.pmod(p, F.lit(64)).cast("int")
-                )
-            )
-        )
-        != 0
-        for p in _positions(F.col(key_col), m_bits)
-    ]
-    cond = tests[0]
-    for t in tests[1:]:
-        cond = cond & t
-    return probe.crossJoin(F.broadcast(bloom)).filter(cond).drop("__bloom")
-
-
 def bloom_prune_literal(
     probe: DataFrame, key_col: str, bloom: DataFrame, m_bits: int = 1 << 17
 ) -> DataFrame:
-    """Like ``bloom_prune``, but the bitmap is materialized once and
-    embedded as a dense ARRAY<BIGINT> literal, so the bit tests are a
-    plain Filter directly on the probe scan.
+    """Filter probe rows whose key cannot be in the build set. The
+    bitmap is materialized once and embedded as a dense ARRAY<BIGINT>
+    literal, so the bit tests are a plain Filter directly on the probe
+    scan. False positives pass through — follow with the exact join.
 
-    Why this exists: the crossJoin form above keeps everything lazy,
-    but Catalyst's PushLeftSemiLeftAntiThroughJoin pushes the exact
-    semi join BELOW the bloom cross-join (observed on this build), so
-    the prune ends up above the join it was meant to feed. Embedding
+    Why a literal: broadcasting the 1-row map through a crossJoin keeps
+    everything lazy, but Catalyst's PushLeftSemiLeftAntiThroughJoin
+    pushes the exact semi join BELOW the bloom cross-join (observed on
+    this build), so the prune ends up above the join it was meant to
+    feed. Embedding
     the bitmap as a literal is exactly how Spark's own runtime bloom
     filters land after subquery materialization (InSubqueryExec):
     the filter then sits under every downstream exchange by

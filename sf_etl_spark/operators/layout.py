@@ -134,31 +134,6 @@ def footer_column_bounds(path: str, column: str):
     return None if lo is None else (lo, hi)
 
 
-def file_column_spans(path: str, column: str) -> list[tuple[float, float]]:
-    """Per-file (min, max) of ``column`` from the parquet footers —
-    the exact statistics a scan's file-skipping consults. Driver-side
-    metadata reads only (no data pages)."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    spans: list[tuple[float, float]] = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        md = pq.ParquetFile(f).metadata
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == column and col.statistics is not None:
-                    s = col.statistics
-                    lo = s.min if lo is None else min(lo, s.min)
-                    hi = s.max if hi is None else max(hi, s.max)
-        if lo is not None:
-            spans.append((lo, hi))
-    return spans
-
-
 def build_zone_map(spark, path: str, column: str):
     """Zone map build: per-FILE (min, max, row count) of ``column``,
     computed as ONE distributed scan grouped by ``input_file_name()``
@@ -166,10 +141,9 @@ def build_zone_map(spark, path: str, column: str):
     (Delta's add-file stats, Iceberg's manifest metrics, the classic
     "small materialized aggregates" of Moerkotte, VLDB 1998).
 
-    Built engine-side (not by footer-walking on the driver like
-    :func:`file_column_spans`, which is the per-file VERIFICATION
-    tool): at 100 TB the stats build parallelizes like any scan and
-    in practice is folded into the write path; reading the result is
+    Built engine-side, not by walking parquet footers on the driver:
+    at 100 TB the stats build parallelizes like any scan and in
+    practice is folded into the write path; reading the result is
     O(#files), never O(rows).
     """
     df = spark.read.parquet(path)

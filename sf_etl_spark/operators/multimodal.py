@@ -30,7 +30,6 @@ processing; this module is north-star surface per the build brief.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -355,25 +354,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_batches, schema=FEATURE_SCHEMA)
 
 
-def resize_plan(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize operator: plumbing-real, decode-stubbed.
-
-    Returns the post-resize *metadata* plan (what the lake tracks);
-    the pixel transform itself sits behind ``decode_media``. At scale
-    this is a narrow map — payloads stay partition-local.
-    """
-    return media.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.format").alias("format"),
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            F.col("meta.n_bytes").alias("n_bytes"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-        ),
-    )
-
-
 def frame_sample_plan(media: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
     """Frame sampling for video/audio payloads: one row per sampled
     offset. Expressed as sequence+explode (JVM-side, no Python), so
@@ -387,12 +367,6 @@ def frame_sample_plan(media: DataFrame, every_n_bytes: int = 1024) -> DataFrame:
         F.col("meta.format").alias("format"),
         F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_no"),
     ).withColumn("byte_offset", F.col("frame_no").cast("bigint") * every_n_bytes)
-
-
-def shannon_entropy(counts: list[int]) -> float:
-    """Reference scalar entropy (test oracle for extract_features)."""
-    total = sum(counts)
-    return -sum(c / total * math.log2(c / total) for c in counts if c)
 
 
 RESIZE_STATS_SCHEMA = StructType(

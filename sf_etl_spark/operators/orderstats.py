@@ -460,74 +460,6 @@ def grouped_median_twophase(
     )
 
 
-def grouped_median_twophase_double(
-    df: DataFrame,
-    group_col: str,
-    col: str,
-    n_buckets: int = 1024,
-    max_meta_rows: int = 2_000_000,
-) -> DataFrame:
-    """Exact per-group median of a DOUBLE column in two fixed passes —
-    the :func:`grouped_median_twophase` shape for raw doubles with no
-    exact integer image (e.g. absolute deviations, whose mantissas are
-    arbitrary after a subtract).
-
-    Why double bucketing is safe HERE and not in :func:`kth_smallest`:
-    the histogram map ``least(B-1, floor((x-lo)/width))`` built from
-    IEEE subtract/divide/floor is MONOTONE non-decreasing (every step
-    is correctly rounded, and correctly-rounded unary maps preserve
-    order), so per-bucket counts plus rank-within-bucket reproduce
-    exact global ranks regardless of where a boundary value happens to
-    round. kth_smallest must use exact decimal arithmetic because its
-    narrowing FILTER re-derives bucket membership as a VALUE RANGE;
-    pass 2 here re-applies the SAME bucket expression instead, so the
-    two passes can never disagree.
-
-    Assumes NaN-free input (NaN breaks ordering); infinite spreads
-    (hi - lo overflowing to inf) fail loud. NULL medians are over the
-    non-null values per group; all-null groups drop out.
-
-    Returns (group, n bigint, v_lo double, v_hi double, median double)
-    with median = (v_lo + v_hi) / 2.0 — bit-identical to the manual
-    two-position rule ``(min(mid) + max(mid)) / 2.0``.
-    """
-    import math
-
-    g, c = F.col(group_col), F.col(col)
-    d = df.filter(c.isNotNull())
-    lo, hi = _covering_bounds(
-        d, col, None, "grouped_median_twophase_double"
-    )
-    lo, hi = float(lo), float(hi)
-    if hi > lo:
-        width = (hi - lo) / n_buckets
-        if not math.isfinite(width):
-            raise ValueError(
-                f"grouped_median_twophase_double: value spread of {col!r} "
-                f"overflows double ({lo} .. {hi}); rescale the input"
-            )
-        bucket = F.least(
-            F.lit(n_buckets - 1),
-            F.floor((c - F.lit(lo)) / F.lit(width)),
-        ).cast("long")
-    else:
-        bucket = F.lit(0).cast("long")
-    hist_df = d.groupBy(g.alias("_g"), bucket.alias("_b")).agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    per_group = _grouped_hist(
-        hist_df, "grouped_median_twophase_double", group_col, max_meta_rows
-    )
-    plans, sizes = _median_plans(per_group)
-    return _pick_two_slots(d, group_col, col, bucket, plans, sizes).select(
-        group_col,
-        F.col("n").cast("bigint").alias("n"),
-        F.col("v_lo").cast("double").alias("v_lo"),
-        F.col("v_hi").cast("double").alias("v_hi"),
-        ((F.col("v_lo") + F.col("v_hi")) / F.lit(2.0)).alias("median"),
-    )
-
-
 def grouped_exact_rank(
     df: DataFrame,
     group_col: str,
@@ -639,30 +571,6 @@ def ntile_from_rank(rank_col: str, n_col: str, n_tiles: int):
                   + 1
         END
         """
-    )
-
-
-def grouped_percentile_cont_twophase(
-    df: DataFrame,
-    group_col: str,
-    img_col: str,
-    val_col: str,
-    qs: dict[str, float],
-    n_buckets: int = 1024,
-    max_meta_rows: int = 2_000_000,
-    bounds: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Exact per-group CONTINUOUS percentiles of ONE column — the
-    single-spec convenience wrapper over
-    :func:`grouped_percentile_cont_multi` (see there for semantics,
-    machinery, and the budget contract)."""
-    return grouped_percentile_cont_multi(
-        df,
-        group_col,
-        [(img_col, val_col, qs)],
-        n_buckets=n_buckets,
-        max_meta_rows=max_meta_rows,
-        bounds_map={img_col: bounds} if bounds is not None else None,
     )
 
 

@@ -86,19 +86,6 @@ def salted_join(
     return p.join(b, on + [SALT_COL], how).drop(SALT_COL)
 
 
-def key_frequency(df: DataFrame, cols: list[str], top: int = 20) -> DataFrame:
-    """Hot-key diagnostic: the top-N heaviest join keys and their share
-    of all rows — what you run *before* choosing n."""
-    total = df.count()
-    return (
-        df.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn("share", F.col("n_rows") / F.lit(total))
-        .orderBy(F.col("n_rows").desc(), *cols)
-        .limit(top)
-    )
-
-
 def null_skew_left_join(
     facts: DataFrame,
     dim: DataFrame,

@@ -249,9 +249,8 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Real nearest-neighbor resize — closes the decode/feature/RESIZE/
-# frame-sample quartet with actual pixel resampling (resize_plan
-# above tracks only the metadata side). Images decode through the
-# dependency-free container parser, resample to an 8×8 grid with the
+# frame-sample quartet with actual pixel resampling. Images decode
+# through the dependency-free container parser, resample to an 8×8 grid with the
 # integer NN rule src = (i · src_extent) // dst_extent, and reduce to
 # exact stats. The oracle re-derives every sampled byte's offset from
 # the RAW payload bytes (the fixture geometry: one-row rasters, so

@@ -1782,10 +1782,10 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production swaps in (r12 verdict task 4): BOTH quantizers come from a
 # real fit — the coarse quantizer from the same pyspark.ml KMeans
 # machinery as `ann_ivf_kmeans_topk`, the PQ codebooks from a grouped
-# Lloyd fit that trains ALL M subspaces in one corpus scan per
-# iteration (M sequential MLlib fits would re-scan the corpus M times
-# per iteration — at 100 TB that multiplier is the difference between
-# one pipeline pass and eight). The encode→ADC→re-rank plan downstream
+# Lloyd fit that trains ALL M subspaces in one scan of the training
+# sample (M sequential MLlib fits would re-scan the corpus M times per
+# iteration — at 100 TB that multiplier is the difference between one
+# pipeline pass and eight). The encode→ADC→re-rank plan downstream
 # of the fit is byte-for-byte the seeded lanes' (`_pq_adc_scores`),
 # which is the claim being proven: trained codebooks drop in with an
 # unchanged plan shape.
@@ -1799,15 +1799,14 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vector lost or duplicated by the coarse partition, the probe join,
 # the PQ encode argmin, or the ADC group-by changes the re-rank input
 # and breaks the hash. Codebook QUALITY (recall at real nprobe /
-# shortlist cuts) is gated by tests/test_ivf_pq_trained.py via
-# `_ivf_pq_recall`, which must score the trained fit at least as well
-# as the seed-selection codebooks at the same probe fraction.
+# shortlist cuts) is gated by tests/test_ivf_pq_trained.py, whose
+# recall@10 helper must score the trained fit at least as well as the
+# seed-selection codebooks at the same probe fraction.
 #
-# Scale: the grouped Lloyd iteration is two pre-reduced shuffles — the
-# argmin assignment collapses map-side to n·M rows (min(struct) per
-# (vec_id, m)), the recompute to M·C·SUBDIM mean cells — and the
-# codebook itself is 128 rows, a bounded-METADATA collect per
-# iteration (the same convention as the zone-map/layout collects).
+# Scale: the grouped Lloyd fit is one shuffle of the sample's n·M
+# subvectors into PQ_M groups that run every iteration in place, and
+# the codebook itself is 128 rows, a bounded-METADATA collect (the same
+# convention as the zone-map/layout collects).
 #
 # Training-input bound (r13 verdict task 1): a fit that re-scans the
 # FULL corpus per Lloyd iteration (and localCheckpoints its M-way
@@ -1817,7 +1816,9 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus with the result. `train_sample_mod` caps the TRAINING input
 # with a deterministic hash-sample — pmod(xxhash64(vec_id), mod) = 0,
 # ~1/mod of the corpus, stable across runs/partitionings — while the
-# encode/ADC/re-rank path downstream always sees every vector. The
+# encode/ADC/re-rank path downstream always sees every vector. To keep
+# the sample at <= ~1M vectors, a deployment sets the modulus to the
+# corpus row count divided by 1M, rounded up (1 for a smaller corpus). The
 # registered trained-agreement lane runs the sampled configuration
 # (mod=2); its output hash is UNCHANGED because agreement mode's
 # lossless parameters make the result brute-force-equal whatever the
@@ -1829,30 +1830,6 @@ PQ_TRAIN_ITERS = 3
 #: fixture corpus (250 of 500 vectors — still ≥15 training points per
 #: codeword); at deployment scale this knob is what bounds the fit
 TRAIN_SAMPLE_MOD = 2
-
-
-def mod_for_target(n_rows: int, target: int) -> int:
-    """Training-sample modulus bounding the EXPECTED sample size to
-    ``<= target`` vectors regardless of corpus size — the deployment
-    spelling of the ``train_sample_mod`` knob (r14 verdict task 7:
-    FAISS-style practice is "train on <= ~1M vectors", not "train on
-    1/mod of whatever the corpus is"). ``ceil(n_rows / target)``,
-    floored at 1, is the TIGHTEST modulus honoring the bound: the
-    hash-sample keeps ~n_rows/mod rows, and one step coarser
-    (mod - 1) would already exceed the target.
-
-    ``n_rows`` is the caller's corpus row count — pass a known count
-    or one bounded ``df.count()`` (a metadata-scale job next to the
-    fit it sizes)::
-
-        mod = mod_for_target(embeddings.count(), 1_000_000)
-        ivf_pq_trained_topk(..., train_sample_mod=mod)
-    """
-    if target < 1:
-        raise ValueError(f"target must be >= 1, got {target}")
-    if n_rows < 0:
-        raise ValueError(f"n_rows must be >= 0, got {n_rows}")
-    return max(1, -(-n_rows // target))
 
 
 def _train_sample(n: DataFrame, mod: int) -> DataFrame:
@@ -1870,9 +1847,9 @@ def _pq_train_subvectors(
     spark: SparkSession, n: DataFrame, train_sample_mod: int = 1
 ) -> DataFrame:
     """The Lloyd loop's training relation: (vec_id, m, sv) subvectors
-    of the TRAINING SAMPLE only — the frame that gets checkpointed and
-    re-scanned every iteration, so the sample bound must sit below the
-    M-way expansion (asserted by tests/test_ivf_pq_trained.py on both
+    of the TRAINING SAMPLE only — the frame the grouped fit shuffles
+    into its PQ_M groups, so the sample bound must sit below the M-way
+    expansion (asserted by tests/test_ivf_pq_trained.py on both
     the row count and the plan)."""
     ms = spark.range(PQ_M).select(F.col("id").cast("int").alias("m"))
     return (
@@ -1892,7 +1869,6 @@ def _pq_train_codebooks(
     n: DataFrame,
     iters: int = PQ_TRAIN_ITERS,
     train_sample_mod: int = 1,
-    impl: str = "grouped",
 ) -> DataFrame:
     """Grouped per-subspace k-means: (m, c, w) codebooks for all PQ_M
     subspaces trained together (*train_sample_mod* bounds the sample;
@@ -1905,177 +1881,72 @@ def _pq_train_codebooks(
     seeded lanes use. Empty codewords keep their previous position
     (the standard Lloyd dead-cluster convention).
 
-    ``impl`` picks the execution shape (r15 verdict task 5 A/B; both
-    produce BIT-IDENTICAL codebooks, pinned by
-    tests/test_ivf_pq_trained.py::test_fold_matches_expression_loop):
-
-    * ``"grouped"`` (default) — ALL ``iters`` Lloyd iterations run
-      inside ONE ``groupBy("m").applyInPandas`` job: subspaces are
-      independent, so each of the PQ_M tasks holds every row it needs
-      for the whole loop. One pass over the sample instead of one
-      scan + one driver round-trip PER iteration (guide §1.2);
-      interleaved A/B 11.7 -> 1.3 s best-of-3 on the sf0.1 training
-      step. Per-task memory is O(sample_rows x SUBDIM) — bounded by
-      the documented <= ~1M-vector `mod_for_target` sample (~64 MB),
-      with the distance matrix computed in 64k-row chunks. The
-      arithmetic is the SAME per-element (x-y)^2 fold, and the
-      fixture's float32-sourced values make the per-cell sums exact
-      in double (<= ~44 significant bits), so summation order cannot
-      perturb the means — that is why cross-shape bit-identity holds
-      and is test-pinned rather than assumed.
-    * ``"expr"`` — the r15 shape kept as the pinned reference: the
-      codebook re-enters each iteration as a literal expression,
-      assignment is map-side, and the <= M*C*SUBDIM per-dimension
-      means are collected per iteration.
+    ALL ``iters`` Lloyd iterations run inside ONE
+    ``groupBy("m").applyInPandas`` job: subspaces are independent, so
+    each of the PQ_M tasks holds every row it needs for the whole loop.
+    One pass over the sample instead of one scan + one driver
+    round-trip PER iteration (guide §1.2); interleaved A/B 11.7 -> 1.3 s
+    best-of-3 on the sf0.1 training step against a per-iteration
+    literal-expression loop. Per-task memory is O(sample_rows x
+    SUBDIM) — bounded by a training sample of <= ~1M vectors (~64 MB),
+    with the distance matrix computed in 64k-row chunks. The fixture's
+    float32-sourced values make the per-cell sums exact in double
+    (<= ~44 significant bits), so summation order cannot perturb the
+    means: the codebook is pinned by a golden hash in
+    tests/test_ivf_pq_trained.py at any core count.
     """
-    if impl not in ("grouped", "expr"):
-        raise ValueError(f"impl must be 'grouped' or 'expr', got {impl!r}")
-    # codebook state lives driver-side between iterations: 128 rows of
-    # 8 doubles — re-entering as a literal relation truncates lineage
-    # (no growing plan across iterations) and broadcasts for free
+    import numpy as np
+    import pandas as pd
+
+    # codebook state lives driver-side: 128 rows of 8 doubles
     code = {
         (r["m"], r["c"]): [float(x) for x in r["w"]]
         for r in _pq_codebook(spark, n).collect()
     }
     # Empty seed codebook (corpus lacks every seed vec_id): degrade to
-    # an empty trained codebook exactly like the pre-r15 join shape
-    # did. Without this the literal-expression path builds zero-width
-    # arrays, array_min yields NULL assignments, and the means collect
-    # poisons `code` with (m, None) keys that blow up the final sort
-    # (r15 ADVICE).
+    # an empty trained codebook.
     if not code:
         return spark.createDataFrame([], "m int, c int, w array<double>")
-    if impl == "grouped":
-        import numpy as np
-        import pandas as pd
+    seeds: dict[int, list[tuple[int, list[float]]]] = {}
+    for (m, c), w in code.items():
+        seeds.setdefault(m, []).append((c, w))
+    b_seeds = spark.sparkContext.broadcast(seeds)
 
-        seeds: dict[int, list[tuple[int, list[float]]]] = {}
-        for (m, c), w in code.items():
-            seeds.setdefault(m, []).append((c, w))
-        b_seeds = spark.sparkContext.broadcast(seeds)
-
-        def train(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = int(pdf["m"].iloc[0])
-            X = np.vstack(pdf["sv"].to_numpy())
-            cw = {c: np.asarray(w) for c, w in b_seeds.value[m]}
-            for _ in range(iters):
-                cs = sorted(cw)
-                C = np.vstack([cw[c] for c in cs])
-                # chunked explicit (x-c)^2: bounds the rows x C x dim
-                # intermediate to ~64 MB per chunk; argmin of the FIRST
-                # minimum = the lowest-c tie-break (same as the expr
-                # shape's min(struct(d2, c)))
-                best = np.empty(len(X), dtype=np.int64)
-                for lo in range(0, len(X), 65536):
-                    chunk = X[lo : lo + 65536]
-                    d2 = ((chunk[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                    best[lo : lo + len(chunk)] = d2.argmin(axis=1)
-                for j, c in enumerate(cs):
-                    mask = best == j
-                    if mask.any():
-                        cw[c] = X[mask].mean(axis=0)
+    def train(pdf: pd.DataFrame) -> pd.DataFrame:
+        m = int(pdf["m"].iloc[0])
+        X = np.vstack(pdf["sv"].to_numpy())
+        cw = {c: np.asarray(w) for c, w in b_seeds.value[m]}
+        for _ in range(iters):
             cs = sorted(cw)
-            return pd.DataFrame(
-                {"m": m, "c": cs, "w": [list(cw[c]) for c in cs]}
-            )
+            C = np.vstack([cw[c] for c in cs])
+            # chunked explicit (x-c)^2: bounds the rows x C x dim
+            # intermediate to ~64 MB per chunk; argmin of the FIRST
+            # minimum = the lowest-c tie-break
+            best = np.empty(len(X), dtype=np.int64)
+            for lo in range(0, len(X), 65536):
+                chunk = X[lo : lo + 65536]
+                d2 = ((chunk[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+                best[lo : lo + len(chunk)] = d2.argmin(axis=1)
+            for j, c in enumerate(cs):
+                mask = best == j
+                if mask.any():
+                    cw[c] = X[mask].mean(axis=0)
+        cs = sorted(cw)
+        return pd.DataFrame({"m": m, "c": cs, "w": [list(cw[c]) for c in cs]})
 
-        sub = _pq_train_subvectors(spark, n, train_sample_mod)
-        trained = sub.groupBy("m").applyInPandas(
-            train, "m int, c int, w array<double>"
-        )
-        # bounded collect (<= M*C = 128 rows) and re-entry as a literal
-        # relation — identical convention to the expr shape: consumers
-        # referencing the codebook several times must not re-run the
-        # training job, and the literal broadcasts for free. Seeded from
-        # `code`: an empty training sample forms no groups, and the fit
-        # then degrades to the seed codebook as the expr shape does
-        out = dict(code)
-        out.update(
-            ((r["m"], r["c"]), [float(x) for x in r["w"]])
-            for r in trained.collect()
-        )
-        return spark.createDataFrame(
-            [(m, c, w) for (m, c), w in sorted(out.items())],
-            "m int, c int, w array<double>",
-        )
-    # impl == "expr": the r15 literal-expression loop (reference shape)
-    # localCheckpoint: every Lloyd iteration's collect re-executes its
-    # whole lineage (cb is a fresh literal each round), so without the
-    # checkpoint the scan+slice subtree re-reads the sample `iters`
-    # times — materialized once, the iterations read executor blocks
-    # (same convention as the graph operators' iterate-checkpoint)
-    sub = _pq_train_subvectors(spark, n, train_sample_mod).localCheckpoint(
-        eager=False
+    sub = _pq_train_subvectors(spark, n, train_sample_mod)
+    trained = sub.groupBy("m").applyInPandas(train, "m int, c int, w array<double>")
+    # bounded collect (<= M*C = 128 rows) and re-entry as a literal
+    # relation: consumers referencing the codebook several times must
+    # not re-run the training job, and the literal broadcasts for free.
+    # Seeded from `code`: an empty training sample forms no groups, and
+    # the fit then degrades to the seed codebook
+    out = dict(code)
+    out.update(
+        ((r["m"], r["c"]), [float(x) for x in r["w"]]) for r in trained.collect()
     )
-    for _ in range(iters):
-        # Codebook as ONE literal array-of-arrays expression indexed
-        # [m+1][position] (element_at is 1-based), with a parallel
-        # position→c-id literal so any PRESENT key set works — the
-        # seed codebook's c ids are corpus vec_ids and a filtered
-        # corpus may lack some (review finding; the pre-r15 join shape
-        # tolerated subsets, this shape must too). Positions are
-        # c-ascending per subspace, so array_position of the
-        # array_min — the FIRST exact minimum — is the lowest-c
-        # minimum: the same min(struct(d2, c)) tie-break as before.
-        # The argmin codeword per (vec_id, m) is then a PER-ROW
-        # expression — each sub row IS one (vec_id, m) subvector — so
-        # the pre-r15 broadcast join (×C fan-out) plus (vec_id, m)
-        # re-aggregation disappears: one Lloyd iteration = one
-        # map-side assignment + ONE shuffle (the per-dimension mean).
-        # Arithmetic is identical: same zip_with/aggregate d2 fold.
-        cs_per_m = {
-            m: sorted(c for (mm, c) in code if mm == m) for m in range(PQ_M)
-        }
-        cb_arr = F.array(
-            *[
-                F.array(
-                    *[
-                        F.array(*[F.lit(float(x)) for x in code[(m, c)]])
-                        for c in cs_per_m[m]
-                    ]
-                )
-                for m in range(PQ_M)
-            ]
-        )
-        cid_arr = F.array(
-            *[
-                F.array(*[F.lit(int(c)) for c in cs_per_m[m]])
-                for m in range(PQ_M)
-            ]
-        )
-        cw = F.element_at(cb_arr, F.col("m") + 1)
-        d2s = F.transform(
-            cw,
-            lambda w: F.aggregate(
-                F.zip_with(F.col("sv"), w, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ),
-        )
-        best_pos = F.array_position(d2s, F.array_min(d2s)).cast("int")
-        best = sub.select(
-            "m",
-            F.element_at(F.element_at(cid_arr, F.col("m") + 1), best_pos)
-            .cast("int")
-            .alias("c"),
-            "sv",
-        )
-        # recompute: per-dimension mean — posexplode keeps the shuffle
-        # pre-reduced (avg combines map-side; ≤ M·C·SUBDIM = 1024
-        # output cells, collected directly and re-assembled in Python
-        # instead of paying a second shuffle for the array packing)
-        means = (
-            best.select("m", "c", F.posexplode("sv").alias("i", "x"))
-            .groupBy("m", "c", "i")
-            .agg(F.avg("x").alias("mx"))
-        )
-        upd: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means.collect():  # bounded: ≤ M·C·SUBDIM = 1024 rows
-            upd.setdefault((r["m"], r["c"]), {})[r["i"]] = float(r["mx"])
-        for key, dims in upd.items():
-            code[key] = [dims[i] for i in sorted(dims)]
     return spark.createDataFrame(
-        [(m, c, w) for (m, c), w in sorted(code.items())],
+        [(m, c, w) for (m, c), w in sorted(out.items())],
         "m int, c int, w array<double>",
     )
 
@@ -2097,8 +1968,8 @@ def _kmeans_centers(spark: SparkSession, n: DataFrame, train_sample_mod: int = 1
     # MLlib's Lloyd loop re-scans its input once per iteration, and
     # without the cache each of those scans replays the parquet read +
     # normalization + array_to_vector lineage (r15 optimization round;
-    # bounded memory — this is the ≤`mod_for_target` training sample,
-    # not the corpus, and it is unpersisted before encode/score)
+    # bounded memory — this is the <= ~1M-vector training sample, not
+    # the corpus, and it is unpersisted before encode/score)
     fit_input = _train_sample(vecs, train_sample_mod).persist()
     try:
         model = KMeans(
@@ -2177,109 +2048,6 @@ def ann_ivf_pq_trained_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "label", cosine.alias("cosine"))
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(10)
-    )
-
-
-def _ivf_pq_recall(
-    spark: SparkSession,
-    n: DataFrame,
-    cents: DataFrame,
-    cb: DataFrame,
-    nprobe: int,
-) -> DataFrame:
-    """recall@10 of an IVF-PQ composition over the shared 5-query eval
-    set (`_EVAL_QUERIES`) — (query_id, recall_at_10). Parameterized on
-    the two quantizers so seeded and trained variants are measured by
-    the IDENTICAL probe/encode/ADC/re-rank plan; used by
-    tests/test_ivf_pq_trained.py to gate trained-codebook quality.
-
-    *cents* is (cid, cv); *cb* is (m, c, w); both broadcast-sized."""
-    from sf_etl_spark.operators.topk import salted_topk
-
-    qs = n.filter(F.col("vec_id").isin(*_EVAL_QUERIES)).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nm").alias("qn")
-    )
-    qcos = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
-    truth = salted_topk(
-        n.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn("_c", qcos),
-        ["qid"],
-        [F.col("_c").desc(), F.asc("vec_id")],
-        10,
-        ["vec_id"],
-    ).select("qid", "vec_id")
-    # assignment: broadcast-K argmax, exchange carries n pre-reduced rows
-    acos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * _norm(F.col("cv")))
-    assign = (
-        n.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "cid", acos.alias("ac"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("ac"), (-F.col("cid")).alias("nc"))).alias("s"),
-            F.first("v").alias("v"),
-        )
-        .select("vec_id", (-F.col("s.nc")).alias("cid"), "v")
-    )
-    pcos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * F.col("qn"))
-    probe = (
-        cents.crossJoin(F.broadcast(qs))
-        .withColumn("_c", pcos)
-        .withColumn(
-            "prn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.col("_c").desc(), "cid")
-            ),
-        )
-        .filter(F.col("prn") <= nprobe)
-        .select("qid", "cid")
-    )
-    cand = assign.join(F.broadcast(probe), "cid").filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    # ADC scores for the distinct candidate vectors × all 5 queries in
-    # one partial-agged shuffle, then restricted back to the per-query
-    # candidate pairs (cell membership differs per query)
-    base = cand.select("vec_id", "v").dropDuplicates(["vec_id"])
-    n_part = _shuffle_partitions(spark)
-    scores = _pq_adc_scores(
-        base.repartition(n_part), cb, qs, extra_keys=("qid",)
-    ).join(cand.select("vec_id", "qid"), ["vec_id", "qid"])
-    short = salted_topk(
-        scores,
-        ["qid"],
-        [F.asc("adc_dist"), F.asc("vec_id")],
-        PQ_RERANK,
-        ["vec_id"],
-    ).select("qid", "vec_id")
-    rerank = (
-        short.join(n, "vec_id")
-        .join(F.broadcast(qs), "qid")
-        .withColumn("_c", qcos)
-        .withColumn(
-            "rrank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.col("_c").desc(), "vec_id")
-            ),
-        )
-        .filter(F.col("rrank") <= 10)
-        .select("qid", "vec_id")
-    )
-    overlap = (
-        truth.join(rerank, ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return (
-        qs.select("qid")
-        .join(overlap, "qid", "left")
-        .select(
-            F.col("qid").alias("query_id"),
-            (F.coalesce(F.col("n_overlap"), F.lit(0)).cast("double") / 10.0).alias(
-                "recall_at_10"
-            ),
-        )
-        .orderBy("query_id")
     )
 
 

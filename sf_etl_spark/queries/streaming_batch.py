@@ -702,11 +702,11 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # data volume). The MAD deviations derive from the SAME count frame
 # (|value − med| re-keys it; counts re-aggregate), so the whole
 # statistic costs one events scan + tiny-frame ops + one final
-# screen scan, fully lazy. For an UNBOUNDED value domain (true
-# continuous doubles) the count frame degenerates to n rows — that
-# regime belongs to grouped_median_twophase_double
-# (operators/orderstats.py), the general two-phase operator this
-# lane's shape is certified against in tests.
+# screen scan, fully lazy. For an UNBOUNDED value domain the count
+# frame degenerates to n rows — that regime belongs to the two-phase
+# operators of operators/orderstats.py (grouped_median_twophase,
+# grouped_quantile_twophase), which bucket an order-isomorphic integer
+# image of the value (e.g. cents of a 2-decimal value).
 # ---------------------------------------------------------------------------
 @register(
     "robust_outliers",
@@ -942,9 +942,9 @@ def interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: one shuffle (groupBy user); the collected sequence is
 # bounded by events-per-user (a retention window at deployment). For
-# unbounded keys the same fold runs incrementally as the
-# transformWithStateInPandas running-stats operator
-# (streaming/pipelines.py) — one acc per key, no sequence at all;
+# unbounded keys the fold belongs in a keyed streaming state operator
+# like `stream_stateful_user_counts` (applyInPandasWithState,
+# streaming/pipelines.py) — one acc per key, no sequence at all;
 # this lane is the batch-checkable twin.
 # ---------------------------------------------------------------------------
 @register(

@@ -21,7 +21,7 @@ this is a map-only stage with no shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -50,17 +50,3 @@ def coerce_dataframe(raw: DataFrame, schema: ObjectSchema) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(struct_field_for(f).dataType).alias(f.name))
     return raw.select(*cols)
-
-
-def records_to_dataframe(
-    spark: SparkSession, records: list[dict], schema: ObjectSchema
-) -> DataFrame:
-    """Query-result JSON records (``QueryResponse.records``) → typed
-    DataFrame. Wire values arrive as strings (CSV) or JSON scalars;
-    both coerce through the same cast lane."""
-    names = schema.field_names()
-    wire = spark.createDataFrame(
-        [tuple(None if r.get(n) is None else str(r.get(n)) for n in names) for r in records],
-        schema=", ".join(f"`{n}` string" for n in names),
-    )
-    return coerce_dataframe(wire, schema)

@@ -138,7 +138,7 @@ def compact_parquet(
     only that commit. Concurrent readers see old-or-new, never a gap.
     Superseded commit dirs — and with them ALL archived time-travel
     versions — are garbage-collected only with ``vacuum=True``; the
-    default keeps history readable/restorable (the Delta OPTIMIZE
+    default keeps history readable by time travel (the Delta OPTIMIZE
     contract: compaction is not history truncation). Passing an
     explicit ``partition_by`` for a merge target is refused.
     """

@@ -2,7 +2,6 @@ from sf_etl_spark.sources.tables import (
     TABLES,
     ensure_parallelism,
     load_table,
-    register_views,
 )
 
-__all__ = ["TABLES", "ensure_parallelism", "load_table", "register_views"]
+__all__ = ["TABLES", "ensure_parallelism", "load_table"]

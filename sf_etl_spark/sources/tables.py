@@ -245,9 +245,3 @@ def _parse_bytes_conf(v: str) -> int:
     if s and s[-1] in _BYTE_SUFFIX:
         return int(float(s[:-1]) * _BYTE_SUFFIX[s[-1]])
     return int(s)
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so `spark.sql` works too."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

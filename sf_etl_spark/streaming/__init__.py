@@ -11,36 +11,24 @@ batch suite proves against the DuckDB oracle run unchanged under
 
 from sf_etl_spark.streaming.pipelines import (
     events_stream,
-    foreach_batch_upsert_parquet,
     read_merge_target,
-    run_timered_to_memory_table,
     run_to_memory_table,
-    upsert_partitioned_parquet,
     stage_events_as_stream_source,
     stream_click_attribution,
     stream_dedup_within_watermark,
     stream_session_agg,
-    stream_sliding_agg,
     stream_stateful_user_counts,
-    stream_tws_session_audit,
-    stream_tws_user_counts,
     stream_tumbling_agg,
 )
 
 __all__ = [
     "events_stream",
-    "foreach_batch_upsert_parquet",
     "read_merge_target",
-    "run_timered_to_memory_table",
     "run_to_memory_table",
     "stage_events_as_stream_source",
     "stream_click_attribution",
     "stream_dedup_within_watermark",
     "stream_session_agg",
-    "stream_sliding_agg",
     "stream_stateful_user_counts",
-    "stream_tws_session_audit",
-    "stream_tws_user_counts",
     "stream_tumbling_agg",
-    "upsert_partitioned_parquet",
 ]

@@ -28,8 +28,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-from pyspark.sql.types import StructType
 
 from sf_etl_spark.sources import load_table
 
@@ -151,22 +149,6 @@ def stream_tumbling_agg(events: DataFrame, watermark: str = "10 minutes") -> Dat
             .alias("total_value"),
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
-    )
-
-
-def stream_sliding_agg(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """1h window / 30m slide (streaming twin of ``window_sliding``)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,10)"))
-            .cast("string")
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
 
 
@@ -309,61 +291,6 @@ def stream_stateful_user_counts(events: DataFrame, watermark: str = "10 minutes"
 # ---------------------------------------------------------------------------
 # Execution helpers
 # ---------------------------------------------------------------------------
-
-
-def run_timered_to_memory_table(
-    plan: DataFrame,
-    output_mode: str,
-    min_rows: int,
-    timeout_s: float = 300.0,
-    checkpoint_dir: str | None = None,
-) -> tuple[str, object]:
-    """Run a TIMERED streaming plan (timeMode != "None") into a memory
-    sink until the sink holds ``min_rows`` rows, then stop it.
-
-    Why not :func:`run_to_memory_table`: with processing-time timers,
-    ``availableNow`` does NOT terminate after the data is exhausted —
-    MicroBatchExecution keeps scheduling empty micro-batches to give
-    pending timers a chance to fire (measured: 44 epochs in 90 s on a
-    one-batch source), so ``awaitTermination()`` hangs forever. A
-    timered query is conceptually continuous; the bounded-test recipe
-    is poll-the-sink-then-stop, which this helper packages.
-    """
-    import time as _time
-
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_")
-    q = (
-        plan.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    spark = plan.sparkSession
-    deadline = _time.monotonic() + timeout_s
-    rows_seen = 0
-    while True:
-        if q.exception() is not None:
-            raise q.exception()
-        rows_seen = spark.table(name).count()
-        if rows_seen >= min_rows:
-            break
-        if _time.monotonic() >= deadline:
-            # fail LOUD (r7 ADVICE item 3): a silent return hands the
-            # caller a partially filled table and a confusing
-            # count-mismatch assert far from the cause
-            q.stop()
-            q.awaitTermination()
-            raise TimeoutError(
-                f"run_timered_to_memory_table: sink {name!r} reached only "
-                f"{rows_seen}/{min_rows} rows within {timeout_s}s"
-            )
-        _time.sleep(0.5)
-    q.stop()
-    q.awaitTermination()
-    return name, q
 
 
 def run_to_memory_table(
@@ -702,68 +629,6 @@ def read_merge_target(
     return _read_buckets(spark, target_dir, meta, buckets)
 
 
-def restore_merge_target(spark: SparkSession, target_dir: str, version: int) -> int:
-    """``RESTORE TABLE ... TO VERSION k``: make archived snapshot ``k``
-    the live table again, as a NEW commit (the Delta semantics —
-    restore never rewinds history, it appends to it, so the
-    pre-restore state itself stays time-travelable and the restore is
-    audit-visible in the version chain).
-
-    Zero data movement: the new manifest simply references snapshot
-    k's immutable commit directories. Fails fast if any referenced
-    commit dir no longer exists (vacuum already truncated that far
-    back) — a manifest pointing at vacuumed dirs would be a corrupt
-    table. Returns the NEW live version number.
-
-    Concurrency: the existence check and the manifest swap are two
-    steps — a vacuum running BETWEEN them could delete a commit dir
-    the new manifest references. Like the rest of the merge protocol
-    this layer assumes a single administrative writer (no concurrent
-    vacuum during restore); the post-swap re-verification below fails
-    loud if the assumption was violated, so the corruption can never
-    go unnoticed.
-    """
-    import json
-
-    fs, target_path = _hadoop_fs(spark, target_dir)
-    jvm = spark.sparkContext._jvm
-    vfile = jvm.org.apache.hadoop.fs.Path(
-        jvm.org.apache.hadoop.fs.Path(target_path, VERSIONS_DIR),
-        f"v{int(version)}.json",
-    )
-    if not fs.exists(vfile):
-        raise FileNotFoundError(
-            f"{target_dir} has no archived version {version} "
-            f"(vacuumed, or never written)"
-        )
-    archived = _read_json_file(spark, fs, vfile)
-    for bucket, commit in sorted(archived.get("buckets", {}).items()):
-        cpath = jvm.org.apache.hadoop.fs.Path(target_path, commit)
-        if not fs.exists(cpath):
-            raise FileNotFoundError(
-                f"cannot restore {target_dir} to version {version}: commit dir "
-                f"{commit} (bucket {bucket}) was vacuumed"
-            )
-    # Re-commit the archived bucket mapping; _write_merge_meta assigns
-    # the next version number and archives the restore itself.
-    meta = {k: v for k, v in archived.items() if k != "version"}
-    _write_merge_meta(spark, fs, target_path, meta)
-    live = _read_merge_meta(spark, fs, target_path)
-    # re-verify AFTER the swap: a vacuum racing the restore could have
-    # deleted a referenced commit dir between the pre-check and the
-    # commit — surface the corruption here instead of at read time
-    for bucket, commit in sorted(live.get("buckets", {}).items()):
-        cpath = jvm.org.apache.hadoop.fs.Path(target_path, commit)
-        if not fs.exists(cpath):
-            raise RuntimeError(
-                f"restore of {target_dir} to version {version} raced a vacuum: "
-                f"live manifest v{live['version']} references deleted commit "
-                f"dir {commit} (bucket {bucket}); restore an older version or "
-                f"re-merge the rows"
-            )
-    return int(live["version"])
-
-
 def list_merge_versions(spark: SparkSession, target_dir: str) -> list[int]:
     """Archived snapshot versions still resolvable for time travel,
     ascending. The live manifest's version is always last."""
@@ -781,22 +646,6 @@ def list_merge_versions(spark: SparkSession, target_dir: str) -> list[int]:
             except ValueError:
                 continue
     return sorted(out)
-
-
-def upsert_partitioned_parquet(
-    batch_df: DataFrame, key_cols: list[str], target_dir: str, n_buckets: int = 16
-) -> None:
-    """Keyed upsert of one batch into a bucket-partitioned parquet
-    target, rewriting ONLY the partitions the batch touches.
-
-    The special case of :func:`merge_into_partitioned_parquet` every
-    streaming sink wants: matched keys take the batch row, unmatched
-    batch rows insert, target-only rows survive untouched. See the
-    general operator for the copy-on-write mechanics and scale notes.
-    """
-    merge_into_partitioned_parquet(
-        batch_df, key_cols, target_dir, n_buckets=n_buckets
-    )
 
 
 def merge_into_partitioned_parquet(
@@ -1051,191 +900,6 @@ def _hadoop_fs(spark: SparkSession, path_str: str):
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(path_str)
     return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
-
-
-def foreach_batch_upsert_parquet(
-    plan: DataFrame, key_cols: list[str], target_dir: str, n_buckets: int = 16
-):
-    """``foreachBatch`` upsert sink over :func:`upsert_partitioned_parquet`.
-
-    The batch-DataFrame shape of ``foreachBatch`` is what makes any
-    batch sink reusable from streaming; at scale the same body targets
-    Delta/Iceberg ``MERGE`` for snapshot atomicity.
-    """
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_partitioned_parquet(batch_df, key_cols, target_dir, n_buckets)
-
-    ckpt = tempfile.mkdtemp(prefix="ckpt_upsert_")
-    return (
-        plan.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# -- custom stateful operator, Spark 4 API (transformWithStateInPandas) -----
-
-
-class _UserStatsProcessor(StatefulProcessor):
-    """``StatefulProcessor`` twin of :func:`_user_stats_fn` on the
-    Spark 4 ``transformWithState`` API: typed per-key ValueState,
-    RocksDB-backed — the successor to GroupState with composite state
-    (value/list/map), timers, and TTL available when needed."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("stats", _USER_STATS_STATE)
-
-    def handleInputRows(self, key, rows, timer_values):
-        n, total, last_us = self._state.get() if self._state.exists() else (0, 0.0, 0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-            if len(pdf):
-                last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-        self._state.update((n, total, last_us))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "last_ts": [pd.Timestamp(last_us * 1000)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stream_tws_user_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Per-user running stats on ``transformWithStateInPandas``.
-
-    Requires the RocksDB state store (set by the caller/session):
-    state lives off-heap and checkpoint-incrementally — the store
-    that actually survives 100 TB key cardinalities.
-
-    Environment gate: the TWS python⇄JVM state protocol needs the
-    ``protobuf`` package; this container ships without it, so the
-    operator is exercised by a skip-gated test rather than a registry
-    query. The plan construction below is environment-independent.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_UserStatsProcessor(),
-            outputStructType=_USER_STATS_OUTPUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-# -- composite-state audit operator: ListState + MapState + timers ----------
-
-
-_AUDIT_OUTPUT = (
-    "user_id bigint, n_types int, n_vals int, total_value double, n_timers int"
-)
-
-
-class _SessionAuditProcessor(StatefulProcessor):
-    """Per-user audit on the FULL Spark 4 composite-state surface:
-    typed ValueState (last-seen micros), ListState (per-event values,
-    appended then read back), MapState (per-event-type counts via
-    containsKey/getValue/updateValue/iterator), and processing-time
-    TIMERS (each batch clears the previous expiry timer via
-    listTimers+deleteTimer and re-arms one far in the future — the
-    idle-session-reaper pattern).
-
-    Exists precisely to drive every message family of the TWS state
-    protocol end-to-end — ValueStateCall, ListStateCall (put/append/
-    get with iterator paging), MapStateCall (all six verbs), and
-    TimerStateCallCommand (register/delete/list) — against the JVM
-    state server; tests/test_streaming.py checks the emitted audit
-    against batch aggregation. The r7 mini-protobuf runtime
-    (google/protobuf) is what makes this executable in this
-    container, so this operator doubles as its integration surface.
-    """
-
-    IDLE_TIMEOUT_MS = 30 * 24 * 3600 * 1000  # far future: never fires in tests
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._last = handle.getValueState("last_seen", "last_us bigint")
-        self._vals = handle.getListState("vals", "v double")
-        self._counts = handle.getMapState("type_counts", "t string", "n bigint")
-
-    def handleInputRows(self, key, rows, timer_values):
-        last_us = self._last.get()[0] if self._last.exists() else 0
-        for pdf in rows:
-            for v in pdf["value"].fillna(0.0):
-                self._vals.appendValue((float(v),))
-            for t in pdf["event_type"]:
-                t = str(t)
-                n = self._counts.getValue((t,))[0] if self._counts.containsKey((t,)) else 0
-                self._counts.updateValue((t,), (n + 1,))
-            if len(pdf):
-                last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-        self._last.update((last_us,))
-
-        # re-arm the idle reaper: drop any previous timer via
-        # listTimers+deleteTimer, then register a fresh one
-        for expiry_ms in list(self._handle.listTimers()):
-            self._handle.deleteTimer(expiry_ms)
-        now_ms = timer_values.getCurrentProcessingTimeInMs()
-        self._handle.registerTimer(now_ms + self.IDLE_TIMEOUT_MS)
-        n_timers = sum(1 for _ in self._handle.listTimers())
-
-        total = 0.0
-        n_vals = 0
-        for row in self._vals.get():  # ListStateGet round-trip (paged)
-            total += float(row[0])
-            n_vals += 1
-        n_types = sum(1 for _ in self._counts.keys())
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_types": [n_types],
-                "n_vals": [n_vals],
-                "total_value": [total],
-                "n_timers": [n_timers],
-            }
-        )
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        # the reaper path: emit a tombstone row for the idle user. The
-        # far-future expiry keeps this out of deterministic tests; the
-        # code path is the documented pattern.
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_types": [0],
-                "n_vals": [0],
-                "total_value": [0.0],
-                "n_timers": [0],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def stream_tws_session_audit(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Composite-state per-user audit on ``transformWithStateInPandas``
-    with ProcessingTime timers — see :class:`_SessionAuditProcessor`."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_SessionAuditProcessor(),
-            outputStructType=_AUDIT_OUTPUT,
-            outputMode="Update",
-            timeMode="ProcessingTime",
-        )
-    )
 
 
 # -- incremental rollup maintenance (hypertable-style continuous agg) -------

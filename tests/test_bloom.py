@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sf_etl_spark.operators.bloom import bloom_build, bloom_prune, bloom_prune_literal
+from sf_etl_spark.operators.bloom import bloom_build, bloom_prune_literal
 from sf_etl_spark.sources import load_table
 
 
@@ -41,14 +41,20 @@ def test_bloom_prune_is_superset_of_exact_match(spark, sf_dir):
     assert len(pruned_keys) < len(all_keys)
 
 
-def test_bloom_crossjoin_variant_agrees_with_literal_variant(spark, sf_dir):
+def test_bloom_prune_keeps_every_semi_join_row(spark, sf_dir):
+    """No false negatives at ROW level: every probe row the exact
+    semi join keeps (duplicates included) survives the prune, for a
+    selective build side as well as a broad one."""
     l = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
-    bloom = bloom_build(urgent, "o_orderkey")
-    a = bloom_prune(l, "l_orderkey", bloom).count()
-    b = bloom_prune_literal(l, "l_orderkey", bloom).count()
-    assert a == b
+    for build in (
+        o.filter(F.col("o_orderkey") % 97 == 0).select("o_orderkey"),
+        o.filter(F.col("o_orderstatus") != "F").select("o_orderkey"),
+    ):
+        exact = l.join(build, l["l_orderkey"] == build["o_orderkey"], "left_semi")
+        pruned = bloom_prune_literal(l, "l_orderkey", bloom_build(build, "o_orderkey"))
+        assert exact.count() > 0
+        assert exact.exceptAll(pruned).count() == 0
 
 
 def test_bloom_empty_build_side_prunes_everything(spark, sf_dir):

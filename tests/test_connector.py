@@ -20,7 +20,6 @@ from sf_etl_spark.connector import (
     ResponseError,
     SfClient,
     TokenError,
-    generate_table_ddl,
     read_object,
 )
 from sf_etl_spark.connector.errors import ClientBuilderError
@@ -156,7 +155,7 @@ def test_query_error_payload(client):
     assert ei.value.status == 404
 
 
-# -- R3 describe + R8 type mapping + R9 DDL --------------------------------
+# -- R3 describe + R8 type mapping (R9 DDL: tests/test_cli.py) -------------
 
 
 def test_describe_schema(client):
@@ -168,14 +167,6 @@ def test_describe_schema(client):
     assert by_name["NumCalls"].dataType.typeName() == "integer"
     assert by_name["Tags"].dataType.typeName() == "array"
     assert by_name["Amount"].dataType.typeName().startswith("decimal")
-
-
-def test_generate_table_ddl(client, tmp_path):
-    out = tmp_path / "case.sql"
-    ddl = generate_table_ddl(client, "Case", dialect="postgres", output_path=str(out))
-    assert ddl.startswith('CREATE TABLE "Case"')
-    assert '"Id" VARCHAR(18) PRIMARY KEY' in ddl.replace("  ", " ")
-    assert out.read_text().strip() == ddl
 
 
 # -- R4-R7 bulk lifecycle + results download (reference gap #2) ------------

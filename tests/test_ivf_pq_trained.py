@@ -14,11 +14,126 @@ codebook so each iteration can only reduce quantization distortion.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import struct
 
+import pytest
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sf_etl_spark.operators.topk import salted_topk
+from sf_etl_spark.queries.similarity import (
+    _EVAL_QUERIES,
+    PQ_RERANK,
+    _dot,
+    _norm,
+    _pq_adc_scores,
+    _shuffle_partitions,
+)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def _ivf_pq_recall(
+    spark: SparkSession,
+    n: DataFrame,
+    cents: DataFrame,
+    cb: DataFrame,
+    nprobe: int,
+) -> DataFrame:
+    """recall@10 of an IVF-PQ composition over the shared 5-query eval
+    set (`_EVAL_QUERIES`) — (query_id, recall_at_10). Parameterized on
+    the two quantizers so seeded and trained variants are measured by
+    the IDENTICAL probe/encode/ADC/re-rank plan.
+
+    *cents* is (cid, cv); *cb* is (m, c, w); both broadcast-sized."""
+
+    qs = n.filter(F.col("vec_id").isin(*_EVAL_QUERIES)).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nm").alias("qn")
+    )
+    qcos = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    truth = salted_topk(
+        n.crossJoin(F.broadcast(qs))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .withColumn("_c", qcos),
+        ["qid"],
+        [F.col("_c").desc(), F.asc("vec_id")],
+        10,
+        ["vec_id"],
+    ).select("qid", "vec_id")
+    # assignment: broadcast-K argmax, exchange carries n pre-reduced rows
+    acos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * _norm(F.col("cv")))
+    assign = (
+        n.crossJoin(F.broadcast(cents))
+        .select("vec_id", "v", "cid", acos.alias("ac"))
+        .groupBy("vec_id")
+        .agg(
+            F.max(F.struct(F.col("ac"), (-F.col("cid")).alias("nc"))).alias("s"),
+            F.first("v").alias("v"),
+        )
+        .select("vec_id", (-F.col("s.nc")).alias("cid"), "v")
+    )
+    pcos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * F.col("qn"))
+    probe = (
+        cents.crossJoin(F.broadcast(qs))
+        .withColumn("_c", pcos)
+        .withColumn(
+            "prn",
+            F.row_number().over(
+                Window.partitionBy("qid").orderBy(F.col("_c").desc(), "cid")
+            ),
+        )
+        .filter(F.col("prn") <= nprobe)
+        .select("qid", "cid")
+    )
+    cand = assign.join(F.broadcast(probe), "cid").filter(
+        F.col("vec_id") != F.col("qid")
+    )
+    # ADC scores for the distinct candidate vectors × all 5 queries in
+    # one partial-agged shuffle, then restricted back to the per-query
+    # candidate pairs (cell membership differs per query)
+    base = cand.select("vec_id", "v").dropDuplicates(["vec_id"])
+    n_part = _shuffle_partitions(spark)
+    scores = _pq_adc_scores(
+        base.repartition(n_part), cb, qs, extra_keys=("qid",)
+    ).join(cand.select("vec_id", "qid"), ["vec_id", "qid"])
+    short = salted_topk(
+        scores,
+        ["qid"],
+        [F.asc("adc_dist"), F.asc("vec_id")],
+        PQ_RERANK,
+        ["vec_id"],
+    ).select("qid", "vec_id")
+    rerank = (
+        short.join(n, "vec_id")
+        .join(F.broadcast(qs), "qid")
+        .withColumn("_c", qcos)
+        .withColumn(
+            "rrank",
+            F.row_number().over(
+                Window.partitionBy("qid").orderBy(F.col("_c").desc(), "vec_id")
+            ),
+        )
+        .filter(F.col("rrank") <= 10)
+        .select("qid", "vec_id")
+    )
+    overlap = (
+        truth.join(rerank, ["qid", "vec_id"])
+        .groupBy("qid")
+        .agg(F.count(F.lit(1)).alias("n_overlap"))
+    )
+    return (
+        qs.select("qid")
+        .join(overlap, "qid", "left")
+        .select(
+            F.col("qid").alias("query_id"),
+            (F.coalesce(F.col("n_overlap"), F.lit(0)).cast("double") / 10.0).alias(
+                "recall_at_10"
+            ),
+        )
+        .orderBy("query_id")
+    )
 
 
 def test_trained_ivf_pq_recall_beats_or_matches_seeded(spark):
@@ -27,7 +142,6 @@ def test_trained_ivf_pq_recall_beats_or_matches_seeded(spark):
         IVF_KM_K,
         IVF_KM_NPROBE,
         IVF_NPROBE,
-        _ivf_pq_recall,
         _kmeans_centers,
         _pq_codebook,
         _pq_train_codebooks,
@@ -138,7 +252,6 @@ def test_sampled_trained_quality_gate(spark):
         IVF_NPROBE,
         PQ_SUBDIM,
         TRAIN_SAMPLE_MOD,
-        _ivf_pq_recall,
         _kmeans_centers,
         _pq_codebook,
         _pq_train_codebooks,
@@ -184,38 +297,9 @@ def test_sampled_trained_quality_gate(spark):
     assert distortion(cb) < distortion(seed_cb)
 
 
-def test_mod_for_target_bounds_training_sample():
-    """r14 verdict task 7: the count-targeted sample helper — a
-    deployment wants '<= target training vectors' regardless of corpus
-    size; mod_for_target turns that into the train_sample_mod knob.
-    Expected sample size n/mod stays <= target, and small corpora
-    train on everything (mod 1)."""
-    import pytest
-
-    from sf_etl_spark.queries.similarity import mod_for_target
-
-    assert mod_for_target(500, 1_000_000) == 1  # corpus below target
-    assert mod_for_target(1_000_000, 1_000_000) == 1
-    assert mod_for_target(1_000_001, 1_000_000) == 2
-    assert mod_for_target(100_000_000, 1_000_000) == 100
-    assert mod_for_target(0, 1_000_000) == 1  # empty corpus: no-op knob
-    # expected size bound holds across a sweep
-    for n in (1, 999, 10**6 + 7, 3 * 10**7):
-        m = mod_for_target(n, 250_000)
-        assert n / m <= 250_000
-        # and the sample is not over-thinned: one step coarser would
-        # still exceed the target (tightest integer modulus)
-        if m > 1:
-            assert n / (m - 1) > 250_000
-    with pytest.raises(ValueError):
-        mod_for_target(100, 0)
-    with pytest.raises(ValueError):
-        mod_for_target(-1, 10)
-
-
 def test_lloyd_tolerates_missing_seed_ids(spark):
     """A corpus lacking some seed vec_ids (1..PQ_C) yields a smaller
-    seed codebook; the literal-codebook Lloyd iteration must train on
+    seed codebook; the Lloyd fit must train on
     whatever key subset exists instead of raising (r15 review
     finding), and every assignment must reference a PRESENT c id."""
     from pyspark.sql import functions as F
@@ -239,10 +323,8 @@ def test_lloyd_tolerates_missing_seed_ids(spark):
 
 def test_empty_seed_codebook_degrades_to_empty(spark):
     """A corpus lacking EVERY seed vec_id yields an empty seed
-    codebook; the literal-expression Lloyd must degrade to an empty
-    trained codebook like the pre-r15 join shape did, instead of
-    building zero-width literal arrays whose NULL assignments poison
-    the means collect (r15 ADVICE)."""
+    codebook; the Lloyd fit must degrade to an empty trained codebook
+    instead of training zero codewords."""
     from pyspark.sql import functions as F
     from sf_etl_spark.queries.similarity import (
         PQ_C,
@@ -256,45 +338,51 @@ def test_empty_seed_codebook_degrades_to_empty(spark):
     assert [f.name for f in cb.schema.fields] == ["m", "c", "w"]
 
 
-def test_fold_matches_expression_loop(spark):
-    """r15 verdict task 5: the single-job grouped-pandas Lloyd fold
-    (impl='grouped', default) must produce BIT-IDENTICAL codebooks to
-    the r15 literal-expression per-iteration loop (impl='expr', the
-    pinned reference shape). Bit-identity is structural, not luck:
-    the corpus is float32-sourced, so every per-cell sum stays exact
-    in double and summation order cannot perturb the means — this
-    test is the tripwire if a future fixture breaks that exactness."""
+# SHA-256 of the sorted (m, c, w) codebook `_pq_train_codebooks(spark, n,
+# iters=2)` fits on the sf0.001 embeddings: m and c as big-endian int64,
+# then w as big-endian doubles. Captured when a per-iteration literal-
+# expression Lloyd loop still ran beside the grouped fold and both gave
+# these exact bits, at local[1] and local[4].
+GOLDEN_CODEBOOK_SHA256 = "ccde9269d00ce7109062ec5e27fe7a9f8cb758ea997d261873be01488bf2962f"
+
+
+def _codebook_sha256(cb: DataFrame) -> str:
+    h = hashlib.sha256()
+    for r in sorted(cb.collect(), key=lambda r: (r["m"], r["c"])):
+        h.update(struct.pack(">qq", r["m"], r["c"]))
+        h.update(struct.pack(f">{len(r['w'])}d", *r["w"]))
+    return h.hexdigest()
+
+
+def test_trained_codebook_matches_golden_hash(spark):
+    """The Lloyd fit's codebook is pinned bit for bit, whatever the
+    shuffle partitioning of its grouped fold. Bit-identity is
+    structural, not luck: the corpus is float32-sourced, so every
+    per-cell sum stays exact in double and summation order cannot
+    perturb the means — this test is the tripwire if a future fixture
+    or a change to the fit breaks that exactness."""
     from sf_etl_spark.queries.similarity import (
         _pq_train_codebooks,
         normalized_vectors,
     )
 
+    if os.path.basename(SF_DIR.rstrip("/")) != "sf0.001":
+        pytest.skip("the golden hash is of the sf0.001 fixture")
     n = normalized_vectors(spark, SF_DIR)
-    a = {(r["m"], r["c"]): r["w"] for r in _pq_train_codebooks(spark, n, iters=2).collect()}
-    b = {
-        (r["m"], r["c"]): r["w"]
-        for r in _pq_train_codebooks(spark, n, iters=2, impl="expr").collect()
-    }
-    assert set(a) == set(b)
-    assert all(a[k] == b[k] for k in a)  # exact doubles, not approx
-
-
-def test_train_codebooks_rejects_unknown_impl(spark):
-    import pytest
-
-    from sf_etl_spark.queries.similarity import (
-        _pq_train_codebooks,
-        normalized_vectors,
-    )
-
-    with pytest.raises(ValueError, match="impl"):
-        _pq_train_codebooks(spark, normalized_vectors(spark, SF_DIR), impl="nope")
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for parts in ("1", "7"):
+            spark.conf.set(key, parts)
+            cb = _pq_train_codebooks(spark, n, iters=2)
+            assert _codebook_sha256(cb) == GOLDEN_CODEBOOK_SHA256, parts
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_empty_training_sample_keeps_seed_codebook(spark):
     """A sample that keeps no vector forms no Lloyd groups; the grouped
-    fit must return the seed codebook, as the expr shape does, not an
-    empty one."""
+    fit must return the seed codebook, not an empty one."""
     from sf_etl_spark.queries.similarity import (
         _pq_codebook,
         _pq_train_codebooks,
@@ -307,6 +395,5 @@ def test_empty_training_sample_keeps_seed_codebook(spark):
     assert _train_sample(n, mod).count() == 0
     seed = {(r["m"], r["c"]): [float(x) for x in r["w"]] for r in _pq_codebook(spark, n).collect()}
     assert seed
-    for impl in ("grouped", "expr"):
-        cb = _pq_train_codebooks(spark, n, iters=2, train_sample_mod=mod, impl=impl)
-        assert {(r["m"], r["c"]): r["w"] for r in cb.collect()} == seed, impl
+    cb = _pq_train_codebooks(spark, n, iters=2, train_sample_mod=mod)
+    assert {(r["m"], r["c"]): r["w"] for r in cb.collect()} == seed

@@ -7,10 +7,35 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sf_etl_spark.operators.layout import file_column_spans, write_zordered
+from sf_etl_spark.operators.layout import write_zordered
 from sf_etl_spark.sources import load_table
 
 N_FILES = 8
+
+
+def file_column_spans(path: str, column: str) -> list[tuple[float, float]]:
+    """Per-file (min, max) of ``column`` from the parquet footers —
+    the exact statistics a scan's file-skipping consults. Driver-side
+    metadata reads only (no data pages)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    spans: list[tuple[float, float]] = []
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        md = pq.ParquetFile(f).metadata
+        lo, hi = None, None
+        for rg in range(md.num_row_groups):
+            for ci in range(md.num_columns):
+                col = md.row_group(rg).column(ci)
+                if col.path_in_schema == column and col.statistics is not None:
+                    s = col.statistics
+                    lo = s.min if lo is None else min(lo, s.min)
+                    hi = s.max if hi is None else max(hi, s.max)
+        if lo is not None:
+            spans.append((lo, hi))
+    return spans
 
 
 def _avg_span_frac(path: str, column: str, global_lo, global_hi) -> float:

@@ -1,10 +1,8 @@
 """Unit tests for the vendored mini-protobuf runtime (google/).
 
-The end-to-end proof is tests/test_streaming.py::
-test_transform_with_state_user_counts — the JVM's real protobuf-java
-parses every request we serialize and we parse every response it
-serializes. These tests pin the wire-format corners that an
-end-to-end run may not touch every session: known byte vectors,
+The runtime served PySpark's transformWithState state protocol; no
+operator of the program uses that protocol any more, so these tests
+are its only check. They pin the wire-format corners: known byte vectors,
 negative/64-bit varints, packed repeated parsing, oneof last-wins,
 nested presence-on-write, and unknown-field skipping.
 """

@@ -18,10 +18,14 @@ from sf_etl_spark.operators.multimodal import (
     extract_features,
     frame_sample_plan,
     media_from_documents,
-    resize_plan,
-    shannon_entropy,
 )
 from sf_etl_spark.sources import load_table
+
+
+def shannon_entropy(counts: list[int]) -> float:
+    """Scalar byte entropy, the reference for extract_features."""
+    total = sum(counts)
+    return -sum(c / total * math.log2(c / total) for c in counts if c)
 
 
 @pytest.fixture(scope="module")
@@ -115,13 +119,6 @@ def test_decode_stats_lane_matches_scalar_reference(spark, sf_dir):
         assert got["n_values"] == values.size
         assert got["val_sum"] == int(values.sum(dtype="int64"))
         assert (got["val_min"], got["val_max"]) == (values.min(), values.max())
-
-
-def test_resize_updates_metadata_only(media):
-    out = resize_plan(media, 224, 224)
-    r = out.select("meta.width", "meta.height", "meta.n_bytes").first()
-    assert (r["width"], r["height"]) == (224, 224)
-    assert r["n_bytes"] > 0  # payload metadata untouched
 
 
 def test_frame_sample_counts(media):

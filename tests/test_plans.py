@@ -854,7 +854,7 @@ _BUFFER_ALLOWLIST: dict[str, tuple[int, str]] = {
     "feature_hashing": (1, "bounded: per-user bucket counts, fixed hash dimension"),
     "event_pattern_regex": (1, "capped: first-10k-events-per-user rank prefilter ENFORCED on the same exchange (r8)"),
     "session_paths": (1, "per-session path; sessions terminate at 30-min gaps — per-key state, not constant-parallelism; a pathological no-gap user is the event_pattern_regex cap regime"),
-    "ewma_user_value": (1, "per-user ordered fold, events-per-user (deployment retention window); unbounded-key regime = transformWithState running-stats operator (streaming/pipelines.py), this lane is its batch-checkable twin"),
+    "ewma_user_value": (1, "per-user ordered fold, events-per-user (deployment retention window); unbounded-key regime = applyInPandasWithState running-stats operator (streaming/pipelines.py), this lane is its batch-checkable twin"),
     "quality_percentile_filter": (1, "value-domain-bounded: Spark's exact Percentile buffers a value->count map over INTEGER n_chars — state ~ |n_chars domain|, not row count"),
     "triangle_count": (1, "bounded: distinct parts per order (TPC-H fan-out <= 7; same bound as array_functions) — the r16 map-side pair expansion's collect_set"),
 }
@@ -875,9 +875,8 @@ def _buffer_marker_count(fn) -> int:
     except (tokenize.TokenError, IndentationError):
         code = src
     n = sum(code.count(m) for m in _BUFFER_MARKERS)
-    # exact-percentile variants that do NOT buffer raw values
+    # the percentile variant that does NOT buffer raw values
     n -= code.count("approx_percentile(")
-    n -= code.count("grouped_percentile_cont_twophase(")
     return n
 
 

@@ -465,42 +465,8 @@ def test_grouped_exact_rank_matches_ntile_window(spark):
     assert got == want
 
 
-def test_grouped_median_twophase_double_matches_sort(spark):
-    """The monotone-double-bucketing median must equal a Python sort's
-    two-position rule on adversarial doubles: negatives, tight
-    clusters (many values per bucket boundary), huge outliers, ties,
-    odd/even/1-row groups, and nulls."""
-    import random
-
-    from sf_etl_spark.operators.orderstats import (
-        grouped_median_twophase_double,
-    )
-
-    rng = random.Random(13)
-    data = {
-        "a": [rng.uniform(-1e6, 1e6) for _ in range(301)],
-        "b": [1.0 + rng.random() * 1e-9 for _ in range(256)],  # one-bucket cluster
-        "c": [42.5],
-        "d": [rng.choice([0.1, 0.2, 0.3]) for _ in range(100)] + [1e15, -1e15],
-    }
-    rows = [(g, v) for g, vals in data.items() for v in vals]
-    rows += [("a", None), ("c", None)]
-    df = spark.createDataFrame(rows, ["g", "x"])
-    got = {
-        r["g"]: (r["n"], r["v_lo"], r["v_hi"], r["median"])
-        for r in grouped_median_twophase_double(
-            df, "g", "x", n_buckets=16
-        ).collect()
-    }
-    for g, vals in data.items():
-        s = sorted(vals)
-        n = len(s)
-        v_lo, v_hi = s[(n + 1) // 2 - 1], s[(n // 2 + 1 if n % 2 == 0 else (n + 1) // 2) - 1]
-        assert got[g] == (n, v_lo, v_hi, (v_lo + v_hi) / 2.0), g
-
-
 def test_grouped_percentile_cont_bitmatches_percentile_agg(spark):
-    """grouped_percentile_cont_twophase must reproduce the exact-
+    """grouped_percentile_cont_multi must reproduce the exact-
     percentile AGGREGATE bit-for-bit on 2-decimal doubles — random
     groups, ties, odd/even sizes, a 1-row group, and nulls."""
     import random
@@ -508,9 +474,7 @@ def test_grouped_percentile_cont_bitmatches_percentile_agg(spark):
 
     from pyspark.sql import functions as F
 
-    from sf_etl_spark.operators.orderstats import (
-        grouped_percentile_cont_twophase,
-    )
+    from sf_etl_spark.operators.orderstats import grouped_percentile_cont_multi
 
     rng = random.Random(11)
     rows = []
@@ -524,8 +488,8 @@ def test_grouped_percentile_cont_bitmatches_percentile_agg(spark):
     qs = {"p10": 0.1, "med": 0.5, "p90": 0.9, "p99": 0.99, "p100": 1.0}
     got = {
         r["g"]: tuple(r[name] for name in qs)
-        for r in grouped_percentile_cont_twophase(
-            df, "g", "xc", "x", qs, n_buckets=16
+        for r in grouped_percentile_cont_multi(
+            df, "g", [("xc", "x", qs)], n_buckets=16
         ).collect()
     }
     want = {

@@ -30,7 +30,8 @@ from sf_etl_spark.schema import (
     spark_type_for,
     struct_field_for,
 )
-from sf_etl_spark.schema.ingest import coerce_dataframe, records_to_dataframe
+from sf_etl_spark.connector.datasource import wire_schema
+from sf_etl_spark.schema.ingest import coerce_dataframe
 
 # Describe-shaped JSON, Salesforce wire casing (client.rs mock shapes).
 CASE_DESCRIBE = {
@@ -140,6 +141,16 @@ def test_ddl_runs_in_duckdb(case_schema, oracle):
     assert [c[0] for c in cols] == list(ObjectSchema.from_describe_json(CASE_DESCRIBE).field_names())
 
 
+def _coerce_records(spark, records, schema):
+    """Wire-shaped records → the scan's all-string frame → the cast lane,
+    as ``read_object`` composes them."""
+    names = schema.field_names()
+    wire = spark.createDataFrame(
+        [tuple(r.get(n) for n in names) for r in records], wire_schema(schema)
+    )
+    return coerce_dataframe(wire, schema)
+
+
 def test_typed_ingestion(spark, case_schema):
     records = [
         {
@@ -160,7 +171,7 @@ def test_typed_ingestion(spark, case_schema):
         },
         {"Id": "500A02", "Subject": None, "IsClosed": "true"},
     ]
-    df = records_to_dataframe(spark, records, case_schema)
+    df = _coerce_records(spark, records, case_schema)
     rows = {r["Id"]: r for r in df.collect()}
     r1 = rows["500A01"]
     assert r1["IsClosed"] is False
@@ -178,7 +189,7 @@ def test_typed_ingestion(spark, case_schema):
 def test_coerce_is_codegen_only(spark, case_schema):
     """Ingestion must stay JVM-side: no BatchEvalPython in the plan."""
     records = [{"Id": "1", "Tags": "x;y"}]
-    df = records_to_dataframe(spark, records, case_schema)
+    df = _coerce_records(spark, records, case_schema)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
 

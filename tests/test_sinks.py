@@ -270,14 +270,13 @@ def test_compact_parquet_merge_target_refuses_flatten(spark, tmp_path):
 def test_compact_parquet_default_keeps_time_travel(spark, tmp_path):
     """Compaction is not history truncation (the Delta OPTIMIZE
     contract): by default the superseded commits and archived version
-    manifests survive, so time travel and restore keep working; only
-    vacuum=True (or an explicit vacuum) truncates."""
+    manifests survive, so time travel keeps working; only vacuum=True
+    (or an explicit vacuum) truncates."""
     from sf_etl_spark.sinks import compact_parquet
     from sf_etl_spark.streaming.pipelines import (
         list_merge_versions,
         merge_into_partitioned_parquet,
         read_merge_target,
-        restore_merge_target,
     )
 
     target = str(tmp_path / "merge_compact_tt")
@@ -288,12 +287,8 @@ def test_compact_parquet_default_keeps_time_travel(spark, tmp_path):
 
     compact_parquet(spark, target, target_rows_per_file=1000)  # no vacuum
 
-    # pre-compaction snapshots still resolvable AND restorable
+    # pre-compaction snapshots still resolvable
     assert list_merge_versions(spark, target) == [1, 2, 3]
     as_v1 = {(r.k, r.v) for r in read_merge_target(spark, target, version=1)
              .drop("_kbucket").collect()}
     assert as_v1 == {(i, "v0") for i in range(20)}
-    restore_merge_target(spark, target, 1)
-    live = {(r.k, r.v) for r in read_merge_target(spark, target)
-            .drop("_kbucket").collect()}
-    assert live == as_v1

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from sf_etl_spark.operators.skew import SALT_COL, key_frequency, salt_probe, salted_join
+from sf_etl_spark.operators.skew import SALT_COL, salt_probe, salted_join
 from sf_etl_spark.sources import load_table
 
 
@@ -48,14 +48,6 @@ def test_salt_is_deterministic(li):
     a = salt_probe(li, 16).select("l_orderkey", "l_linenumber", SALT_COL)
     b = salt_probe(li, 16).select("l_orderkey", "l_linenumber", SALT_COL)
     assert _sorted_rows(a) == _sorted_rows(b)
-
-
-def test_key_frequency_shares(li):
-    freq = key_frequency(li, ["l_orderkey"], top=5)
-    rows = freq.collect()
-    assert len(rows) == 5
-    assert all(0 < r["share"] <= 1 for r in rows)
-    assert rows[0]["n_rows"] >= rows[-1]["n_rows"]
 
 
 def test_salted_join_rejects_unsupported_how(li, orders):

@@ -14,7 +14,6 @@ from sf_etl_spark.queries.streaming_batch import window_session, window_tumbling
 from sf_etl_spark.sources import load_table
 from sf_etl_spark.streaming import (
     events_stream,
-    foreach_batch_upsert_parquet,
     run_to_memory_table,
     stage_events_as_stream_source,
     stream_dedup_within_watermark,
@@ -108,11 +107,21 @@ def test_stateful_user_counts(spark, sf_dir, staged):
 def test_foreach_batch_upsert(spark, sf_dir, staged, tmp_path):
     """foreachBatch merge sink: after replaying all micro-batches the
     parquet target holds exactly one row per key, the latest version."""
+    from sf_etl_spark.streaming import read_merge_target
+    from sf_etl_spark.streaming.pipelines import merge_into_partitioned_parquet
+
     target = str(tmp_path / "user_stats")
     plan = stream_stateful_user_counts(events_stream(spark, staged))
-    q = foreach_batch_upsert_parquet(plan, key_cols=["user_id"], target_dir=target)
-    q.awaitTermination()
-    from sf_etl_spark.streaming import read_merge_target
+    (
+        plan.writeStream.foreachBatch(
+            lambda batch, _: merge_into_partitioned_parquet(batch, ["user_id"], target)
+        )
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
     got = read_merge_target(spark, target)
     want = (
@@ -124,46 +133,6 @@ def test_foreach_batch_upsert(spark, sf_dir, staged, tmp_path):
     assert rows_set(got, ["user_id", "n_events"]) == rows_set(want, ["user_id", "n_events"])
 
 
-def test_transform_with_state_user_counts(spark, sf_dir, tmp_path):
-    """Spark 4 transformWithStateInPandas lane (skip-gated: the TWS
-    state protocol needs the protobuf package)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from sf_etl_spark.sources import load_table
-    from sf_etl_spark.streaming import (
-        events_stream,
-        run_to_memory_table,
-        stream_tws_user_counts,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = str(tmp_path / "events_src")
-    load_table(spark, sf_dir, "events").coalesce(1).write.parquet(src)
-    name, _ = run_to_memory_table(
-        stream_tws_user_counts(events_stream(spark, src)), output_mode="update"
-    )
-    got = spark.table(name).groupBy("user_id").agg(F.max("n_events").alias("n"))
-    want = load_table(spark, sf_dir, "events").groupBy("user_id").count()
-    assert sorted((r[0], r[1]) for r in got.collect()) == sorted(
-        (r[0], r[1]) for r in want.collect()
-    )
-
-
-def test_tws_plan_constructs_without_execution(spark, sf_dir, tmp_path):
-    """Even without protobuf, the transformWithState PLAN must build
-    (schema/grouping wiring is environment-independent)."""
-    from sf_etl_spark.sources import load_table
-    from sf_etl_spark.streaming import events_stream, stream_tws_user_counts
-
-    src = str(tmp_path / "events_src2")
-    load_table(spark, sf_dir, "events").limit(10).coalesce(1).write.parquet(src)
-    plan = stream_tws_user_counts(events_stream(spark, src))
-    assert plan.isStreaming
-    assert set(plan.columns) == {"user_id", "n_events", "total_value", "last_ts"}
-
-
 def test_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     """The keyed upsert must leave untouched key-bucket partitions
     byte-identical — the property that makes a continuously-upserted
@@ -171,12 +140,12 @@ def test_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     not O(table))."""
     import hashlib
 
-    from sf_etl_spark.streaming import upsert_partitioned_parquet
+    from sf_etl_spark.streaming.pipelines import merge_into_partitioned_parquet
 
     target = str(tmp_path / "kv")
     n_buckets = 8
     base = spark.range(200).select(F.col("id").alias("k"), F.lit("v0").alias("v"))
-    upsert_partitioned_parquet(base, ["k"], target, n_buckets=n_buckets)
+    merge_into_partitioned_parquet(base, ["k"], target, n_buckets=n_buckets)
 
     def digest():
         out = {}
@@ -200,7 +169,7 @@ def test_upsert_rewrites_only_touched_partitions(spark, tmp_path):
         .collect()
     }
     assert len(touched) < n_buckets  # the test must exercise untouched buckets
-    upsert_partitioned_parquet(batch, ["k"], target, n_buckets=n_buckets)
+    merge_into_partitioned_parquet(batch, ["k"], target, n_buckets=n_buckets)
     after = digest()
     from sf_etl_spark.streaming import read_merge_target
 
@@ -528,46 +497,6 @@ def test_time_travel_unknown_version_raises(spark, tmp_path):
         read_merge_target(spark, target, version=9)
 
 
-def test_restore_merge_target(spark, tmp_path):
-    """RESTORE TO VERSION k re-commits snapshot k as a NEW version
-    (Delta semantics: history is appended to, never rewound), with
-    zero data movement — the restored manifest references the same
-    immutable commit dirs. Vacuuming first makes the restore refuse."""
-    import pytest
-
-    from sf_etl_spark.streaming.pipelines import (
-        list_merge_versions,
-        merge_into_partitioned_parquet,
-        read_merge_target,
-        restore_merge_target,
-        vacuum_merge_staging,
-    )
-
-    target = str(tmp_path / "restore")
-    b1 = spark.createDataFrame([(1, "a"), (2, "b")], "k bigint, v string")
-    b2 = spark.createDataFrame([(2, "B"), (3, "c")], "k bigint, v string")
-    merge_into_partitioned_parquet(b1, ["k"], target, n_buckets=2)
-    merge_into_partitioned_parquet(b2, ["k"], target)
-
-    new_v = restore_merge_target(spark, target, 1)
-    assert new_v == 3
-    assert list_merge_versions(spark, target) == [1, 2, 3]
-    live = {(r.k, r.v) for r in read_merge_target(spark, target).collect()}
-    assert live == {(1, "a"), (2, "b")}  # v1 content is live again
-    # the pre-restore state is still time-travelable (history appended)
-    as_v2 = {(r.k, r.v) for r in read_merge_target(spark, target, version=2).collect()}
-    assert as_v2 == {(1, "a"), (2, "B"), (3, "c")}
-
-    # restoring forward to v2 also works (its commit dirs still exist)
-    assert restore_merge_target(spark, target, 2) == 4
-    assert {(r.k, r.v) for r in read_merge_target(spark, target).collect()} == as_v2
-
-    # vacuum truncates history; restore to a vacuumed version refuses
-    vacuum_merge_staging(spark, target)
-    with pytest.raises(FileNotFoundError):
-        restore_merge_target(spark, target, 1)
-
-
 def test_merge_schema_mismatch_fails_before_commit(spark, tmp_path):
     """A batch whose schema drifted from the target must fail CLEANLY
     before the manifest swap: the merge raises, the target's live
@@ -713,59 +642,6 @@ def test_concurrent_fold_cycles_compose(spark, tmp_path):
     fold_into_rollup(mk(1), ["k"], {"n": "sum"}, store)
     rows = read_merge_target(spark, store).select("k", "n").collect()
     assert [(r.k, r.n) for r in rows] == [("k1", 13)]
-
-
-def test_tws_composite_state_and_timers(spark, sf_dir, tmp_path):
-    """Drive EVERY TWS state-protocol message family live: ListState
-    append/get (with iterator paging), MapState's six verbs, timer
-    register/list/delete, plus ValueState — the integration surface
-    of the vendored mini-protobuf runtime. The emitted audit must
-    match batch aggregation exactly (counts) and to float tolerance
-    (the list-state read-back sum, whose fold order is insertion
-    order rather than Spark's)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from sf_etl_spark.sources import load_table
-    from sf_etl_spark.streaming import (
-        events_stream,
-        run_timered_to_memory_table,
-        stream_tws_session_audit,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = str(tmp_path / "events_src_audit")
-    ev = load_table(spark, sf_dir, "events")
-    n_users = ev.select("user_id").distinct().count()
-    ev.coalesce(1).write.parquet(src)
-    name, _ = run_timered_to_memory_table(
-        stream_tws_session_audit(events_stream(spark, src)),
-        output_mode="update",
-        min_rows=n_users,
-    )
-    got = {
-        r["user_id"]: (r["n_types"], r["n_vals"], r["total_value"], r["n_timers"])
-        for r in spark.table(name).collect()
-    }
-    want = {
-        r["user_id"]: (r["nt"], r["nv"], r["tv"])
-        for r in (
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(
-                F.countDistinct("event_type").alias("nt"),
-                F.count(F.lit(1)).alias("nv"),
-                F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("tv"),
-            )
-            .collect()
-        )
-    }
-    assert set(got) == set(want)
-    for uid, (nt, nv, tv, n_timers) in got.items():
-        assert (nt, nv) == want[uid][:2], uid
-        assert abs(tv - want[uid][2]) < 1e-6 * max(1.0, abs(want[uid][2])), uid
-        assert n_timers == 1, uid  # exactly the re-armed reaper timer
 
 
 def test_run_to_memory_table_scopes_shuffle_partitions(spark, sf_dir):
