@@ -1012,10 +1012,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed 3-term query are PIVOTED into one column per term and added in
 # a fixed left-to-right order — summation order is part of the
 # contract, so the value hash cannot wobble with aggregation order.
-# Scale: tf/df/avgdl are partial-agged shuffles on (doc, term)/term;
-# the query-term filter prunes the postings join to |q| terms BEFORE
-# the shuffle, and the two scalars (N, avgdl) re-enter as 1-row
-# broadcasts — the classic search-engine scoring plan, no UDFs.
+# Scale: one narrow scan tokenises each document once and counts the
+# |q| query terms in it (codegen'd array ops, no explode and no
+# postings shuffle); N, avgdl and the |q| document frequencies are one
+# global partial-agged aggregate re-entering as a 1-row broadcast;
+# the top-20 is TakeOrderedAndProject — no UDFs.
 # ---------------------------------------------------------------------------
 _BM25_TERMS = ("merge", "window", "shuffle")
 
@@ -1068,58 +1069,50 @@ _BM25_TERMS = ("merge", "window", "shuffle")
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
+    # one tokenisation per row; a term's count is what removing it
+    # takes off the document's length (all codegen'd: no explode, no
+    # lambda, no (doc, term) shuffle)
+    a = F.array_remove(F.split(F.lower("text"), " "), "")
+    toks = d.select("doc_id", a.alias("a")).select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.lower("text"), " "), lambda x: F.length(x) > 0)
-        ).alias("term"),
+        F.size("a").alias("n"),
+        *[
+            (F.size("a") - F.size(F.array_remove("a", t))).cast("double").alias(f"c{i}")
+            for i, t in enumerate(_BM25_TERMS)
+        ],
     )
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("double").alias("cnt")
-    )
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("double").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count(F.lit(1)).cast("double")).alias("avgdl"),
-    )
-    dfreq = (
-        tf.filter(F.col("term").isin(*_BM25_TERMS))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("double").alias("df"))
-    )
-    sc = (
-        ((F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5)))
-        * (
-            (F.col("cnt") * F.lit(2.2))
-            / (
-                F.col("cnt")
-                + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * (F.col("dl") / F.col("avgdl")))
-            )
-        )
-    )
-    partial = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .join(F.broadcast(stats))
-        .select("doc_id", "term", sc.alias("sc"))
-    )
+    # corpus stats over the documents with at least one token: one
+    # global aggregate, re-entering as a 1-row broadcast. A filter on
+    # n > 0 would be pushed below the projection and tokenise twice;
+    # the counts are conditional instead.
+    has = F.col("n") > 0
+    stats = toks.agg(
+        F.count(F.when(has, 1)).cast("double").alias("n_docs"),
+        F.sum(F.when(has, F.col("n"))).cast("double").alias("tok"),
+        *[
+            F.count(F.when(F.col(f"c{i}") > 0, 1)).cast("double").alias(f"df{i}")
+            for i in range(len(_BM25_TERMS))
+        ],
+    ).select("*", (F.col("tok") / F.col("n_docs")).alias("avgdl"))
+    dl = F.col("n").cast("double")
 
-    def _term_col(t: str) -> F.Column:
-        return F.coalesce(
-            F.max(F.when(F.col("term") == t, F.col("sc"))), F.lit(0.0)
+    def _term(i: int) -> F.Column:
+        df, cnt = F.col(f"df{i}"), F.col(f"c{i}")
+        sc = ((F.col("n_docs") - df + F.lit(0.5)) / (df + F.lit(0.5))) * (
+            (cnt * F.lit(2.2))
+            / (cnt + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * (dl / F.col("avgdl"))))
         )
+        return F.when(cnt > 0, sc).otherwise(F.lit(0.0))
 
-    pivoted = partial.groupBy("doc_id").agg(
-        (
-            _term_col(_BM25_TERMS[0])
-            + _term_col(_BM25_TERMS[1])
-            + _term_col(_BM25_TERMS[2])
-        ).alias("score")
+    scored = toks.crossJoin(F.broadcast(stats)).select(
+        "doc_id", (_term(0) + _term(1) + _term(2)).alias("score")
     )
-    # top-20 via orderBy+limit FIRST (Spark plans TakeOrderedAndProject:
-    # per-partition partial top-k, no global sort/shuffle of all docs);
-    # the rank window then runs over 20 rows, not the corpus.
-    top = pivoted.orderBy(F.col("score").desc(), "doc_id").limit(20)
+    # top-20 via orderBy+limit FIRST (TakeOrderedAndProject: per-
+    # partition partial top-k, no global sort/shuffle of all docs). A
+    # document with a query term scores > 0 and one without scores
+    # 0.0, so those rank last and drop after the cut, where no filter
+    # can reach the scan; the rank window runs over 20 rows.
+    top = scored.orderBy(F.col("score").desc(), "doc_id").limit(20).filter(F.col("score") > 0)
     w = Window.orderBy(F.col("score").desc(), "doc_id")
     return (
         top.withColumn("rank", F.row_number().over(w).cast("int"))

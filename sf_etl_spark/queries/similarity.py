@@ -21,8 +21,11 @@ Four tiers of the same capability, mirroring a production ANN stack:
    replays it exactly with no literals or driver-shipped data.
 
 Float discipline: every dot/norm is a fixed left-to-right fold over
-doubles (Spark ``aggregate`` ≡ DuckDB ``list_reduce``), so cosines are
-bit-identical across engines and threshold comparisons agree.
+doubles starting at 0.0, in three engines: Spark ``aggregate`` (the
+``_dot``/``_norm`` SQL folds), DuckDB ``list_reduce`` (the oracles)
+and the numpy fold of ``operators/vectors.py`` (the nearest-centroid
+kernel every IVF cell assignment runs). So cosines are bit-identical
+across engines and threshold comparisons agree.
 
 Reference parity note: the reference (nater540/sf-etl) has no vector
 ops at all — this is north-star surface per SURVEY.md §2.2 last row.
@@ -30,10 +33,12 @@ ops at all — this is north-star surface per SURVEY.md §2.2 last row.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sf_etl_spark.operators.skew import SALT_COL, replicate_build, salt_probe
+from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, top_cells
 from sf_etl_spark.queries import register
 from sf_etl_spark.sources import load_table
 
@@ -79,6 +84,20 @@ def normalized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     of every tier."""
     e = load_table(spark, sf_dir, "embeddings")
     return e.select("vec_id", "label", _vec().alias("v"), _norm(_vec()).alias("nm"))
+
+
+def _seed_cells(
+    e: DataFrame, k: int, *query_ids: int
+) -> tuple[np.ndarray, np.ndarray, dict[int, np.ndarray]]:
+    """The seed centroids (vec_id 1..*k*) and the query vectors of the
+    embeddings frame *e*, collected in one job: ``(cids, cents,
+    {query id: vector})``."""
+    ids, vecs = collect_vectors(
+        e.filter(F.col("vec_id").between(1, k) | F.col("vec_id").isin(*query_ids))
+        .select("vec_id", "embedding")
+    )
+    cells = (ids >= 1) & (ids <= k)
+    return ids[cells], vecs[cells], {int(i): v for i, v in zip(ids[~cells], vecs[~cells])}
 
 
 def exact_cosine_pairs(
@@ -197,9 +216,12 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # IVF (inverted-file) ANN: coarse-quantize to K centroid cells, probe
 # the query's NPROBE nearest cells, exact top-k inside them.
-# Scale: the assignment pass is one broadcast(centroids)+map (no
-# shuffle beyond the write of cell ids); the probe touches NPROBE/K of
-# the corpus. Deterministic seed "training" (vec_id 1..K) keeps the
+# Scale: construction collects the K centroids and the query (K+1
+# rows, one job) and ranks the probe cells on the driver; the corpus
+# pass is one narrow numpy nearest-centroid scan (operators/vectors.py)
+# plus a filter and TakeOrderedAndProject — no shuffle, no join, no
+# window; the probe touches NPROBE/K of the corpus. Deterministic seed
+# "training" (vec_id 1..K) keeps the
 # oracle replayable — production would k-means the centroids and store
 # cell id as a partition column for cell-pruned scans.
 # ---------------------------------------------------------------------------
@@ -241,39 +263,19 @@ _QUERY_VEC = 0
     LIMIT 10
     """,
     doc=f"IVF ANN: {IVF_K} seed centroids, nprobe={IVF_NPROBE}, exact top-10 in probed cells",
+    executes_on_construct=True,  # collects the centroids and the query
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
-    n = e.select("vec_id", "label", _vec().alias("v"), _norm(_vec()).alias("nm"))
-    cents = (
-        n.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= IVF_K))
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nm").alias("cn"))
-    )
-    ccos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * F.col("cn"))
-    scored = (
-        n.crossJoin(F.broadcast(cents))
-        .withColumn("ccos", ccos)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cid"))
-            ),
-        )
-    )
-    assign = scored.filter(F.col("rn") == 1).select("vec_id", "label", "v", "nm", "cid")
-    probe = (
-        scored.filter((F.col("vec_id") == _QUERY_VEC) & (F.col("rn") <= IVF_NPROBE))
-        .select("cid")
-    )
-    q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
-        F.col("v").alias("qv"), F.col("nm").alias("qn")
-    )
-    cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    # the probe set is the query's own ranking of the centroids,
+    # computed on the driver; the corpus pass is one narrow scan
+    cids, cents, qs = _seed_cells(e, IVF_K, _QUERY_VEC)
+    q = qs[_QUERY_VEC]
+    probe = top_cells(q[None], cids, cents, IVF_NPROBE)[0].tolist()
     return (
-        assign.join(F.broadcast(probe), "cid")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != _QUERY_VEC)
-        .select("vec_id", "label", "cid", cosine.alias("cosine"))
+        nearest_centroid(e.filter(F.col("vec_id") != _QUERY_VEC), cids, cents, query=q)
+        .filter(F.col("cid").isin(probe))
+        .select("vec_id", "label", "cid", F.col("qcos").alias("cosine"))
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(10)
     )
@@ -483,13 +485,13 @@ def ann_ivf_kmeans_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Composed production near-dup pipeline: candidate generation by IVF
 # cell co-membership (same nearest seed centroid ⇒ candidate pair) →
 # parameterized exact-cosine verification on the candidates ONLY.
-# Scale: assignment is one broadcast(K centroids) pass over the
-# corpus; the candidate join is an equi-join on cell id, O(Σ|cell|²)
-# = O(n²/K) for balanced cells — with K ~ √n (k-means at deployment,
-# seed selection here for oracle replay) that is O(n^1.5), and the
-# exact stage only ever sees those candidates. The plan contains NO
-# corpus×corpus cartesian/nested-loop join — regression-guarded in
-# tests/test_plans.py.
+# Scale: assignment is one narrow nearest-centroid pass over the
+# corpus (the K centroids collected at construction); the candidate
+# join is an equi-join on cell id, O(Σ|cell|²) = O(n²/K) for balanced
+# cells — with K ~ √n (k-means at deployment, seed selection here for
+# oracle replay) that is O(n^1.5), and the exact stage only ever sees
+# those candidates. The plan contains NO corpus×corpus
+# cartesian/nested-loop join — regression-guarded in tests/test_plans.py.
 # ---------------------------------------------------------------------------
 
 
@@ -523,25 +525,13 @@ def ann_ivf_kmeans_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY vec_a, vec_b
     """,
     doc=f"IVF-cell candidates → exact-cosine verify ≥ {COS_THRESHOLD} (composed production path)",
+    executes_on_construct=True,  # collects the K centroids
 )
 def dedup_embedding_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = normalized_vectors(spark, sf_dir)
-    cents = n.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= IVF_K)).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nm").alias("cn")
-    )
-    ccos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * F.col("cn"))
-    assign = (
-        n.crossJoin(F.broadcast(cents))  # O(n·K): K centroids, broadcast
-        .withColumn("ccos", ccos)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), F.col("cid"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
+    e = load_table(spark, sf_dir, "embeddings")
+    cids, cents, _ = _seed_cells(e, IVF_K)
+    assign = nearest_centroid(e.select("vec_id", "embedding"), cids, cents).select("vec_id", "cid")
     a, b = assign.alias("a"), assign.alias("b")
     cand_ids = a.join(
         b,
@@ -775,10 +765,10 @@ def ann_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: queries broadcast (5 rows); brute side is one corpus scan ×
 # |Q| with a per-query TakeOrdered-shaped window; IVF side reuses the
-# broadcast-centroid assignment and probes nprobe/K of the corpus per
-# query. At 100 TB the brute side runs on a SAMPLE of queries
-# exactly like this — recall estimation never needs the full query
-# log.
+# narrow nearest-centroid assignment, with each query's probe cells
+# ranked on the driver, and probes nprobe/K of the corpus per query.
+# At 100 TB the brute side runs on a SAMPLE of queries exactly like
+# this — recall estimation never needs the full query log.
 # ---------------------------------------------------------------------------
 _EVAL_QUERIES = (0, 10, 20, 30, 40)  # disjoint from seed centroids 1..8
 
@@ -851,6 +841,7 @@ _EVAL_QUERIES = (0, 10, 20, 30, 40)  # disjoint from seed centroids 1..8
     ORDER BY query_id
     """,
     doc=f"IVF recall@10 + MRR vs brute force over {len(_EVAL_QUERIES)} queries at nprobe={IVF_NPROBE}",
+    executes_on_construct=True,  # collects the centroids and the eval queries
 )
 def ann_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
@@ -881,33 +872,19 @@ def ann_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["vec_id"],
         rank_col="brank",
     ).select("qid", "vec_id", "brank")
-    cents = (
-        n.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= IVF_K))
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("v").alias("cv"),
-            F.col("nm").alias("cn"),
-        )
+    # the eval queries' probe cells are ranked on the driver from the
+    # K centroids and the 5 query vectors, collected in one job
+    cids, cents, qvecs = _seed_cells(e, IVF_K, *_EVAL_QUERIES)
+    qids = sorted(qvecs)
+    qmat = np.array([qvecs[i] for i in qids]).reshape(len(qids), cents.shape[1])
+    probes = top_cells(qmat, cids, cents, IVF_NPROBE)
+    qprobe = spark.createDataFrame(
+        [(qid, int(c)) for qid, cells in zip(qids, probes) for c in cells],
+        "qid bigint, cid bigint",
     )
-    ccos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * F.col("cn"))
-    cscored = (
-        n.crossJoin(F.broadcast(cents))
-        .withColumn("_cc", ccos)
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("_cc").desc(), "cid")
-            ),
-        )
-    )
-    assign = cscored.filter(F.col("rn") == 1).select("vec_id", "v", "nm", "cid")
-    qprobe = (
-        cscored.join(
-            F.broadcast(qs.select("qid")), cscored["vec_id"] == F.col("qid")
-        )
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("qid", "cid")
-    )
+    assign = nearest_centroid(
+        e.select("vec_id", "embedding"), cids, cents, keep_vec=True
+    ).select("vec_id", _vec().alias("v"), "nm", "cid")
     approx = (
         assign.join(F.broadcast(qprobe), "cid")
         .join(F.broadcast(qs), "qid")
@@ -1137,7 +1114,7 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (the fit path `ann_ivf_kmeans_topk` already exercises) without
 # changing any downstream plan shape.
 #
-# Scale: assignment is one broadcast(K centroids) map over the corpus
+# Scale: assignment is one narrow nearest-centroid pass over the corpus
 # (no corpus shuffle); the dup-pair stage is an equi-join on cell id,
 # O(Sigma|cell|^2) = O(n^2/K) — with K ~ sqrt(n) at deployment that is
 # O(n^1.5), the SemDeDup paper's own cost argument; the prune rule is
@@ -1189,38 +1166,22 @@ SEM_SALTS = 16  # (K cells x salts) buckets spread the pair stage
     """,
     doc=f"SemDeDup: seed-cell clustering, prune within-cell near-dups >= {SEM_EPS}"
     " keeping the lowest-centroid-similarity representative",
-    executes_on_construct=True,  # assign frame is localCheckpoint-ed
+    executes_on_construct=True,  # centroids collected, assign frame localCheckpoint-ed
 )
 def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = normalized_vectors(spark, sf_dir).select("vec_id", "v", "nm")
-    cents = n.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= SEM_K)).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nm").alias("cn")
-    )
-    ccos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * F.col("cn"))
-    # assignment: broadcast(K centroids) expansion, then a map-side
-    # partial-agged argmax — max(struct(ccos, -cid)) is the
-    # (ccos DESC, cid ASC) winner; the K expanded rows of each vector
-    # sit in ONE partition (broadcast replication), so the partial
-    # aggregate collapses them before the shuffle: the exchange
-    # carries n pre-reduced rows, never n*K. The vector itself rides
-    # along via first() (functionally dependent on the group key).
-    # Materialized once (localCheckpoint): the pair stage consumes it
-    # on BOTH sides and the final projection a third time — without
-    # the cut the broadcast-expansion subtree executes three times.
+    e = load_table(spark, sf_dir, "embeddings")
+    cids, cents, _ = _seed_cells(e, SEM_K)
+    # assignment: one narrow nearest-centroid pass; the vector rides
+    # along for the pair stage. Materialized once (localCheckpoint):
+    # the pair stage consumes it on BOTH sides and the final projection
+    # a third time — without the cut the kernel pass runs three times.
     assign = (
-        n.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "nm", "cid", ccos.alias("ccos"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("ccos"), (-F.col("cid")).alias("ncid"))).alias("s"),
-            F.first("v").alias("v"),
-            F.first("nm").alias("nm"),
-        )
+        nearest_centroid(e.select("vec_id", "embedding"), cids, cents, keep_vec=True)
         .select(
             "vec_id",
-            (-F.col("s.ncid")).alias("cid"),
-            F.col("s.ccos").alias("cent_cos"),
-            "v",
+            "cid",
+            F.col("ccos").alias("cent_cos"),
+            _vec().alias("v"),
             "nm",
         )
         .localCheckpoint()
@@ -1513,9 +1474,10 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # swaps in trained k-means for both quantizers (fit machinery =
 # ann_ivf_kmeans_topk) with an unchanged plan shape.
 #
-# Scale: assignment is the broadcast-K partial-agged argmax (exchange
-# carries n pre-reduced rows); the probe cut is a broadcast
-# nprobe-row semi-filter; PQ scoring via _pq_adc_scores is one
+# Scale: construction collects the K centroids and the query and
+# ranks the probe cells on the driver; assignment and the probe cut
+# are one narrow nearest-centroid pass plus a literal cell filter (no
+# shuffle); PQ scoring via _pq_adc_scores is one
 # partial-agged shuffle of |candidates| rows; both cuts are
 # TakeOrderedAndProject. At deployment cell id is a partition column
 # (cell-pruned scans) and codes are a persisted M-byte column — the
@@ -1568,47 +1530,34 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=f"IVF({IVF_K}, nprobe={IVF_NPROBE}) cell pruning -> PQ({PQ_M}x{PQ_C}) ADC"
     f" scoring of candidates only -> exact re-rank top-10 (the composed IVFPQ path)",
+    executes_on_construct=True,  # collects the centroids and the query
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = normalized_vectors(spark, sf_dir)
-    cents = n.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= IVF_K)).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("nm").alias("cn")
-    )
+    e = load_table(spark, sf_dir, "embeddings")
     q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
         F.col("v").alias("qv"), F.col("nm").alias("qn")
     )
-    # assignment: broadcast-K expansion + map-side partial-agged
-    # argmax (same shape as dedup_semdedup_prune — the exchange
-    # carries n pre-reduced rows, never n*K); v rides along for the
-    # PQ scoring stage
-    ccos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * F.col("cn"))
-    assign = (
-        n.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "cid", ccos.alias("ccos"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("ccos"), (-F.col("cid")).alias("ncid"))).alias("s"),
-            F.first("v").alias("v"),
+    # IVF cut: the probe cells are ranked on the driver, and the
+    # narrow nearest-centroid pass keeps the vectors of those cells
+    cids, cents, qs = _seed_cells(e, IVF_K, _QUERY_VEC)
+    probe = top_cells(qs[_QUERY_VEC][None], cids, cents, IVF_NPROBE)[0].tolist()
+    cand = (
+        nearest_centroid(
+            e.filter(F.col("vec_id") != _QUERY_VEC).select("vec_id", "embedding"),
+            cids,
+            cents,
+            keep_vec=True,
         )
-        .select("vec_id", (-F.col("s.ncid")).alias("cid"), "v")
-    )
-    qcos = _dot(F.col("cv"), F.col("qv")) / (F.col("cn") * F.col("qn"))
-    probe = (
-        cents.crossJoin(F.broadcast(q))  # K rows x 1 row
-        .select("cid", qcos.alias("ccos"))
-        .orderBy(F.col("ccos").desc(), "cid")
-        .limit(IVF_NPROBE)
-        .select("cid")
-    )
-    cand = assign.join(F.broadcast(probe), "cid").filter(
-        F.col("vec_id") != _QUERY_VEC
+        .filter(F.col("cid").isin(probe))
+        .select("vec_id", _vec().alias("v"))
     )
     cb = _pq_codebook(spark, n)
     # explicit repartition: the candidate frame is narrow and
     # AQE-coalescible while the PQ expansion's fold work is not byte-
     # visible (PLANS.md round-12 pathology note)
     n_part = _shuffle_partitions(spark)
-    scores = _pq_adc_scores(cand.select("vec_id", "v").repartition(n_part), cb, q)
+    scores = _pq_adc_scores(cand.repartition(n_part), cb, q)
     short = scores.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(PQ_RERANK)
     cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
     return (

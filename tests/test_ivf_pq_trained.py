@@ -23,11 +23,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sf_etl_spark.operators.topk import salted_topk
+from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, top_cells
 from sf_etl_spark.queries.similarity import (
     _EVAL_QUERIES,
     PQ_RERANK,
     _dot,
-    _norm,
     _pq_adc_scores,
     _shuffle_partitions,
 )
@@ -62,31 +62,17 @@ def _ivf_pq_recall(
         10,
         ["vec_id"],
     ).select("qid", "vec_id")
-    # assignment: broadcast-K argmax, exchange carries n pre-reduced rows
-    acos = _dot(F.col("v"), F.col("cv")) / (F.col("nm") * _norm(F.col("cv")))
-    assign = (
-        n.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "cid", acos.alias("ac"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("ac"), (-F.col("cid")).alias("nc"))).alias("s"),
-            F.first("v").alias("v"),
-        )
-        .select("vec_id", (-F.col("s.nc")).alias("cid"), "v")
+    # assignment and per-query probe cells by the numpy nearest-centroid
+    # kernel: centroids and the 5 query vectors ranked on the driver
+    cids, cmat = collect_vectors(cents.select("cid", "cv"))
+    qids, qmat = collect_vectors(qs.select("qid", "qv"))
+    cells = top_cells(qmat, cids, cmat, nprobe)
+    probe = spark.createDataFrame(
+        [(int(q), int(c)) for q, row in zip(qids, cells) for c in row], "qid bigint, cid bigint"
     )
-    pcos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * F.col("qn"))
-    probe = (
-        cents.crossJoin(F.broadcast(qs))
-        .withColumn("_c", pcos)
-        .withColumn(
-            "prn",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.col("_c").desc(), "cid")
-            ),
-        )
-        .filter(F.col("prn") <= nprobe)
-        .select("qid", "cid")
-    )
+    assign = nearest_centroid(
+        n.select("vec_id", F.col("v").alias("embedding")), cids, cmat, keep_vec=True
+    ).withColumnRenamed("embedding", "v")
     cand = assign.join(F.broadcast(probe), "cid").filter(
         F.col("vec_id") != F.col("qid")
     )

@@ -81,17 +81,13 @@ def test_minhash_partial_aggregates_before_shuffle(spark, sf_dir):
 
 def test_embedding_pipeline_has_no_quadratic_join(spark, sf_dir):
     # The composed near-dup pipeline must never cross the corpus with
-    # itself: no CartesianProduct anywhere, and the only nested-loop
-    # join allowed is the O(n·K) broadcast of the K=8 centroid rows.
+    # itself: no CartesianProduct and no nested-loop join anywhere (the
+    # cell assignment is a narrow nearest-centroid pass, not a join).
     # Candidate generation and vector re-attach must be hash/sort-merge
     # equi-joins.
     plan = _plan(spark, sf_dir, "dedup_embedding_pipeline")
     assert "CartesianProduct" not in plan
-    # The assignment subtree (corpus × K=8 broadcast centroids) appears
-    # once per side of the candidate self-join → at most 2 BNLJ nodes,
-    # both of which broadcast the 8-row centroid relation, never the
-    # corpus.
-    assert plan.count("BroadcastNestedLoopJoin") <= 2
+    assert "BroadcastNestedLoopJoin" not in plan
     # candidate generation is an equi-join on cell id...
     assert ("SortMergeJoin [cid" in plan) or ("ShuffledHashJoin [cid" in plan) or (
         "BroadcastHashJoin [cid" in plan
@@ -443,13 +439,10 @@ _BROADCAST_ALLOWLIST: dict[str, tuple[int, str]] = {
     "countmin_point_estimates": (1, "bounded: CM probe rows"),
     "funnel_time_to_convert": (1, "1-row: n_viewers scalar"),
     "agms_join_size": (1, "1-row: exact-count companion"),
-    "ann_recall_metrics": (12, "bounded: K centroids + fixed query set + probe lists"),
     "ann_matryoshka_recall": (4, "bounded: the 5-query eval set re-enters 4 subtrees"),
     "target_encoding_smoothed": (3, "1-row global mean + domain: 5 order priorities"),
     "domain_mix_rebalance": (3, "1-row max ratio + domain: source labels"),
-    "ann_ivf_topk": (4, "bounded: K centroids + 1-row query"),
     "ann_srp_lsh_pairs": (2, "bounded: hyperplane rows"),
-    "dedup_embedding_pipeline": (2, "bounded: K centroids"),
     "decontaminate_embedding_cosine": (
         1,
         "bounded: the EVAL set (10% of the capped slice; eval sets are "
@@ -483,7 +476,7 @@ _BROADCAST_ALLOWLIST: dict[str, tuple[int, str]] = {
         "domain: |types|-row median frame (hinted; its subtree reappears "
         "under the MAD frame's re-key) + |types|-row MAD frame",
     ),
-    "bm25_topk": (2, "bounded: fixed query terms + 1-row corpus stats"),
+    "bm25_topk": (1, "1-row: corpus stats (N, avgdl, query-term dfs)"),
     "heavy_hitters_twopass": (2, "bounded: <=B CM candidates + 1-row total"),
     "hll_rollup_merge": (4, "dim: nation x region; bounded sketch rows"),
     "kll_quantile_merge": (1, "bounded: merged KLL summary"),
@@ -524,12 +517,6 @@ _BROADCAST_ALLOWLIST: dict[str, tuple[int, str]] = {
         "query (2 re-entries: expansion + re-rank) + PQ_RERANK=50-row "
         "shortlist",
     ),
-    "ann_ivf_pq_topk": (
-        8,
-        "bounded: K centroids (assignment) + 1-row query (probe, "
-        "expansion, re-rank re-entries) + nprobe-row probe set + M-row "
-        "subspace range + 128-row codebook + PQ_RERANK=50-row shortlist",
-    ),
     "ann_pq_recall_metrics": (
         10,
         "bounded: the 5-query eval set (brute pass + multi-query ADC "
@@ -559,6 +546,12 @@ _BROADCAST_ALLOWLIST_CONSTRUCT: dict[str, tuple[int, str]] = {
     "group_median_twophase": (3, "bounded: ≤max_meta_rows bucket plan re-entry (budget-guarded) + 1-row bounds"),
     "group_p90_twophase": (3, "bounded: per-group rank plan joined twice (semi + pick) + per-group sizes (budget-guarded)"),
     "ann_ivf_kmeans_agreement": (3, "bounded: K centroids + probe lists + 1-row query"),
+    "ann_recall_metrics": (6, "bounded: fixed query set + its driver-ranked probe lists"),
+    "ann_ivf_pq_topk": (
+        5,
+        "bounded: 1-row query (expansion and re-rank re-entries) + M-row "
+        "subspace range + 128-row codebook + PQ_RERANK=50-row shortlist",
+    ),
     "ann_ivf_kmeans_topk": (3, "bounded: K centroids + probe lists + 1-row query"),
     "ann_ivf_pq_trained_agreement": (
         5,
@@ -725,7 +718,6 @@ _WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
     # consuming join (phase-1 salted windows are NOT flagged — the
     # salt keeps their partition spec high-cardinality).
     "ann_matryoshka_recall": (5, "post-cut: salted-phase survivors ≤ k·64 per eval query (truth ×1 + shortlist ×2 subtree copies) + ≤50-row shortlist rerank ×2"),
-    "ann_recall_metrics": (6, "post-cut: salted-phase survivors ≤ 10·64 per eval query (truth + probed top-10, × subtree reuse in overlap/rr joins)"),
     "ann_pq_recall_metrics": (6, "post-cut: salted-phase survivors ≤ k·64 per eval query (brute truth + ADC shortlist, × subtree reuse in overlap/rr joins) + ≤ PQ_RERANK-row rerank rank"),
     "ann_binary_recall_metrics": (6, "post-cut: salted-phase survivors ≤ k·64 per eval query (brute truth + Hamming shortlist, × subtree reuse in overlap/rr joins) + ≤ BQ_SHORTLIST-row rerank rank"),
 }
@@ -734,6 +726,7 @@ _WINDOW_ALLOWLIST_CONSTRUCT: dict[str, tuple[int, str]] = {
     "decile_lift_table": (2, "pre-agg: cumulative/total frames over the 10-row decile aggregate"),
     "keyword_textrank": (1, "post-limit: 20-row rank"),
     "pagerank_topk": (1, "post-limit: 15-row rank"),
+    "ann_recall_metrics": (4, "post-cut: salted-phase survivors ≤ 10·64 per eval query (truth + probed top-10, × subtree reuse in overlap/rr joins)"),
 }
 
 

@@ -1,0 +1,140 @@
+"""Parity of the numpy nearest-centroid kernel (operators/vectors.py)
+with the SQL fold it replaced: the same ``cid``, cosine and norm bits
+as ``_dot``/``_norm`` ranked by ``row_number() OVER (PARTITION BY
+vec_id ORDER BY ccos DESC, cid)``, the shape the DuckDB oracles
+replay."""
+
+from __future__ import annotations
+
+import os
+import struct
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, top_cells
+from sf_etl_spark.queries.similarity import IVF_K, _dot, _norm, _seed_cells, _vec
+from sf_etl_spark.sources import load_table
+
+#: the benchmark's sf0.1 fixture: 2,000 embeddings
+SF01 = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "fixture", "sf0.1")
+
+
+def _bits(x):
+    return None if x is None else struct.pack(">d", x)
+
+
+def _sql_assign(df, cents):
+    """(vec_id, cid, ccos, nm) by the SQL fold and window ranking."""
+    n = df.select("vec_id", _vec().alias("v"), _norm(_vec()).alias("nm"))
+    c = cents.select(
+        F.col("vec_id").alias("cid"), _vec().alias("cv"), _norm(_vec()).alias("cn")
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cid")
+    return (
+        n.crossJoin(F.broadcast(c))
+        .withColumn("ccos", _dot(F.col("v"), F.col("cv")) / (F.col("nm") * F.col("cn")))
+        .withColumn("rn", F.row_number().over(w))
+        .filter("rn = 1")
+        .select("vec_id", "cid", "ccos", "nm")
+    )
+
+
+def _rows(df):
+    return {
+        r["vec_id"]: (r["cid"], _bits(r["ccos"]), _bits(r["nm"]))
+        for r in df.select("vec_id", "cid", "ccos", "nm").collect()
+    }
+
+
+def test_kernel_bit_matches_sql_fold_on_fixture(spark):
+    """All 2,000 sf0.1 vectors: same cid, cosine and norm bits as the
+    SQL fold, whatever the input partitioning or shuffle width."""
+    e = load_table(spark, SF01, "embeddings")
+    cids, cents, _ = _seed_cells(e, IVF_K)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for parts in (1, 7):
+            spark.conf.set(key, str(parts))
+            want = _rows(_sql_assign(e, e.filter(F.col("vec_id").between(1, IVF_K))))
+            assert len(want) == 2000
+            got = _rows(nearest_centroid(e.repartition(parts), cids, cents))
+            assert got == want, parts
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_kernel_query_cosine_and_probe_match_sql_fold(spark):
+    e = load_table(spark, SF01, "embeddings")
+    cids, cents, qs = _seed_cells(e, IVF_K, 0)
+    qv = qs[0][None]
+    got = {
+        r["vec_id"]: _bits(r["qcos"])
+        for r in nearest_centroid(e, cids, cents, query=qv[0]).collect()
+    }
+    q = e.filter("vec_id = 0").select(_vec().alias("qv"), _norm(_vec()).alias("qn"))
+    qcos = _dot(_vec(), F.col("qv")) / (_norm(_vec()) * F.col("qn"))
+    want = {r[0]: _bits(r[1]) for r in e.crossJoin(q).select("vec_id", qcos).collect()}
+    assert got == want
+    # the driver-side probe is the query row's own ranking
+    ranked = _sql_assign(e.filter("vec_id = 0"), e.filter(F.col("vec_id").between(1, IVF_K)))
+    assert top_cells(qv, cids, cents, 1)[0].tolist() == [ranked.first()["cid"]]
+    assert len(set(top_cells(qv, cids, cents, IVF_K)[0].tolist())) == IVF_K
+
+
+def test_kernel_edge_rows(spark):
+    """A zero-norm vector, a null embedding and an exact two-way tie
+    rank as the SQL fold ranks them (with ANSI off, where it returns
+    NULL instead of raising on the zero divisor)."""
+    schema = "vec_id bigint, embedding array<float>"
+    cents = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [-1.0, 0.0, 0.0])], schema
+    )
+    rows = spark.createDataFrame(
+        [
+            (10, [0.0, 0.0, 0.0]),  # zero norm
+            (11, None),  # null embedding
+            (12, [2.0, 2.0, 5.0]),  # exact tie: cid 1 and 2
+            (13, [0.0, 3.0, 4.0]),
+            (14, [-0.0, -0.0, 1.0]),  # cosine 0.0 to all three: a three-way tie
+        ],
+        schema,
+    )
+    cids, mat = collect_vectors(cents)
+    got = _rows(nearest_centroid(rows, cids[::-1], mat[::-1]))
+    key = "spark.sql.ansi.enabled"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        want = _rows(_sql_assign(rows, cents))
+    finally:
+        spark.conf.set(key, prev)
+    assert got == want
+    assert got[10] == (1, None, _bits(0.0))
+    assert got[11] == (1, None, None)
+    assert got[12][0] == 1 and got[13][0] == 2 and got[14][0] == 1
+
+
+def test_kernel_zero_row_batch_and_no_centroids(spark):
+    e = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
+    out = nearest_centroid(e, np.array([1]), np.ones((1, 3)), query=np.ones(3))
+    assert out.collect() == []
+    assert out.columns == ["vec_id", "cid", "ccos", "nm", "qcos"]
+    with pytest.raises(ValueError):
+        nearest_centroid(e, np.array([], dtype=np.int64), np.ones((0, 3)))
+
+
+def test_kernel_function_on_empty_arrow_batch():
+    """The kernel body itself on a zero-row batch (Spark may hand one
+    to a task whose partition is empty)."""
+    from sf_etl_spark.operators import vectors
+
+    col = pa.array([], type=pa.list_(pa.float32()))
+    x, ok = vectors._rows(col, 3)
+    assert x.shape == (0, 3) and ok.shape == (0,)
+    cos, null = vectors._cosines(x, vectors._norms(x), ok, np.ones((2, 3)), np.ones(2))
+    assert vectors._ranked(cos, null).shape == (0, 2)
