@@ -1,47 +1,49 @@
-"""Exact distributed order statistics — k-th smallest without a
-global sort.
+"""Exact distributed order statistics — ranks, medians and percentiles
+per group, without sorting any whole group.
 
 KLL (queries/sketches.py) answers quantiles approximately from a
-mergeable summary; this operator answers them EXACTLY, the way a
-massively-parallel engine does it: iterative histogram narrowing
-(the classic distributed selection algorithm — Blum et al.'s
-selection bound meets MapReduce; same scheme BigQuery/Presto use for
-exact percentile on demand).
+mergeable summary; this module answers them EXACTLY with ONE lazy
+two-phase plan (bucket, count, locate, rank only what is needed — the
+distributed-selection scheme exact-percentile engines use). The
+driver only plans: the single Spark job an operator may run at
+construction is the covering-bounds scan, and callers holding parquet
+footer statistics pass ``bounds`` and build without any.
 
-Per round: ONE scan of the current scope builds an equi-width
-integer histogram (a partial-aggregated groupBy — B counts, B
-bounded, shuffled as B rows); the driver walks the prefix sums (B
-integers — bounded metadata, the connected_components scalar policy)
-and narrows the scope to the single bucket containing rank k. The
-value range shrinks ×B per round, so ⌈log_B(range)⌉ rounds bound the
-loop (3 rounds cover any int64 range at B=4096); the final in-bucket
-step is a TakeOrdered of the remaining rank — never a global sort of
-n rows.
+Phase 1 (:func:`_plan`) is a plan frame. Every non-null row gets an
+exact equi-width integer bucket of its order image (:func:`_int_bucket`);
+a partial-aggregated groupBy counts rows per (group, bucket) — at most
+|groups|·B rows — and one window over that pre-aggregated frame gives
+each bucket its offset (the group's rows in lower buckets) and the
+group size.
 
-The grouped two-phase family (medians, discrete/continuous
-quantiles, exact ranks) shares ONE skeleton (r14 verdict task 4 —
-previously five copies of the same subtle boundary logic):
-covering-bounds scan → per-(group, bucket) count histogram under a
-driver-metadata budget → driver prefix-sum walk locating each
-target rank's (bucket, residual) → phase-2 rank of ONLY the selected
-bucket slices re-entered through a broadcast plan relation. The
-helpers below (`_covering_bounds`, `_int_bucket`, `_grouped_hist`,
-`_locate_rank`, `_median_plans`, `_pick_two_slots`) ARE that
-skeleton; each public operator is a thin wrapper choosing its bucket
-expression, plan shape, and output casts.
+Phase 2 has two shapes:
 
-At 100 TB: each round is a full scan (cheap, pushed filters narrow
-it progressively) + B-row shuffle; driver traffic is O(B·rounds)
-integers. Contrast: ``ORDER BY x LIMIT 1 OFFSET k`` plans a global
-sort; ``percentile_approx`` gives error bars. This is the
-exact-and-scalable third option.
+- rank every row (:func:`grouped_exact_rank`): offset + row_number
+  within the (group, bucket) slice, ~n/B rows per window partition;
+- pick target ranks (:func:`_pick`): the targets are SQL expressions
+  of the group size, the plan frame locates their buckets, and only
+  rows in those buckets are ranked. The median, ``percentile_disc``
+  and multi-spec ``percentile_cont`` wrappers are this shape.
+
+A NULL group key is a group, as in SQL ``GROUP BY``/``PARTITION BY``:
+the plan frame re-enters the rows through null-safe equi-joins.
+Ungrouped callers pass one literal group column.
+
+At 100 TB: two scans of the input, one exchange of ≤ |groups|·B count
+rows, and window sorts over ~n/B-row slices. One level of bucketing
+suffices while a bucket's population fits a window partition; a group
+whose values pile into one bucket is ranked in one task. Contrast:
+``ORDER BY x LIMIT 1 OFFSET k`` plans a global sort,
+``percentile_approx`` gives error bars, and the exact ``percentile``
+aggregate buffers each whole group in one task.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _bucket_col(col_name: str, lo: int, width: int, span: int):
@@ -52,8 +54,8 @@ def _bucket_col(col_name: str, lo: int, width: int, span: int):
     ((a - a mod w) / w) value-for-value but at JVM-long speed (the
     DECIMAL(38,0) path runs java.math.BigDecimal per row — measured
     ~10x slower over a 600k-row scan). The decimal path remains for
-    spans that could wrap int64 (lo < 0 with hi near 2^63 — the
-    kth_smallest generality), where subtraction must not overflow."""
+    spans that could wrap int64 (lo < 0 with hi near 2^63), where
+    subtraction must not overflow."""
     # fast-path guard: lo == LONG_MIN would render a literal Spark
     # parses as DECIMAL(19,0) (unary minus on 2^63) and fail analysis;
     # backticks in the name are escaped by doubling (r9 ADVICE)
@@ -64,22 +66,6 @@ def _bucket_col(col_name: str, lo: int, width: int, span: int):
     return ((a - F.pmod(a, F.lit(width))) / F.lit(width)).cast("long")
 
 
-def _covering_bounds(
-    df: DataFrame, col: str, bounds: tuple[int, int] | None, op_name: str
-) -> tuple[int, int]:
-    """Phase-1 bounds: the caller's covering (lo, hi) when given
-    (parquet footer statistics — they need only COVER the true
-    min/max), else one min/max scan; all-null fails loud."""
-    if bounds is None:
-        c = F.col(col)
-        row = df.agg(F.min(c).alias("lo"), F.max(c).alias("hi")).first()
-        bounds = (row["lo"], row["hi"])
-    lo, hi = bounds
-    if lo is None:
-        raise ValueError(f"{op_name} on all-null column {col!r}")
-    return lo, hi
-
-
 def _int_bucket(col: str, lo: int, hi: int, n_buckets: int):
     """Equi-width exact integer bucket expression over [lo, hi]."""
     span = int(hi) - int(lo) + 1
@@ -87,300 +73,100 @@ def _int_bucket(col: str, lo: int, hi: int, n_buckets: int):
     return _bucket_col(col, int(lo), width, span)
 
 
-def _reject_null_groups(hist_rows, op_name: str, group_col: str) -> None:
-    """The grouped two-phase operators re-enter their driver-computed
-    plans via INNER equi-joins on the group column, so a NULL group
-    key would silently drop its rows — whereas the aggregate/window
-    plans they replace emit a row for the null group. Fail loud
-    instead of diverging (r9 ADVICE); callers that need a null group
-    must coalesce it to a sentinel first."""
-    for r in hist_rows:
-        if r["_g"] is None:
-            raise ValueError(
-                f"{op_name}: NULL {group_col!r} group key is not supported "
-                "(driver plans re-enter via an equi-join, which would "
-                "silently drop the null group); coalesce it to a sentinel"
-            )
+def _covering_bounds(
+    df: DataFrame, cols: list[str], known: dict[str, tuple[int, int]]
+) -> dict[str, tuple[int, int]]:
+    """Covering (lo, hi) of each integer column: the caller's bounds
+    where given (parquet footer statistics — they need only COVER the
+    true min/max), the rest from ONE shared min/max scan. A column
+    with no non-null value has nothing to bucket, so (0, 0) covers it."""
+    out = dict(known)
+    missing = [c for c in cols if c not in out]
+    if missing:
+        row = df.agg(*[f(c) for c in missing for f in (F.min, F.max)]).first()
+        out.update({c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(missing)})
+    return {c: (0, 0) if out[c][0] is None else (int(out[c][0]), int(out[c][1])) for c in cols}
 
 
-def _grouped_hist(
-    hist_df: DataFrame,
-    op_name: str,
-    group_col: str,
-    max_meta_rows: int,
-    hint: str = "lower n_buckets or raise max_meta_rows",
-    kind: str = "per-(group,bucket)",
-) -> dict:
-    """Collect a per-(group, bucket) count histogram under the
-    driver-metadata budget and fold it to {group: {bucket: count}}.
-    limit(budget+1) caps what can ever reach the driver; one extra
-    row distinguishes "at budget" from "over budget" without a
-    separate count job. NULL group keys fail loud."""
-    hist = hist_df.limit(max_meta_rows + 1).collect()
-    if len(hist) > max_meta_rows:
-        raise ValueError(
-            f"{op_name}: {kind} histogram exceeds "
-            f"max_meta_rows={max_meta_rows} (high-cardinality "
-            f"{group_col!r}?); {hint}"
-        )
-    _reject_null_groups(hist, op_name, group_col)
-    per_group: dict = {}
-    for r in hist:
-        per_group.setdefault(r["_g"], {})[int(r["_b"])] = int(r["_n"])
-    return per_group
-
-
-def _locate_rank(counts: dict[int, int], k: int) -> tuple[int, int]:
-    """Walk a group's sorted bucket prefix sums to the bucket holding
-    1-based rank *k*; returns (bucket, residual rank within it).
-    Raises AssertionError past the group size (callers bound k)."""
-    cum = 0
-    for b in sorted(counts):
-        if cum + counts[b] >= k:
-            return b, k - cum
-        cum += counts[b]
-    raise AssertionError(f"rank {k} exceeds group size {cum}")
-
-
-def _plan_size_schemas(df, group_col: str, with_slot: bool):
-    """Explicit schemas for the driver-built plan/size relations of the
-    two-phase operators: schema inference over a Python list raises on
-    an EMPTY (but valid) input — e.g. caller-supplied covering bounds
-    over a filtered slice with zero rows — where the operator should
-    just return an empty frame. Keeps all five variants on the same
-    contract as grouped_exact_rank's prefix relation."""
-    gt = df.schema[group_col].dataType
-    plan_fields = [
-        T.StructField(group_col, gt),
-        T.StructField("_b", T.LongType()),
-        T.StructField("_k", T.LongType()),
-    ]
-    if with_slot:
-        plan_fields.append(T.StructField("_slot", T.LongType()))
-    return (
-        T.StructType(plan_fields),
-        T.StructType([T.StructField(group_col, gt), T.StructField("n", T.LongType())]),
-    )
-
-
-def _median_plans(per_group: dict) -> tuple[list, dict]:
-    """Two-slot middle-rank plans per group: slot 1 = rank ⌈n/2⌉,
-    slot 2 = rank n/2+1 for even n (== slot 1 for odd). Returns
-    ([(group, bucket, residual, slot)…], {group: n})."""
-    plans, sizes = [], {}
-    for grp, counts in per_group.items():
-        n = sum(counts.values())
-        sizes[grp] = n
-        k1 = (n + 1) // 2
-        k2 = n // 2 + 1 if n % 2 == 0 else k1
-        for slot, k in ((1, k1), (2, k2)):
-            b, rk = _locate_rank(counts, k)
-            plans.append((grp, b, rk, slot))
-    return plans, sizes
-
-
-def _pick_two_slots(
-    d: DataFrame,
-    group_col: str,
-    col: str,
-    bucket,
-    plans: list,
-    sizes: dict,
+def _bucketed(
+    df: DataFrame, img_col: str, bounds: tuple[int, int] | None, n_buckets: int
 ) -> DataFrame:
-    """Shared phase 2 of the median twins: rank ONLY the plan-selected
-    (group, bucket) slices (broadcast plan re-entry, ~n/B rows per
-    window partition), pick the two slot ranks, pivot them wide, and
-    join the per-group sizes. Returns (group, n, v_lo, v_hi) with the
-    values still in *col*'s input type — casts are the wrappers'."""
-    g, c = F.col(group_col), F.col(col)
-    spark = d.sparkSession
-    plan_schema, size_schema = _plan_size_schemas(d, group_col, True)
-    plan_df = F.broadcast(  # bounded: ≤2 rows per group, budget-guarded
-        spark.createDataFrame(plans, plan_schema)
-    )
-    ranked = (
-        d.select(g.alias(group_col), c.alias(col), bucket.alias("_b"))
-        .join(
-            plan_df.select(group_col, "_b").distinct(),
-            [group_col, "_b"],
-            "left_semi",
+    """The rows of *df* with a non-null *img_col*, plus their exact
+    bucket ``_b`` (ranks are over non-null values, the SQL
+    ordered-set convention)."""
+    d = df.filter(F.col(img_col).isNotNull())
+    known = {} if bounds is None else {img_col: bounds}
+    lo, hi = _covering_bounds(d, [img_col], known)[img_col]
+    return d.withColumn("_b", _int_bucket(img_col, lo, hi, n_buckets))
+
+
+def _join(left: DataFrame, right: DataFrame, on: list[str], how: str = "inner") -> DataFrame:
+    """Equi-join on the columns *on* with NULL matching NULL: the plan
+    frame re-enters the rows it was counted from, and a NULL group is
+    a group. The right side's keys are renamed so that every name
+    resolves to one side."""
+    r = right.select(*[F.col(c).alias(f"_r{c}") if c in on else F.col(c) for c in right.columns])
+    cond = reduce(lambda a, b: a & b, [F.col(c).eqNullSafe(F.col(f"_r{c}")) for c in on])
+    out = left.join(r, cond, how)
+    return out if how == "left_semi" else out.drop(*[f"_r{c}" for c in on])
+
+
+def _plan(d: DataFrame, keys: list[str]) -> DataFrame:
+    """Phase 1: per-(group, bucket) row count ``_cnt``, the group's
+    rows in lower buckets ``_pre`` and the group size ``_gn`` — one
+    window over the pre-aggregated ≤ |groups|·B-row count frame,
+    never over raw rows."""
+    w = Window.partitionBy(*keys).orderBy("_b")
+    return (
+        d.groupBy(*keys, "_b")
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .select(
+            *keys,
+            "_b",
+            "_cnt",
+            (
+                F.sum("_cnt").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+                - F.col("_cnt")
+            ).alias("_pre"),
+            F.sum("_cnt")
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+            .alias("_gn"),
         )
-        .withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy(group_col, "_b").orderBy(col)),
-        )
     )
-    picked = ranked.join(plan_df, [group_col, "_b"]).filter(
-        F.col("_rk") == F.col("_k")
+
+
+def _pick(
+    d: DataFrame, keys: list[str], value: str, targets: list[tuple[str, Column]]
+) -> DataFrame:
+    """Phase 2, pick shape: the rows of *d* at each target rank of its
+    group under ``value ASC``. *d* carries *keys*, ``_b`` and *value*;
+    *targets* are ``(tag, rank)`` with each rank a 1-based SQL
+    expression of the group size ``_gn`` (and of *keys*; a NULL rank
+    picks nothing). Only the buckets holding a target are ranked.
+    Returns (keys, ``_gn``, ``_tag``, value), one row per target hit;
+    ties share the value, so any row at the rank yields the same
+    result."""
+    cells = F.array(*[F.struct(F.lit(t).alias("_tag"), k.cast("long").alias("_k")) for t, k in targets])
+    hits = (
+        _plan(d, keys)
+        .select(*keys, "_b", "_pre", "_cnt", "_gn", F.explode(cells).alias("_x"))
+        .select(*keys, "_b", "_pre", "_gn", "_x._tag", "_x._k")
+        .filter((F.col("_k") > F.col("_pre")) & (F.col("_k") <= F.col("_pre") + F.col("_cnt")))
     )
-    wide = (
-        picked.groupBy(group_col)
-        .pivot("_slot", [1, 2])
-        .agg(F.first(col))
-        .withColumnRenamed("1", "v_lo")
-        .withColumnRenamed("2", "v_hi")
+    on = [*keys, "_b"]
+    ranked = _join(d, hits.select(*on).distinct(), on, "left_semi").withColumn(
+        "_rk", F.row_number().over(Window.partitionBy(*on).orderBy(value))
     )
-    size_df = F.broadcast(  # bounded: one row per group
-        spark.createDataFrame(list(sizes.items()), size_schema)
+    return (
+        _join(ranked, hits, on)
+        .filter(F.col("_pre") + F.col("_rk") == F.col("_k"))
+        .select(*keys, "_gn", "_tag", value)
     )
-    return wide.join(size_df, group_col)
 
 
-def kth_smallest(
-    df: DataFrame,
-    col: str,
-    k: int,
-    n_buckets: int = 1024,
-    max_rounds: int = 8,
-) -> int:
-    """Exact k-th smallest (1-based) of an integer column, by
-    iterative histogram narrowing. Returns the value as a Python int
-    (a bounded scalar — the caller re-enters it as a literal/1-row
-    frame, the same policy as pagerank's n_nodes).
-
-    NULL semantics: ranks are over the NON-NULL values (SQL ordered-
-    set-function convention). The filter is applied here rather than
-    assumed of the caller — r6 ADVICE: an unfiltered frame used to
-    send null hash-bucket rows to the driver walk and TypeError."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    c = F.col(col)
-    df = df.filter(c.isNotNull())
-    bounds = df.agg(F.min(c).alias("lo"), F.max(c).alias("hi")).first()
-    lo, hi = bounds["lo"], bounds["hi"]
-    if lo is None:
-        raise ValueError(f"kth_smallest on all-null column {col!r}")
-    scope = df
-    remaining = k
-    for _ in range(max_rounds):
-        if lo == hi:
-            return int(lo)
-        span = hi - lo + 1
-        width = -(-span // n_buckets)  # ceil; >= 1
-        # exact bucket index — never the double-divide form
-        # ((c-lo)/width).cast(long), which disagrees with the integer
-        # narrowing filter once values exceed 2^53 (a boundary value
-        # can round into the neighboring bucket); see _bucket_col for
-        # the long-fast / decimal-wide split
-        b = _bucket_col(col, lo, width, span)
-        hist = (
-            scope.groupBy(b.alias("b"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()  # <= n_buckets rows: bounded metadata
-        )
-        counts = {int(r["b"]): int(r["n"]) for r in hist}
-        cum = 0
-        for b in sorted(counts):
-            if cum + counts[b] >= remaining:
-                remaining -= cum
-                lo2 = lo + b * width
-                hi2 = min(hi, lo2 + width - 1)
-                scope = scope.filter(c.between(F.lit(lo2), F.lit(hi2)))
-                lo, hi = lo2, hi2
-                break
-            cum += counts[b]
-        else:  # k exceeds row count
-            raise ValueError(f"k={k} exceeds non-null rows of {col!r}")
-    # range did not collapse within max_rounds (pathological spread):
-    # the scope is a single bucket of the last round — finish with a
-    # TakeOrdered of the remaining rank, never a global sort.
-    row = (
-        scope.orderBy(c)
-        .limit(remaining)
-        .agg(F.max(c).alias("v"))
-        .first()
-    )
-    return int(row["v"])
-
-
-def rank_cutpoints(
-    df: DataFrame,
-    key_col: str,
-    tie_col: str,
-    ks: list[int],
-    n_buckets: int = 1024,
-) -> dict[int, tuple[int, int]]:
-    """Exact (key, tie) pairs at the given ascending 1-based ranks of
-    the ordering ``(key ASC, tie ASC)`` — ALL ranks from ONE histogram
-    pass plus ONE pick pass, never a global sort (r7 verdict task 1a:
-    the scalable replacement for a partition-less ``ntile``/rank
-    window). ``key`` must be integer (use an order-isomorphic integer
-    image of the real sort column — e.g. cents of a 2-decimal price;
-    negate for DESC); ``tie`` must make the composite key unique.
-
-    Pass 1 reuses :func:`kth_smallest`'s equi-width histogram (exact
-    integer bucketing — see :func:`_bucket_col`); the
-    driver walks the ≤B prefix sums once per requested rank — bounded
-    metadata. Pass 2 scans only rows in the ≤len(ks) selected buckets
-    (scan-side range filter), ranks those slices with a window
-    PARTITIONED BY BUCKET (each slice ~n/B rows — one narrowing level,
-    same skew caveat as :func:`grouped_median_twophase`), and returns
-    the ≤len(ks) picked rows. Returns ``{k: (key, tie)}``; the caller
-    re-enters them as literals (the kth_smallest scalar policy).
-    """
-    if not ks:
-        return {}
-    if min(ks) < 1:
-        raise ValueError(f"ranks must be >= 1, got {sorted(ks)[0]}")
-    key, tie = F.col(key_col), F.col(tie_col)
-    df = df.filter(key.isNotNull())
-    stats = df.agg(
-        F.count(F.lit(1)).alias("n"), F.min(key).alias("lo"), F.max(key).alias("hi")
-    ).first()
-    n, lo, hi = int(stats["n"]), stats["lo"], stats["hi"]
-    if n == 0:
-        raise ValueError(f"rank_cutpoints on empty/all-null column {key_col!r}")
-    if max(ks) > n:
-        raise ValueError(f"rank {max(ks)} exceeds non-null rows ({n}) of {key_col!r}")
-    bucket = _int_bucket(key_col, int(lo), int(hi), n_buckets)
-    hist = (
-        df.groupBy(bucket.alias("_b"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()  # <= n_buckets rows: bounded metadata
-    )
-    counts = {int(r["_b"]): int(r["_n"]) for r in hist}
-    plans: dict[tuple[int, int], list[int]] = {}  # (bucket, resid) -> [k...]
-    for k in ks:
-        b, rk = _locate_rank(counts, k)
-        plans.setdefault((b, rk), []).append(k)
-    sel = sorted({b for b, _ in plans})
-    pick_cond = None
-    for b, r in plans:
-        term = (F.col("_b") == b) & (F.col("_rk") == r)
-        pick_cond = term if pick_cond is None else (pick_cond | term)
-    picked = (
-        df.select(key.alias("_k"), tie.alias("_t"), bucket.alias("_b"))
-        .filter(F.col("_b").isin(sel))
-        .withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy("_b").orderBy("_k", "_t")),
-        )
-        .filter(pick_cond)
-        .collect()  # <= len(ks) rows
-    )
-    got = {(int(r["_b"]), int(r["_rk"])): (int(r["_k"]), int(r["_t"])) for r in picked}
-    out: dict[int, tuple[int, int]] = {}
-    for (b, r), klist in plans.items():
-        for k in klist:
-            out[k] = got[(b, r)]
-    return out
-
-
-def exact_median(df: DataFrame, col: str) -> tuple[int, int, int]:
-    """Exact median helpers: returns (n, v_at_k1, v_at_k2) where
-    k1/k2 are the middle rank(s) — equal for odd n. The caller forms
-    the midpoint; both probes share the narrowing machinery."""
-    n = df.filter(F.col(col).isNotNull()).count()
-    if n == 0:
-        raise ValueError("exact_median of empty input")
-    if n % 2 == 1:
-        k1 = k2 = (n + 1) // 2
-        v1 = v2 = kth_smallest(df, col, k1)
-    else:
-        k1, k2 = n // 2, n // 2 + 1
-        v1 = kth_smallest(df, col, k1)
-        v2 = kth_smallest(df, col, k2)
-    return n, v1, v2
+def _by_tag(tag: str, value: str) -> Column:
+    """The picked *value* of target *tag* within a group aggregate."""
+    return F.max(F.when(F.col("_tag") == tag, F.col(value))).alias(tag)
 
 
 def grouped_median_twophase(
@@ -388,75 +174,37 @@ def grouped_median_twophase(
     group_col: str,
     col: str,
     n_buckets: int = 1024,
-    max_meta_rows: int = 2_000_000,
     bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
-    """Exact per-group median of an integer column in TWO fixed
-    passes, without sorting any full group.
-
-    Pass 1: ONE scan builds per-(group, bucket) counts over an
-    equi-width histogram of the global value range — a partial-agged
-    groupBy whose output is ≤ |groups|·B rows. The driver walks each
-    group's prefix sums (bounded metadata, same budget class as the
-    zone-map shortlist) and derives, per group, the bucket(s) holding
-    the middle rank(s) and the residual ranks within them.
-
-    Pass 2: ONE scan keeps only rows inside their group's selected
-    bucket ranges (a broadcast join on the bounds frame — the scan
-    filter is group-specific), ranks them per group with a window
-    over ~n/B-sized slices, and picks the residual ranks. For even
-    group sizes the median is the exact midpoint of the two middle
-    values (one IEEE divide of integers).
-
-    Contrast: an exact-percentile AGGREGATE buffers each whole group
-    in one task — right when groups fit a partition; this shape is
-    the one that survives when a single group holds billions of rows
-    (`percentiles_by_flag` now runs on the same machinery). One level
-    of narrowing suffices when bucket populations fit pass 2's window
-    (n/B per group on average); recurse with :func:`kth_smallest` per
-    group for adversarial skew.
+    """Exact per-group median of an integer column: the pick shape with
+    targets rank ⌈n/2⌉ and rank n DIV 2 + 1 (the same rank for odd n).
+    For even group sizes the median is the exact midpoint of the two
+    middle values (one IEEE divide of integers).
 
     Returns (group, n, v_lo, v_hi, median) — v_lo/v_hi are the middle
     rank values (equal for odd n). Medians are over the NON-NULL
-    values per group (nulls filtered here, not assumed away — r6
-    ADVICE); all-null groups drop out, matching ``median() FILTER
-    (WHERE x IS NOT NULL)`` semantics.
-
-    Driver-metadata budget (r6 verdict task 5): the collected
-    histogram is ≤ |groups|·B rows, which is "bounded metadata" only
-    while |groups| is dimension-sized. ``max_meta_rows`` makes that
-    assumption explicit — past it the call FAILS LOUD (with the knobs
-    that fix it: shrink ``n_buckets``, or fall back to a per-group
-    window/aggregate plan when groups are tiny) instead of silently
-    OOMing the driver on a high-cardinality group column.
-    """
-    g, c = F.col(group_col), F.col(col)
-    df = df.filter(c.isNotNull())
-    lo, hi = _covering_bounds(df, col, bounds, "grouped_median_twophase")
-    bucket = _int_bucket(col, lo, hi, n_buckets)
-    hist_df = df.groupBy(g.alias("_g"), bucket.alias("_b")).agg(
-        F.count(F.lit(1)).alias("_n")
+    values per group; all-null groups drop out, matching ``median()
+    FILTER (WHERE x IS NOT NULL)`` semantics."""
+    d = _bucketed(df.select(group_col, col), col, bounds, n_buckets)
+    picked = _pick(
+        d,
+        [group_col],
+        col,
+        [("v_lo", F.expr("(_gn + 1) DIV 2")), ("v_hi", F.expr("_gn DIV 2 + 1"))],
     )
-    per_group = _grouped_hist(
-        hist_df,
-        "grouped_median_twophase",
-        group_col,
-        max_meta_rows,
-        hint=(
-            "lower n_buckets, raise max_meta_rows, or use a window-based "
-            "per-group median instead"
-        ),
-    )
-    plans, sizes = _median_plans(per_group)
-    return _pick_two_slots(df, group_col, col, bucket, plans, sizes).select(
-        group_col,
-        F.col("n").cast("bigint").alias("n"),
-        F.col("v_lo").cast("bigint").alias("v_lo"),
-        F.col("v_hi").cast("bigint").alias("v_hi"),
-        (
-            (F.col("v_lo").cast("double") + F.col("v_hi").cast("double"))
-            / F.lit(2.0)
-        ).alias("median"),
+    return (
+        picked.groupBy(group_col)
+        .agg(F.max("_gn").alias("n"), _by_tag("v_lo", col), _by_tag("v_hi", col))
+        .select(
+            group_col,
+            F.col("n").cast("bigint").alias("n"),
+            F.col("v_lo").cast("bigint").alias("v_lo"),
+            F.col("v_hi").cast("bigint").alias("v_hi"),
+            (
+                (F.col("v_lo").cast("double") + F.col("v_hi").cast("double"))
+                / F.lit(2.0)
+            ).alias("median"),
+        )
     )
 
 
@@ -466,7 +214,6 @@ def grouped_exact_rank(
     img_col: str,
     tie_col: str,
     n_buckets: int = 1024,
-    max_meta_rows: int = 2_000_000,
     bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Exact 1-based rank of every row within its group under the
@@ -476,77 +223,38 @@ def grouped_exact_rank(
         rank = (rows of the group in buckets below this row's bucket)
              + row_number within the (group, bucket) slice
 
-    Phase 1 is the shared two-phase machinery: a bounds scan (skipped
-    when the caller passes covering ``bounds``) + one per-(group,
-    bucket) count histogram the driver prefix-sums (same
-    ``max_meta_rows`` budget contract as the sibling operators).
-    Phase 2 is ONE data pass: prefix counts re-enter as a broadcast
-    relation keyed (group, bucket) and the only window partitions by
+    The rank-every-row shape: the plan frame's offsets re-enter keyed
+    (group, bucket) and the only window over raw rows partitions by
     (group, bucket) — a slice is ≈ group_n / n_buckets rows, so sort
-    parallelism grows with n_buckets instead of collapsing to one
-    task per group; the one full-data exchange is the same volume any
-    repartition pays. Cheaper than the r9 cut-point pick-pass plan
-    (grouped boundary-value picks + per-row comparisons — retired,
-    see git history) when every row needs its rank/tile anyway: no
-    pick pass, no pivot, one fewer scan; measured interleaved at
-    sf0.1: 1.5 s vs 2.2 s — and it also beat a straddle-bucket union
-    variant that ranked only cut-containing buckets but paid a second
-    scan + union, 2.0 s.
+    parallelism grows with n_buckets instead of collapsing to one task
+    per group.
 
     NULL semantics: rows with NULL ``img_col`` are dropped (ranks are
-    over non-null sort keys); NULL group keys fail loud (see
-    :func:`_reject_null_groups`). ``img_col`` must be an exact
-    integer order-image of the sort column and ``(img, tie)`` unique
-    per group. Returns df's columns plus ``_rank`` / ``_gn`` (bigint).
+    over non-null sort keys); a NULL group key is a group.
+    ``img_col`` must be an exact integer order-image of the sort
+    column and ``(img, tie)`` unique per group. Returns df's columns
+    plus ``_rank`` / ``_gn`` (bigint).
     """
-    clobbered = {"_b", "_pre", "_gn", "_rank"} & set(df.columns)
+    clobbered = {"_b", "_cnt", "_pre", "_gn", "_rank", f"_r{group_col}", "_r_b"} & set(df.columns)
     if clobbered:
         # withColumn silently REPLACES same-named columns, and the
-        # prefix join would make _gn ambiguous — same guard contract
+        # plan join would make _gn ambiguous — same guard contract
         # as salted_topk (a re-ranked frame still carrying _rank/_gn
         # from a prior call is the realistic trigger)
         raise ValueError(
             f"grouped_exact_rank: input already has reserved column(s) "
             f"{sorted(clobbered)}; rename or drop them first"
         )
-    g, img = F.col(group_col), F.col(img_col)
-    d = df.filter(img.isNotNull())
-    lo, hi = _covering_bounds(d, img_col, bounds, "grouped_exact_rank")
-    bucket = _int_bucket(img_col, lo, hi, n_buckets)
-    hist_df = d.groupBy(g.alias("_g"), bucket.alias("_b")).agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    per_group = _grouped_hist(
-        hist_df, "grouped_exact_rank", group_col, max_meta_rows
-    )
-    prefix_rows = []  # (group, bucket, rows_before_bucket, group_n)
-    for grp, counts in per_group.items():
-        n = sum(counts.values())
-        cum = 0
-        for b in sorted(counts):
-            prefix_rows.append((grp, b, cum, n))
-            cum += counts[b]
-    spark = df.sparkSession
-    prefix_schema = T.StructType(  # explicit schema: no sampling
-        # inference over the (possibly many) metadata rows
-        [
-            T.StructField(group_col, df.schema[group_col].dataType),
-            T.StructField("_b", T.LongType()),
-            T.StructField("_pre", T.LongType()),
-            T.StructField("_gn", T.LongType()),
-        ]
-    )
-    prefix_df = F.broadcast(  # bounded: one row per non-empty (g,b),
-        # ≤ max_meta_rows by the histogram budget guard above
-        spark.createDataFrame(prefix_rows, prefix_schema)
-    )
-    slice_rank = F.row_number().over(
-        Window.partitionBy(group_col, "_b").orderBy(img_col, tie_col)
+    d = _bucketed(df, img_col, bounds, n_buckets)
+    on = [group_col, "_b"]
+    # slice ranks before the plan join: the raw rows' scan and exchange
+    # then run beside phase 1 instead of waiting for its frame
+    sliced = d.withColumn(
+        "_rank", F.row_number().over(Window.partitionBy(*on).orderBy(img_col, tie_col))
     )
     return (
-        d.withColumn("_b", bucket)
-        .join(prefix_df, [group_col, "_b"])
-        .withColumn("_rank", (F.col("_pre") + slice_rank).cast("bigint"))
+        _join(sliced, _plan(d, [group_col]).drop("_cnt"), on)
+        .withColumn("_rank", (F.col("_pre") + F.col("_rank")).cast("bigint"))
         .withColumn("_gn", F.col("_gn").cast("bigint"))
         .drop("_b", "_pre")
     )
@@ -579,18 +287,15 @@ def grouped_percentile_cont_multi(
     group_col: str,
     specs: list[tuple[str, str, dict[str, float]]],
     n_buckets: int = 1024,
-    max_meta_rows: int = 2_000_000,
     bounds_map: dict[str, tuple[int, int]] | None = None,
 ) -> DataFrame:
     """Exact per-group CONTINUOUS percentiles (``percentile_cont`` /
     Spark ``percentile()`` semantics: linear interpolation between the
     two values straddling rank position ``q*(n-1)``) for SEVERAL
-    columns in the same two fixed passes — without buffering or
-    sorting any full group, and without re-scanning per column (the
-    r10 fusion: percentile-ing k columns used to cost k histogram
-    jobs + k pick passes; now every spec rides the same two scans via
-    an explode over (spec, bucket) pairs, which partial-aggregates /
-    filters down before any exchange).
+    columns in one pick — without buffering or sorting any full group,
+    and without re-scanning per column: each row explodes into one
+    (spec, bucket, value) cell per spec, and the spec index joins the
+    group key.
 
     ``specs`` is ``[(img_col, val_col, {name: q, ...}), ...]``:
     ``img_col`` an order-isomorphic INTEGER image of ``val_col``
@@ -603,29 +308,19 @@ def grouped_percentile_cont_multi(
     img_col → covering (lo, hi) (parquet footer statistics); missing
     entries are filled by one shared bounds scan for ALL specs.
 
-    The interpolation weights are driver-side IEEE doubles applying
-    the same ``(higher-pos)·v_lo + (pos-lower)·v_hi`` formula Spark's
-    Percentile and DuckDB's quantile_cont evaluate, so results are
-    bit-identical to both.
-
-    Phase 1: ONE scan builds per-(group, spec, bucket) counts
-    (≤ |groups|·|specs|·B rows of driver metadata, fail-loud past
-    ``max_meta_rows``); the driver walks each (group, spec)'s prefix
-    sums to locate, for every q, the bucket + residual rank of the
-    two straddling ranks. Phase 2: ONE scan ranks only the selected
-    bucket slices (~n/B rows per window partition) and picks those
-    rows; weights re-enter as a bounded |groups|-row broadcast frame
-    (the kth_smallest scalar policy).
+    The target ranks are ``floor(pos) + 1`` and ``ceil(pos) + 1`` with
+    ``pos = CAST(n - 1 AS DOUBLE) * q``, and the result is
+    ``(higher-pos)·v_lo + (pos-lower)·v_hi`` — the IEEE expressions
+    Spark's Percentile and DuckDB's quantile_cont evaluate, in SQL, so
+    results are bit-identical to both.
 
     NULL semantics are PER SPEC: each column's percentiles are over
     its own non-null values per group (matching ``percentile()``);
     a group all-null in one spec gets NULL for that spec's names and
-    drops out entirely only if all-null in every spec. NULL group
-    keys fail loud (see :func:`_reject_null_groups`). Returns
-    (group, <name> double for every q of every spec).
+    drops out entirely only if all-null in every spec. A NULL group
+    key is a group. Returns (group, <name> double for every q of
+    every spec).
     """
-    import math
-
     if not specs:
         raise ValueError("specs must name at least one column")
     all_names = [name for _, _, qs in specs for name in qs]
@@ -637,160 +332,48 @@ def grouped_percentile_cont_multi(
         for name, q in qs.items():
             if not (0.0 <= q <= 1.0):
                 raise ValueError(f"percentile {name}={q} outside [0, 1]")
-    g = F.col(group_col)
-    spark = df.sparkSession
-
-    bounds_map = dict(bounds_map or {})
-    missing = [img for img, _, _ in specs if img not in bounds_map]
-    if missing:
-        # one shared scan covers every spec lacking caller bounds
-        aggs = []
-        for img in missing:
-            aggs.append(F.min(img).alias(f"lo_{img}"))
-            aggs.append(F.max(img).alias(f"hi_{img}"))
-        row = df.agg(*aggs).first()
-        for img in missing:
-            bounds_map[img] = (row[f"lo_{img}"], row[f"hi_{img}"])
-
-    buckets = []  # per-spec bucket column expression
-    for img, _, _ in specs:
-        lo, hi = _covering_bounds(
-            df, img, bounds_map[img], "grouped_percentile_cont_multi"
-        )
-        buckets.append(_int_bucket(img, lo, hi, n_buckets))
-
-    # phase 1: one scan → per-(group, spec, bucket) counts. The
-    # explode multiplies rows ×|specs| BEFORE the partial aggregate,
-    # which collapses each map task to its distinct (g, t, b) keys —
-    # the exchange carries counts, not exploded rows. Null images
-    # yield null buckets and are filtered per spec.
-    pairs = F.array(
-        *[
-            F.struct(F.lit(i).alias("_t"), b.alias("_b"))
-            for i, b in enumerate(buckets)
-        ]
-    )
-    hist_df = (
-        df.select(g.alias("_g"), F.explode(pairs).alias("_p"))
-        .select("_g", F.col("_p._t").alias("_t"), F.col("_p._b").alias("_b"))
-        .filter(F.col("_b").isNotNull())
-        .groupBy("_g", "_t", "_b")
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    hist = hist_df.limit(max_meta_rows + 1).collect()
-    if len(hist) > max_meta_rows:
-        raise ValueError(
-            f"grouped_percentile_cont_multi: per-(group,spec,bucket) histogram "
-            f"exceeds max_meta_rows={max_meta_rows} (high-cardinality "
-            f"{group_col!r}?); lower n_buckets or raise max_meta_rows"
-        )
-    _reject_null_groups(hist, "grouped_percentile_cont_multi", group_col)
-    per: dict = {}  # (group, spec_idx) -> {bucket: count}
-    groups: dict = {}  # group -> insertion order marker
-    for r in hist:
-        per.setdefault((r["_g"], int(r["_t"])), {})[int(r["_b"])] = int(r["_n"])
-        groups.setdefault(r["_g"], None)
-
-    tags = [
-        f"{name}__{side}" for _, _, qs in specs for name in qs for side in ("lo", "hi")
-    ]
-    plans = []  # (group, spec_idx, bucket, residual_rank, tag)
-    weights = []  # one row per group: w_lo/w_hi per q (None = no data)
-    for grp in groups:
-        row_w: list = [grp]
-        for i, (_, _, qs) in enumerate(specs):
-            counts = per.get((grp, i))
-            if not counts:
-                row_w += [None, None] * len(qs)
-                continue
-            n = sum(counts.values())
-            for name, q in qs.items():
-                # IEEE-double position exactly as Spark's Percentile
-                # and DuckDB's quantile_cont compute it
-                pos = (n - 1) * q
-                lower = math.floor(pos)
-                higher = math.ceil(pos)
-                if higher == lower:
-                    w_lo, w_hi = 1.0, 0.0
-                else:
-                    w_lo = float(higher) - pos
-                    w_hi = pos - float(lower)
-                row_w += [w_lo, w_hi]
-                b, rk = _locate_rank(counts, lower + 1)
-                plans.append((grp, i, b, rk, f"{name}__lo"))
-                b, rk = _locate_rank(counts, higher + 1)
-                plans.append((grp, i, b, rk, f"{name}__hi"))
-        weights.append(tuple(row_w))
-    plan_schema = T.StructType(
-        [
-            T.StructField(group_col, df.schema[group_col].dataType),
-            T.StructField("_t", T.IntegerType()),
-            T.StructField("_b", T.LongType()),
-            T.StructField("_k", T.LongType()),
-            T.StructField("_tag", T.StringType()),
-        ]
-    )
-    plan_df = F.broadcast(  # bounded: 2·|qs| rows per (group, spec)
-        spark.createDataFrame(plans, plan_schema)
-    )
-    w_schema = T.StructType(
-        [T.StructField(group_col, df.schema[group_col].dataType)]
-        + [T.StructField(f"_w_{t}", T.DoubleType()) for t in tags]
-    )
-    w_df = F.broadcast(  # bounded: one row per group
-        spark.createDataFrame(weights, w_schema)
-    )
-
-    # phase 2: one scan → (group, spec, bucket, value) triples for the
-    # selected slices only; rank within each (g, spec, bucket) slice.
-    vals = F.array(
+    bounds = _covering_bounds(df, [img for img, _, _ in specs], bounds_map or {})
+    cells = F.array(
         *[
             F.struct(
                 F.lit(i).alias("_t"),
-                b.alias("_b"),
+                _int_bucket(img, *bounds[img], n_buckets).alias("_b"),
                 F.col(val).cast("double").alias("_v"),
             )
-            for i, (b, (_, val, _qs)) in enumerate(zip(buckets, specs))
+            for i, (img, val, _) in enumerate(specs)
         ]
     )
-    ranked = (
-        df.select(g.alias(group_col), F.explode(vals).alias("_p"))
-        .select(
-            group_col,
-            F.col("_p._t").alias("_t"),
-            F.col("_p._b").alias("_b"),
-            F.col("_p._v").alias("_v"),
-        )
-        .filter(F.col("_b").isNotNull())
-        .join(
-            plan_df.select(group_col, "_t", "_b").distinct(),
-            [group_col, "_t", "_b"],
-            "left_semi",
-        )
-        .withColumn(
-            "_rk",
-            # ordering by the value within a bucket == ordering by the
-            # integer image (order-isomorphic); ties share the value,
-            # so any row at the rank yields the same result
-            F.row_number().over(
-                Window.partitionBy(group_col, "_t", "_b").orderBy("_v")
-            ),
-        )
+    d = (
+        df.select(group_col, F.explode(cells).alias("_p"))
+        .select(group_col, "_p._t", "_p._b", "_p._v")
+        .filter(F.col("_b").isNotNull())  # null image: null bucket
     )
-    picked = ranked.join(plan_df, [group_col, "_t", "_b"]).filter(
-        F.col("_rk") == F.col("_k")
+
+    def pos(n: Column, q: float) -> Column:
+        return (n - 1).cast("double") * F.lit(q)
+
+    targets = []
+    for i, (_, _, qs) in enumerate(specs):
+        mine = F.col("_t") == i
+        for name, q in qs.items():
+            p = pos(F.col("_gn"), q)
+            targets.append((f"{name}__lo", F.when(mine, F.floor(p) + 1)))
+            targets.append((f"{name}__hi", F.when(mine, F.ceil(p) + 1)))
+    picked = _pick(d, [group_col, "_t"], "_v", targets)
+    wide = picked.groupBy(group_col).agg(
+        *[F.max(F.when(F.col("_t") == i, F.col("_gn"))).alias(f"_n{i}") for i in range(len(specs))],
+        *[_by_tag(t, "_v") for t, _ in targets],
     )
-    wide = picked.groupBy(group_col).pivot("_tag", tags).agg(F.first("_v"))
     outs = [F.col(group_col)]
-    for _, _, qs in specs:
-        for name in qs:
-            outs.append(
-                (
-                    F.col(f"_w_{name}__lo") * F.col(f"{name}__lo")
-                    + F.col(f"_w_{name}__hi") * F.col(f"{name}__hi")
-                ).alias(name)
-            )
-    return wide.join(w_df, group_col).select(*outs)
+    for i, (_, _, qs) in enumerate(specs):
+        for name, q in qs.items():
+            p = pos(F.col(f"_n{i}"), q)
+            lower, higher = F.floor(p), F.ceil(p)
+            same = higher == lower
+            w_lo = F.when(same, F.lit(1.0)).otherwise(higher.cast("double") - p)
+            w_hi = F.when(same, F.lit(0.0)).otherwise(p - lower.cast("double"))
+            outs.append((w_lo * F.col(f"{name}__lo") + w_hi * F.col(f"{name}__hi")).alias(name))
+    return wide.select(*outs)
 
 
 def grouped_quantile_twophase(
@@ -800,72 +383,30 @@ def grouped_quantile_twophase(
     q_num: int,
     q_den: int,
     n_buckets: int = 1024,
-    max_meta_rows: int = 2_000_000,
     bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Exact per-group discrete quantile (``percentile_disc``
     semantics: the value at rank ceil(q·n), 1-based) of an integer
-    column — the arbitrary-q generalization of
-    :func:`grouped_median_twophase`, same two fixed passes:
-    histogram-narrow, then rank only the selected bucket slices.
+    column — the pick shape with one target.
 
     q is a RATIONAL (q_num/q_den) so the target rank
-    ceil(q·n) = -(-q_num·n // q_den) stays in integer arithmetic —
-    a float q would put an IEEE rounding boundary exactly where
-    the rank flips and make the result engine- and libm-dependent.
+    ceil(q·n) = (q_num·n + q_den - 1) DIV q_den stays in integer
+    arithmetic — a float q would put an IEEE rounding boundary exactly
+    where the rank flips and make the result engine- and
+    libm-dependent. With q = k/n on one literal group this is the
+    exact k-th smallest.
 
-    NULL/budget semantics match grouped_median_twophase: non-null
-    ranks, all-null groups drop, |groups|·B driver metadata fails
-    loud past ``max_meta_rows``.
+    NULL semantics match grouped_median_twophase: non-null ranks,
+    all-null groups drop, a NULL group key is a group.
 
     Returns (group, n, value).
     """
     if not (0 < q_num <= q_den):
         raise ValueError(f"q must be in (0, 1]: got {q_num}/{q_den}")
-    g, c = F.col(group_col), F.col(col)
-    df = df.filter(c.isNotNull())
-    lo, hi = _covering_bounds(df, col, bounds, "grouped_quantile_twophase")
-    bucket = _int_bucket(col, lo, hi, n_buckets)
-    hist_df = df.groupBy(g.alias("_g"), bucket.alias("_b")).agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    per_group = _grouped_hist(
-        hist_df,
-        "grouped_quantile_twophase",
+    d = _bucketed(df.select(group_col, col), col, bounds, n_buckets)
+    rank = F.expr(f"({q_num} * _gn + {q_den - 1}) DIV {q_den}")
+    return _pick(d, [group_col], col, [("value", rank)]).select(
         group_col,
-        max_meta_rows,
-        hint=(
-            "lower n_buckets, raise max_meta_rows, or use a window-based "
-            "per-group quantile instead"
-        ),
-    )
-    plans = []  # (group, bucket, residual_rank)
-    sizes = {}
-    for grp, counts in per_group.items():
-        n = sum(counts.values())
-        sizes[grp] = n
-        k = -(-q_num * n // q_den)  # ceil(q*n), integer-exact
-        b, rk = _locate_rank(counts, k)
-        plans.append((grp, b, rk))
-    spark = df.sparkSession
-    plan_schema, size_schema = _plan_size_schemas(df, group_col, False)
-    plan_df = F.broadcast(  # bounded: one row per group, budget-guarded above
-        spark.createDataFrame(plans, plan_schema)
-    )
-    ranked = (
-        df.select(g.alias(group_col), c.alias(col), bucket.alias("_b"))
-        .join(plan_df.select(group_col, "_b"), [group_col, "_b"], "left_semi")
-        .withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy(group_col, "_b").orderBy(col)),
-        )
-    )
-    picked = ranked.join(plan_df, [group_col, "_b"]).filter(F.col("_rk") == F.col("_k"))
-    size_df = F.broadcast(  # bounded: one row per group
-        spark.createDataFrame(list(sizes.items()), size_schema)
-    )
-    return picked.join(size_df, group_col).select(
-        group_col,
-        F.col("n").cast("bigint").alias("n"),
+        F.col("_gn").cast("bigint").alias("n"),
         F.col(col).cast("bigint").alias("value"),
     )

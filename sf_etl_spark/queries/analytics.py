@@ -407,19 +407,16 @@ def ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale (r7 verdict task 1a — the partition-less ntile is GONE): the
 # per-customer spend aggregate and the customer join shuffle on
-# custkey; decile assignment is exact rank CUT-POINTS, not a global
-# sort. operators/orderstats.rank_cutpoints finds the 9 boundary rows
-# of the (c_acctbal DESC, c_custkey) order in one histogram pass plus
-# one bucket-sliced pick pass (ties broken by a window restricted to
-# the ≤9 boundary BUCKETS only); the 9 (value, key) pairs re-enter the
-# plan as literals and every row computes its decile by range
-# comparison — embarrassingly parallel, no row ever sorts against
-# another. The ordering key is the integer cents image of c_acctbal
-# (2-decimal by fixture; floor(x*100+0.5) is monotone-injective on
-# 2-decimal doubles, so cents-DESC == acctbal-DESC), negated so the
-# histogram machinery's ASC ranks express the DESC ordering.
-# Semantics are EXACTLY ntile(10): cut rank i = i*(N div 10) +
-# min(i, N mod 10) — the oracle keeps the literal ntile.
+# custkey; decile assignment is an exact rank, not a global sort.
+# operators/orderstats.grouped_exact_rank ranks every customer on one
+# literal group as (per-bucket offset from the lazy count frame) +
+# (row_number within its bucket slice of ~n/1024 rows), and
+# ntile_from_rank turns rank + n into the decile by integer DIV/MOD —
+# EXACTLY ntile(10) semantics, which the oracle keeps literally. The
+# ordering key is the integer cents image of c_acctbal (2-decimal by
+# fixture; floor(x*100+0.5) is monotone-injective on 2-decimal
+# doubles, so cents-DESC == acctbal-DESC), negated so the ASC rank
+# expresses the DESC ordering; c_custkey breaks ties.
 # ---------------------------------------------------------------------------
 
 
@@ -459,62 +456,49 @@ def ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY decile
     """,
     doc="decile lift/capture table over balance-scored customers, decimal end-to-end",
-    executes_on_construct=True,  # sentinel agg + rank_cutpoints: 4 bounded jobs
 )
 def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sf_etl_spark.operators.orderstats import rank_cutpoints
+    import math
+
+    from sf_etl_spark.operators.layout import footer_column_bounds
+    from sf_etl_spark.operators.orderstats import grouped_exact_rank, ntile_from_rank
 
     o = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     spend = o.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast(DEC)).alias("spend")
     )
-    scored = cust.join(
-        spend, cust["c_custkey"] == spend["o_custkey"], "left"
-    ).select(
-        "c_custkey",
-        "c_acctbal",
-        F.coalesce(F.col("spend"), F.lit(0).cast(DEC)).alias("spend"),
-    )
     # negated-cents key: ASC == (c_acctbal DESC); c_custkey uniquifies.
-    # Null balances re-enter as a DATA-DERIVED sentinel (max real key
-    # + 1, from one bounded agg) — ntile's ORDER BY c_acctbal DESC is
-    # NULLS LAST in both Spark and DuckDB, and the sentinel sorts
-    # after every real key, so the decile assignment matches ntile
-    # even when acctbal is nullable. A constant like LONG_MAX would
+    # Null balances take a sentinel key one past the largest real key
+    # — ntile's ORDER BY c_acctbal DESC is NULLS LAST in both Spark and
+    # DuckDB, and the sentinel sorts after every real key, so the
+    # decile assignment matches ntile even when acctbal is nullable.
+    # The key bounds come from the parquet footer statistics (no Spark
+    # job), else from one bounds scan. A constant like LONG_MAX would
     # be wrong at scale (r10 ADVICE): one null row would stretch the
     # key span past the 2^62 BIGINT fast-path guard (every row pays
     # DECIMAL(38,0) bucket arithmetic) and make the bucket width
-    # ~2^53, collapsing all real keys into a single bucket — the pick
-    # pass then window-sorts essentially the whole table.
+    # ~2^53, collapsing all real keys into a single bucket.
     neg_cents_real = (-F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))).cast(
         "bigint"
     )
-    mx = cust.agg(F.max(neg_cents_real).alias("mx")).first()["mx"]
-    sentinel = (int(mx) if mx is not None else 0) + 1
-    neg_cents = F.coalesce(neg_cents_real, F.lit(sentinel))
-    keyed = cust.select(
-        neg_cents.alias("_key"), F.col("c_custkey").alias("_tie")
+    fb = footer_column_bounds(f"{sf_dir}/customer.parquet", "c_acctbal")
+    if fb:  # the same IEEE image of the column's true max/min
+        lo, hi = -math.floor(fb[1] * 100 + 0.5), -math.floor(fb[0] * 100 + 0.5)
+    else:
+        lo, hi = cust.agg(F.min(neg_cents_real), F.max(neg_cents_real)).first()
+        lo, hi = (0, 0) if lo is None else (lo, hi)
+    scored = cust.join(
+        spend, cust["c_custkey"] == spend["o_custkey"], "left"
+    ).select(
+        F.lit(0).alias("_g"),
+        F.coalesce(neg_cents_real, F.lit(hi + 1)).alias("_key"),
+        "c_custkey",
+        F.coalesce(F.col("spend"), F.lit(0).cast(DEC)).alias("spend"),
     )
-    n = keyed.count()
-    if n < 10:
-        raise ValueError(f"decile_lift_table needs >= 10 customers, got {n}")
-    base, extra = n // 10, n % 10
-    ranks = [i * base + min(i, extra) for i in range(1, 10)]  # ntile(10) cuts
-    cuts = rank_cutpoints(keyed, "_key", "_tie", ranks)
-    # decile = 1 + number of cut rows strictly BEFORE this row in the
-    # (key ASC, tie ASC) order — 9 literal comparisons, no window
-    after_cut = [
-        F.when(
-            (F.col("_key") > F.lit(v))
-            | ((F.col("_key") == F.lit(v)) & (F.col("c_custkey") > F.lit(t_))),
-            1,
-        ).otherwise(0)
-        for v, t_ in (cuts[r] for r in ranks)
-    ]
-    decile = sum(after_cut[1:], after_cut[0]) + F.lit(1)
-    t = scored.withColumn("_key", neg_cents).select(
-        decile.alias("decile"), "spend"
+    ranked = grouped_exact_rank(scored, "_g", "_key", "c_custkey", bounds=(lo, hi + 1))
+    t = ranked.select(
+        ntile_from_rank("_rank", "_gn", 10).cast("int").alias("decile"), "spend"
     )
     g = t.groupBy("decile").agg(
         F.count(F.lit(1)).alias("n_customers"),

@@ -31,6 +31,19 @@ from pyspark.sql import functions as F
 from sf_etl_spark.queries import register
 from sf_etl_spark.sources import load_table
 
+
+def _cents_bounds(sf_dir: str) -> tuple[int, int] | None:
+    """Covering bounds of the cents image of ``o_totalprice`` from the
+    parquet footer statistics (a driver metadata read, no Spark job):
+    round() of the monotone cents map of the column's true min/max
+    covers every row's image. None when stats are absent, and the
+    order-statistics operator then scans for its bounds."""
+    from sf_etl_spark.operators.layout import footer_column_bounds
+
+    fb = footer_column_bounds(f"{sf_dir}/orders.parquet", "o_totalprice")
+    return (round(fb[0] * 100), round(fb[1] * 100)) if fb else None
+
+
 # (column, numeric?) — orders' full schema, the profile target.
 _COLS: list[tuple[str, bool]] = [
     ("o_orderkey", True),
@@ -98,18 +111,16 @@ def column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equal-WIDTH `histogram_totalprice` lane. Bucket assignment is exact
 # ntile semantics over the total order (value, key), computed WITHOUT
 # ranking whole groups: grouped_exact_rank (operators/orderstats.py)
-# derives every row's exact in-group rank as (broadcast per-bucket
-# prefix count) + (row_number within its (group, bucket) slice of
-# ~n/1024 rows), and ntile_from_rank turns rank + group size into
-# the tile by pure integer arithmetic — the r9 cut-point pick-pass
-# plan spent a whole extra scan + pivot to learn boundary VALUES this
-# plan never needs. The histogram's covering bounds come from the
-# parquet FOOTER statistics (zone-map metadata read, no Spark job;
-# falls back to a bounds scan when stats are absent), so the lane is
-# one metadata pass + ONE assignment pass. Bucket min/max are
-# observed values (no arithmetic), so lo/hi hash bit-equal with no
-# float tolerance; the oracle keeps the plain ntile window,
-# certifying the prefix-rank plan ≡ ntile.
+# derives every row's exact in-group rank as (per-bucket offset from
+# the lazy count frame) + (row_number within its (group, bucket) slice
+# of ~n/1024 rows), and ntile_from_rank turns rank + group size into
+# the tile by pure integer arithmetic. The histogram's covering bounds
+# come from the parquet FOOTER statistics (zone-map metadata read, no
+# Spark job; falls back to a bounds scan when stats are absent), so
+# the lane builds without a job and runs as one count pass + ONE
+# assignment pass. Bucket min/max are observed values (no arithmetic),
+# so lo/hi hash bit-equal with no float tolerance; the oracle keeps
+# the plain ntile window, certifying the prefix-rank plan ≡ ntile.
 # ---------------------------------------------------------------------------
 @register(
     "equidepth_histogram",
@@ -130,11 +141,9 @@ def column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority, bucket
     ORDER BY o_orderpriority, bucket
     """,
-    doc="per-group equi-depth (quartile) histogram of order totals, cut-point ntile",
-    executes_on_construct=True,  # cut-point pass collects bounded metadata
+    doc="per-group equi-depth (quartile) histogram of order totals, prefix-rank ntile",
 )
 def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sf_etl_spark.operators.layout import footer_column_bounds
     from sf_etl_spark.operators.orderstats import (
         grouped_exact_rank,
         ntile_from_rank,
@@ -147,12 +156,8 @@ def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact cents image of the 2-decimal double (order-isomorphic)
         F.round(F.col("o_totalprice") * 100).cast("long").alias("_img"),
     )
-    # covering img bounds from footer stats: round() of the monotone
-    # cents map of the column's true min/max covers every row's _img
-    fb = footer_column_bounds(f"{sf_dir}/orders.parquet", "o_totalprice")
-    bounds = (round(fb[0] * 100), round(fb[1] * 100)) if fb else None
     ranked = grouped_exact_rank(
-        o, "o_orderpriority", "_img", "o_orderkey", bounds=bounds
+        o, "o_orderpriority", "_img", "o_orderkey", bounds=_cents_bounds(sf_dir)
     )
     assigned = ranked.select(
         "o_orderpriority",
@@ -338,17 +343,20 @@ def distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Exact median without a global sort — the distributed-selection
-# operator (operators/orderstats.py) driven end-to-end: iterative
-# histogram narrowing finds the exact middle rank(s) of the order-
-# price distribution in O(log_B range) bounded scans, with O(B)
-# integers of driver traffic per round. The third point of the
-# quantile triangle the registry now covers: `percentiles_by_flag`
-# (per-group exact, two-phase), `kll_quantile_merge` (mergeable approx),
-# and this (global EXACT at scale — where a sort-based OFFSET k dies
-# and a sketch only bounds the error).
+# operator (operators/orderstats.py) driven end-to-end on one literal
+# group: the lazy count frame locates the bucket(s) holding the middle
+# rank(s) of the order-price distribution, and only those buckets are
+# ranked. Covering bounds come from the parquet footer, so the lane
+# builds without a Spark job and runs as one count pass + one pick
+# pass. The third point of the quantile triangle the registry covers:
+# `percentiles_by_flag` (per-group exact, two-phase),
+# `kll_quantile_merge` (mergeable approx), and this (global EXACT at
+# scale — where a sort-based OFFSET k dies and a sketch only bounds
+# the error). An empty input yields one row (n_orders 0, NULL values),
+# as the global aggregate does.
 #
 # The oracle IS the global sort (row_number over ORDER BY cents) —
-# the narrowing must agree with it to the cent, for both middle ranks
+# the pick must agree with it to the cent, for both middle ranks
 # and the even-n midpoint.
 # ---------------------------------------------------------------------------
 @register(
@@ -375,29 +383,26 @@ def distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS median_price
     FROM ks
     """,
-    doc="exact global median via iterative histogram narrowing (no global sort)",
-    executes_on_construct=True,
+    doc="exact global median via the two-phase bucket pick (no global sort)",
 )
 def exact_median_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sf_etl_spark.operators.orderstats import exact_median
+    from sf_etl_spark.operators.orderstats import grouped_median_twophase
 
     cents = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice").isNotNull())
         .select(
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents")
+            F.lit(0).alias("_g"),
+            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
         )
     )
-    n, v1, v2 = exact_median(cents, "cents")
-    return spark.range(1).select(
-        F.lit(n).cast("bigint").alias("n_orders"),
-        F.lit(v1).cast("bigint").alias("v1_cents"),
-        F.lit(v2).cast("bigint").alias("v2_cents"),
-        (
-            (F.lit(v1).cast("double") + F.lit(v2).cast("double"))
-            / F.lit(2.0)
-            / F.lit(100.0)
-        ).alias("median_price"),
+    med = grouped_median_twophase(cents, "_g", "cents", bounds=_cents_bounds(sf_dir))
+    # the one group's row, or the empty input's NULLs, as one row
+    return med.agg(
+        F.coalesce(F.max("n"), F.lit(0)).cast("bigint").alias("n_orders"),
+        F.max("v_lo").alias("v1_cents"),
+        F.max("v_hi").alias("v2_cents"),
+        (F.max("median") / F.lit(100.0)).alias("median_price"),
     )
 
 
@@ -483,9 +488,9 @@ def seasonal_anomaly_slots(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Per-group exact medians in two fixed passes (operators/orderstats.py
 # grouped_median_twophase): pass 1 = one scan → per-(group, bucket)
-# histogram (bounded metadata to the driver), pass 2 = one scan over
-# only the middle-rank buckets, windowed on ~n/B-row slices — the
-# same machinery `percentiles_by_flag` now runs on: when one group
+# count frame with lazy offsets, pass 2 = one scan over only the
+# middle-rank buckets, windowed on ~n/B-row slices — the same
+# machinery `percentiles_by_flag` runs on: when one group
 # holds billions of rows, buffering or sorting the whole group dies
 # and this shape doesn't. The oracle window-sorts each
 # group (row_number) — exactly the plan the operator avoids — and
@@ -518,11 +523,9 @@ def seasonal_anomaly_slots(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
-    doc="per-group exact median via two-pass histogram narrowing (no group sort)",
-    executes_on_construct=True,
+    doc="per-group exact median via the two-phase bucket pick (no group sort)",
 )
 def group_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sf_etl_spark.operators.layout import footer_column_bounds
     from sf_etl_spark.operators.orderstats import grouped_median_twophase
 
     cents = (
@@ -533,19 +536,15 @@ def group_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
         )
     )
-    # covering bounds from footer stats (no bounds job; scan fallback
-    # inside the operator when stats are absent)
-    fb = footer_column_bounds(f"{sf_dir}/orders.parquet", "o_totalprice")
-    bounds = (round(fb[0] * 100), round(fb[1] * 100)) if fb else None
     return grouped_median_twophase(
-        cents, "o_orderpriority", "cents", bounds=bounds
+        cents, "o_orderpriority", "cents", bounds=_cents_bounds(sf_dir)
     ).orderBy("o_orderpriority")
 
 
 # ---------------------------------------------------------------------------
 # Per-group exact p90 — the arbitrary-q generalization of the median
 # lane above (operators/orderstats.py grouped_quantile_twophase, same
-# two-pass histogram narrowing; percentile_disc semantics = value at
+# two-phase bucket pick; percentile_disc semantics = value at
 # rank ceil(0.9·n)). p90/p95/p99 are THE ops-metrics aggregates; the
 # rank is computed in integer arithmetic from the rational 9/10, so
 # no float decides which row wins. The oracle again window-sorts
@@ -575,11 +574,9 @@ def group_median_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
-    doc="per-group exact p90 (percentile_disc) via two-pass histogram narrowing",
-    executes_on_construct=True,
+    doc="per-group exact p90 (percentile_disc) via the two-phase bucket pick",
 )
 def group_p90_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sf_etl_spark.operators.layout import footer_column_bounds
     from sf_etl_spark.operators.orderstats import grouped_quantile_twophase
 
     cents = (
@@ -590,10 +587,8 @@ def group_p90_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
         )
     )
-    fb = footer_column_bounds(f"{sf_dir}/orders.parquet", "o_totalprice")
-    bounds = (round(fb[0] * 100), round(fb[1] * 100)) if fb else None
     return grouped_quantile_twophase(
-        cents, "o_orderpriority", "cents", q_num=9, q_den=10, bounds=bounds
+        cents, "o_orderpriority", "cents", q_num=9, q_den=10, bounds=_cents_bounds(sf_dir)
     ).orderBy("o_orderpriority")
 
 

@@ -1201,14 +1201,14 @@ def salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Exact percentiles (linear interpolation) per group, computed the way
-# a 100 TB engine must: two-phase histogram narrowing
+# a 100 TB engine must: the two-phase bucket pick
 # (operators/orderstats.py) instead of the exact-percentile AGGREGATE,
 # whose buffer collects every group value into one task (the one
 # scale-killer invisible to the window plan guard — r8 verdict task 4).
-# The interpolation weights are driver-side IEEE doubles applying the
-# same (higher-pos)·v_lo + (pos-lower)·v_hi formula Spark percentile()
-# and DuckDB quantile_cont() both use, so the output is bit-identical
-# to the r4-hash-verified aggregate plan. Bucketing keys on the exact
+# The interpolation weights are SQL IEEE expressions of the group size
+# applying the same (higher-pos)·v_lo + (pos-lower)·v_hi formula Spark
+# percentile() and DuckDB quantile_cont() both use, so the output is
+# bit-identical to the r4-hash-verified aggregate plan. Bucketing keys on the exact
 # cents image (fixtures are 2-decimal doubles; round(x·100) recovers
 # the integer cents exactly, and the image is order-isomorphic).
 # ---------------------------------------------------------------------------
@@ -1225,7 +1225,6 @@ def salted_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY l_returnflag
     """,
     doc="exact percentiles (median/p90/p25/p99) per return flag, two-phase",
-    executes_on_construct=True,  # histogram passes collect bounded metadata
 )
 def percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.operators.layout import footer_column_bounds
@@ -1242,12 +1241,12 @@ def percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("_price_c"),
     )
     # covering image bounds from parquet footer statistics (driver
-    # metadata read, no bounds job; round() of the monotone cents map
-    # of the column's true min/max covers every row's image); when
-    # stats are absent the multi operator runs ONE shared bounds scan
-    # for whatever is missing. Both columns then share one histogram
-    # scan and one pick pass (the r10 fusion) — and the result comes
-    # back as a single frame, so the old qty×price join is gone too.
+    # metadata read, no bounds job, so the lane builds lazily; round()
+    # of the monotone cents map of the column's true min/max covers
+    # every row's image); when stats are absent the multi operator runs
+    # ONE shared bounds scan for whatever is missing. Both columns then
+    # share one count scan and one pick pass (the r10 fusion) — and the
+    # result comes back as a single frame.
     bounds_map = {}
     qf = footer_column_bounds(f"{sf_dir}/lineitem.parquet", "l_quantity")
     pf = footer_column_bounds(f"{sf_dir}/lineitem.parquet", "l_extendedprice")
@@ -1425,22 +1424,20 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The rank functions partition by o_orderpriority — 5 groups, so a
 # plain window sorts the whole table in 5 tasks (the last grandfathered
-# constant-parallelism sort; r8 verdict task 5). Retired with a fully
-# LAZY two-level prefix rank: (1) every row gets a histogram bucket
-# from its exact cents image (the monotone bucket map needs no bounds
-# scan — cents div a fixed width); (2) row_number per (priority,
-# bucket) ranks ~n/B-row slices in parallel; (3) per-bucket counts are
-# a partial-agged ≤|priorities|·B-row frame whose running sum gives
-# each bucket's global offset (two windows over that pre-agg frame —
-# bounded metadata, never raw rows); (4) global rank = offset + local
-# rank, broadcast-joined back. The ordering key (o_totalprice,
-# o_orderkey) is unique per row, so peer groups are single rows and
-# rank == row_number; ntile/percent_rank/cume_dist then reduce to
-# per-row integer/double arithmetic on (rank, n) — the exact formulas
-# both engines evaluate: tile sizes n div T (+1 for the first
-# n mod T), pct_rank = (r-1)/(n-1), cume_dist = r/n. The RANGE frame
-# stays a real window — partitioned by o_custkey (key-proportional
-# parallelism), state bounded by a customer's 90-day order count.
+# constant-parallelism sort; r8 verdict task 5). Retired with the lazy
+# prefix rank of operators/orderstats.grouped_exact_rank: each row's
+# exact cents image gets a histogram bucket over the footer-statistics
+# bounds, row_number per (priority, bucket) ranks ~n/B-row slices in
+# parallel, and the per-bucket offsets come from windows over the
+# pre-aggregated ≤|priorities|·B count frame — never raw rows. The
+# ordering key (o_totalprice, o_orderkey) is unique per row, so peer
+# groups are single rows and rank == row_number; ntile/percent_rank/
+# cume_dist then reduce to per-row integer/double arithmetic on
+# (rank, n) — the exact formulas both engines evaluate: tile sizes
+# n div T (+1 for the first n mod T), pct_rank = (r-1)/(n-1),
+# cume_dist = r/n. The RANGE frame stays a real window — partitioned
+# by o_custkey (key-proportional parallelism), state bounded by a
+# customer's 90-day order count.
 # ---------------------------------------------------------------------------
 @register(
     "window_frames",
@@ -1461,75 +1458,35 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="ntile/percent_rank/cume_dist via two-level prefix rank + 90-day RANGE frame",
 )
 def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    N_BUCKETS = 1024
-    # bucket width derived from the data's covering bounds — parquet
-    # footer statistics (a driver metadata read, keeps the lane lazy),
-    # falling back to a bounds scan when stats are absent. The r9
-    # ADVICE fix: a WIDTH hardcoded for the ~$105k l_extendedprice
-    # domain saturated least(1023, ...) once o_totalprice reached
-    # $500k, collapsing ~2/3 of each priority into one sort slice —
-    # correctness held (rank = offset + local rank for any monotone
-    # bucket map) but the parallelism the rewrite promised didn't.
     from sf_etl_spark.operators.layout import footer_column_bounds
+    from sf_etl_spark.operators.orderstats import grouped_exact_rank, ntile_from_rank
 
     (o,) = _t(spark, sf_dir, "orders")
+    # covering bounds of the cents image from the parquet footer (a
+    # driver metadata read, keeps the lane lazy); without stats the
+    # operator scans for them
     fb = footer_column_bounds(f"{sf_dir}/orders.parquet", "o_totalprice")
-    if fb is None:
-        row = o.agg(
-            F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
-        ).first()
-        fb = (row["lo"], row["hi"])
-    lo_img, hi_img = round(fb[0] * 100), round(fb[1] * 100)
-    width = max(1, -(-(hi_img - lo_img + 1) // N_BUCKETS))
-    img = F.round(F.col("o_totalprice") * 100).cast("long")
     base = o.select(
         "o_orderkey",
         "o_orderpriority",
         "o_totalprice",
         "o_custkey",
         "o_orderdate",
-        # (img - lo) ≤ ~5e9 cents: double-exact, stays codegen'd
-        F.least(
-            F.lit(N_BUCKETS - 1),
-            F.floor((img - F.lit(lo_img)) / F.lit(width)),
-        ).alias("_b"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("_img"),
     )
-    counts = base.groupBy("o_orderpriority", "_b").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    # two windows over the ≤|priorities|·B pre-agg frame: running
-    # offset and per-priority total — bounded metadata, not raw rows
-    w_off = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = Window.partitionBy("o_orderpriority")
-    offsets = counts.select(
+    ranked = grouped_exact_rank(
+        base,
         "o_orderpriority",
-        "_b",
-        F.coalesce(F.sum("_cnt").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_cnt").over(w_tot).alias("_n"),
+        "_img",
+        "o_orderkey",
+        bounds=(round(fb[0] * 100), round(fb[1] * 100)) if fb else None,
     )
-    w_local = Window.partitionBy("o_orderpriority", "_b").orderBy(
-        "o_totalprice", "o_orderkey"
-    )
-    ranked = (
-        base.withColumn("_lrk", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), ["o_orderpriority", "_b"])
-        .withColumn("_r", (F.col("_off") + F.col("_lrk")).cast("long"))
-    )
-    # ntile(4) from (rank, n) — integer DIV/MOD, no double rounding
-    from sf_etl_spark.operators.orderstats import ntile_from_rank
-
-    tile = ntile_from_rank("_r", "_n", 4)
+    tile = ntile_from_rank("_rank", "_gn", 4)
     # unique ordering key → single-row peer groups → rank == row_number
-    pct_rank = F.when(F.col("_n") == 1, F.lit(0.0)).otherwise(
-        (F.col("_r") - 1).cast("double") / (F.col("_n") - 1).cast("double")
+    pct_rank = F.when(F.col("_gn") == 1, F.lit(0.0)).otherwise(
+        (F.col("_rank") - 1).cast("double") / (F.col("_gn") - 1).cast("double")
     )
-    cdist = F.col("_r").cast("double") / F.col("_n").cast("double")
+    cdist = F.col("_rank").cast("double") / F.col("_gn").cast("double")
     wt = (
         "OVER (PARTITION BY o_custkey ORDER BY o_orderdate "
         "RANGE BETWEEN INTERVAL 90 DAY PRECEDING AND CURRENT ROW)"

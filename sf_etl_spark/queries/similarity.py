@@ -60,6 +60,14 @@ def _dot(u: F.Column, v: F.Column) -> F.Column:
     return F.aggregate(F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda a, b: a + b)
 
 
+def _cos(u: F.Column, v: F.Column, nu: F.Column, nv: F.Column) -> F.Column:
+    """Cosine of *u* and *v* with norms *nu*, *nv* by the SQL fold, NULL
+    when a norm is zero — as DuckDB and the numpy kernel give, where a
+    plain divide raises DIVIDE_BY_ZERO under ANSI. Every other value
+    keeps the plain divide's bits."""
+    return F.try_divide(_dot(u, v), nu * nv)
+
+
 def _shuffle_partitions(spark: SparkSession) -> int:
     """``spark.sql.shuffle.partitions`` parsed defensively: the conf
     can be non-numeric (``auto`` under AQE-managed sessions) — fall
@@ -137,7 +145,7 @@ def exact_cosine_pairs(
         .repartition(n_part, "vec_b")
         .join(vb, "vec_b")
     )
-    cosine = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cosine = _cos(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
     return (
         cand.filter(cosine >= threshold)
         .select("vec_a", "vec_b", cosine.alias("cosine"))
@@ -198,7 +206,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # core (measured 10 s single-task at sf0.1 -> ~1 s spread)
     n_part = _shuffle_partitions(spark)
     a, b = n.repartition(n_part).alias("a"), n.alias("b")
-    cosine = _dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nm") * F.col("b.nm"))
+    cosine = _cos(F.col("a.v"), F.col("b.v"), F.col("a.nm"), F.col("b.nm"))
     return (
         a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
         .filter(cosine >= COS_THRESHOLD)
@@ -348,7 +356,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     err2 = F.zip_with("v", dq, lambda a, b: (a - b) * (a - b))
     mse = F.aggregate(err2, F.lit(0.0), lambda a, b: a + b) / DIM
     dqn = F.sqrt(F.aggregate(F.transform(dq, lambda x: x * x), F.lit(0.0), lambda a, b: a + b))
-    recon = _dot(F.col("v"), dq) / (F.col("nm") * dqn)
+    recon = _cos(F.col("v"), dq, F.col("nm"), dqn)
     return (
         q.select(
             "vec_id",
@@ -398,7 +406,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
         F.col("v").alias("qv"), F.col("nm").alias("qn")
     )
-    ccos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * F.col("qn"))
+    ccos = _cos(F.col("cv"), F.col("qv"), _norm(F.col("cv")), F.col("qn"))
     probe = (
         centers_df.crossJoin(F.broadcast(q))  # K rows × 1 row
         .select("cid", ccos.alias("ccos"))
@@ -406,7 +414,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(IVF_KM_NPROBE)
         .select("cid")
     )
-    cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     return (
         assigned.join(F.broadcast(probe), "cid")
         .crossJoin(F.broadcast(q))
@@ -462,7 +470,7 @@ def ann_ivf_kmeans_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
         F.col("v").alias("qv"), F.col("nm").alias("qn")
     )
-    ccos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * F.col("qn"))
+    ccos = _cos(F.col("cv"), F.col("qv"), _norm(F.col("cv")), F.col("qn"))
     probe = (
         centers_df.crossJoin(F.broadcast(q))
         .select("cid", ccos.alias("ccos"))
@@ -470,7 +478,7 @@ def ann_ivf_kmeans_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(IVF_KM_K)  # nprobe = K: every cell — agreement mode
         .select("cid")
     )
-    cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     return (
         assigned.join(F.broadcast(probe), "cid")
         .crossJoin(F.broadcast(q))
@@ -584,7 +592,7 @@ def decontaminate_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFram
     tr = n.filter(F.col("vec_id") % 10 != 0).select(
         F.col("vec_id").alias("train_id"), F.col("v").alias("tv"), F.col("nm").alias("tn")
     )
-    cosine = _dot(F.col("tv"), F.col("ev")) / (F.col("tn") * F.col("en"))
+    cosine = _cos(F.col("tv"), F.col("ev"), F.col("tn"), F.col("en"))
     return (
         tr.crossJoin(F.broadcast(ev))  # eval side broadcast: map-only scan
         .filter(cosine >= COS_THRESHOLD)
@@ -854,7 +862,7 @@ def ann_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nm").alias("qn"),
         )
     )
-    qcos = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    qcos = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     # salted two-phase top-k, not a full-corpus row_number per qid
     # (same rework as ann_matryoshka_recall, r10 verdict task 2)
     from sf_etl_spark.operators.topk import salted_topk
@@ -1042,11 +1050,13 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nm").alias("qn"),
         F.col("pnm").alias("pqn"),
     )
-    fcos = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
-    pcos = _dot(
+    fcos = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
+    pcos = _cos(
         F.slice(F.col("v"), 1, MRL_PREFIX_DIM),
         F.slice(F.col("qv"), 1, MRL_PREFIX_DIM),
-    ) / (F.col("pnm") * F.col("pqn"))
+        F.col("pnm"),
+        F.col("pqn"),
+    )
     scored = (
         n.crossJoin(F.broadcast(qs))
         .filter(F.col("vec_id") != F.col("qid"))
@@ -1200,7 +1210,7 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("vb"),
         F.col("nm").alias("nb"),
     )
-    pair_cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    pair_cos = _cos(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
     # within-cell candidate pairs: equi-join on cell id — O(n^2/K),
     # never corpus x corpus (guarded in tests/test_plans.py); vectors
     # ride inside the assign frame so no extra attach joins.
@@ -1449,7 +1459,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
         .limit(PQ_RERANK)
     )
-    cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     return (
         n.join(F.broadcast(short), "vec_id")
         .crossJoin(F.broadcast(q))
@@ -1559,7 +1569,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_part = _shuffle_partitions(spark)
     scores = _pq_adc_scores(cand.repartition(n_part), cb, q)
     short = scores.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(PQ_RERANK)
-    cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     return (
         n.join(F.broadcast(short), "vec_id")
         .crossJoin(F.broadcast(q))
@@ -1655,7 +1665,7 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = n.filter(F.col("vec_id").isin(*_EVAL_QUERIES)).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nm").alias("qn")
     )
-    qcos = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    qcos = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     brute = (
         n.crossJoin(F.broadcast(qs))
         .filter(F.col("vec_id") != F.col("qid"))
@@ -1973,7 +1983,7 @@ def ann_ivf_pq_trained_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
         F.col("v").alias("qv"), F.col("nm").alias("qn")
     )
-    ccos = _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * F.col("qn"))
+    ccos = _cos(F.col("cv"), F.col("qv"), _norm(F.col("cv")), F.col("qn"))
     probe = (
         centers_df.crossJoin(F.broadcast(q))  # K rows × 1 row
         .select("cid", ccos.alias("ccos"))
@@ -1990,7 +2000,7 @@ def ann_ivf_pq_trained_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agreement mode: NO shortlist cut — the exact re-rank sees every
     # ADC-scored candidate, so the top-10 is brute-force-equal while
     # the encode/ADC row set stays load-bearing through this join
-    cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     return (
         n.join(scores.select("vec_id"), "vec_id")
         .crossJoin(F.broadcast(q))
@@ -2097,7 +2107,7 @@ def ann_binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.asc("hamming"), F.asc("vec_id"))
         .limit(BQ_SHORTLIST)
     )
-    cosine = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     return (
         n.join(F.broadcast(short), "vec_id")
         .crossJoin(F.broadcast(q.select("qv", "qn")))
@@ -2200,7 +2210,7 @@ def ann_binary_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b2").alias("qb2"),
         )
     )
-    qcos = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    qcos = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     truth = salted_topk(
         n.crossJoin(F.broadcast(qs.select("qid", "qv", "qn")))
         .filter(F.col("vec_id") != F.col("qid"))

@@ -703,10 +703,11 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (|value − med| re-keys it; counts re-aggregate), so the whole
 # statistic costs one events scan + tiny-frame ops + one final
 # screen scan, fully lazy. For an UNBOUNDED value domain the count
-# frame degenerates to n rows — that regime belongs to the two-phase
-# operators of operators/orderstats.py (grouped_median_twophase,
-# grouped_quantile_twophase), which bucket an order-isomorphic integer
-# image of the value (e.g. cents of a 2-decimal value).
+# frame degenerates to n rows — that regime belongs to the lazy
+# two-phase pick of operators/orderstats.py (grouped_median_twophase,
+# grouped_quantile_twophase), which counts per (group, bucket) of an
+# order-isomorphic integer image of the value (e.g. cents of a
+# 2-decimal value) and ranks only the buckets holding the target.
 # ---------------------------------------------------------------------------
 @register(
     "robust_outliers",

@@ -27,7 +27,7 @@ from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, to
 from sf_etl_spark.queries.similarity import (
     _EVAL_QUERIES,
     PQ_RERANK,
-    _dot,
+    _cos,
     _pq_adc_scores,
     _shuffle_partitions,
 )
@@ -52,7 +52,7 @@ def _ivf_pq_recall(
     qs = n.filter(F.col("vec_id").isin(*_EVAL_QUERIES)).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nm").alias("qn")
     )
-    qcos = _dot(F.col("v"), F.col("qv")) / (F.col("nm") * F.col("qn"))
+    qcos = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
     truth = salted_topk(
         n.crossJoin(F.broadcast(qs))
         .filter(F.col("vec_id") != F.col("qid"))

@@ -493,11 +493,6 @@ _BROADCAST_ALLOWLIST: dict[str, tuple[int, str]] = {
     ),
     "pandas_udf_zscore": (1, "domain: per-status moments"),
     "geo_nearest_hub": (1, "bounded: 5 hub-coordinate literals"),
-    "window_frames": (
-        1,
-        "pre-agg: ≤|priorities|·1024-row bucket-offsets frame joined "
-        "back to assign global ranks",
-    ),
     "stratified_sample_exact": (
         3,
         "domain: 5 order priorities' alloc frame (hinted at the survivor "
@@ -543,8 +538,6 @@ _BROADCAST_ALLOWLIST: dict[str, tuple[int, str]] = {
 # below — NOT an exemption: the r6 defect class must be unable to land
 # in any registered lane. Audit taxonomy is the same as above.
 _BROADCAST_ALLOWLIST_CONSTRUCT: dict[str, tuple[int, str]] = {
-    "group_median_twophase": (3, "bounded: ≤max_meta_rows bucket plan re-entry (budget-guarded) + 1-row bounds"),
-    "group_p90_twophase": (3, "bounded: per-group rank plan joined twice (semi + pick) + per-group sizes (budget-guarded)"),
     "ann_ivf_kmeans_agreement": (3, "bounded: K centroids + probe lists + 1-row query"),
     "ann_recall_metrics": (6, "bounded: fixed query set + its driver-ranked probe lists"),
     "ann_ivf_pq_topk": (
@@ -561,18 +554,7 @@ _BROADCAST_ALLOWLIST_CONSTRUCT: dict[str, tuple[int, str]] = {
         "the returned plan",
     ),
     "dpp_partitioned_join": (1, "dim: month dimension"),
-    "percentiles_by_flag": (
-        6,
-        "bounded: per-call 2·|qs|·|flags|-row pick plan (hinted, "
-        "referenced twice: semi + pick join) + |flags|-row weights "
-        "frame, × 2 two-phase calls (budget-guarded)",
-    ),
     "scd2_point_in_time_join": (1, "dim: SCD2 history (dimension-sized by contract, see lane)"),
-    "equidepth_histogram": (
-        3,
-        "bounded: 3-cuts-per-priority pick plan (hinted, referenced "
-        "twice: semi + pick join) + |priorities|-row boundary frame",
-    ),
 }
 
 
@@ -708,7 +690,12 @@ _WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
     "sample_per_label_cap": (1, "post-cut: ≤ 8·40 hash-threshold survivors per language"),
     "stratified_sample_exact": (10, "pre-agg: 5-row allocation frames (3 windows × subtree reuse) + post-cut survivor rank"),
     "pack_token_shards": (1, "pre-agg: chunk-total frame, 4096× reduced; recurse the chunk split for more"),
-    "window_frames": (2, "pre-agg: running offset + per-priority total over the ≤|priorities|·1024 bucket-count frame (two-level prefix rank; raw rows rank per (priority, bucket) slice)"),
+    "window_frames": (1, "pre-agg: running offset + per-priority total (one Window node) over the ≤|priorities|·1024-row bucket-count frame of grouped_exact_rank; raw rows rank per (priority, bucket) slice"),
+    "equidepth_histogram": (1, "pre-agg: running offset + per-priority total over the ≤|priorities|·1024-row bucket-count frame of grouped_exact_rank; raw rows rank per (priority, bucket) slice"),
+    "group_median_twophase": (2, "pre-agg: running offset + per-priority total over the ≤|priorities|·1024-row bucket-count frame, printed once under the bucket semi-join and once under the pick join; raw rows rank per (priority, bucket) slice"),
+    "group_p90_twophase": (2, "pre-agg: running offset + per-priority total over the ≤|priorities|·1024-row bucket-count frame, printed once under the bucket semi-join and once under the pick join; raw rows rank per (priority, bucket) slice"),
+    "exact_median_histogram": (2, "pre-agg: running offset + total over the ≤1024-row bucket-count frame of one literal group, printed once under the bucket semi-join and once under the pick join; raw rows rank per bucket slice"),
+    "decile_lift_table": (3, "pre-agg: cumulative/total frames over the 10-row decile aggregate + running offset/total over the ≤1024-row bucket-count frame of grouped_exact_rank's one literal group"),
     "robust_outliers": (6, "pre-agg: cum/total sums over (type, value|dev) count frames bounded by |types|·|2-decimal value domain| (mode_per_group taxonomy; median subtree reuse under MAD + final screen triples the pair)"),
     # TINYDOMAIN class (r11): windows over the 5-query eval key are
     # post-cut phase-2 ranks of salted_topk (≤ k·64 survivors/qid) or
@@ -723,7 +710,6 @@ _WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
 }
 
 _WINDOW_ALLOWLIST_CONSTRUCT: dict[str, tuple[int, str]] = {
-    "decile_lift_table": (2, "pre-agg: cumulative/total frames over the 10-row decile aggregate"),
     "keyword_textrank": (1, "post-limit: 20-row rank"),
     "pagerank_topk": (1, "post-limit: 15-row rank"),
     "ann_recall_metrics": (4, "post-cut: salted-phase survivors ≤ 10·64 per eval query (truth + probed top-10, × subtree reuse in overlap/rr joins)"),
@@ -819,7 +805,8 @@ def _assert_windows_allowed(specs, allowlist, spark, sf_dir) -> None:
         f"{offenders} — either the window's input is provably bounded "
         f"(add an allowlist entry WITH the boundedness argument) or replace "
         f"it with a two-phase rank / cut-point / prefix-scan plan "
-        f"(see rank_cutpoints, the salted top-k, the hash-threshold samplers)"
+        f"(see orderstats.grouped_exact_rank, the salted top-k, the "
+        f"hash-threshold samplers)"
     )
 
 

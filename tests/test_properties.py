@@ -184,14 +184,49 @@ def test_gaps_and_islands_equals_brute_force_union(raw):
     assert n_islands == runs
 
 
+def _kth(df, k, n_buckets):
+    """The exact k-th smallest of ``x`` through the ungrouped pick:
+    percentile_disc at q = k/n on one literal group (rank ceil(q·n) = k)."""
+    from pyspark.sql import functions as F
+
+    from sf_etl_spark.operators.orderstats import grouped_quantile_twophase
+
+    n = df.filter(F.col("x").isNotNull()).count()
+    one = df.withColumn("_g", F.lit(0))
+    return grouped_quantile_twophase(one, "_g", "x", k, n, n_buckets=n_buckets).first()["value"]
+
+
+def _median(df):
+    """(n, v_lo, v_hi) of ``x`` through the ungrouped median pick."""
+    from pyspark.sql import functions as F
+
+    from sf_etl_spark.operators.orderstats import grouped_median_twophase
+
+    r = grouped_median_twophase(df.withColumn("_g", F.lit(0)), "_g", "x").first()
+    return r["n"], r["v_lo"], r["v_hi"]
+
+
+def _each_partitioning(spark, df):
+    """Yield *df* in 1 and 7 input partitions under
+    ``spark.sql.shuffle.partitions`` 1 and 7: an order statistic must
+    not depend on either."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        for shuffle in (1, 7):
+            spark.conf.set(key, str(shuffle))
+            for parts in (1, 7):
+                yield (shuffle, parts), df.repartition(parts)
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_kth_smallest_matches_python_sort(spark):
     import random
 
-    from sf_etl_spark.operators.orderstats import exact_median, kth_smallest
-
     rng = random.Random(42)
-    # adversarial spread: heavy duplicates + huge outliers so buckets
-    # are skewed and multiple narrowing rounds actually run
+    # adversarial spread: heavy duplicates + huge outliers, so almost
+    # every value shares one bucket and ranks resolve inside it
     vals = (
         [rng.randint(0, 50) for _ in range(500)]
         + [rng.randint(10**12, 10**12 + 10) for _ in range(7)]
@@ -200,27 +235,13 @@ def test_kth_smallest_matches_python_sort(spark):
     df = spark.createDataFrame([(v,) for v in vals], ["x"])
     ordered = sorted(vals)
     for k in [1, 2, 17, 255, 256, len(vals) - 1, len(vals)]:
-        assert kth_smallest(df, "x", k, n_buckets=16) == ordered[k - 1], k
-    n, v1, v2 = exact_median(df, "x")
+        assert _kth(df, k, n_buckets=16) == ordered[k - 1], k
+    n, v1, v2 = _median(df)
     assert n == len(vals)
     assert v1 == ordered[(n - 1) // 2] and v2 == ordered[n // 2]
 
 
-def test_kth_smallest_rejects_bad_k(spark):
-    import pytest as _pytest
-
-    from sf_etl_spark.operators.orderstats import kth_smallest
-
-    df = spark.createDataFrame([(1,), (2,)], ["x"])
-    with _pytest.raises(ValueError):
-        kth_smallest(df, "x", 0)
-    with _pytest.raises(ValueError):
-        kth_smallest(df, "x", 3)
-
-
 def test_kth_smallest_exact_beyond_double_precision(spark):
-    from sf_etl_spark.operators.orderstats import kth_smallest
-
     # values beyond 2^53 and a negative lo: the bucket index must be
     # computed in exact arithmetic or boundary values land in the
     # wrong bucket / the lo-subtraction wraps int64
@@ -229,7 +250,7 @@ def test_kth_smallest_exact_beyond_double_precision(spark):
     df = spark.createDataFrame([(v,) for v in vals], ["x"])
     ordered = sorted(vals)
     for k in range(1, len(vals) + 1):
-        assert kth_smallest(df, "x", k, n_buckets=4) == ordered[k - 1], k
+        assert _kth(df, k, n_buckets=4) == ordered[k - 1], k
 
 
 def test_cusum_closed_form_includes_empty_prefix(spark):
@@ -296,51 +317,73 @@ def test_grouped_median_matches_python_reference(spark):
         assert got[g][3] == statistics.median(vals)
 
 
-def test_kth_smallest_ignores_nulls(spark):
-    """r6 ADVICE: ranks are over the NON-NULL values — a null bucket
-    used to TypeError the driver-side histogram walk."""
-    from sf_etl_spark.operators.orderstats import exact_median, kth_smallest
+def test_kth_smallest_ignores_nulls(spark, tmp_path):
+    """Ranks are over the NON-NULL values, and an input with none
+    yields no group — so exact_median_histogram returns its oracle's
+    single row (n_orders 0, NULL values)."""
+    import duckdb
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from sf_etl_spark.operators.orderstats import grouped_median_twophase
+    from sf_etl_spark.queries import all_queries
+    from tests.conftest import TEST_SF_DIR
 
     df = spark.createDataFrame(
         [(None,), (7,), (None,), (1,), (5,), (None,)], "x int"
     )
-    assert [kth_smallest(df, "x", k, n_buckets=4) for k in (1, 2, 3)] == [1, 5, 7]
-    n, v1, v2 = exact_median(df, "x")
-    assert (n, v1, v2) == (3, 5, 5)
+    assert [_kth(df, k, n_buckets=4) for k in (1, 2, 3)] == [1, 5, 7]
+    assert _median(df) == (3, 5, 5)
+    none = df.filter("x > 100").withColumn("_g", F.lit(0))
+    assert grouped_median_twophase(none, "_g", "x").collect() == []
+
+    empty = str(tmp_path / "orders.parquet")
+    pq.write_table(pq.read_table(f"{TEST_SF_DIR}/orders.parquet").slice(0, 0), empty)
+    spec = all_queries()["exact_median_histogram"]
+    got = [tuple(r) for r in spec.fn(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{empty}')")
+    assert got == con.execute(spec.oracle).fetchall() == [(0, None, None, None)]
 
 
 def test_grouped_median_ignores_nulls_and_drops_allnull_groups(spark):
-    from sf_etl_spark.operators.orderstats import grouped_median_twophase
+    from pyspark.sql import functions as F
 
-    rows = [("a", 1), ("a", None), ("a", 3), ("b", None), ("c", 10)]
+    from sf_etl_spark.operators.orderstats import (
+        grouped_median_twophase,
+        grouped_percentile_cont_multi,
+        grouped_quantile_twophase,
+    )
+
+    rows = [("a", 1), ("a", None), ("a", 3), ("b", None), ("c", 10), ("d", None)]
     df = spark.createDataFrame(rows, "g string, x int")
     got = {
         r["g"]: (r["n"], r["median"])
         for r in grouped_median_twophase(df, "g", "x", n_buckets=8).collect()
     }
     assert got == {"a": (2, 2.0), "c": (1, 10.0)}
-
-
-def test_grouped_median_fails_loud_past_meta_budget(spark):
-    """r6 verdict task 5: the |groups|·B histogram is driver-side
-    metadata — a high-cardinality group column must raise, not OOM."""
-    import pytest
-
-    from sf_etl_spark.operators.orderstats import grouped_median_twophase
-
-    # 500 distinct groups × ≥1 occupied bucket > a 100-row budget
-    df = spark.range(500).selectExpr("cast(id as string) as g", "id as x")
-    with pytest.raises(ValueError, match="max_meta_rows"):
-        grouped_median_twophase(df, "g", "x", n_buckets=4, max_meta_rows=100)
-    # at/under budget still computes (each group occupies 1 bucket)
-    out = grouped_median_twophase(df, "g", "x", n_buckets=4, max_meta_rows=500)
-    assert out.count() == 500
+    got = {
+        r["g"]: (r["n"], r["value"])
+        for r in grouped_quantile_twophase(df, "g", "x", 1, 2, n_buckets=8).collect()
+    }
+    assert got == {"a": (2, 1), "c": (1, 10)}
+    # percentile_cont is null PER SPEC: a group all-null in one spec
+    # keeps its row with NULL there, and drops only if all-null in both
+    two = df.withColumn("y", F.when(F.col("g") == "b", F.lit(7)))
+    got = {
+        r["g"]: (r["mx"], r["my"])
+        for r in grouped_percentile_cont_multi(
+            two, "g", [("x", "x", {"mx": 0.5}), ("y", "y", {"my": 0.5})], n_buckets=8
+        ).collect()
+    }
+    assert got == {"a": (2.0, None), "b": (None, 7.0), "c": (10.0, None)}
 
 
 def test_grouped_quantile_matches_python_reference(spark):
     """grouped_quantile_twophase must equal the percentile_disc
     reference (value at rank ceil(q*n)) on adversarial group shapes:
-    duplicate-heavy, single-row, and wide-spread groups."""
+    duplicate-heavy, single-row, and wide-spread groups — under any
+    input partitioning and shuffle width."""
     import math
 
     from sf_etl_spark.operators.orderstats import grouped_quantile_twophase
@@ -353,19 +396,20 @@ def test_grouped_quantile_matches_python_reference(spark):
     }
     rows = [(g, v) for g, vals in data.items() for v in vals]
     df = spark.createDataFrame(rows, "g string, x long")
-    for q_num, q_den in ((1, 2), (9, 10), (99, 100), (1, 100), (1, 1)):
-        got = {
-            r["g"]: (r["n"], r["value"])
-            for r in grouped_quantile_twophase(
-                df, "g", "x", q_num, q_den, n_buckets=16
-            ).collect()
-        }
-        want = {}
-        for g, vals in data.items():
-            s = sorted(vals)
-            k = math.ceil(q_num * len(s) / q_den)
-            want[g] = (len(s), s[k - 1])
-        assert got == want, (q_num, q_den)
+    for parts, d in _each_partitioning(spark, df):
+        for q_num, q_den in ((1, 2), (9, 10), (99, 100), (1, 100), (1, 1)):
+            got = {
+                r["g"]: (r["n"], r["value"])
+                for r in grouped_quantile_twophase(
+                    d, "g", "x", q_num, q_den, n_buckets=16
+                ).collect()
+            }
+            want = {}
+            for g, vals in data.items():
+                s = sorted(vals)
+                k = math.ceil(q_num * len(s) / q_den)
+                want[g] = (len(s), s[k - 1])
+            assert got == want, (parts, q_num, q_den)
 
 
 def test_grouped_quantile_rejects_bad_q(spark):
@@ -381,9 +425,14 @@ def test_grouped_quantile_rejects_bad_q(spark):
 
 
 def test_rank_cutpoints_matches_python_sort(spark):
+    """The row at each cut rank k of the (k, t) order — read off the
+    exact prefix ranks of one literal group — is the k-th row of a
+    Python sort."""
     import random
 
-    from sf_etl_spark.operators.orderstats import rank_cutpoints
+    from pyspark.sql import functions as F
+
+    from sf_etl_spark.operators.orderstats import grouped_exact_rank
 
     rng = random.Random(7)
     # heavy ties on the key (cut ranks routinely land inside a tie
@@ -391,10 +440,14 @@ def test_rank_cutpoints_matches_python_sort(spark):
     rows = [(rng.randint(0, 20), i) for i in range(400)] + [
         (10**12 + rng.randint(0, 3), 1000 + i) for i in range(9)
     ]
-    df = spark.createDataFrame(rows, ["k", "t"])
+    df = spark.createDataFrame(rows, ["k", "t"]).withColumn("_g", F.lit(0))
     ordered = sorted(rows)
     ks = [1, 2, 40, 41, 100, 256, 300, 408, 409]
-    cuts = rank_cutpoints(df, "k", "t", ks, n_buckets=16)
+    ranked = grouped_exact_rank(df, "_g", "k", "t", n_buckets=16)
+    cuts = {
+        r["_rank"]: (r["k"], r["t"])
+        for r in ranked.filter(F.col("_rank").isin(ks)).collect()
+    }
     for k in ks:
         assert cuts[k] == ordered[k - 1], k
 
@@ -430,7 +483,10 @@ def test_grouped_exact_rank_matches_ntile_window(spark):
     """Prefix-rank tile assignment (grouped_exact_rank +
     ntile_from_rank) must reproduce ntile(T) OVER (PARTITION BY g
     ORDER BY img, tie) exactly — including groups smaller than T,
-    heavy ties, and remainder tiles."""
+    heavy ties, remainder tiles, a group whose every value shares one
+    bucket, and a group whose few huge outliers leave nearly all rows
+    in its lowest bucket — under any input partitioning and shuffle
+    width."""
     import random
 
     from pyspark.sql import Window
@@ -448,21 +504,25 @@ def test_grouped_exact_rank_matches_ntile_window(spark):
         for _ in range(n):
             rows.append((g, rng.randint(0, 30), tid))  # heavy ties
             tid += 1
+    rows += [("one", 12, 1000 + i) for i in range(50)]  # one bucket
+    rows += [("skew", rng.randint(0, 20), 2000 + i) for i in range(400)]
+    rows += [("skew", 10**12 + rng.randint(0, 3), 3000 + i) for i in range(9)]
     df = spark.createDataFrame(rows, ["g", "img", "tie"])
     T = 4
-    ranked = grouped_exact_rank(df, "g", "img", "tie", n_buckets=8)
-    got = {
-        (r["g"], r["tie"]): r["bucket"]
-        for r in ranked.select(
-            "g", "tie", ntile_from_rank("_rank", "_gn", T).alias("bucket")
-        ).collect()
-    }
     w = Window.partitionBy("g").orderBy("img", "tie")
     want = {
         (r["g"], r["tie"]): r["bucket"]
         for r in df.select("g", "tie", F.ntile(T).over(w).alias("bucket")).collect()
     }
-    assert got == want
+    for parts, d in _each_partitioning(spark, df):
+        ranked = grouped_exact_rank(d, "g", "img", "tie", n_buckets=8)
+        got = {
+            (r["g"], r["tie"]): r["bucket"]
+            for r in ranked.select(
+                "g", "tie", ntile_from_rank("_rank", "_gn", T).alias("bucket")
+            ).collect()
+        }
+        assert got == want, parts
 
 
 def test_grouped_percentile_cont_bitmatches_percentile_agg(spark):
@@ -507,26 +567,11 @@ def test_kth_smallest_decimal_fallback_wide_span(spark):
     """A span too wide for int64 subtraction must take the decimal
     bucket path and still return exact ranks (lo very negative, hi
     very positive — (x - lo) would wrap a long)."""
-    from sf_etl_spark.operators.orderstats import kth_smallest
-
     vals = [-(1 << 62) - 3, -(1 << 61), -7, 0, 11, (1 << 61), (1 << 62) + 5]
     df = spark.createDataFrame([(v,) for v in vals], ["x"])
     s = sorted(vals)
     for k in (1, 3, 4, 7):
-        assert kth_smallest(df, "x", k, n_buckets=4) == s[k - 1], k
-
-
-def test_rank_cutpoints_rejects_bad_ranks(spark):
-    import pytest as _pytest
-
-    from sf_etl_spark.operators.orderstats import rank_cutpoints
-
-    df = spark.createDataFrame([(1, 1), (2, 2)], ["k", "t"])
-    assert rank_cutpoints(df, "k", "t", []) == {}
-    with _pytest.raises(ValueError):
-        rank_cutpoints(df, "k", "t", [0])
-    with _pytest.raises(ValueError):
-        rank_cutpoints(df, "k", "t", [3])
+        assert _kth(df, k, n_buckets=4) == s[k - 1], k
 
 
 def test_event_pattern_cap_bounds_power_user(spark, tmp_path):
@@ -567,27 +612,50 @@ def test_event_pattern_cap_bounds_power_user(spark, tmp_path):
     assert out_full["n_matched"] == 2
 
 
-def test_grouped_operators_reject_null_group_keys(spark):
-    """The grouped two-phase operators re-enter driver plans via inner
-    equi-joins, so a NULL group key would silently drop its rows —
-    they must fail loud instead (r9 ADVICE)."""
-    import pytest as _pytest
+def test_grouped_operators_treat_null_group_as_group(spark):
+    """A NULL group key is a group, as in SQL GROUP BY / PARTITION BY:
+    every operator matches the window or aggregate plan it replaces,
+    NULL group included."""
+    import struct
+
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     from sf_etl_spark.operators.orderstats import (
         grouped_exact_rank,
         grouped_median_twophase,
+        grouped_percentile_cont_multi,
         grouped_quantile_twophase,
     )
 
-    df = spark.createDataFrame(
-        [("a", 1, 1), (None, 2, 2), ("b", 3, 3)], ["g", "img", "tie"]
+    rows = [("a", 1, 1), (None, 2, 2), ("b", 3, 3), (None, 9, 4), (None, 5, 5), ("a", 4, 6)]
+    df = spark.createDataFrame(rows, "g string, img long, tie long")
+    got = {
+        r["tie"]: (r["_rank"], r["_gn"])
+        for r in grouped_exact_rank(df, "g", "img", "tie", n_buckets=4).collect()
+    }
+    rank = F.row_number().over(Window.partitionBy("g").orderBy("img", "tie"))
+    size = F.count(F.lit(1)).over(Window.partitionBy("g"))
+    assert got == {r[0]: (r[1], r[2]) for r in df.select("tie", rank, size).collect()}
+
+    def by_group(frame, *cols):
+        return {r["g"]: tuple(r[c] for c in cols) for r in frame.collect()}
+
+    agg = df.groupBy("g").agg(
+        F.count("img").alias("n"),
+        F.median("img").alias("median"),
+        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY img)").alias("value"),
+        F.percentile("img", 0.9).alias("p90"),
     )
-    with _pytest.raises(ValueError, match="NULL 'g' group key"):
-        grouped_exact_rank(df, "g", "img", "tie").collect()
-    with _pytest.raises(ValueError, match="NULL 'g' group key"):
-        grouped_median_twophase(df, "g", "img").collect()
-    with _pytest.raises(ValueError, match="NULL 'g' group key"):
-        grouped_quantile_twophase(df, "g", "img", q_num=1, q_den=2).collect()
+    assert by_group(grouped_median_twophase(df, "g", "img", n_buckets=4), "n", "median") == by_group(
+        agg, "n", "median"
+    )
+    assert by_group(grouped_quantile_twophase(df, "g", "img", 1, 2, n_buckets=4), "n", "value") == by_group(
+        agg, "n", "value"
+    )
+    cont = grouped_percentile_cont_multi(df, "g", [("img", "img", {"p90": 0.9})], n_buckets=4)
+    bits = lambda d: {g: struct.pack("<d", v) for g, (v,) in d.items()}  # noqa: E731
+    assert bits(by_group(cont, "p90")) == bits(by_group(agg, "p90"))
 
 
 def test_grouped_exact_rank_covering_bounds(spark):

@@ -17,8 +17,9 @@ micro-batches at DataFrame-construction time, so the gate runs real
 jobs — and leaves tempdirs — for exactly those names. That is the
 price of gating them at all; the list keeps the cost visible and lets
 `-m "not smoke_exec"` skip them for a job-free pure-analysis pass.
-The declaration is checked by behaviour: every other lane must run no
-Spark job and leave no streaming query active while it is built.
+The declaration is checked by behaviour in both directions: a declared
+lane must run at least one Spark job while it is built, and every other
+lane must run none and leave no streaming query active.
 The full oracle suite (`test_queries_oracle.py`) remains the
 correctness authority.
 """
@@ -68,6 +69,16 @@ def warm_footers(spark, sf_dir):
         load_table(spark, sf_dir, table)
 
 
+def _drop_managed_tables(spark) -> None:
+    """A lane may reuse managed tables an earlier call in the session
+    wrote (``bucketed_join_colocated`` keeps its bucketed copies), so
+    its later builds run no job. Dropping them builds a declared lane
+    as on its first call, whatever ran before it."""
+    for t in spark.catalog.listTables():
+        if not t.isTemporary:
+            spark.sql(f"DROP TABLE IF EXISTS `{t.name}`")
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -78,16 +89,24 @@ def warm_footers(spark, sf_dir):
     ],
 )
 def test_query_plan_analyzes(spark, sf_dir, warm_footers, name):
-    """Construct the lane and force analysis. A lane that does not
-    declare executes_on_construct must run no Spark job and leave no
-    streaming query active while its DataFrame is built. Over-declaring
-    only makes the pure-analysis pass smaller, so it is not checked."""
+    """Construct the lane and force analysis. A lane that declares
+    executes_on_construct must run at least one Spark job while its
+    DataFrame is built; any other lane must run none and leave no
+    streaming query active. A stale declaration would keep a lazy lane
+    out of the pure-analysis pass and its plan guards."""
+    if name in EXECUTE_ON_CONSTRUCT:
+        _drop_managed_tables(spark)
     streams_before = {q.id for q in spark.streams.active}
     jobs_before = _next_job_id(spark)
     df = SPECS[name].fn(spark, sf_dir)
     jobs = _next_job_id(spark) - jobs_before
     left_active = [q.name or q.id for q in spark.streams.active if q.id not in streams_before]
-    if name not in EXECUTE_ON_CONSTRUCT:
+    if name in EXECUTE_ON_CONSTRUCT:
+        assert jobs, (
+            f"{name} declares executes_on_construct but ran no Spark job "
+            "at construction; drop the flag"
+        )
+    else:
         assert not jobs and not left_active, (
             f"{name} ran {jobs} Spark job(s) and left streams {left_active} "
             "active at construction; declare executes_on_construct=True"

@@ -16,7 +16,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, top_cells
-from sf_etl_spark.queries.similarity import IVF_K, _dot, _norm, _seed_cells, _vec
+from sf_etl_spark.queries.similarity import (
+    IVF_K,
+    _cos,
+    _norm,
+    _seed_cells,
+    _vec,
+    exact_cosine_pairs,
+)
 from sf_etl_spark.sources import load_table
 
 #: the benchmark's sf0.1 fixture: 2,000 embeddings
@@ -36,7 +43,7 @@ def _sql_assign(df, cents):
     w = Window.partitionBy("vec_id").orderBy(F.col("ccos").desc(), "cid")
     return (
         n.crossJoin(F.broadcast(c))
-        .withColumn("ccos", _dot(F.col("v"), F.col("cv")) / (F.col("nm") * F.col("cn")))
+        .withColumn("ccos", _cos(F.col("v"), F.col("cv"), F.col("nm"), F.col("cn")))
         .withColumn("rn", F.row_number().over(w))
         .filter("rn = 1")
         .select("vec_id", "cid", "ccos", "nm")
@@ -77,7 +84,7 @@ def test_kernel_query_cosine_and_probe_match_sql_fold(spark):
         for r in nearest_centroid(e, cids, cents, query=qv[0]).collect()
     }
     q = e.filter("vec_id = 0").select(_vec().alias("qv"), _norm(_vec()).alias("qn"))
-    qcos = _dot(_vec(), F.col("qv")) / (_norm(_vec()) * F.col("qn"))
+    qcos = _cos(_vec(), F.col("qv"), _norm(_vec()), F.col("qn"))
     want = {r[0]: _bits(r[1]) for r in e.crossJoin(q).select("vec_id", qcos).collect()}
     assert got == want
     # the driver-side probe is the query row's own ranking
@@ -88,8 +95,7 @@ def test_kernel_query_cosine_and_probe_match_sql_fold(spark):
 
 def test_kernel_edge_rows(spark):
     """A zero-norm vector, a null embedding and an exact two-way tie
-    rank as the SQL fold ranks them (with ANSI off, where it returns
-    NULL instead of raising on the zero divisor)."""
+    rank as the SQL fold ranks them, in the default (ANSI) session."""
     schema = "vec_id bigint, embedding array<float>"
     cents = spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [-1.0, 0.0, 0.0])], schema
@@ -106,17 +112,31 @@ def test_kernel_edge_rows(spark):
     )
     cids, mat = collect_vectors(cents)
     got = _rows(nearest_centroid(rows, cids[::-1], mat[::-1]))
-    key = "spark.sql.ansi.enabled"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
-        want = _rows(_sql_assign(rows, cents))
-    finally:
-        spark.conf.set(key, prev)
+    want = _rows(_sql_assign(rows, cents))
     assert got == want
     assert got[10] == (1, None, _bits(0.0))
     assert got[11] == (1, None, None)
     assert got[12][0] == 1 and got[13][0] == 2 and got[14][0] == 1
+
+
+def test_sql_fold_cosine_is_null_on_zero_norm(spark):
+    """Under the default ANSI session a zero-norm vector gives a NULL
+    cosine, as DuckDB and the kernel do, instead of raising
+    DIVIDE_BY_ZERO: in the pair verification (the NULL pair fails the
+    threshold) and in a query cosine (zero-norm query and corpus rows)."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    e = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [2.0, 0.0]), (3, [0.0, 0.0])],
+        "vec_id bigint, embedding array<float>",
+    )
+    n = e.select("vec_id", _vec().alias("v"), _norm(_vec()).alias("nm"))
+    cand = spark.createDataFrame([(1, 2), (1, 3), (3, 3)], "vec_a bigint, vec_b bigint")
+    got = [tuple(r) for r in exact_cosine_pairs(n, cand, threshold=-1.0).collect()]
+    assert got == [(1, 2, 1.0)]
+    for qid, want in ((1, {1: 1.0, 2: 1.0, 3: None}), (3, {1: None, 2: None, 3: None})):
+        q = n.filter(F.col("vec_id") == qid).select(F.col("v").alias("qv"), F.col("nm").alias("qn"))
+        cos = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
+        assert {r[0]: r[1] for r in n.crossJoin(q).select("vec_id", cos).collect()} == want
 
 
 def test_kernel_zero_row_batch_and_no_centroids(spark):

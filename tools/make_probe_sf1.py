@@ -31,7 +31,7 @@ is gitignored scratch, not a fixture.
 ``.probe/sf1nulls`` variant: every table symlinked from the existing
 ``.probe/sf1`` output except ``customer``, which is rewritten with
 every 13th ``c_acctbal`` NULLed — so the ranked-analytics lanes
-(decile_lift_table / rank_cutpoints consumers) exercise their
+(decile_lift_table, through its NULLS-LAST sentinel) exercise their
 null-key path at probe volume, not just in the sf0.001 unit test
 (tests/test_analytics_nulls.py). Run WITHOUT the flag first.
 """
