@@ -96,26 +96,75 @@ def register(
 # listed names that are not registered are ignored (so reordering
 # never hides a query).
 #
-# Round-16 window, 16+34 = 50: (1) the 16 lanes
-# this optimization round TOUCHED — triangle_count (pair derivation
-# reshaped), the dedup-cluster pair (edge derivation reshaped),
-# linkage_survivorship (star verts-from-edges),
-# ann_ivf_pq_trained_agreement (grouped Lloyd fold), asof_pandas_merge
-# (collision + bucket-budget guards), and the 10 sfetl sink/source/
-# stream lanes riding the mockserver teardown fix; (2) 34 lanes of the
-# stale block (the standing scheme, stalest evidence first: the
-# r11-stale lanes, then the next lane in rotation), filling to 50.
+# Current window, 7+43 = 50: (1) the 7 lanes
+# the quantiser change touched — the four PQ lanes (ann_pq_adc_topk,
+# ann_ivf_pq_topk, ann_pq_recall_metrics, ann_ivf_pq_trained_agreement:
+# encode/ADC through the numpy PQ kernel), the two k-means IVF lanes
+# (driver-ranked probe cells) and embedding_quantize_int8 (zero-scale
+# division); (2) 43 lanes of the stale block (the standing scheme,
+# stalest evidence first: the 6 remaining r11-stale lanes, then 35
+# r12-stale and 2 r13-stale lanes), filling to 50.
 # Below the boundary, names keep their prior RELATIVE order (the
 # rotation tool does not re-sort them); the remaining
-# r11-evidence lanes are first in line for the next rotation. This
+# r13-evidence lanes are first in line for the next rotation. This
 # comment and the matching one in tests/test_registry_order.py must
 # agree on the counts (r12 ADVICE).
 _PRIORITY_ORDER = [
+    "ann_pq_adc_topk",
+    "ann_ivf_pq_topk",
+    "ann_pq_recall_metrics",
+    "ann_ivf_pq_trained_agreement",
+    "ann_ivf_kmeans_topk",
+    "ann_ivf_kmeans_agreement",
+    "embedding_quantize_int8",
+    "stream_stream_join_attribution",
+    "target_encoding_smoothed",
+    "time_weighted_average",
+    "topk_per_group",
+    "window_sliding_distinct",
+    "zone_map_pruned_scan",
+    "ab_test_lift",
+    "ann_ivf_topk",
+    "ann_srp_lsh_pairs",
+    "attribution_channels",
+    "bucketed_join_colocated",
+    "clean_text_normalize",
+    "corpus_prep_pipeline",
+    "decontaminate_embedding_cosine",
+    "decontaminate_ngram_overlap",
+    "dedup_embedding_pipeline",
+    "dedup_exact_substring",
+    "dedup_minhash_lsh",
+    "dedup_semdedup_prune",
+    "dedup_simhash",
+    "domain_mix_rebalance",
+    "dq_validation_report",
+    "gap_islands_activity",
+    "geo_nearest_hub",
+    "grouping_sets_flags",
+    "mode_per_group",
+    "null_semantics",
+    "q6_forecast_revenue",
+    "regression_by_group",
+    "repetition_metrics",
+    "snapshot_diff_cdc",
+    "source_json_roundtrip",
+    "source_orc_roundtrip",
+    "source_schema_evolution",
+    "split_train_test",
+    "stream_session_window",
+    "stream_stateful_user_agg",
+    "stream_stream_left_join_unmatched",
+    "stream_tumbling_1h",
+    "unpivot_metrics",
+    "vocab_top_terms",
+    "ann_binary_hamming_topk",
+    "ann_binary_recall_metrics",
+    # --- below the driver window (auto-rotated) ---
     "triangle_count",
     "dedup_cluster_components",
     "dedup_cluster_bigstar",
     "linkage_survivorship",
-    "ann_ivf_pq_trained_agreement",
     "asof_pandas_merge",
     "source_sfetl_roundtrip",
     "sink_sfetl_ingest_roundtrip",
@@ -160,8 +209,6 @@ _PRIORITY_ORDER = [
     "rolling_median_7d",
     "seasonal_anomaly_slots",
     "stream_dedup_exactly_once",
-    "stream_stream_join_attribution",
-    # --- below the driver window (auto-rotated) ---
     "quality_gopher_repetition",
     "window_suite",
     "agg_having",
@@ -214,7 +261,6 @@ _PRIORITY_ORDER = [
     "quality_gopher_published",
     "stream_stream_full_join_unmatched",
     "zorder_roundtrip",
-    "ann_ivf_kmeans_agreement",
     "bigram_novelty",
     "bloom_semi_join_revenue",
     "bm25_topk",
@@ -261,8 +307,6 @@ _PRIORITY_ORDER = [
     "timezone_local_hours",
     "multimodal_features_checksum",
     "quality_gopher_filter",
-    "ann_binary_hamming_topk",
-    "ann_binary_recall_metrics",
     "asof_purchase_click",
     "benford_first_digit",
     "boolean_search_and",
@@ -303,51 +347,6 @@ _PRIORITY_ORDER = [
     "window_session",
     "window_sliding",
     "window_tumbling",
-    "dedup_semdedup_prune",
-    "ann_pq_adc_topk",
-    "ann_ivf_pq_topk",
-    "ann_pq_recall_metrics",
-    "decontaminate_embedding_cosine",
-    "stream_tumbling_1h",
-    "stream_stateful_user_agg",
-    "stream_session_window",
-    "stream_stream_left_join_unmatched",
-    "ab_test_lift",
-    "ann_ivf_topk",
-    "ann_srp_lsh_pairs",
-    "attribution_channels",
-    "bucketed_join_colocated",
-    "clean_text_normalize",
-    "corpus_prep_pipeline",
-    "decontaminate_ngram_overlap",
-    "dedup_embedding_pipeline",
-    "dedup_exact_substring",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "domain_mix_rebalance",
-    "dq_validation_report",
-    "embedding_quantize_int8",
-    "gap_islands_activity",
-    "geo_nearest_hub",
-    "grouping_sets_flags",
-    "mode_per_group",
-    "null_semantics",
-    "q6_forecast_revenue",
-    "regression_by_group",
-    "repetition_metrics",
-    "snapshot_diff_cdc",
-    "source_json_roundtrip",
-    "source_orc_roundtrip",
-    "source_schema_evolution",
-    "split_train_test",
-    "unpivot_metrics",
-    "vocab_top_terms",
-    "ann_ivf_kmeans_topk",
-    "topk_per_group",
-    "time_weighted_average",
-    "zone_map_pruned_scan",
-    "target_encoding_smoothed",
-    "window_sliding_distinct",
 ]
 
 

@@ -24,8 +24,9 @@ Float discipline: every dot/norm is a fixed left-to-right fold over
 doubles starting at 0.0, in three engines: Spark ``aggregate`` (the
 ``_dot``/``_norm`` SQL folds), DuckDB ``list_reduce`` (the oracles)
 and the numpy fold of ``operators/vectors.py`` (the nearest-centroid
-kernel every IVF cell assignment runs). So cosines are bit-identical
-across engines and threshold comparisons agree.
+kernel every IVF cell assignment runs, and the PQ kernel every PQ
+encode and ADC distance runs). So cosines, PQ codes and ADC distances
+are bit-identical across engines and threshold comparisons agree.
 
 Reference parity note: the reference (nater540/sf-etl) has no vector
 ops at all — this is north-star surface per SURVEY.md §2.2 last row.
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sf_etl_spark.operators.skew import SALT_COL, replicate_build, salt_probe
-from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, top_cells
+from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, pq_adc, top_cells
 from sf_etl_spark.queries import register
 from sf_etl_spark.sources import load_table
 
@@ -105,7 +106,7 @@ def _seed_cells(
         .select("vec_id", "embedding")
     )
     cells = (ids >= 1) & (ids <= k)
-    return ids[cells], vecs[cells], {int(i): v for i, v in zip(ids[~cells], vecs[~cells])}
+    return ids[cells], vecs[cells], {int(i): v for i, v in zip(ids, vecs) if i in query_ids}
 
 
 def exact_cosine_pairs(
@@ -351,7 +352,10 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         / 127.0
     )
     s = n.withColumn("scale", scale)
-    q = s.withColumn("qv", F.transform("v", lambda x: _q8(x / F.col("scale"))))
+    # a zero vector's scale is 0: its quotients are NULL, as in DuckDB,
+    # where a plain divide raises under ANSI; greatest/least skip the
+    # NULL, so they quantise to 127 in both engines
+    q = s.withColumn("qv", F.transform("v", lambda x: _q8(F.try_divide(x, F.col("scale")))))
     dq = F.transform("qv", lambda x: x * F.col("scale"))  # dequantized
     err2 = F.zip_with("v", dq, lambda a, b: (a - b) * (a - b))
     mse = F.aggregate(err2, F.lit(0.0), lambda a, b: a + b) / DIM
@@ -381,9 +385,10 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale: fit() is Lloyd iterations over the corpus (each one
 # broadcast of K centers + one map-side-combined partial sum — the
 # textbook distributed k-means); transform() is a stateless broadcast
-# map. K here is 16 for a 500-vector fixture; at corpus scale K ~ √n
-# and nprobe scales with it, keeping the probe touch fraction
-# nprobe/K.
+# map. The K centres stay on the driver, where the query's probe
+# cells are ranked (`top_cells`); the probe is a literal cell filter.
+# K here is 16 for a 500-vector fixture; at corpus scale K ~ √n and
+# nprobe scales with it, keeping the probe touch fraction nprobe/K.
 # ---------------------------------------------------------------------------
 IVF_KM_K = 16
 IVF_KM_NPROBE = 4
@@ -397,30 +402,32 @@ IVF_KM_SEED = 7
     executes_on_construct=True,
 )
 def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _kmeans_probe_topk(spark, sf_dir, IVF_KM_NPROBE)
+
+
+def _kmeans_probe_topk(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
+    """Exact top-10 of the query within its *nprobe* nearest k-means
+    cells: the fit and assignment are `_kmeans_centers`, and the probe
+    cells are ranked on the driver (`top_cells`) and kept by a literal
+    cell filter."""
     n = normalized_vectors(spark, sf_dir)
-    # fit + assignment + K-row centers relation: _kmeans_centers (the
-    # centers re-enter the engine as a small broadcast relation — NOT
-    # as literals in an expression tree; Janino codegen stalls on big
-    # literal matrices, see ann_srp_lsh_pairs note)
-    assigned, centers_df = _kmeans_centers(spark, n)
-    q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
-        F.col("v").alias("qv"), F.col("nm").alias("qn")
-    )
-    ccos = _cos(F.col("cv"), F.col("qv"), _norm(F.col("cv")), F.col("qn"))
-    probe = (
-        centers_df.crossJoin(F.broadcast(q))  # K rows × 1 row
-        .select("cid", ccos.alias("ccos"))
-        .orderBy(F.col("ccos").desc(), "cid")
-        .limit(IVF_KM_NPROBE)
-        .select("cid")
-    )
-    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
+    assigned, (cids, cents) = _kmeans_centers(spark, n)
+    _, qv = collect_vectors(n.filter(F.col("vec_id") == _QUERY_VEC).select("vec_id", "v"))
+    probe = top_cells(qv, cids, cents, nprobe)[0].tolist()
+    cand = assigned.filter(F.col("cid").isin(probe) & (F.col("vec_id") != _QUERY_VEC))
+    return _query_top10(cand, qv[0], "cid")
+
+
+def _query_top10(rows: DataFrame, q: np.ndarray, *cols: str) -> DataFrame:
+    """The 10 rows of *rows* (vec_id, label, v, nm, ...) nearest the
+    driver-side query vector *q* by exact cosine, the SQL fold: (vec_id,
+    label, *cols*, cosine). *q* enters the plan as one literal array,
+    not as a joined row."""
+    qv = F.array(*[F.lit(float(x)) for x in q])
+    cosine = _cos(F.col("v"), qv, F.col("nm"), _norm(qv))
     return (
-        assigned.join(F.broadcast(probe), "cid")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != _QUERY_VEC)
-        .select("vec_id", "label", "cid", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), "vec_id")
+        rows.select("vec_id", "label", *cols, cosine.alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.asc("vec_id"))
         .limit(10)
     )
 
@@ -439,8 +446,8 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (recall at nprobe < K) is the rows-only lane's concern, gated by
 # tests/test_ivf_kmeans.py; `cid` is excluded from the output because
 # k-means cluster numbering is not oracle-restatable.
-# Scale: identical plan shape to the nprobe<K lane — broadcast centers,
-# broadcast probe set, one corpus scan.
+# Scale: identical plan shape to the nprobe<K lane — driver-ranked probe
+# cells as a literal filter, one corpus scan.
 # ---------------------------------------------------------------------------
 
 
@@ -465,28 +472,8 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     executes_on_construct=True,
 )
 def ann_ivf_kmeans_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = normalized_vectors(spark, sf_dir)
-    assigned, centers_df = _kmeans_centers(spark, n)
-    q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
-        F.col("v").alias("qv"), F.col("nm").alias("qn")
-    )
-    ccos = _cos(F.col("cv"), F.col("qv"), _norm(F.col("cv")), F.col("qn"))
-    probe = (
-        centers_df.crossJoin(F.broadcast(q))
-        .select("cid", ccos.alias("ccos"))
-        .orderBy(F.col("ccos").desc(), "cid")
-        .limit(IVF_KM_K)  # nprobe = K: every cell — agreement mode
-        .select("cid")
-    )
-    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
-    return (
-        assigned.join(F.broadcast(probe), "cid")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != _QUERY_VEC)
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(10)
-    )
+    # nprobe = K: every cell — agreement mode
+    return _kmeans_probe_topk(spark, sf_dir, IVF_KM_K).select("vec_id", "label", "cosine")
 
 
 # ---------------------------------------------------------------------------
@@ -1274,23 +1261,19 @@ def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Codebooks here are deterministic seed selection (subvectors of
 # vec_id 1..C) so DuckDB replays the whole lane hash-for-hash;
-# production trains per-subspace k-means (same fit machinery as
-# `ann_ivf_kmeans_topk`) with an unchanged encode/ADC plan shape.
+# production trains per-subspace k-means (`_pq_train_codebooks`) with
+# an unchanged encode/ADC plan shape.
 #
-# Scale: encode and ADC fuse into ONE pass + ONE shuffle. The
-# n*M*C expansion joins only broadcast relations (128-row codebook,
-# 1-row query) so it never leaves its map task; per subspace a
-# min(struct(d2, c, qd2)) picks the nearest codeword AND carries the
-# query's ADC table entry out with it — M=8 fixed agg expressions,
-# partial-aggregated map-side, so the single exchange moves n
-# pre-reduced rows (not n*M, let alone n*M*C). The ADC distance is
-# the M carried entries summed in fixed m order (bit-stable on both
-# engines). Both cuts (ADC shortlist, final top-10) are
-# orderBy+limit, which Spark plans as TakeOrderedAndProject —
-# per-partition partial top-k, no global sort shuffle. At deployment
-# the codes are a persisted byte column (M bytes/vector — the
-# 16x-64x compression PQ exists for) and only the re-rank touches
-# raw vectors.
+# Scale: the codebook (M x C x SUBDIM doubles) and the query sit on
+# the driver, collected at construction in one job; encode and ADC are
+# one narrow `pq_adc` pass (operators/vectors.py) over the corpus, no
+# shuffle. The ADC distance is the M table entries the codes pick,
+# summed in fixed m order (bit-stable in numpy and DuckDB). Both cuts
+# (ADC shortlist, final top-10) are orderBy+limit, which Spark plans
+# as TakeOrderedAndProject — per-partition partial top-k, no global
+# sort shuffle. At deployment the codes are a persisted byte column (M
+# bytes/vector — the 16x-64x compression PQ exists for) and only the
+# re-rank touches raw vectors.
 # Reference parity: no vector ops in the reference (north-star
 # surface, SURVEY.md §2.2 last row).
 # ---------------------------------------------------------------------------
@@ -1348,74 +1331,13 @@ def _sql_pq_ctes(cand_join: str = "", qtable: str = "q", per_qid: bool = False) 
     )"""
 
 
-def _pq_codebook(spark: SparkSession, n: DataFrame) -> DataFrame:
-    """Seed-selection PQ codebook: M x C = 128 rows of PQ_SUBDIM-dim
-    codewords (subvectors of vec_id 1..C) — broadcast-sized by
-    construction at any corpus scale. Production trains per-subspace
-    k-means (same fit machinery as ann_ivf_kmeans_topk) with an
-    unchanged encode/ADC plan shape."""
-    ms = spark.range(PQ_M).select(F.col("id").cast("int").alias("m"))
-    return (
-        n.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= PQ_C))
-        .crossJoin(F.broadcast(ms))
-        .select(
-            "m",
-            F.col("vec_id").alias("c"),
-            F.expr(f"slice(v, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})").alias("w"),
-        )
-    )
-
-
-def _pq_adc_scores(
-    base: DataFrame, cb: DataFrame, q: DataFrame, extra_keys: tuple[str, ...] = ()
-) -> DataFrame:
-    """(vec_id, v) frame -> (vec_id, adc_dist): PQ encode argmin AND
-    the query's ADC table entry in ONE partial-agged shuffle.
-
-    The expanded frame joins only broadcast relations (128-row
-    codebook, 1-row query), so the |base|*M*C fan-out never leaves its
-    map task; per subspace m a min(struct(d2, c, qd2)) picks the
-    nearest codeword ((d2, c) lexicographic — c unique makes it a
-    total order) and carries that codeword's ADC table entry out with
-    it. The M fixed agg expressions collapse map-side, so the single
-    exchange moves |base| pre-reduced rows (never |base|*M, let alone
-    |base|*M*C). ADC distance = the M carried entries summed in fixed
-    m order (left-to-right) — bit-identical to the oracle's
-    list(qd2 ORDER BY m) fold.
-
-    Callers must spread ``base`` (explicit repartition) when its
-    partitioning reflects file sizes rather than the fan-out work —
-    see the AQE-coalescing pathology note in PLANS.md round 12."""
-    subv = F.expr(f"slice(v, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})")
-    qsub = F.expr(f"slice(qv, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})")
-    d2 = F.aggregate(
-        F.zip_with(subv, F.col("w"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    qd2 = F.aggregate(
-        F.zip_with(qsub, F.col("w"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    expanded = (
-        base.crossJoin(F.broadcast(cb))
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", *extra_keys, "m", "c", d2.alias("d2"), qd2.alias("qd2"))
-    )
-    aggs = [
-        F.min(F.when(F.col("m") == m, F.struct("d2", "c", "qd2"))).alias(f"s{m}")
-        for m in range(PQ_M)
-    ]
-    # extra_keys (e.g. a query id when ``q`` carries several queries)
-    # widen the group: codes (d2, c) repeat per key, the carried qd2
-    # is key-specific — still one partial-agged shuffle, |base|*|q|
-    # pre-reduced rows
-    per = expanded.groupBy("vec_id", *extra_keys).agg(*aggs)
-    adc_dist = F.col("s0.qd2")
-    for m in range(1, PQ_M):
-        adc_dist = adc_dist + F.col(f"s{m}.qd2")
-    return per.select("vec_id", *extra_keys, adc_dist.alias("adc_dist"))
+def _pq_seed_codebook(cids: np.ndarray, vecs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The seed-selection PQ codebook from collected seed vectors: codeword
+    c of subspace m is the m-th PQ_SUBDIM slice of vector vec_id c, for
+    the ids 1..PQ_C among *cids*. Returns (codeword ids, an (M, C,
+    SUBDIM) array)."""
+    at = cids <= PQ_C
+    return cids[at], vecs[at].reshape(-1, PQ_M, PQ_SUBDIM).transpose(1, 0, 2)
 
 
 @register(
@@ -1438,35 +1360,23 @@ def _pq_adc_scores(
     LIMIT 10
     """,
     doc=f"PQ({PQ_M}x{PQ_C}) ADC shortlist({PQ_RERANK}) -> exact cosine re-rank top-10",
+    executes_on_construct=True,  # collects the codebook's seed vectors and the query
 )
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = normalized_vectors(spark, sf_dir)
-    cb = _pq_codebook(spark, n)
-    q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
-        F.col("v").alias("qv"), F.col("nm").alias("qn")
-    )
-    # explicit repartition before the expansion: the corpus scan's
-    # partitioning reflects FILE sizes, not the n*M*C work the
-    # broadcast expansion fans out map-side (a single-file fixture
-    # would run every distance fold on one core; at deployment the
-    # scan is many-partition and this is a near-no-op rebalance)
-    n_part = _shuffle_partitions(spark)
-    scores = _pq_adc_scores(n.select("vec_id", "v").repartition(n_part), cb, q)
-    # orderBy+limit => TakeOrderedAndProject (partial per-partition
-    # top-k, no global sort shuffle)
+    e = load_table(spark, sf_dir, "embeddings")
+    cids, vecs, qs = _seed_cells(e, PQ_C, _QUERY_VEC)
     short = (
-        scores.filter(F.col("vec_id") != _QUERY_VEC)
+        pq_adc(
+            e.filter(F.col("vec_id") != _QUERY_VEC).select("vec_id", "embedding"),
+            *_pq_seed_codebook(cids, vecs),
+            qs,
+        )
         .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
         .limit(PQ_RERANK)
+        .select("vec_id", "adc_dist")
     )
-    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
-    return (
-        n.join(F.broadcast(short), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", "adc_dist", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.asc("vec_id"))
-        .limit(10)
-    )
+    n = normalized_vectors(spark, sf_dir)
+    return _query_top10(n.join(F.broadcast(short), "vec_id"), qs[_QUERY_VEC], "adc_dist")
 
 
 # ---------------------------------------------------------------------------
@@ -1484,11 +1394,11 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # swaps in trained k-means for both quantizers (fit machinery =
 # ann_ivf_kmeans_topk) with an unchanged plan shape.
 #
-# Scale: construction collects the K centroids and the query and
-# ranks the probe cells on the driver; assignment and the probe cut
-# are one narrow nearest-centroid pass plus a literal cell filter (no
-# shuffle); PQ scoring via _pq_adc_scores is one
-# partial-agged shuffle of |candidates| rows; both cuts are
+# Scale: construction collects the K centroids, the codebook's seed
+# vectors and the query in one job and ranks the probe cells on the
+# driver; assignment and the probe cut are one narrow nearest-centroid
+# pass plus a literal cell filter, and PQ encode and ADC one narrow
+# `pq_adc` pass over the candidates (no shuffle); both cuts are
 # TakeOrderedAndProject. At deployment cell id is a partition column
 # (cell-pruned scans) and codes are a persisted M-byte column — the
 # probe then reads nprobe partitions of M-byte codes, never raw
@@ -1543,14 +1453,11 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     executes_on_construct=True,  # collects the centroids and the query
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = normalized_vectors(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
-    q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
-        F.col("v").alias("qv"), F.col("nm").alias("qn")
-    )
     # IVF cut: the probe cells are ranked on the driver, and the
     # narrow nearest-centroid pass keeps the vectors of those cells
-    cids, cents, qs = _seed_cells(e, IVF_K, _QUERY_VEC)
+    ids, vecs, qs = _seed_cells(e, max(IVF_K, PQ_C), _QUERY_VEC)
+    cids, cents = ids[ids <= IVF_K], vecs[ids <= IVF_K]
     probe = top_cells(qs[_QUERY_VEC][None], cids, cents, IVF_NPROBE)[0].tolist()
     cand = (
         nearest_centroid(
@@ -1560,23 +1467,16 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep_vec=True,
         )
         .filter(F.col("cid").isin(probe))
-        .select("vec_id", _vec().alias("v"))
+        .select("vec_id", "embedding")
     )
-    cb = _pq_codebook(spark, n)
-    # explicit repartition: the candidate frame is narrow and
-    # AQE-coalescible while the PQ expansion's fold work is not byte-
-    # visible (PLANS.md round-12 pathology note)
-    n_part = _shuffle_partitions(spark)
-    scores = _pq_adc_scores(cand.repartition(n_part), cb, q)
-    short = scores.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(PQ_RERANK)
-    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
-    return (
-        n.join(F.broadcast(short), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", "adc_dist", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.asc("vec_id"))
-        .limit(10)
+    short = (
+        pq_adc(cand, *_pq_seed_codebook(ids, vecs), qs)
+        .orderBy(F.asc("adc_dist"), F.asc("vec_id"))
+        .limit(PQ_RERANK)
+        .select("vec_id", "adc_dist")
     )
+    n = normalized_vectors(spark, sf_dir)
+    return _query_top10(n.join(F.broadcast(short), "vec_id"), qs[_QUERY_VEC], "adc_dist")
 
 
 # ---------------------------------------------------------------------------
@@ -1588,10 +1488,9 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (IVF), dimensionality (MRL), and code compression (PQ). Rankings
 # are deterministic end-to-end, so the metric itself hash-verifies.
 #
-# Scale: the multi-query ADC pass is the SAME single partial-agged
-# shuffle as the single-query lane — the query table is 5x128
-# broadcast rows and the group key widens to (vec_id, qid), so the
-# exchange carries n*|queries| pre-reduced rows; per-query cuts go
+# Scale: the multi-query ADC pass is the SAME narrow `pq_adc` pass as
+# the single-query lane, scoring each vector against all 5 collected
+# queries (n*|queries| rows out, no shuffle); per-query cuts go
 # through the lossless salted two-phase top-k (never a full-corpus
 # window per qid); the exact re-rank touches only the 5*PQ_RERANK
 # shortlist rows (post-cut frames may window-sort, per the r11
@@ -1657,6 +1556,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=f"PQ({PQ_M}x{PQ_C}) ADC+rerank recall@10 + MRR vs brute force over"
     f" {len(_EVAL_QUERIES)} queries",
+    executes_on_construct=True,  # collects the codebook's seed vectors and the eval queries
 )
 def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sf_etl_spark.operators.topk import salted_topk
@@ -1679,10 +1579,10 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["vec_id"],
         rank_col="brank",
     ).select("qid", "vec_id", "brank")
-    cb = _pq_codebook(spark, n)
-    n_part = _shuffle_partitions(spark)
-    scores = _pq_adc_scores(
-        n.select("vec_id", "v").repartition(n_part), cb, qs, extra_keys=("qid",)
+    e = load_table(spark, sf_dir, "embeddings")
+    cids, vecs, qvecs = _seed_cells(e, PQ_C, *_EVAL_QUERIES)
+    scores = pq_adc(
+        e.select("vec_id", "embedding"), *_pq_seed_codebook(cids, vecs), qvecs
     ).filter(F.col("vec_id") != F.col("qid"))
     short = salted_topk(
         scores,
@@ -1745,9 +1645,8 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sample (M sequential MLlib fits would re-scan the corpus M times per
 # iteration — at 100 TB that multiplier is the difference between one
 # pipeline pass and eight). The encode→ADC→re-rank plan downstream
-# of the fit is byte-for-byte the seeded lanes' (`_pq_adc_scores`),
-# which is the claim being proven: trained codebooks drop in with an
-# unchanged plan shape.
+# of the fit is the seeded lanes' (`pq_adc`), which is the claim being
+# proven: trained codebooks drop in with an unchanged plan shape.
 #
 # Verification follows the `ann_ivf_kmeans_agreement` pattern: run the
 # trained composition LOSSLESSLY (nprobe = K so cell pruning discards
@@ -1755,8 +1654,8 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly). The output is then the global brute-force top-10 whatever
 # the fit produced — which the DuckDB oracle computes independently —
 # while every trained stage stays load-bearing for the row SET: a
-# vector lost or duplicated by the coarse partition, the probe join,
-# the PQ encode argmin, or the ADC group-by changes the re-rank input
+# vector lost or duplicated by the coarse partition, the probe filter
+# or the PQ encode/ADC pass changes the re-rank input
 # and breaks the hash. Codebook QUALITY (recall at real nprobe /
 # shortlist cuts) is gated by tests/test_ivf_pq_trained.py, whose
 # recall@10 helper must score the trained fit at least as well as the
@@ -1764,8 +1663,9 @@ def ann_pq_recall_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: the grouped Lloyd fit is one shuffle of the sample's n·M
 # subvectors into PQ_M groups that run every iteration in place, and
-# the codebook itself is 128 rows, a bounded-METADATA collect (the same
-# convention as the zone-map/layout collects).
+# the codebook itself is M x C = 128 codewords, a bounded-METADATA
+# collect kept on the driver (the same convention as the
+# zone-map/layout collects).
 #
 # Training-input bound (r13 verdict task 1): a fit that re-scans the
 # FULL corpus per Lloyd iteration (and localCheckpoints its M-way
@@ -1826,19 +1726,21 @@ def _pq_train_subvectors(
 def _pq_train_codebooks(
     spark: SparkSession,
     n: DataFrame,
+    seed: tuple[np.ndarray, np.ndarray],
     iters: int = PQ_TRAIN_ITERS,
     train_sample_mod: int = 1,
-) -> DataFrame:
-    """Grouped per-subspace k-means: (m, c, w) codebooks for all PQ_M
-    subspaces trained together (*train_sample_mod* bounds the sample;
-    1 = full corpus).
+) -> tuple[np.ndarray, np.ndarray]:
+    """Grouped per-subspace k-means: the codebooks of all PQ_M
+    subspaces trained together on *n*'s (vec_id, v) rows
+    (*train_sample_mod* bounds the sample; 1 = full corpus), returned
+    like *seed* as (codeword ids, (M, C, SUBDIM) array).
 
-    Init = the deterministic seed codebook (`_pq_codebook`) — a
-    16-row pushdown-pruned lookup (vec_id BETWEEN 1 AND 16), not an
-    O(n) scan, so it stays on the full frame under sampling. The
-    trained result is a strict refinement of what the oracle-checked
-    seeded lanes use. Empty codewords keep their previous position
-    (the standard Lloyd dead-cluster convention).
+    Init = *seed*, the deterministic seed codebook
+    (`_pq_seed_codebook`); the trained result is a strict refinement
+    of what the oracle-checked seeded lanes use. Empty codewords keep
+    their previous position (the standard Lloyd dead-cluster
+    convention); an empty seed, or a sample that forms no group,
+    leaves the seed as it is.
 
     ALL ``iters`` Lloyd iterations run inside ONE
     ``groupBy("m").applyInPandas`` job: subspaces are independent, so
@@ -1854,30 +1756,17 @@ def _pq_train_codebooks(
     means: the codebook is pinned by a golden hash in
     tests/test_ivf_pq_trained.py at any core count.
     """
-    import numpy as np
     import pandas as pd
 
-    # codebook state lives driver-side: 128 rows of 8 doubles
-    code = {
-        (r["m"], r["c"]): [float(x) for x in r["w"]]
-        for r in _pq_codebook(spark, n).collect()
-    }
-    # Empty seed codebook (corpus lacks every seed vec_id): degrade to
-    # an empty trained codebook.
-    if not code:
-        return spark.createDataFrame([], "m int, c int, w array<double>")
-    seeds: dict[int, list[tuple[int, list[float]]]] = {}
-    for (m, c), w in code.items():
-        seeds.setdefault(m, []).append((c, w))
-    b_seeds = spark.sparkContext.broadcast(seeds)
+    cids, init = seed
+    if not len(cids):
+        return seed
 
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
         m = int(pdf["m"].iloc[0])
         X = np.vstack(pdf["sv"].to_numpy())
-        cw = {c: np.asarray(w) for c, w in b_seeds.value[m]}
+        C = init[m].copy()
         for _ in range(iters):
-            cs = sorted(cw)
-            C = np.vstack([cw[c] for c in cs])
             # chunked explicit (x-c)^2: bounds the rows x C x dim
             # intermediate to ~64 MB per chunk; argmin of the FIRST
             # minimum = the lowest-c tie-break
@@ -1886,35 +1775,29 @@ def _pq_train_codebooks(
                 chunk = X[lo : lo + 65536]
                 d2 = ((chunk[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
                 best[lo : lo + len(chunk)] = d2.argmin(axis=1)
-            for j, c in enumerate(cs):
+            for j in range(len(C)):
                 mask = best == j
                 if mask.any():
-                    cw[c] = X[mask].mean(axis=0)
-        cs = sorted(cw)
-        return pd.DataFrame({"m": m, "c": cs, "w": [list(cw[c]) for c in cs]})
+                    C[j] = X[mask].mean(axis=0)
+        return pd.DataFrame({"m": m, "j": range(len(C)), "w": list(C)})
 
     sub = _pq_train_subvectors(spark, n, train_sample_mod)
-    trained = sub.groupBy("m").applyInPandas(train, "m int, c int, w array<double>")
-    # bounded collect (<= M*C = 128 rows) and re-entry as a literal
-    # relation: consumers referencing the codebook several times must
-    # not re-run the training job, and the literal broadcasts for free.
-    # Seeded from `code`: an empty training sample forms no groups, and
-    # the fit then degrades to the seed codebook
-    out = dict(code)
-    out.update(
-        ((r["m"], r["c"]), [float(x) for x in r["w"]]) for r in trained.collect()
-    )
-    return spark.createDataFrame(
-        [(m, c, w) for (m, c), w in sorted(out.items())],
-        "m int, c int, w array<double>",
-    )
+    trained = sub.groupBy("m").applyInPandas(train, "m int, j int, w array<double>")
+    # bounded collect (M x C = 128 rows) into the seed's copy: an empty
+    # training sample forms no groups and leaves the seed codebook
+    out = init.copy()
+    for r in trained.collect():
+        out[r["m"], r["j"]] = r["w"]
+    return cids, out
 
 
-def _kmeans_centers(spark: SparkSession, n: DataFrame, train_sample_mod: int = 1):
+def _kmeans_centers(
+    spark: SparkSession, n: DataFrame, train_sample_mod: int = 1
+) -> tuple[DataFrame, tuple[np.ndarray, np.ndarray]]:
     """Coarse-quantizer fit + assignment — the shared machinery of the
     `ann_ivf_kmeans_*` lanes, extracted for the trained composition:
-    returns (assigned, centers_df) with assigned = (vec_id, label, v,
-    nm, cid) and centers_df = (cid, cv), a K-row broadcast relation.
+    returns (assigned, (cids, centers)) with assigned = (vec_id, label,
+    v, nm, cid) and the K centres a driver-side (K, DIM) array.
 
     *train_sample_mod* bounds the FIT input (the MLlib KMeans scans
     its input once per iteration — the part that cannot see 100 TB);
@@ -1941,11 +1824,8 @@ def _kmeans_centers(spark: SparkSession, n: DataFrame, train_sample_mod: int = 1
         .withColumnRenamed("prediction", "cid")
         .select("vec_id", "label", "v", "nm", "cid")
     )
-    centers_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cid int, cv array<double>",
-    )
-    return assigned, centers_df
+    centers = np.array(model.clusterCenters(), dtype=np.float64)
+    return assigned, (np.arange(len(centers), dtype=np.int64), centers)
 
 
 @register(
@@ -1977,37 +1857,19 @@ def ann_ivf_pq_trained_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fits (assignment transform, probe, encode, ADC, re-rank) sees the
     # FULL corpus, and agreement mode keeps the output brute-force-
     # equal (hash unchanged vs the r13 full-corpus-trained lane)
-    assigned, centers_df = _kmeans_centers(
-        spark, n, train_sample_mod=TRAIN_SAMPLE_MOD
+    assigned, (cids, cents) = _kmeans_centers(spark, n, train_sample_mod=TRAIN_SAMPLE_MOD)
+    ids, vecs, qs = _seed_cells(load_table(spark, sf_dir, "embeddings"), PQ_C, _QUERY_VEC)
+    # nprobe = K: agreement mode, nothing pruned
+    probe = top_cells(qs[_QUERY_VEC][None], cids, cents, IVF_KM_K)[0].tolist()
+    cand = assigned.filter(F.col("cid").isin(probe) & (F.col("vec_id") != _QUERY_VEC))
+    cb = _pq_train_codebooks(
+        spark, n, _pq_seed_codebook(ids, vecs), train_sample_mod=TRAIN_SAMPLE_MOD
     )
-    q = n.filter(F.col("vec_id") == _QUERY_VEC).select(
-        F.col("v").alias("qv"), F.col("nm").alias("qn")
-    )
-    ccos = _cos(F.col("cv"), F.col("qv"), _norm(F.col("cv")), F.col("qn"))
-    probe = (
-        centers_df.crossJoin(F.broadcast(q))  # K rows × 1 row
-        .select("cid", ccos.alias("ccos"))
-        .orderBy(F.col("ccos").desc(), "cid")
-        .limit(IVF_KM_K)  # nprobe = K: agreement mode, nothing pruned
-        .select("cid")
-    )
-    cand = assigned.join(F.broadcast(probe), "cid").filter(
-        F.col("vec_id") != _QUERY_VEC
-    )
-    cb = _pq_train_codebooks(spark, n, train_sample_mod=TRAIN_SAMPLE_MOD)
-    n_part = _shuffle_partitions(spark)
-    scores = _pq_adc_scores(cand.select("vec_id", "v").repartition(n_part), cb, q)
+    scores = pq_adc(cand.select("vec_id", F.col("v").alias("embedding")), *cb, qs)
     # agreement mode: NO shortlist cut — the exact re-rank sees every
     # ADC-scored candidate, so the top-10 is brute-force-equal while
     # the encode/ADC row set stays load-bearing through this join
-    cosine = _cos(F.col("v"), F.col("qv"), F.col("nm"), F.col("qn"))
-    return (
-        n.join(scores.select("vec_id"), "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", "label", cosine.alias("cosine"))
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(10)
-    )
+    return _query_top10(n.join(scores.select("vec_id"), "vec_id"), qs[_QUERY_VEC])
 
 
 # ---------------------------------------------------------------------------

@@ -18,28 +18,52 @@ import hashlib
 import os
 import struct
 
+import numpy as np
 import pytest
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sf_etl_spark.operators.topk import salted_topk
-from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, top_cells
+from sf_etl_spark.operators.vectors import (
+    collect_vectors,
+    fold_sqdist,
+    nearest_centroid,
+    pq_adc,
+    top_cells,
+)
 from sf_etl_spark.queries.similarity import (
     _EVAL_QUERIES,
+    PQ_C,
+    PQ_M,
     PQ_RERANK,
+    PQ_SUBDIM,
     _cos,
-    _pq_adc_scores,
-    _shuffle_partitions,
+    _pq_seed_codebook,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _seed(n: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """The seed PQ codebook of the normalized frame *n*."""
+    return _pq_seed_codebook(
+        *collect_vectors(n.filter(F.col("vec_id").between(1, PQ_C)).select("vec_id", "v"))
+    )
+
+
+def _distortion(n: DataFrame, cb: tuple[np.ndarray, np.ndarray]) -> float:
+    """Total encode distortion of *n*'s vectors under the codebook *cb*:
+    per (vector, subspace), the squared distance to the nearest codeword."""
+    _, x = collect_vectors(n.select("vec_id", "v"))
+    d2 = fold_sqdist(x.reshape(len(x), PQ_M, 1, PQ_SUBDIM), cb[1][None])
+    return float(d2.min(axis=2).sum())
+
+
 def _ivf_pq_recall(
     spark: SparkSession,
     n: DataFrame,
-    cents: DataFrame,
-    cb: DataFrame,
+    cents: tuple[np.ndarray, np.ndarray],
+    cb: tuple[np.ndarray, np.ndarray],
     nprobe: int,
 ) -> DataFrame:
     """recall@10 of an IVF-PQ composition over the shared 5-query eval
@@ -47,7 +71,8 @@ def _ivf_pq_recall(
     the two quantizers so seeded and trained variants are measured by
     the IDENTICAL probe/encode/ADC/re-rank plan.
 
-    *cents* is (cid, cv); *cb* is (m, c, w); both broadcast-sized."""
+    *cents* is (cids, K x DIM centres); *cb* is (codeword ids, M x C x
+    SUBDIM codebook); both driver-side arrays."""
 
     qs = n.filter(F.col("vec_id").isin(*_EVAL_QUERIES)).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv"), F.col("nm").alias("qn")
@@ -63,27 +88,25 @@ def _ivf_pq_recall(
         ["vec_id"],
     ).select("qid", "vec_id")
     # assignment and per-query probe cells by the numpy nearest-centroid
-    # kernel: centroids and the 5 query vectors ranked on the driver
-    cids, cmat = collect_vectors(cents.select("cid", "cv"))
+    # kernel: the 5 query vectors ranked on the driver
+    cids, cmat = cents
     qids, qmat = collect_vectors(qs.select("qid", "qv"))
     cells = top_cells(qmat, cids, cmat, nprobe)
     probe = spark.createDataFrame(
         [(int(q), int(c)) for q, row in zip(qids, cells) for c in row], "qid bigint, cid bigint"
     )
-    assign = nearest_centroid(
-        n.select("vec_id", F.col("v").alias("embedding")), cids, cmat, keep_vec=True
-    ).withColumnRenamed("embedding", "v")
-    cand = assign.join(F.broadcast(probe), "cid").filter(
-        F.col("vec_id") != F.col("qid")
+    vecs = n.select("vec_id", F.col("v").alias("embedding"))
+    cand = (
+        nearest_centroid(vecs, cids, cmat)
+        .join(F.broadcast(probe), "cid")
+        .filter(F.col("vec_id") != F.col("qid"))
     )
-    # ADC scores for the distinct candidate vectors × all 5 queries in
-    # one partial-agged shuffle, then restricted back to the per-query
-    # candidate pairs (cell membership differs per query)
-    base = cand.select("vec_id", "v").dropDuplicates(["vec_id"])
-    n_part = _shuffle_partitions(spark)
-    scores = _pq_adc_scores(
-        base.repartition(n_part), cb, qs, extra_keys=("qid",)
-    ).join(cand.select("vec_id", "qid"), ["vec_id", "qid"])
+    # ADC scores of every vector x all 5 queries in one narrow PQ pass,
+    # restricted to the per-query candidate pairs (cell membership
+    # differs per query)
+    scores = pq_adc(vecs, *cb, dict(zip(qids.tolist(), qmat))).join(
+        cand.select("vec_id", "qid"), ["vec_id", "qid"]
+    )
     short = salted_topk(
         scores,
         ["qid"],
@@ -129,7 +152,6 @@ def test_trained_ivf_pq_recall_beats_or_matches_seeded(spark):
         IVF_KM_NPROBE,
         IVF_NPROBE,
         _kmeans_centers,
-        _pq_codebook,
         _pq_train_codebooks,
         normalized_vectors,
     )
@@ -138,15 +160,14 @@ def test_trained_ivf_pq_recall_beats_or_matches_seeded(spark):
     assert IVF_NPROBE / IVF_K == IVF_KM_NPROBE / IVF_KM_K
 
     n = normalized_vectors(spark, SF_DIR)
-    seeded_cents = n.filter(
-        (F.col("vec_id") >= 1) & (F.col("vec_id") <= IVF_K)
-    ).select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    seeded = _ivf_pq_recall(
-        spark, n, seeded_cents, _pq_codebook(spark, n), IVF_NPROBE
-    ).collect()
+    seeded_cents = collect_vectors(
+        n.filter(F.col("vec_id").between(1, IVF_K)).select("vec_id", "v")
+    )
+    seed = _seed(n)
+    seeded = _ivf_pq_recall(spark, n, seeded_cents, seed, IVF_NPROBE).collect()
 
     _, trained_cents = _kmeans_centers(spark, n)
-    trained_cb = _pq_train_codebooks(spark, n)
+    trained_cb = _pq_train_codebooks(spark, n, seed)
     trained = _ivf_pq_recall(
         spark, n, trained_cents, trained_cb, IVF_KM_NPROBE
     ).collect()
@@ -162,36 +183,11 @@ def test_trained_pq_codebooks_cut_distortion(spark):
     """Each Lloyd iteration minimizes within-codeword distortion; the
     trained codebooks' total encode distortion must be strictly below
     the seed codebooks' (they refine the SAME init on the same data)."""
-    from sf_etl_spark.queries.similarity import (
-        PQ_SUBDIM,
-        _pq_codebook,
-        _pq_train_codebooks,
-        normalized_vectors,
-    )
+    from sf_etl_spark.queries.similarity import _pq_train_codebooks, normalized_vectors
 
     n = normalized_vectors(spark, SF_DIR)
-
-    def distortion(cb):
-        d2 = F.aggregate(
-            F.zip_with(
-                F.expr(f"slice(v, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"),
-                F.col("w"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
-        per = (
-            n.select("vec_id", "v")
-            .crossJoin(F.broadcast(cb))
-            .groupBy("vec_id", "m")
-            .agg(F.min(d2).alias("best"))
-        )
-        return per.agg(F.sum("best")).collect()[0][0]
-
-    seed = distortion(_pq_codebook(spark, n))
-    trained = distortion(_pq_train_codebooks(spark, n))
-    assert trained < seed
+    seed = _seed(n)
+    assert _distortion(n, _pq_train_codebooks(spark, n, seed)) < _distortion(n, seed)
 
 
 def test_sampled_training_subtree_reads_sample_not_corpus(spark):
@@ -201,7 +197,6 @@ def test_sampled_training_subtree_reads_sample_not_corpus(spark):
     row count is |sample|*M, not |corpus|*M, and the sample filter
     sits in its plan below the M-way expansion."""
     from sf_etl_spark.queries.similarity import (
-        PQ_M,
         _pq_train_subvectors,
         _train_sample,
         normalized_vectors,
@@ -231,28 +226,25 @@ def test_sampled_trained_quality_gate(spark):
     at equal probe fraction, and full-corpus encode distortion
     strictly below the seed codebooks' (the sample is i.i.d. by hash,
     so the refinement generalizes off-sample)."""
-    from pyspark.sql import functions as F
     from sf_etl_spark.queries.similarity import (
         IVF_K,
         IVF_KM_NPROBE,
         IVF_NPROBE,
-        PQ_SUBDIM,
         TRAIN_SAMPLE_MOD,
         _kmeans_centers,
-        _pq_codebook,
         _pq_train_codebooks,
         normalized_vectors,
     )
 
     n = normalized_vectors(spark, SF_DIR)
-    seeded_cents = n.filter(
-        (F.col("vec_id") >= 1) & (F.col("vec_id") <= IVF_K)
-    ).select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
-    seed_cb = _pq_codebook(spark, n)
+    seeded_cents = collect_vectors(
+        n.filter(F.col("vec_id").between(1, IVF_K)).select("vec_id", "v")
+    )
+    seed_cb = _seed(n)
     seeded = _ivf_pq_recall(spark, n, seeded_cents, seed_cb, IVF_NPROBE).collect()
 
     _, cents = _kmeans_centers(spark, n, train_sample_mod=TRAIN_SAMPLE_MOD)
-    cb = _pq_train_codebooks(spark, n, train_sample_mod=TRAIN_SAMPLE_MOD)
+    cb = _pq_train_codebooks(spark, n, seed_cb, train_sample_mod=TRAIN_SAMPLE_MOD)
     trained = _ivf_pq_recall(spark, n, cents, cb, IVF_KM_NPROBE).collect()
 
     assert [r["query_id"] for r in seeded] == [r["query_id"] for r in trained]
@@ -262,81 +254,53 @@ def test_sampled_trained_quality_gate(spark):
     assert trained_mean > 0
 
     # full-corpus distortion: sampled-trained < seed init
-    def distortion(codebook):
-        d2 = F.aggregate(
-            F.zip_with(
-                F.expr(f"slice(v, m * {PQ_SUBDIM} + 1, {PQ_SUBDIM})"),
-                F.col("w"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
-        per = (
-            n.select("vec_id", "v")
-            .crossJoin(F.broadcast(codebook))
-            .groupBy("vec_id", "m")
-            .agg(F.min(d2).alias("best"))
-        )
-        return per.agg(F.sum("best")).collect()[0][0]
-
-    assert distortion(cb) < distortion(seed_cb)
+    assert _distortion(n, cb) < _distortion(n, seed_cb)
 
 
 def test_lloyd_tolerates_missing_seed_ids(spark):
     """A corpus lacking some seed vec_ids (1..PQ_C) yields a smaller
     seed codebook; the Lloyd fit must train on
     whatever key subset exists instead of raising (r15 review
-    finding), and every assignment must reference a PRESENT c id."""
-    from pyspark.sql import functions as F
-    from sf_etl_spark.queries.similarity import (
-        PQ_M,
-        _pq_codebook,
-        _pq_train_codebooks,
-        normalized_vectors,
-    )
+    finding), and every codeword must keep a PRESENT c id."""
+    from sf_etl_spark.queries.similarity import _pq_train_codebooks, normalized_vectors
 
     n = normalized_vectors(spark, SF_DIR).filter(~F.col("vec_id").isin(5, 11))
-    seed = _pq_codebook(spark, n)
-    n_seed = seed.count()
-    cb = _pq_train_codebooks(spark, n, iters=2)
-    assert cb.count() == n_seed  # same key set in, same key set out
-    ids = {(r["m"], r["c"]) for r in cb.select("m", "c").collect()}
-    assert ids == {(r["m"], r["c"]) for r in seed.select("m", "c").collect()}
-    assert all(c not in (5, 11) for _, c in ids)
-    assert len({m for m, _ in ids}) == PQ_M
+    seed = _seed(n)
+    cids, cb = _pq_train_codebooks(spark, n, seed, iters=2)
+    assert cids.tolist() == seed[0].tolist()  # same key set in, same key set out
+    assert not {5, 11} & set(cids.tolist())
+    assert cb.shape == (PQ_M, PQ_C - 2, PQ_SUBDIM)
 
 
 def test_empty_seed_codebook_degrades_to_empty(spark):
     """A corpus lacking EVERY seed vec_id yields an empty seed
     codebook; the Lloyd fit must degrade to an empty trained codebook
-    instead of training zero codewords."""
-    from pyspark.sql import functions as F
-    from sf_etl_spark.queries.similarity import (
-        PQ_C,
-        _pq_train_codebooks,
-        normalized_vectors,
-    )
+    instead of training zero codewords, and scoring with it raises."""
+    from sf_etl_spark.queries.similarity import _pq_train_codebooks, normalized_vectors
 
     n = normalized_vectors(spark, SF_DIR).filter(F.col("vec_id") > PQ_C)
-    cb = _pq_train_codebooks(spark, n, iters=2)
-    assert cb.count() == 0
-    assert [f.name for f in cb.schema.fields] == ["m", "c", "w"]
+    cids, cb = _pq_train_codebooks(spark, n, _seed(n), iters=2)
+    assert len(cids) == 0
+    assert cb.shape == (PQ_M, 0, PQ_SUBDIM)
+    with pytest.raises(ValueError):
+        pq_adc(n.select("vec_id", F.col("v").alias("embedding")), cids, cb, {})
 
 
 # SHA-256 of the sorted (m, c, w) codebook `_pq_train_codebooks(spark, n,
-# iters=2)` fits on the sf0.001 embeddings: m and c as big-endian int64,
-# then w as big-endian doubles. Captured when a per-iteration literal-
-# expression Lloyd loop still ran beside the grouped fold and both gave
-# these exact bits, at local[1] and local[4].
+# seed, iters=2)` fits on the sf0.001 embeddings: m and c as big-endian
+# int64, then w as big-endian doubles. Captured when a per-iteration
+# literal-expression Lloyd loop still ran beside the grouped fold and
+# both gave these exact bits, at local[1] and local[4].
 GOLDEN_CODEBOOK_SHA256 = "ccde9269d00ce7109062ec5e27fe7a9f8cb758ea997d261873be01488bf2962f"
 
 
-def _codebook_sha256(cb: DataFrame) -> str:
+def _codebook_sha256(cb: tuple[np.ndarray, np.ndarray]) -> str:
     h = hashlib.sha256()
-    for r in sorted(cb.collect(), key=lambda r: (r["m"], r["c"])):
-        h.update(struct.pack(">qq", r["m"], r["c"]))
-        h.update(struct.pack(f">{len(r['w'])}d", *r["w"]))
+    cids, w = cb
+    for m in range(w.shape[0]):
+        for j, c in enumerate(cids):
+            h.update(struct.pack(">qq", m, c))
+            h.update(struct.pack(f">{w.shape[2]}d", *w[m, j]))
     return h.hexdigest()
 
 
@@ -355,12 +319,13 @@ def test_trained_codebook_matches_golden_hash(spark):
     if os.path.basename(SF_DIR.rstrip("/")) != "sf0.001":
         pytest.skip("the golden hash is of the sf0.001 fixture")
     n = normalized_vectors(spark, SF_DIR)
+    seed = _seed(n)
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     try:
         for parts in ("1", "7"):
             spark.conf.set(key, parts)
-            cb = _pq_train_codebooks(spark, n, iters=2)
+            cb = _pq_train_codebooks(spark, n, seed, iters=2)
             assert _codebook_sha256(cb) == GOLDEN_CODEBOOK_SHA256, parts
     finally:
         spark.conf.set(key, prev)
@@ -370,7 +335,6 @@ def test_empty_training_sample_keeps_seed_codebook(spark):
     """A sample that keeps no vector forms no Lloyd groups; the grouped
     fit must return the seed codebook, not an empty one."""
     from sf_etl_spark.queries.similarity import (
-        _pq_codebook,
         _pq_train_codebooks,
         _train_sample,
         normalized_vectors,
@@ -379,7 +343,8 @@ def test_empty_training_sample_keeps_seed_codebook(spark):
     n = normalized_vectors(spark, SF_DIR)
     mod = 1 << 62  # no xxhash64 of a fixture vec_id is a multiple
     assert _train_sample(n, mod).count() == 0
-    seed = {(r["m"], r["c"]): [float(x) for x in r["w"]] for r in _pq_codebook(spark, n).collect()}
-    assert seed
-    cb = _pq_train_codebooks(spark, n, iters=2, train_sample_mod=mod)
-    assert {(r["m"], r["c"]): r["w"] for r in cb.collect()} == seed
+    seed = _seed(n)
+    assert len(seed[0])
+    cids, cb = _pq_train_codebooks(spark, n, seed, iters=2, train_sample_mod=mod)
+    assert cids.tolist() == seed[0].tolist()
+    assert np.array_equal(cb, seed[1])

@@ -506,19 +506,6 @@ _BROADCAST_ALLOWLIST: dict[str, tuple[int, str]] = {
         "|langs|-row assert-guard frame itself",
     ),
     "ratio_to_parent_share": (2, "dim: nation + region"),
-    "ann_pq_adc_topk": (
-        5,
-        "bounded: M-row subspace range + M*C=128-row codebook + 1-row "
-        "query (2 re-entries: expansion + re-rank) + PQ_RERANK=50-row "
-        "shortlist",
-    ),
-    "ann_pq_recall_metrics": (
-        10,
-        "bounded: the 5-query eval set (brute pass + multi-query ADC "
-        "expansion + re-rank re-entries, appearing through the two "
-        "salted-topk subtrees) + M-row subspace range + 128-row "
-        "codebook — every hinted frame <= 5x128 rows by construction",
-    ),
     "ann_binary_hamming_topk": (
         3,
         "bounded: 1-row query code (Hamming pass) + BQ_SHORTLIST=50-row "
@@ -538,20 +525,14 @@ _BROADCAST_ALLOWLIST: dict[str, tuple[int, str]] = {
 # below — NOT an exemption: the r6 defect class must be unable to land
 # in any registered lane. Audit taxonomy is the same as above.
 _BROADCAST_ALLOWLIST_CONSTRUCT: dict[str, tuple[int, str]] = {
-    "ann_ivf_kmeans_agreement": (3, "bounded: K centroids + probe lists + 1-row query"),
     "ann_recall_metrics": (6, "bounded: fixed query set + its driver-ranked probe lists"),
-    "ann_ivf_pq_topk": (
-        5,
-        "bounded: 1-row query (expansion and re-rank re-entries) + M-row "
-        "subspace range + 128-row codebook + PQ_RERANK=50-row shortlist",
-    ),
-    "ann_ivf_kmeans_topk": (3, "bounded: K centroids + probe lists + 1-row query"),
-    "ann_ivf_pq_trained_agreement": (
-        5,
-        "bounded: nprobe(=K)-row probe set + 128-row trained codebook "
-        "+ 1-row query (probe, ADC expansion, re-rank re-entries) — "
-        "the Lloyd-fit subtrees run at construct time and never enter "
-        "the returned plan",
+    "ann_pq_adc_topk": (1, "bounded: PQ_RERANK=50-row ADC shortlist"),
+    "ann_ivf_pq_topk": (1, "bounded: PQ_RERANK=50-row ADC shortlist"),
+    "ann_pq_recall_metrics": (
+        4,
+        "bounded: the 5-query eval set (brute pass + re-rank re-entries, "
+        "each printed under both the overlap and rr joins) — every "
+        "hinted frame <= 5 rows",
     ),
     "dpp_partitioned_join": (1, "dim: month dimension"),
     "scd2_point_in_time_join": (1, "dim: SCD2 history (dimension-sized by contract, see lane)"),
@@ -692,6 +673,7 @@ _WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
     "pack_token_shards": (1, "pre-agg: chunk-total frame, 4096× reduced; recurse the chunk split for more"),
     "window_frames": (1, "pre-agg: running offset + per-priority total (one Window node) over the ≤|priorities|·1024-row bucket-count frame of grouped_exact_rank; raw rows rank per (priority, bucket) slice"),
     "equidepth_histogram": (1, "pre-agg: running offset + per-priority total over the ≤|priorities|·1024-row bucket-count frame of grouped_exact_rank; raw rows rank per (priority, bucket) slice"),
+    "percentiles_by_flag": (2, "pre-agg: running offset + per-(flag, spec) total over the ≤|flags|·2 specs·1024-row bucket-count frame (the spec index _t is a literal tag), printed once under the bucket semi-join and once under the pick join; raw rows rank per (flag, spec, bucket) slice"),
     "group_median_twophase": (2, "pre-agg: running offset + per-priority total over the ≤|priorities|·1024-row bucket-count frame, printed once under the bucket semi-join and once under the pick join; raw rows rank per (priority, bucket) slice"),
     "group_p90_twophase": (2, "pre-agg: running offset + per-priority total over the ≤|priorities|·1024-row bucket-count frame, printed once under the bucket semi-join and once under the pick join; raw rows rank per (priority, bucket) slice"),
     "exact_median_histogram": (2, "pre-agg: running offset + total over the ≤1024-row bucket-count frame of one literal group, printed once under the bucket semi-join and once under the pick join; raw rows rank per bucket slice"),
@@ -705,7 +687,6 @@ _WINDOW_ALLOWLIST: dict[str, tuple[int, str]] = {
     # consuming join (phase-1 salted windows are NOT flagged — the
     # salt keeps their partition spec high-cardinality).
     "ann_matryoshka_recall": (5, "post-cut: salted-phase survivors ≤ k·64 per eval query (truth ×1 + shortlist ×2 subtree copies) + ≤50-row shortlist rerank ×2"),
-    "ann_pq_recall_metrics": (6, "post-cut: salted-phase survivors ≤ k·64 per eval query (brute truth + ADC shortlist, × subtree reuse in overlap/rr joins) + ≤ PQ_RERANK-row rerank rank"),
     "ann_binary_recall_metrics": (6, "post-cut: salted-phase survivors ≤ k·64 per eval query (brute truth + Hamming shortlist, × subtree reuse in overlap/rr joins) + ≤ BQ_SHORTLIST-row rerank rank"),
 }
 
@@ -713,35 +694,48 @@ _WINDOW_ALLOWLIST_CONSTRUCT: dict[str, tuple[int, str]] = {
     "keyword_textrank": (1, "post-limit: 20-row rank"),
     "pagerank_topk": (1, "post-limit: 15-row rank"),
     "ann_recall_metrics": (4, "post-cut: salted-phase survivors ≤ 10·64 per eval query (truth + probed top-10, × subtree reuse in overlap/rr joins)"),
+    "ann_pq_recall_metrics": (6, "post-cut: salted-phase survivors ≤ k·64 per eval query (brute truth + ADC shortlist, × subtree reuse in overlap/rr joins) + ≤ PQ_RERANK-row rerank rank"),
 }
 
 
 _TINY_INSET_MAX = 16  # literal IN-lists up to this size count as "tiny domain"
 
+_ATTR = r"[A-Za-z_][A-Za-z0-9_]*#\d+"
+_LITERAL = r"-?\d+(?:\.\d+)?(?:E-?\d+)?[LDSYBF]?|'[^']*'|true|false"
 
-def _descends_from_tiny_inset(subtree: str, attr: str) -> bool:
-    """True if ``attr`` (an ``name#id`` attribute string) is — possibly
-    through a chain of aliases — a column filtered to a literal IN-list
-    of ≤ _TINY_INSET_MAX values somewhere in the window's input
-    subtree. This is the r10 guard blind spot: a window partitioned by
-    a DATA-DERIVED small-domain key (e.g. ``qid`` aliased from
-    ``vec_id IN (0,10,20,30,40)``) has provably ≤ |IN-list| partitions
-    — constant parallelism — yet a static column-name list can't know
-    that. The attr ids in plan strings carry type suffixes (#123L), so
+
+def _tiny_key(subtree: str, key: str) -> bool:
+    """True if the window partition key *key* (an expression string
+    over ``name#id`` attributes) has a fixed, tiny domain in the
+    window's input *subtree*. Walking its alias chain, an attribute is
+    tiny if it is
+      * a known fixed-domain column (``_LOW_CARD_COLS``),
+      * filtered to a literal IN-list of ≤ _TINY_INSET_MAX values
+        (the r10 blind spot: ``qid`` aliased from ``vec_id IN
+        (0,10,20,30,40)``), or
+      * aliased from a literal, directly (``0 AS _t#5``) or as a field
+        every exploded struct sets to a literal (``_p#3._t AS _t#4``
+        over ``explode(array(struct(_t, 0, ...), struct(_t, 1, ...)))``,
+        the spec index of a multi-column percentile).
+    The attr ids in plan strings carry type suffixes (#123L), so
     matching is done on the bare ``name#digits`` prefix."""
     import re
 
-    def bare(a: str) -> str:
-        m = re.match(r"([A-Za-z_][A-Za-z0-9_]*#\d+)", a)
-        return m.group(1) if m else a
-
+    names = set(re.findall(r"([A-Za-z_][A-Za-z0-9_]*)#\d+", key))
+    if names and names <= _LOW_CARD_COLS:
+        return True
+    m = re.match(_ATTR, key)
+    if not m:
+        return False
     seen: set[str] = set()
-    frontier = {bare(attr)}
+    frontier = {m.group(0)}
     while frontier:
         a = frontier.pop()
         if a in seen:
             continue
         seen.add(a)
+        if a.split("#")[0] in _LOW_CARD_COLS:
+            return True
         esc = re.escape(a)
         # literal-set filter on this attribute? (optimizer prints small
         # IN-lists as INSET or IN (...); count the literals)
@@ -749,19 +743,26 @@ def _descends_from_tiny_inset(subtree: str, attr: str) -> bool:
             n_vals = m.group(1).count(",") + 1
             if 0 < n_vals <= _TINY_INSET_MAX:
                 return True
-        # alias chain: "src#45L AS qid#123L" — enqueue the source attr
-        for m in re.finditer(
-            r"([A-Za-z_][A-Za-z0-9_]*#\d+)L? AS " + esc, subtree
-        ):
-            frontier.add(m.group(1))
+        for m in re.finditer(r"([^\s\[(,]+) AS " + esc + r"L?\b", subtree):
+            src = m.group(1)
+            if re.fullmatch(_LITERAL, src):
+                return True
+            field = re.fullmatch(_ATTR + r"L?\.(\w+)", src)
+            if field:
+                vals = re.findall(r"(?:struct\(|, )" + field.group(1) + r", ([^,()]+)[,)]", subtree)
+                if vals and all(re.fullmatch(_LITERAL, v) for v in vals):
+                    return True
+            # alias chain: "src#45L AS qid#123L" — enqueue the source attr
+            if re.fullmatch(_ATTR + "L?", src):
+                frontier.add(re.match(_ATTR, src).group(0))
     return False
 
 
 def _suspect_windows(df) -> int:
     """Count Window nodes with constant-parallelism partition specs in
-    the optimized logical plan: empty spec, all-low-card static
-    columns, or (r11) every partition key descending from a tiny
-    literal IN-list relation."""
+    the optimized logical plan: an empty spec, or one whose every key
+    has a tiny fixed domain (:func:`_tiny_key`) — one high-card key
+    (e.g. a salt) rescues the parallelism."""
     import re
 
     found = []
@@ -770,21 +771,12 @@ def _suspect_windows(df) -> int:
         if node.getClass().getSimpleName() == "Window":
             ps = node.partitionSpec()
             cols = [ps.apply(i).toString() for i in range(ps.size())]
+            sub = node.toString()
             if not cols:
                 found.append("EMPTY")
-            else:
-                names = set()
-                for c in cols:
-                    names.update(re.findall(r"([A-Za-z_][A-Za-z0-9_]*)#\d+", c))
-                if names and names <= _LOW_CARD_COLS:
-                    found.append("LOWCARD:" + ",".join(sorted(names)))
-                else:
-                    # data-derived small domain: flag only if EVERY
-                    # partition key is tiny (one high-card key — e.g.
-                    # a salt — rescues the parallelism)
-                    sub = node.toString()
-                    if all(_descends_from_tiny_inset(sub, c) for c in cols):
-                        found.append("TINYDOMAIN:" + ",".join(sorted(names)))
+            elif all(_tiny_key(sub, c) for c in cols):
+                names = {n for c in cols for n in re.findall(r"([A-Za-z_][A-Za-z0-9_]*)#\d+", c)}
+                found.append("TINY:" + ",".join(sorted(names)))
         ch = node.children()
         for i in range(ch.size()):
             walk(ch.apply(i))
@@ -929,6 +921,43 @@ def test_tiny_domain_window_detector(spark):
         ),
     )
     assert _suspect_windows(salted) == 0
+
+
+def test_literal_tagged_window_detector(spark):
+    """A raw-row window partitioned by a low-cardinality column plus a
+    literal-derived index (the spec index of a multi-column percentile,
+    `percentiles_by_flag`'s (l_returnflag, _t) shape) has |flags| x
+    |specs| partitions whatever the row count: the guard must count it,
+    whether the index comes from exploded literal-tagged structs or a
+    union of literal columns. A bucket key next to them rescues it."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rows = spark.range(300).select(
+        F.element_at(F.array(*map(F.lit, "ANR")), (F.col("id") % 3 + 1).cast("int")).alias(
+            "l_returnflag"
+        ),
+        F.col("id").cast("double").alias("l_quantity"),
+        (F.col("id") * 7 % 101).cast("double").alias("l_extendedprice"),
+    )
+    tagged = rows.select(
+        "l_returnflag",
+        F.explode(
+            F.array(
+                F.struct(F.lit(0).alias("_t"), F.col("l_quantity").alias("_v")),
+                F.struct(F.lit(1).alias("_t"), F.col("l_extendedprice").alias("_v")),
+            )
+        ).alias("_p"),
+    ).select("l_returnflag", "_p._t", "_p._v")
+    by_tag = Window.partitionBy("l_returnflag", "_t").orderBy("_v")
+    assert _suspect_windows(tagged.withColumn("_rk", F.row_number().over(by_tag))) == 1
+    unioned = rows.select("l_returnflag", F.lit(0).alias("_t"), F.col("l_quantity").alias("_v")).union(
+        rows.select("l_returnflag", F.lit(1).alias("_t"), F.col("l_extendedprice").alias("_v"))
+    )
+    assert _suspect_windows(unioned.withColumn("_rk", F.row_number().over(by_tag))) == 1
+    bucketed = tagged.withColumn("_b", (F.col("_v") / 10).cast("long"))
+    by_bucket = Window.partitionBy("l_returnflag", "_t", "_b").orderBy("_v")
+    assert _suspect_windows(bucketed.withColumn("_rk", F.row_number().over(by_bucket))) == 0
 
 
 def test_salted_topk_matches_naive_window(spark):

@@ -12,68 +12,65 @@ from sf_etl_spark.queries import _PRIORITY_ORDER, all_queries
 
 DRIVER_WINDOW = 50
 
-# Queries whose driver CORRECTNESS row most needs refreshing THIS round
-# (round 16 ordering) — they must sit inside the driver's ~50-row
-# window. Rank is by information value (the r15 verdict's task 8):
-# (1) the 16 lanes the r16 optimization round TOUCHED (dedup-cluster
-# pair, linkage_survivorship, ann_ivf_pq_trained_agreement,
-# asof_pandas_merge, and the 10 sfetl lanes riding the mockserver
-# teardown fix, plus triangle_count's reshaped pair derivation);
-# (2) 34 lanes of the stale block (the r11-stale lanes, then the next
-# in rotation), filling to 50. 16+34 = 50.
-# Everything re-proven in r12-r15 rotates behind the
-# boundary.
+# Queries whose driver CORRECTNESS row most needs refreshing now
+# — they must sit inside the driver's ~50-row window. Rank is by
+# information value (the r15 verdict's task 8): (1) the 7 lanes the
+# quantiser change touched (the four PQ lanes, the two k-means IVF
+# lanes and embedding_quantize_int8); (2) 43 lanes of the stale block
+# (the 6 remaining r11-stale lanes, then 35 r12-stale and 2
+# r13-stale lanes), filling to 50. 7+43 = 50.
+# Everything re-proven since rotates behind the boundary.
 MUST_BE_IN_WINDOW = [
-    "triangle_count",
-    "dedup_cluster_components",
-    "dedup_cluster_bigstar",
-    "linkage_survivorship",
+    "ann_pq_adc_topk",
+    "ann_ivf_pq_topk",
+    "ann_pq_recall_metrics",
     "ann_ivf_pq_trained_agreement",
-    "asof_pandas_merge",
-    "source_sfetl_roundtrip",
-    "sink_sfetl_ingest_roundtrip",
-    "sink_sfetl_failed_results",
-    "sink_sfetl_successful_results",
-    "source_sfetl_stream_incremental",
-    "sink_sfetl_delete_roundtrip",
-    "sink_sfetl_resume_unprocessed",
-    "stream_sink_sfetl_upsert",
-    "stream_sink_sfetl_native",
-    "stream_sink_sfetl_failed_rows",
-    "ann_matryoshka_recall",
-    "ann_recall_metrics",
-    "asof_nearest_click",
-    "bfs_shortest_paths",
-    "countmin_point_estimates",
-    "cusum_drift_detection",
-    "decile_lift_table",
-    "dedup_embedding_cosine",
-    "exact_median_histogram",
-    "forecast_feature_matrix",
-    "funnel_time_to_convert",
-    "fuzzy_name_match",
-    "group_median_twophase",
-    "ivm_join_deltas",
-    "keyword_textrank",
-    "kmv_set_overlap",
-    "multimodal_decode_stats",
-    "multimodal_resize_stats",
-    "pareto_frontier_parts",
-    "phrase_search_positional",
-    "q10_returned_items",
-    "q12_late_priority",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_supplier_counts",
-    "q17_small_qty_revenue",
-    "q18_large_volume",
-    "q19_or_of_ands",
-    "q21_waiting_suppliers",
-    "q22_dormant_balance",
-    "rolling_median_7d",
-    "seasonal_anomaly_slots",
-    "stream_dedup_exactly_once",
+    "ann_ivf_kmeans_topk",
+    "ann_ivf_kmeans_agreement",
+    "embedding_quantize_int8",
     "stream_stream_join_attribution",
+    "target_encoding_smoothed",
+    "time_weighted_average",
+    "topk_per_group",
+    "window_sliding_distinct",
+    "zone_map_pruned_scan",
+    "ab_test_lift",
+    "ann_ivf_topk",
+    "ann_srp_lsh_pairs",
+    "attribution_channels",
+    "bucketed_join_colocated",
+    "clean_text_normalize",
+    "corpus_prep_pipeline",
+    "decontaminate_embedding_cosine",
+    "decontaminate_ngram_overlap",
+    "dedup_embedding_pipeline",
+    "dedup_exact_substring",
+    "dedup_minhash_lsh",
+    "dedup_semdedup_prune",
+    "dedup_simhash",
+    "domain_mix_rebalance",
+    "dq_validation_report",
+    "gap_islands_activity",
+    "geo_nearest_hub",
+    "grouping_sets_flags",
+    "mode_per_group",
+    "null_semantics",
+    "q6_forecast_revenue",
+    "regression_by_group",
+    "repetition_metrics",
+    "snapshot_diff_cdc",
+    "source_json_roundtrip",
+    "source_orc_roundtrip",
+    "source_schema_evolution",
+    "split_train_test",
+    "stream_session_window",
+    "stream_stateful_user_agg",
+    "stream_stream_left_join_unmatched",
+    "stream_tumbling_1h",
+    "unpivot_metrics",
+    "vocab_top_terms",
+    "ann_binary_hamming_topk",
+    "ann_binary_recall_metrics",
 ]
 
 

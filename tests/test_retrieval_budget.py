@@ -1,10 +1,13 @@
-"""Plan and job budgets of the benchmark's two retrieval lanes, so the
-shapes they replaced cannot come back unseen: ``ann_ivf_topk`` is one
-narrow nearest-centroid scan (no window over a centroid cross join),
+"""Plan and job budgets of the retrieval lanes, so the shapes they
+replaced cannot come back unseen: ``ann_ivf_topk`` is one narrow
+nearest-centroid scan (no window over a centroid cross join),
 ``bm25_topk`` one tokenising scan per input (no explode and no
-(doc, term) shuffle)."""
+(doc, term) shuffle), and the PQ lanes one narrow encode/ADC pass (no
+codebook cross join and no ADC shuffle)."""
 
 from __future__ import annotations
+
+import pytest
 
 from sf_etl_spark.queries import all_queries
 from sf_etl_spark.sources import load_table
@@ -51,3 +54,17 @@ def test_bm25_topk_tokenises_once_per_scan(spark, sf_dir):
     assert plan.count("split(") == plan.count("FileScan parquet") == 2, plan
     assert "TakeOrderedAndProject" in plan
     assert 0 < df.count() <= 20
+
+
+@pytest.mark.parametrize("name", ["ann_pq_adc_topk", "ann_ivf_pq_topk"])
+def test_pq_lanes_one_job_no_expansion(spark, sf_dir, name):
+    # construction collects the codebook's seed vectors (and the IVF
+    # centroids) with the query in one job; encode and ADC are one
+    # MapInArrow pass, the re-rank a broadcast join of the shortlist
+    df, jobs, plan = _construct(spark, sf_dir, name)
+    assert jobs == 1
+    for node in ("CartesianProduct", "BroadcastNestedLoopJoin", "Generate", "Window"):
+        assert node not in plan, node
+    assert "MapInArrow" in plan and plan.count("TakeOrderedAndProject") == 2
+    assert _shuffles(plan) == 0, plan
+    assert df.count() == 10

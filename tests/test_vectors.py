@@ -1,30 +1,41 @@
-"""Parity of the numpy nearest-centroid kernel (operators/vectors.py)
-with the SQL fold it replaced: the same ``cid``, cosine and norm bits
-as ``_dot``/``_norm`` ranked by ``row_number() OVER (PARTITION BY
-vec_id ORDER BY ccos DESC, cid)``, the shape the DuckDB oracles
-replay."""
+"""Parity of the numpy kernels (operators/vectors.py) with the SQL
+folds they replaced. Nearest centroid: the same ``cid``, cosine and
+norm bits as ``_dot``/``_norm`` ranked by ``row_number() OVER
+(PARTITION BY vec_id ORDER BY ccos DESC, cid)``, the shape the DuckDB
+oracles replay. PQ: the same codes and ADC distance bits as the DuckDB
+``enc``/``adc`` CTEs of the PQ oracles (``_sql_pq_ctes``)."""
 
 from __future__ import annotations
 
 import os
 import struct
 
+import duckdb
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, top_cells
+from sf_etl_spark.operators.vectors import collect_vectors, nearest_centroid, pq_adc, top_cells
+from sf_etl_spark.queries import all_queries
 from sf_etl_spark.queries.similarity import (
+    _EVAL_QUERIES,
+    _SQL_NORM,
     IVF_K,
+    PQ_C,
+    PQ_M,
     _cos,
     _norm,
+    _pq_seed_codebook,
     _seed_cells,
+    _sql_pq_ctes,
     _vec,
     exact_cosine_pairs,
 )
 from sf_etl_spark.sources import load_table
+from tests.oracle_compare import compare_query
 
 #: the benchmark's sf0.1 fixture: 2,000 embeddings
 SF01 = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "fixture", "sf0.1")
@@ -158,3 +169,96 @@ def test_kernel_function_on_empty_arrow_batch():
     assert x.shape == (0, 3) and ok.shape == (0,)
     cos, null = vectors._cosines(x, vectors._norms(x), ok, np.ones((2, 3)), np.ones(2))
     assert vectors._ranked(cos, null).shape == (0, 2)
+
+
+def _duckdb_pq(con, table: str, qids) -> tuple[dict, dict]:
+    """({vec_id: codes}, {(vec_id, qid): adc_dist bits}) by the DuckDB
+    ``enc``/``adc`` CTEs of the PQ oracles over *table*."""
+    ctes = f"""WITH n AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, {_SQL_NORM.format(e='embedding')} AS nm
+      FROM {table}
+    ), qs AS (
+      SELECT vec_id AS qid, v AS qv FROM n WHERE vec_id IN ({', '.join(map(str, qids))})
+    ), {_sql_pq_ctes(qtable="qs", per_qid=True)}"""
+    enc = con.execute(
+        f"{ctes} SELECT vec_id, list(c ORDER BY m) FROM enc GROUP BY vec_id"
+    ).fetchall()
+    adc = con.execute(f"{ctes} SELECT vec_id, qid, adc_dist FROM adc").fetchall()
+    return {v: list(c) for v, c in enc}, {(v, q): _bits(d) for v, q, d in adc}
+
+
+def _kernel_pq(df) -> tuple[dict, dict]:
+    rows = df.select("vec_id", "qid", "codes", "adc_dist").collect()
+    return (
+        {r["vec_id"]: list(r["codes"]) for r in rows},
+        {(r["vec_id"], r["qid"]): _bits(r["adc_dist"]) for r in rows},
+    )
+
+
+def test_pq_kernel_bit_matches_duckdb_on_fixture(spark):
+    """All 2,000 sf0.1 vectors x the 5 eval queries: the kernel's codes
+    and ADC distance bits equal the oracles' ``enc``/``adc`` CTEs,
+    whatever the input partitioning."""
+    e = load_table(spark, SF01, "embeddings")
+    cids, vecs, qs = _seed_cells(e, PQ_C, *_EVAL_QUERIES)
+    assert sorted(qs) == sorted(_EVAL_QUERIES)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW e AS SELECT * FROM read_parquet('{SF01}/embeddings.parquet')")
+    want = _duckdb_pq(con, "e", _EVAL_QUERIES)
+    assert len(want[0]) == 2000 and len(want[1]) == 2000 * len(_EVAL_QUERIES)
+    for parts in (1, 7):
+        got = _kernel_pq(pq_adc(e.repartition(parts), *_pq_seed_codebook(cids, vecs), qs))
+        assert got == want, parts
+
+
+def test_pq_kernel_edge_rows(spark):
+    """A null embedding takes the smallest codeword in every subspace
+    and an exact codeword tie the smaller id, as the DuckDB CTEs rank
+    them; an empty codebook raises."""
+    dim = PQ_M * 8
+    rows = [(c, [float(c)] * dim) for c in range(1, PQ_C + 1)] + [
+        (100, None),  # null embedding
+        (101, [1.5] * dim),  # equidistant from codewords 1 and 2 in every subspace
+        (102, [2.5] * 8 + [16.0] * (dim - 8)),  # tie 2/3 in m=0, codeword 16 after
+    ]
+    schema = "vec_id bigint, embedding array<float>"
+    df = spark.createDataFrame(rows, schema)
+    con = duckdb.connect()
+    con.register("e", pa.table({"vec_id": [r[0] for r in rows], "embedding": [r[1] for r in rows]},
+                               schema=pa.schema([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))])))
+    want = _duckdb_pq(con, "e", (101,))
+    cids, vecs, qs = _seed_cells(df, PQ_C, 101)
+    got = _kernel_pq(pq_adc(df, *_pq_seed_codebook(cids, vecs), qs))
+    assert got == want
+    assert got[0][100] == got[0][101] == [1] * PQ_M
+    assert got[0][102] == [2] + [16] * (PQ_M - 1)
+    assert got[1][(100, 101)] is not None
+    with pytest.raises(ValueError):
+        pq_adc(df, np.array([], dtype=np.int64), np.zeros((PQ_M, 0, 8)), qs)
+
+
+def test_pq_kernel_on_empty_arrow_batch():
+    from sf_etl_spark.operators import vectors
+
+    x, ok = vectors._rows(pa.array([], type=pa.list_(pa.float32())), 4)
+    codes = vectors._pq_encode(x, ok, np.ones((2, 3, 2)))
+    assert codes.shape == (0, 2)
+    assert vectors._pq_adc(codes, np.ones((5, 2, 3))).shape == (5, 0)
+
+
+def test_int8_quantize_zero_vector_matches_oracle_under_ansi(spark, sf_dir, tmp_path):
+    """A zero embedding has scale 0: the int8 lane gives the DuckDB
+    oracle's NULL quotients (clipped to 127) and NULL reconstruction
+    cosine in the default ANSI session instead of raising."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = t.column("embedding").to_pylist()
+    emb[3] = [0.0] * len(emb[3])
+    t = t.set_column(1, "embedding", pa.array(emb, type=t.schema.field("embedding").type))
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet')")
+    spec = all_queries()["embedding_quantize_int8"]
+    compare_query(spark, con, spec.fn, spec.oracle, str(tmp_path))
+    zero = spec.fn(spark, str(tmp_path)).filter(F.col("vec_id") == t.column("vec_id")[3].as_py()).first()
+    assert (zero["q_min"], zero["q_max"], zero["recon_cosine"]) == (127, 127, None)
