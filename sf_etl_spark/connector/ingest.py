@@ -13,15 +13,15 @@ Scale shape: one task per ingest job id (``parallelize(ids, n)`` +
 ``mapPartitions``) — each task pulls its job's CSV independently, so
 a 1000-job load drains its results with cluster parallelism, not a
 driver loop. Reject/unprocessed payloads are the bounded slivers of a
-load; successes are the BULK — at production volume pass explicit
-``job_ids`` and aggregate or write promptly rather than collecting.
+load; successes are the BULK — at production volume aggregate or
+write them promptly rather than collecting.
 """
 
 from __future__ import annotations
 
 import csv
 import io
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -127,30 +127,28 @@ def _fetch_unprocessed(client, jid):
 def _results_df(
     spark: SparkSession,
     options: dict[str, str],
-    job_ids: Sequence[str] | None,
     sweep_states: tuple,
     fetch_one: Callable,
     schema: StructType,
 ) -> DataFrame:
     """Shared sweep skeleton for the three results endpoints.
 
-    ``job_ids=None`` enumerates the backend's ingest jobs (paginated
-    list walked to exhaustion), keeps those in ``sweep_states``, and —
-    when ``options['object']`` is set — only THIS object's jobs, so
-    one pipeline's sweep never pulls another's results (r11 ADVICE).
+    Enumerates the backend's ingest jobs (paginated list walked to
+    exhaustion), keeps those in ``sweep_states``, and — when
+    ``options['object']`` is set — only THIS object's jobs, so one
+    pipeline's sweep never pulls another's results (r11 ADVICE).
     """
     from sf_etl_spark.connector.datasource import _client_from_options
 
-    if job_ids is None:
-        client = _client_from_options(options)
-        obj_name = options.get("object")
-        job_ids = [
-            j.id
-            for j in client.list_ingest_jobs()
-            if j.state in sweep_states
-            and (obj_name is None or j.object == obj_name)
-        ]
-    ids = [j for j in job_ids if j]
+    client = _client_from_options(options)
+    obj_name = options.get("object")
+    ids = [
+        j.id
+        for j in client.list_ingest_jobs()
+        if j.id
+        and j.state in sweep_states
+        and (obj_name is None or j.object == obj_name)
+    ]
     if not ids:
         return spark.createDataFrame([], schema)
     opts = dict(options)
@@ -167,13 +165,12 @@ def _results_df(
 def failed_results_df(
     spark: SparkSession,
     options: dict[str, str],
-    job_ids: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Rejected rows of the given ingest jobs as a DataFrame.
+    """Rejected rows of the backend's ingest jobs as a DataFrame.
 
     ``options`` are the same connector options the ``sfetl`` format
-    takes (login_url/client_id/.../object). ``job_ids=None`` sweeps
-    every finished ingest job the backend lists — the "what failed in
+    takes (login_url/client_id/.../object). The call sweeps every
+    finished ingest job the backend lists — the "what failed in
     last night's load?" call, covering BOTH terminal-with-results
     states: ``JobComplete`` (partial row rejects) and ``Failed``
     (job-level rejects still expose retrievable failed records).
@@ -183,7 +180,6 @@ def failed_results_df(
     return _results_df(
         spark,
         options,
-        job_ids,
         (JobState.JOB_COMPLETE, JobState.FAILED),
         _fetch_failed,
         FAILED_RESULTS_SCHEMA,
@@ -193,23 +189,21 @@ def failed_results_df(
 def successful_results_df(
     spark: SparkSession,
     options: dict[str, str],
-    job_ids: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Applied rows of the given ingest jobs as a DataFrame —
+    """Applied rows of the backend's ingest jobs as a DataFrame —
     ``sf__Id,sf__Created`` + the original columns, one download task
     per job.
 
     This is the read-back every keyed downstream step builds on: the
     server-assigned Ids of what a load just created (``created=true``)
     vs what it updated (``created=false``). Same sweep semantics as
-    :func:`failed_results_df` when ``job_ids`` is None.
+    :func:`failed_results_df`.
     """
     from sf_etl_spark.connector.client import JobState
 
     return _results_df(
         spark,
         options,
-        job_ids,
         (JobState.JOB_COMPLETE, JobState.FAILED),
         _fetch_successful,
         SUCCESSFUL_RESULTS_SCHEMA,
@@ -219,20 +213,18 @@ def successful_results_df(
 def unprocessed_records_df(
     spark: SparkSession,
     options: dict[str, str],
-    job_ids: Sequence[str] | None = None,
 ) -> DataFrame:
     """Rows the backend never ATTEMPTED, as a DataFrame — the retry
     set of a resumable loader (job-level failures and aborts leave
     their whole upload here, distinct from ROW rejects). A 3-line
     resume is ``unprocessed_records_df(...)`` → reshape ``fields`` →
-    write back through the sink. The ``job_ids=None`` sweep covers
-    Failed and Aborted jobs for ``options['object']``."""
+    write back through the sink. The sweep covers Failed and Aborted
+    jobs for ``options['object']``."""
     from sf_etl_spark.connector.client import JobState
 
     return _results_df(
         spark,
         options,
-        job_ids,
         (JobState.FAILED, JobState.ABORTED),
         _fetch_unprocessed,
         UNPROCESSED_RECORDS_SCHEMA,

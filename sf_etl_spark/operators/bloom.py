@@ -21,8 +21,8 @@ this module builds the same structure from public DataFrame ops:
 The filter is one-sided (false positives only), so callers MUST keep
 the exact join afterwards; ``bloom_prune_literal`` is a bandwidth
 optimization, never a correctness device. With m bits / n keys / k=3
-the false-positive rate is ≈ (1 - e^{-kn/m})^k — the default m=2^17
-holds ~1% up to ~15k keys and costs 16 KiB broadcast.
+the false-positive rate is ≈ (1 - e^{-kn/m})^k — m=2^17 holds ~1% up
+to ~15k keys and costs 16 KiB broadcast.
 
 Reference parity: the reference has no joins (SURVEY.md §2.2); this is
 engine scale surface, same family as operators/skew.py.
@@ -36,23 +36,24 @@ from pyspark.sql import functions as F
 # Fixed hash seeds — part of the operator contract (deterministic
 # across runs and across build/probe sides).
 _SEEDS = (101, 211, 307)
+_M_BITS = 1 << 17
 
 
-def _positions(key: F.Column, m_bits: int) -> list[F.Column]:
-    return [F.pmod(F.xxhash64(key, F.lit(s)), F.lit(m_bits)) for s in _SEEDS]
+def _positions(key: F.Column) -> list[F.Column]:
+    return [F.pmod(F.xxhash64(key, F.lit(s)), F.lit(_M_BITS)) for s in _SEEDS]
 
 
-def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 1 << 17) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     """Aggregate build-side keys into a 1-row DataFrame holding the
     Bloom bitmap as MAP<word_index, 64-bit word>.
 
     Scale: the explode is 3 rows per key, partial-agged (bit_or is
     associative/commutative) before one shuffle onto <= m/64 words,
     then a single collect_list into one row — the map is at most
-    m/64 entries (2048 longs at the default m), broadcastable by
+    m/64 entries (2048 longs), broadcastable by
     construction.
     """
-    pos = F.explode(F.array(*_positions(F.col(key_col), m_bits))).alias("pos")
+    pos = F.explode(F.array(*_positions(F.col(key_col)))).alias("pos")
     words = (
         keys.select(pos)
         .select(
@@ -71,9 +72,7 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 1 << 17) -> DataFra
     )
 
 
-def bloom_prune_literal(
-    probe: DataFrame, key_col: str, bloom: DataFrame, m_bits: int = 1 << 17
-) -> DataFrame:
+def bloom_prune_literal(probe: DataFrame, key_col: str, bloom: DataFrame) -> DataFrame:
     """Filter probe rows whose key cannot be in the build set. The
     bitmap is materialized once and embedded as a dense ARRAY<BIGINT>
     literal, so the bit tests are a plain Filter directly on the probe
@@ -88,12 +87,12 @@ def bloom_prune_literal(
     filters land after subquery materialization (InSubqueryExec):
     the filter then sits under every downstream exchange by
     construction. The materialization is bounded by the operator, not
-    the data — m/64 longs (16 KiB at the default m) regardless of
+    the data — m/64 longs (16 KiB) regardless of
     corpus size — the same contract as the centroid/bucket-id collects
     documented in PLANS.md.
     """
     row = bloom.collect()[0][0] or {}
-    dense = [int(row.get(i, 0)) for i in range(m_bits // 64)]
+    dense = [int(row.get(i, 0)) for i in range(_M_BITS // 64)]
     arr = F.lit(dense)
     tests = [
         (
@@ -104,7 +103,7 @@ def bloom_prune_literal(
             )
         )
         != 0
-        for p in _positions(F.col(key_col), m_bits)
+        for p in _positions(F.col(key_col))
     ]
     cond = tests[0]
     for t in tests[1:]:

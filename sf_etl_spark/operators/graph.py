@@ -19,7 +19,7 @@ Scale notes:
   Components in MapReduce and Beyond") halves the effective diameter
   per round → O(log n) rounds; :func:`connected_components` falls
   back to it automatically when min-label propagation has not
-  converged after ``label_rounds``.
+  converged after ``_LABEL_ROUNDS``.
 - ``localCheckpoint`` truncates lineage each round; without it the
   plan doubles per iteration and analysis time explodes.
 - The driver-side loop tests ONE scalar (changed-count) per round —
@@ -31,40 +31,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# connected_components' budget: min-label propagation rounds before
+# the star fallback, and total rounds across both phases
+_LABEL_ROUNDS = 8
+_MAX_ITER = 25
 
-def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    vertex_col: str = "vertex",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 25,
-    label_rounds: int = 8,
-) -> DataFrame:
-    """Label every vertex with the minimum vertex id reachable from it
-    (= its component id). Vertices absent from ``edges`` come out as
+
+def connected_components(vertices: DataFrame, edges: DataFrame) -> DataFrame:
+    """Label every ``vertex`` of ``vertices`` with the minimum vertex id
+    reachable from it over the ``src``/``dst`` pairs of ``edges`` (= its
+    component id). Vertices absent from ``edges`` come out as
     singleton components.
 
-    Strategy: min-label propagation for up to ``label_rounds`` (one
+    Strategy: min-label propagation for up to ``_LABEL_ROUNDS`` (one
     join + one min-agg per round — cheapest per round, and dedup
     clump graphs converge in 2-3); if the diameter is larger than
     that (adversarial chains), restart on :func:`star_components`,
     whose O(log n) round bound is worth its extra per-round jobs.
-    Raises if not converged in ``max_iter`` total iterations."""
+    Raises if not converged in ``_MAX_ITER`` total iterations."""
     # checkpoint the symmetrized edges ONCE: the loop re-references
     # them every round, and a lazy plan would re-derive the edge list
     # (often an expensive pair-finding pipeline) per iteration
     sym = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .union(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .union(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
         .distinct()
         .localCheckpoint()
     )
     labels = vertices.select(
-        F.col(vertex_col).alias("v"), F.col(vertex_col).alias("label")
+        F.col("vertex").alias("v"), F.col("vertex").alias("label")
     ).localCheckpoint()
 
-    for _ in range(min(label_rounds, max_iter)):
+    for _ in range(_LABEL_ROUNDS):
         msgs = (
             sym.join(labels, sym.a == labels.v)
             .select(F.col("b").alias("v"), F.col("label").alias("nlabel"))
@@ -85,29 +83,16 @@ def connected_components(
         labels = upd.select("v", F.col("new_label").alias("label"))
         if changed == 0:
             return labels.select(
-                F.col("v").alias(vertex_col), F.col("label").alias("component")
+                F.col("v").alias("vertex"), F.col("label").alias("component")
             )
     # diameter exceeded the cheap phase: the O(log n) algorithm takes
     # over from the original edges (restarting costs less than the
     # O(diameter) rounds propagation would still need)
-    return star_components(
-        vertices,
-        edges,
-        vertex_col=vertex_col,
-        src_col=src_col,
-        dst_col=dst_col,
-        max_iter=max(1, max_iter - min(label_rounds, max_iter)),
-    )
+    return star_components(vertices, edges, max_iter=_MAX_ITER - _LABEL_ROUNDS)
 
 
 def star_components(
-    vertices: DataFrame | None,
-    edges: DataFrame,
-    vertex_col: str = "vertex",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 25,
-    rounds_out: list[int] | None = None,
+    vertices: DataFrame | None, edges: DataFrame, max_iter: int = _MAX_ITER
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al.): edge rewiring that attaches nodes ever closer to
@@ -127,9 +112,8 @@ def star_components(
     Both steps preserve connectivity and never create a component
     bridge, so the fixpoint (edge set stable under both) is exactly
     the star decomposition; labels read off the final edges. Each
-    step is one groupBy-min + one equi-join on the node id.
-    ``rounds_out``, when given, receives the executed round count
-    (test introspection of the O(log n) bound).
+    step is one groupBy-min + one equi-join on the node id. Columns
+    are those of :func:`connected_components`.
 
     ``vertices=None`` labels exactly the ENDPOINTS of ``edges``,
     derived from the already-materialized canonical edge set instead
@@ -142,7 +126,7 @@ def star_components(
     only edges are self-loops, which the canonicalization drops) must
     still pass them explicitly to get their singleton rows."""
     E = (
-        edges.select(F.col(src_col).alias("x"), F.col(dst_col).alias("y"))
+        edges.select(F.col("src").alias("x"), F.col("dst").alias("y"))
         .filter(F.col("x") != F.col("y"))
         .select(F.greatest("x", "y").alias("u"), F.least("x", "y").alias("v"))
         .distinct()
@@ -152,8 +136,8 @@ def star_components(
         # scanning the checkpointed blocks twice is cheap; rebuilding
         # the caller's edge lineage twice is not
         vertices = (
-            E.select(F.col("u").alias(vertex_col))
-            .union(E.select(F.col("v").alias(vertex_col)))
+            E.select(F.col("u").alias("vertex"))
+            .union(E.select(F.col("v").alias("vertex")))
             .distinct()
         )
     # the canonical edge count, carried across rounds in Python: each
@@ -161,10 +145,8 @@ def star_components(
     # previous round's |e2| — recounting the materialized frame every
     # round was one redundant job per round (r15 optimization round)
     e_count = E.count()
-    rounds = 0
     converged = False
     for _ in range(max_iter):
-        rounds += 1
         # -- large-star --
         sym = E.select("u", "v").union(
             E.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -211,18 +193,16 @@ def star_components(
             break
         E = e2
         e_count = e2_count
-    if rounds_out is not None:
-        rounds_out.append(rounds)
     if not converged:
         raise RuntimeError(f"star_components did not converge in {max_iter} iterations")
     # stars: every edge is (member, component min); minima and
     # singletons label themselves
     memb = E.groupBy("u").agg(F.min("v").alias("label"))
     return (
-        vertices.select(F.col(vertex_col).alias("v"))
+        vertices.select(F.col("vertex").alias("v"))
         .join(memb.select(F.col("u").alias("v"), "label"), "v", "left")
         .select(
-            F.col("v").alias(vertex_col),
+            F.col("v").alias("vertex"),
             F.coalesce("label", F.col("v")).alias("component"),
         )
     )
@@ -232,9 +212,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    sum_scale: int = 10,
 ) -> DataFrame:
     """Synchronous power-iteration PageRank over a directed edge set,
     in plain DataFrame ops (no GraphFrames).
@@ -250,7 +227,7 @@ def pagerank(
 
     Determinism: the per-edge contribution pr(u)/outdeg(u) is a single
     IEEE divide, and the per-node fan-in sum goes through the exact
-    DECIMAL(38,``sum_scale``) lane (cast → sum → string → double, the
+    DECIMAL(38,10) lane (cast → sum → string → double, the
     repo-wide SUMD pattern), so the result is bit-identical regardless
     of aggregation order — an ANSI-SQL oracle can replay it. Scale 10,
     not higher: Spark casts double→decimal through the SHORTEST string
@@ -287,7 +264,7 @@ def pagerank(
     # lane). e2 is materialized too so iterations read (edge, outdeg)
     # rows directly instead of replaying the deg join.
     edges = edges.localCheckpoint()
-    deg = edges.groupBy(src).agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("outdeg"))
     # n_nodes: ONE bounded scalar to the driver (same policy as the
     # components rounds) — cheaper than carrying a 1-row broadcast
     # nested-loop join through every iteration.
@@ -295,8 +272,8 @@ def pagerank(
     if n_nodes == 0:
         # empty edge set: return the empty rank vector instead of a
         # ZeroDivisionError from the teleport term (the r1-r5 shape)
-        return deg.select(F.col(src).alias("node"), F.lit(0.0).alias("pr"))
-    e2 = edges.join(deg, src).localCheckpoint()
+        return deg.select(F.col("src").alias("node"), F.lit(0.0).alias("pr"))
+    e2 = edges.join(deg, "src").localCheckpoint()
     # The node universe, kept across iterations: rebuilding ranks from
     # the fan-in sums alone would DROP zero-in-degree nodes (a genuinely
     # directed graph routinely has them) — they'd lose their (1-d)/n
@@ -307,16 +284,16 @@ def pagerank(
     # enters the aggregation itself with an exact-zero contribution —
     # the union is narrow, the groupBy shuffle already exists, and an
     # exact DECIMAL zero term cannot perturb the fold.
-    dec = f"decimal(38,{sum_scale})"
+    dec = "decimal(38,10)"
     zeros = (
-        deg.select(F.col(src).alias("node"), F.lit(0.0).cast(dec).alias("c"))
+        deg.select(F.col("src").alias("node"), F.lit(0.0).cast(dec).alias("c"))
         .localCheckpoint()
     )
     ranks = zeros.select("node", F.lit(1.0 / n_nodes).alias("pr"))
     teleport = (1.0 - damping) / n_nodes  # same IEEE divide the SQL ran
     for it in range(iterations):
-        contrib = e2.join(ranks, e2[src] == ranks["node"]).select(
-            F.col(dst).alias("node"),
+        contrib = e2.join(ranks, e2["src"] == ranks["node"]).select(
+            F.col("dst").alias("node"),
             (F.col("pr") / F.col("outdeg")).cast(dec).alias("c"),
         )
         ranks = (
@@ -339,13 +316,7 @@ def pagerank(
     return ranks
 
 
-def bfs_hops(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
     """Breadth-first min-hop distances from a source node set, bounded
     by ``max_hops`` rounds. Returns ``(node, hops)`` — the recursive-
     CTE ``min(d)`` fixpoint, computed frontier-synchronously (each
@@ -368,7 +339,7 @@ def bfs_hops(
     bound on stream state.
     """
     edges = edges.select(
-        F.col(src).alias("_src"), F.col(dst).alias("_dst")
+        F.col("src").alias("_src"), F.col("dst").alias("_dst")
     ).localCheckpoint()
     first = sources.select("node", F.lit(0).alias("hops")).localCheckpoint()
     visited = first

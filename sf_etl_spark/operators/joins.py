@@ -50,10 +50,10 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     right_payload: list[str],
-    how: str = "left",
 ) -> DataFrame:
-    """As-of join: for each left row, the latest right row with
-    ``right_ts <= left_ts`` within the same `on` key.
+    """As-of left join: for each left row, the latest right row with
+    ``right_ts <= left_ts`` within the same `on` key (NULL ``asof_*``
+    columns when there is none).
 
     Implementation is the union+window recipe, NOT a pairwise
     inequality join: tag both sides, union them, and carry the most
@@ -114,10 +114,7 @@ def asof_join(
         *[F.col(c) for c in lcols if c != on],
         *[F.col("_matched").getField(c).alias(f"asof_{c}") for c in ["_ats", *right_payload]],
     )
-    out = out.withColumnRenamed("asof__ats", "asof_ts")
-    if how == "inner":
-        out = out.filter(F.col("asof_ts").isNotNull())
-    return out
+    return out.withColumnRenamed("asof__ats", "asof_ts")
 
 
 def asof_nearest_join(

@@ -28,39 +28,35 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Z_BITS = 16  # per-column resolution; 2 cols × 16 bits = 32-bit z-value
+Z_FILES = 8  # files per z-ordered write
 
 
-def _normalize_to_bits(col: Column, lo: Column, hi: Column, bits: int = Z_BITS) -> Column:
-    """Min-max normalize a numeric column onto [0, 2^bits): the rank
+def _normalize_to_bits(col: Column, lo: Column, hi: Column) -> Column:
+    """Min-max normalize a numeric column onto [0, 2^Z_BITS): the rank
     proxy that keeps the z-value computable without a global sort.
     Constant columns (hi == lo) map to 0."""
     span = hi - lo
     scaled = F.when(
         span > 0,
-        F.floor((col.cast("double") - lo) / span * ((1 << bits) - 1)),
+        F.floor((col.cast("double") - lo) / span * ((1 << Z_BITS) - 1)),
     ).otherwise(F.lit(0))
     return scaled.cast("long")
 
 
-def z_value(a_bits: Column, b_bits: Column, bits: int = Z_BITS) -> Column:
+def z_value(a_bits: Column, b_bits: Column) -> Column:
     """Interleave two bit-normalized columns into their Morton code:
     bit i of ``a`` lands at 2i+1, bit i of ``b`` at 2i. Built as a
     folded bitwise expression — whole-stage codegen, no Python."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(Z_BITS):
         z = z.bitwiseOR(
             F.shiftleft(F.shiftright(a_bits, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         ).bitwiseOR(F.shiftleft(F.shiftright(b_bits, i).bitwiseAND(F.lit(1)), 2 * i))
     return z
 
 
-def write_zordered(
-    df: DataFrame,
-    cols: tuple[str, str],
-    target_dir: str,
-    n_files: int = 8,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered on the
+def write_zordered(df: DataFrame, cols: tuple[str, str], target_dir: str) -> None:
+    """Write ``df`` as ``Z_FILES`` parquet files clustered on the
     Z-curve of two numeric columns.
 
     The column bounds ship as one broadcast row (a tiny pre-agg — at
@@ -85,7 +81,7 @@ def write_zordered(
     (
         df.join(F.broadcast(bounds))
         .withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
+        .repartitionByRange(Z_FILES, "__z")
         .sortWithinPartitions("__z")
         .drop("__z", "__alo", "__ahi", "__blo", "__bhi")
         .write.mode("overwrite")

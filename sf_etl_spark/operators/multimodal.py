@@ -120,9 +120,9 @@ ENCODED_SCHEMA = StructType(
 )
 
 
-def _wav_header(n_samples: int, sample_rate: int = 16000) -> bytes:
+def _wav_header(n_samples: int) -> bytes:
     """Canonical 44-byte RIFF/WAVE header: PCM (format 1), mono,
-    16-bit little-endian samples."""
+    16 kHz, 16-bit little-endian samples."""
     import struct
 
     data_bytes = n_samples * 2
@@ -131,7 +131,7 @@ def _wav_header(n_samples: int, sample_rate: int = 16000) -> bytes:
         + struct.pack("<I", 36 + data_bytes)
         + b"WAVE"
         + b"fmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate, sample_rate * 2, 2, 16)
+        + struct.pack("<IHHIIHH", 16, 1, 1, 16000, 32000, 2, 16)
         + b"data"
         + struct.pack("<I", data_bytes)
     )

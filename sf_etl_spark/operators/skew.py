@@ -70,20 +70,15 @@ def salted_join(
     build: DataFrame,
     on: list[str],
     n: int = 16,
-    how: str = "inner",
-    uniq_col: str | None = None,
 ) -> DataFrame:
-    """Skew-resistant equi-join: (key, salt) join of the salted probe
-    against the n×-replicated build. Result ≡ probe.join(build, on,
-    how) row-for-row; the shuffle spreads each hot key over n
-    partitions. Supported how: inner / left (semantics preserved
-    because every probe row carries exactly one salt and every build
-    key exists at every salt)."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    p = salt_probe(probe, n, uniq_col)
+    """Skew-resistant inner equi-join: (key, salt) join of the salted
+    probe against the n×-replicated build. Result ≡ probe.join(build,
+    on) row-for-row (every probe row carries exactly one salt and
+    every build key exists at every salt); the shuffle spreads each
+    hot key over n partitions."""
+    p = salt_probe(probe, n)
     b = replicate_build(build, n)
-    return p.join(b, on + [SALT_COL], how).drop(SALT_COL)
+    return p.join(b, on + [SALT_COL]).drop(SALT_COL)
 
 
 def null_skew_left_join(

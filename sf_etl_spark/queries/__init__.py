@@ -96,20 +96,37 @@ def register(
 # listed names that are not registered are ignored (so reordering
 # never hides a query).
 #
-# Current window, 7+43 = 50: (1) the 7 lanes
-# the quantiser change touched — the four PQ lanes (ann_pq_adc_topk,
+# Current window, 12+7+31 = 50: (1) the 12 lanes whose code the
+# parameter-to-constant change touched most: ann_cosine_topk (NULL
+# cosine on a zero vector), the graph-operator lanes (pagerank_topk,
+# keyword_textrank, bfs_shortest_paths, linkage_survivorship and the
+# two dedup_cluster_* lanes), salted_join_revenue, the two
+# write_parquet lanes and the two asof_join lanes; (2) the 7 lanes the
+# quantiser change touched — the four PQ lanes (ann_pq_adc_topk,
 # ann_ivf_pq_topk, ann_pq_recall_metrics, ann_ivf_pq_trained_agreement:
 # encode/ADC through the numpy PQ kernel), the two k-means IVF lanes
 # (driver-ranked probe cells) and embedding_quantize_int8 (zero-scale
-# division); (2) 43 lanes of the stale block (the standing scheme,
-# stalest evidence first: the 6 remaining r11-stale lanes, then 35
-# r12-stale and 2 r13-stale lanes), filling to 50.
+# division), still without a driver round; (3) 31 lanes of the stale
+# block (the standing scheme, stalest evidence first: the 6 remaining
+# r11-stale lanes, then 25 r12-stale lanes), filling to 50.
 # Below the boundary, names keep their prior RELATIVE order (the
 # rotation tool does not re-sort them); the remaining
-# r13-evidence lanes are first in line for the next rotation. This
+# r12-evidence lanes are first in line for the next rotation. This
 # comment and the matching one in tests/test_registry_order.py must
 # agree on the counts (r12 ADVICE).
 _PRIORITY_ORDER = [
+    "ann_cosine_topk",
+    "pagerank_topk",
+    "keyword_textrank",
+    "bfs_shortest_paths",
+    "salted_join_revenue",
+    "linkage_survivorship",
+    "sink_roundtrip_partitioned",
+    "source_schema_evolution",
+    "asof_purchase_click",
+    "attribution_channels",
+    "dedup_cluster_components",
+    "dedup_cluster_bigstar",
     "ann_pq_adc_topk",
     "ann_ivf_pq_topk",
     "ann_pq_recall_metrics",
@@ -126,7 +143,6 @@ _PRIORITY_ORDER = [
     "ab_test_lift",
     "ann_ivf_topk",
     "ann_srp_lsh_pairs",
-    "attribution_channels",
     "bucketed_join_colocated",
     "clean_text_normalize",
     "corpus_prep_pipeline",
@@ -149,8 +165,8 @@ _PRIORITY_ORDER = [
     "repetition_metrics",
     "snapshot_diff_cdc",
     "source_json_roundtrip",
+    # --- below the driver window (auto-rotated) ---
     "source_orc_roundtrip",
-    "source_schema_evolution",
     "split_train_test",
     "stream_session_window",
     "stream_stateful_user_agg",
@@ -160,11 +176,7 @@ _PRIORITY_ORDER = [
     "vocab_top_terms",
     "ann_binary_hamming_topk",
     "ann_binary_recall_metrics",
-    # --- below the driver window (auto-rotated) ---
     "triangle_count",
-    "dedup_cluster_components",
-    "dedup_cluster_bigstar",
-    "linkage_survivorship",
     "asof_pandas_merge",
     "source_sfetl_roundtrip",
     "sink_sfetl_ingest_roundtrip",
@@ -179,7 +191,6 @@ _PRIORITY_ORDER = [
     "ann_matryoshka_recall",
     "ann_recall_metrics",
     "asof_nearest_click",
-    "bfs_shortest_paths",
     "countmin_point_estimates",
     "cusum_drift_detection",
     "decile_lift_table",
@@ -190,7 +201,6 @@ _PRIORITY_ORDER = [
     "fuzzy_name_match",
     "group_median_twophase",
     "ivm_join_deltas",
-    "keyword_textrank",
     "kmv_set_overlap",
     "multimodal_decode_stats",
     "multimodal_resize_stats",
@@ -213,7 +223,6 @@ _PRIORITY_ORDER = [
     "window_suite",
     "agg_having",
     "agg_stats_by_status",
-    "ann_cosine_topk",
     "approx_distinct_custkeys",
     "array_functions",
     "arrow_batch_textstats",
@@ -285,7 +294,6 @@ _PRIORITY_ORDER = [
     "merge_time_travel",
     "ngram_jaccard_pairs",
     "null_skew_outer_join",
-    "pagerank_topk",
     "percentiles_by_flag",
     "q11_important_parts",
     "q14_promo_revenue",
@@ -295,7 +303,6 @@ _PRIORITY_ORDER = [
     "q3_shipping_priority",
     "q5_revenue_by_nation",
     "robust_outliers",
-    "salted_join_revenue",
     "scalar_subquery",
     "scd2_point_in_time_join",
     "sessionize_events",
@@ -307,7 +314,6 @@ _PRIORITY_ORDER = [
     "timezone_local_hours",
     "multimodal_features_checksum",
     "quality_gopher_filter",
-    "asof_purchase_click",
     "benford_first_digit",
     "boolean_search_and",
     "chi_square_independence",
@@ -327,7 +333,6 @@ _PRIORITY_ORDER = [
     "sample_per_label_cap",
     "scd2_dimension_history",
     "sink_merge_cdc",
-    "sink_roundtrip_partitioned",
     "soql_child_subquery",
     "soql_child_subquery_where",
     "soql_child_traversal",

@@ -388,8 +388,9 @@ _MH_SQL_BANDS = " OR ".join(
 )
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id + minhash signature array<bigint> of length N_MINHASHES.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """doc_id + minhash signature array<bigint> of length N_MINHASHES
+    over the ``text`` column.
 
     Perf-critical shape: each shingle string is md5-hashed ONCE,
     exploded to (doc_id, u) rows, and the 32 minhashes are plain
@@ -425,7 +426,7 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     tok_hash = (
         ensure_parallelism(docs, key="doc_id")
-        .withColumn("_toks", F.split(text_col, " "))
+        .withColumn("_toks", F.split("text", " "))
         .select("doc_id", F.explode(shingles).alias("_sh"))
         # non-negative 64-bit md5 value reduced mod P: u ∈ [0, P)
         .select(
@@ -652,9 +653,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_candidates(fps, SIMHASH_MAX_HAMMING)
 
 
-def simhash_fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """doc_id + 64-bit simhash over distinct whitespace tokens."""
-    toks = F.array_distinct(F.split(text_col, " "))
+def simhash_fingerprints(docs: DataFrame) -> DataFrame:
+    """doc_id + 64-bit simhash over the distinct whitespace tokens of
+    ``text``."""
+    toks = F.array_distinct(F.split("text", " "))
     # Explode to (doc_id, token_hash); per-bit ±1 votes aggregate with
     # static shift amounts so everything stays in codegen'd JVM exprs.
     tok_hash = (
@@ -908,17 +910,13 @@ def embedding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="brute-force cosine top-10 vs query vec_id=0 (ANN baseline)",
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # imported here, not at module level: a module-level import would
+    # register the similarity lanes before this module's own
+    from sf_etl_spark.queries.similarity import _cos, _norm, _vec
+
     e = load_table(spark, sf_dir, "embeddings")
-    vec = F.transform("embedding", lambda x: x.cast("double"))
-    norm = F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda a, b: a + b))
-    q = (
-        e.filter(F.col("vec_id") == 0)
-        .select(vec.alias("qv"), norm.alias("qn"))
-    )
-    dot = F.aggregate(
-        F.zip_with(vec, F.col("qv"), lambda x, y: x * y), F.lit(0.0), lambda a, b: a + b
-    )
-    cosine = dot / (norm * F.col("qn"))
+    q = e.filter(F.col("vec_id") == 0).select(_vec().alias("qv"), _norm(_vec()).alias("qn"))
+    cosine = _cos(_vec(), F.col("qv"), _norm(_vec()), F.col("qn"))
     return (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))

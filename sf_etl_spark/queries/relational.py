@@ -2272,7 +2272,7 @@ def linkage_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # neighborhood match graphs are name-sorted CHAINS (high diameter
     # — measured 56 components over 20k verts at sf0.1), so min-label
     # propagation can NEVER converge within a small round budget here
-    # and the r6 shape (label_rounds=2 then fall back) just burned two
+    # and the r6 shape (two label-propagation rounds, then the fallback) burned two
     # full propagation rounds before every run restarted on the
     # O(log n) large-star/small-star machinery. Calling it directly
     # removes those dead rounds; labels are identical (component min
@@ -2284,7 +2284,7 @@ def linkage_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second (and third) time — interleaved A/B 26.8 -> 21.4 s at the
     # sf1 probe, 8.8 -> 8.4 s at sf0.1 (match pairs never self-loop,
     # so no endpoint is lost to canonicalization).
-    comp = star_components(None, mpairs, vertex_col="vertex")
+    comp = star_components(None, mpairs)
     attrs = comp.join(p, comp["vertex"] == p["p_partkey"]).select(
         F.col("component").alias("cluster"), "p_partkey", "p_name", "cents"
     )

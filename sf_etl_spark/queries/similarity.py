@@ -109,15 +109,13 @@ def _seed_cells(
     return ids[cells], vecs[cells], {int(i): v for i, v in zip(ids, vecs) if i in query_ids}
 
 
-def exact_cosine_pairs(
-    n: DataFrame, cand_ids: DataFrame, threshold: float = COS_THRESHOLD
-) -> DataFrame:
+def exact_cosine_pairs(n: DataFrame, cand_ids: DataFrame) -> DataFrame:
     """THE verification stage, parameterized on candidate pairs.
 
     ``cand_ids`` is a bare-ID (vec_a, vec_b) DataFrame from any
     candidate generator (SRP-LSH buckets, IVF cells, MinHash bands…).
     Vectors attach AFTER candidate dedup — one equi-join per side —
-    and the exact fold-order-stable cosine filters ≥ threshold. Cost
+    and the exact fold-order-stable cosine filters ≥ COS_THRESHOLD. Cost
     is O(|candidates|), never O(n²): the full corpus is only ever
     touched by the two hash-join probes. (The registered
     ``dedup_embedding_cosine`` feeds this the all-pairs candidate set
@@ -148,7 +146,7 @@ def exact_cosine_pairs(
     )
     cosine = _cos(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
     return (
-        cand.filter(cosine >= threshold)
+        cand.filter(cosine >= COS_THRESHOLD)
         .select("vec_a", "vec_b", cosine.alias("cosine"))
         .orderBy("vec_a", "vec_b")
     )
@@ -1727,7 +1725,6 @@ def _pq_train_codebooks(
     spark: SparkSession,
     n: DataFrame,
     seed: tuple[np.ndarray, np.ndarray],
-    iters: int = PQ_TRAIN_ITERS,
     train_sample_mod: int = 1,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Grouped per-subspace k-means: the codebooks of all PQ_M
@@ -1742,7 +1739,7 @@ def _pq_train_codebooks(
     convention); an empty seed, or a sample that forms no group,
     leaves the seed as it is.
 
-    ALL ``iters`` Lloyd iterations run inside ONE
+    ALL ``PQ_TRAIN_ITERS`` Lloyd iterations run inside ONE
     ``groupBy("m").applyInPandas`` job: subspaces are independent, so
     each of the PQ_M tasks holds every row it needs for the whole loop.
     One pass over the sample instead of one scan + one driver
@@ -1766,7 +1763,7 @@ def _pq_train_codebooks(
         m = int(pdf["m"].iloc[0])
         X = np.vstack(pdf["sv"].to_numpy())
         C = init[m].copy()
-        for _ in range(iters):
+        for _ in range(PQ_TRAIN_ITERS):
             # chunked explicit (x-c)^2: bounds the rows x C x dim
             # intermediate to ~64 MB per chunk; argmin of the FIRST
             # minimum = the lowest-c tie-break

@@ -781,12 +781,12 @@ def _cluster_report(spark: SparkSession, sf_dir: str, cc_fn) -> DataFrame:
         "transform(slice(ds, i + 2, size(ds) - i - 1), y -> struct(x AS src, y AS dst))))"
     )
     edges = grps.select(F.explode(pair_expr).alias("p")).select("p.src", "p.dst")
-    comp = cc_fn(d.select("doc_id"), edges, vertex_col="doc_id")
+    comp = cc_fn(d.select(F.col("doc_id").alias("vertex")), edges)
     return comp.select(
-        "doc_id",
+        F.col("vertex").alias("doc_id"),
         F.col("component").alias("cluster_id"),
         F.count(F.lit(1)).over(W.partitionBy("component")).cast("bigint").alias("cluster_size"),
-        (F.col("doc_id") == F.col("component")).alias("is_canonical"),
+        (F.col("vertex") == F.col("component")).alias("is_canonical"),
     ).orderBy("doc_id")
 
 

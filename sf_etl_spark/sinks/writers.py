@@ -6,7 +6,7 @@ sink surface is completed the Spark-native way, with the DDL renderer
 (`sf_etl_spark.schema.ddl`, reference R9 parity) available to
 pre-create JDBC targets.
 
-Scale defaults, each deliberate:
+Fixed settings, each deliberate:
  - **zstd** compression: ~30% smaller than snappy at similar read
    speed — at 100 TB that's tens of TB of storage and shuffle I/O.
  - **partitionBy** on low-cardinality keys gives partition-pruned
@@ -23,101 +23,88 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-    compression: str = "zstd",
-    max_records_per_file: int | None = 5_000_000,
-) -> None:
-    """Partitioned parquet sink with scale-safe defaults."""
-    w = df.write.mode(mode).option("compression", compression)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
+# compaction's row budget per output file
+COMPACT_ROWS_PER_FILE = 1_000_000
+
+
+def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    """Partitioned parquet sink: overwrite, zstd, at most 5,000,000
+    rows per file."""
+    w = (
+        df.write.mode("overwrite")
+        .option("compression", "zstd")
+        .option("maxRecordsPerFile", 5_000_000)
+    )
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    header: bool = True,
-    compression: str = "gzip",
-) -> None:
-    """CSV sink — the reference's bulk-extract wire format
-    (`BulkQueryStatusResponse.content_type: CSV`,
-    `oxidized-force/src/response.rs:36-44`), emitted rather than
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV sink (overwrite, header row, gzip) — the reference's
+    bulk-extract wire format (`BulkQueryStatusResponse.content_type:
+    CSV`, `oxidized-force/src/response.rs:36-44`), emitted rather than
     fetched. Splittable-unfriendly (gzip), so for interchange only."""
-    df.write.mode(mode).option("header", header).option("compression", compression).csv(path)
+    df.write.mode("overwrite").option("header", True).option("compression", "gzip").csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink — the reference's REST response shape
-    (`QueryResponse.records`, `response.rs:4-10`) as an output lane."""
-    df.write.mode(mode).json(path)
+def write_json(df: DataFrame, path: str) -> None:
+    """JSON-lines sink (overwrite) — the reference's REST response
+    shape (`QueryResponse.records`, `response.rs:4-10`) as an output
+    lane."""
+    df.write.mode("overwrite").json(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-    compression: str = "zstd",
-) -> None:
-    """ORC sink — the columnar alternative to parquet for warehouses
-    standardized on ORC; same pushdown/pruning properties."""
-    w = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    """ORC sink (overwrite, zstd) — the columnar alternative to parquet
+    for warehouses standardized on ORC; same pushdown properties."""
+    df.write.mode("overwrite").option("compression", "zstd").orc(path)
 
 
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    batch_size: int = 10_000,
-    num_partitions: int | None = None,
-    **options: str,
-) -> None:
+def write_jdbc(df: DataFrame, url: str, table: str, **options: str) -> None:
     """JDBC sink (e.g. the Postgres target the reference's DDL
-    prepares). Each write partition opens one connection; cap with
-    `num_partitions` so a wide plan doesn't open 1000 connections.
+    prepares): appends in batches of 10,000 rows, one connection per
+    write partition; ``options`` pass through to the JDBC source.
     Raises the underlying error when no driver jar is on the
     classpath — this container carries none, so tests gate on it."""
     w = (
         df.write.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .option("batchsize", batch_size)
+        .option("batchsize", 10_000)
     )
-    if num_partitions:
-        w = w.option("numPartitions", num_partitions)
     for k, v in options.items():
         w = w.option(k, v)
-    w.mode(mode).save()
+    w.mode("append").save()
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-    partition_by: list[str] | None = None,
-    vacuum: bool = False,
-) -> int:
+def _partition_cols(fs, jpath) -> list[str]:
+    """Hive-style partition columns of a parquet directory, outermost
+    first, read off its first ``col=value`` subdirectory at each
+    level."""
+    cols: list[str] = []
+    while True:
+        subs = [
+            st.getPath()
+            for st in fs.listStatus(jpath)
+            if st.isDirectory() and "=" in st.getPath().getName()
+        ]
+        if not subs:
+            return cols
+        jpath = subs[0]
+        cols.append(jpath.getName().split("=", 1)[0])
+
+
+def compact_parquet(spark, path: str, vacuum: bool = False) -> int:
     """Small-file compaction — the maintenance pass the write path
     deliberately does not do inline (see module doc).
 
     Streaming sinks and fine-grained merges accrete many small files;
     at 100 TB the cost is real (a scan task per file, footer reads,
     NameNode/listing pressure). Compaction rewrites the dataset into
-    ``ceil(rows / target_rows_per_file)`` files (per partition
-    directory when ``partition_by`` is given, preserving the layout
-    and its pruning), then atomically swaps directories via the Hadoop
+    ``ceil(rows / COMPACT_ROWS_PER_FILE)`` files (per partition
+    directory when the dataset has ``col=value`` subdirectories,
+    preserving the layout and its pruning), then atomically swaps directories via the Hadoop
     FileSystem — works unchanged on hdfs:// / s3a:// targets.
 
     Returns the number of files after compaction. The delete+rename
@@ -139,8 +126,7 @@ def compact_parquet(
     Superseded commit dirs — and with them ALL archived time-travel
     versions — are garbage-collected only with ``vacuum=True``; the
     default keeps history readable by time travel (the Delta OPTIMIZE
-    contract: compaction is not history truncation). Passing an
-    explicit ``partition_by`` for a merge target is refused.
+    contract: compaction is not history truncation).
     """
     import math
     import uuid
@@ -159,13 +145,6 @@ def compact_parquet(
     fs, target_path = _hadoop_fs(spark, path)
     meta = _read_merge_meta(spark, fs, target_path)
     if meta is not None:
-        if partition_by is not None and partition_by != [BUCKET_COL]:
-            raise ValueError(
-                f"{path} is a merge target (bucket layout {BUCKET_COL}="
-                f"{meta['n_buckets']}); compacting it with partition_by="
-                f"{partition_by!r} would break the recorded bucketing — "
-                f"pass partition_by=None"
-            )
         df = _read_buckets(spark, path, meta)
         # the shared snapshot-commit protocol: the compacted snapshot is
         # a fresh commit dir replacing EVERY prior bucket mapping.
@@ -181,7 +160,7 @@ def compact_parquet(
             df.repartition(F.col(BUCKET_COL)),
             n_buckets=int(meta["n_buckets"]),
             prior_buckets=None,
-            write_options={"maxRecordsPerFile": str(target_rows_per_file)},
+            write_options={"maxRecordsPerFile": str(COMPACT_ROWS_PER_FILE)},
             expected_version=int(meta.get("version", 0)),
         )
         if vacuum:
@@ -191,15 +170,16 @@ def compact_parquet(
 
     df = spark.read.parquet(path)
     rows = df.count()
-    n_files = max(1, math.ceil(rows / target_rows_per_file))
+    n_files = max(1, math.ceil(rows / COMPACT_ROWS_PER_FILE))
     staging = path.rstrip("/") + f"__compact_{uuid.uuid4().hex[:8]}"
+    partition_by = _partition_cols(fs, target_path)
     if partition_by:
         # one task per partition value → one file per partition dir,
         # split further by maxRecordsPerFile when a partition is big
         (
             df.repartition(*[F.col(c) for c in partition_by])
             .write.mode("overwrite")
-            .option("maxRecordsPerFile", target_rows_per_file)
+            .option("maxRecordsPerFile", COMPACT_ROWS_PER_FILE)
             .partitionBy(*partition_by)
             .parquet(staging)
         )

@@ -170,9 +170,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
-def ensure_parallelism(
-    df: DataFrame, key: str | None = None, min_partitions: int | None = None
-) -> DataFrame:
+def ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     """Hash-repartition on `key` ONLY when the plan is under-parallel.
 
     A small parquet fixture (one file, one row group) scans as a single
@@ -189,7 +187,7 @@ def ensure_parallelism(
        candidate join) — the whole signature subtree recomputed, 3.5x
        slower. Hash-by-key is deterministic AND pre-aligns the
        follow-up groupBy(key) shuffle.
-     - Target defaults to half the scheduler parallelism: the hashing
+     - Target is half the scheduler parallelism: the hashing
        stage is memory-bandwidth-bound, and saturating every vCPU with
        it just thrashes (32-way measured slower than 16-way on 32
        vCPUs); the guard only fires on under-parallel fixture scans,
@@ -208,7 +206,7 @@ def ensure_parallelism(
     DataFrames, post-shuffle frames) are assumed already parallel.
     """
     spark = df.sparkSession
-    target = min_partitions or max(2, spark.sparkContext.defaultParallelism // 2)
+    target = max(2, spark.sparkContext.defaultParallelism // 2)
     files = df.inputFiles()
     if not files:
         return df  # no file provenance: not a fixture-scan artifact

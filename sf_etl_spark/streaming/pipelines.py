@@ -135,11 +135,12 @@ def events_stream(
 # ---------------------------------------------------------------------------
 
 
-def stream_tumbling_agg(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """1h tumbling window counts/sums — the streaming twin of the
-    oracle-checked ``window_tumbling`` batch query."""
+def stream_tumbling_agg(events: DataFrame) -> DataFrame:
+    """1h tumbling window counts/sums under a 10-minute watermark — the
+    streaming twin of the oracle-checked ``window_tumbling`` batch
+    query."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -152,13 +153,13 @@ def stream_tumbling_agg(events: DataFrame, watermark: str = "10 minutes") -> Dat
     )
 
 
-def stream_session_agg(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Per-user session windows (5m gap) — ``F.session_window`` is
-    inherently stateful; merging sessions across micro-batches is
-    exactly what the state store does (streaming twin of
-    ``window_session``)."""
+def stream_session_agg(events: DataFrame) -> DataFrame:
+    """Per-user session windows (5m gap, 10-minute watermark) —
+    ``F.session_window`` is inherently stateful; merging sessions
+    across micro-batches is exactly what the state store does
+    (streaming twin of ``window_session``)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "5 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -177,24 +178,23 @@ def stream_session_agg(events: DataFrame, watermark: str = "10 minutes") -> Data
     )
 
 
-def stream_dedup_within_watermark(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+def stream_dedup_within_watermark(events: DataFrame) -> DataFrame:
     """Exactly-once by key under replay/at-least-once delivery:
     ``dropDuplicatesWithinWatermark`` keeps key state only inside the
-    watermark horizon — bounded state at any scale, which plain
-    ``dropDuplicates`` on a stream does not give."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    30-minute watermark horizon — bounded state at any scale, which
+    plain ``dropDuplicates`` on a stream does not give."""
+    return events.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(["event_id"])
 
 
 def stream_click_attribution(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = "30 minutes",
-    watermark: str = "30 minutes", how: str = "inner",
+    clicks: DataFrame, purchases: DataFrame, how: str = "inner"
 ) -> DataFrame:
     """Stream-stream join: purchases attributed to a same-user click
-    within ``horizon``.
+    within 30 minutes.
 
-    Both sides carry watermarks and the join condition bounds event
+    Both sides carry 30-minute watermarks and the join condition bounds event
     time from BOTH directions — exactly what lets Spark prune join
-    state: a click older than watermark+horizon can never match a
+    state: a click older than watermark + 30 minutes can never match a
     future purchase and is evicted. Unbounded state in a stream-stream
     join is the 100 TB killer; the interval condition is not an
     optimization, it is the correctness condition for bounded memory.
@@ -211,7 +211,7 @@ def stream_click_attribution(
     oracles of the registered lanes restate.
     """
     c = (
-        clicks.withWatermark("ts", watermark)
+        clicks.withWatermark("ts", "30 minutes")
         .select(
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
@@ -219,7 +219,7 @@ def stream_click_attribution(
         )
     )
     p = (
-        purchases.withWatermark("ts", watermark)
+        purchases.withWatermark("ts", "30 minutes")
         .select(
             F.col("event_id").alias("purchase_id"),
             F.col("user_id").alias("p_user"),
@@ -229,8 +229,8 @@ def stream_click_attribution(
     return c.join(
         p,
         F.expr(
-            f"c_user = p_user AND purchase_ts >= click_ts "
-            f"AND purchase_ts < click_ts + INTERVAL {horizon}"
+            "c_user = p_user AND purchase_ts >= click_ts "
+            "AND purchase_ts < click_ts + INTERVAL 30 minutes"
         ),
         how,
     ).select(
@@ -272,11 +272,12 @@ def _user_stats_fn(key, pdf_iter, state: GroupState):
     )
 
 
-def stream_stateful_user_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Custom stateful op via ``applyInPandasWithState`` (Arrow-batched;
-    the reference has no extension point like this at all)."""
+def stream_stateful_user_counts(events: DataFrame) -> DataFrame:
+    """Custom stateful op via ``applyInPandasWithState`` (Arrow-batched,
+    10-minute watermark; the reference has no extension point like
+    this at all)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
             _user_stats_fn,
@@ -296,12 +297,12 @@ def stream_stateful_user_counts(events: DataFrame, watermark: str = "10 minutes"
 def run_to_memory_table(
     plan: DataFrame,
     output_mode: str,
-    checkpoint_dir: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> tuple[str, object]:
     """Run a streaming plan to completion (``availableNow``) into a
-    memory sink; returns (table_name, query). Memory sink is test/demo
-    only — production sinks are files/Kafka/foreachBatch.
+    memory sink, checkpointing to a fresh temp directory; returns
+    (table_name, query). Memory sink is test/demo only — production
+    sinks are files/Kafka/foreachBatch.
 
     ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` to
     this query: a stateful query's STATE STORE count is frozen from
@@ -315,7 +316,7 @@ def run_to_memory_table(
     so surrounding batch lanes keep their parallelism.
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = tempfile.mkdtemp(prefix="ckpt_")
     sess = plan.sparkSession
     prev = sess.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:
@@ -339,6 +340,9 @@ def run_to_memory_table(
 BUCKET_COL = "_kbucket"
 MERGE_META = "_merge_meta.json"
 VERSIONS_DIR = "_versions"
+# lost commit races merge_into_partitioned_parquet replays before
+# ConcurrentMergeError propagates
+_MERGE_RETRIES = 3
 
 
 class ConcurrentMergeError(RuntimeError):
@@ -471,7 +475,7 @@ def _write_merge_meta(
         # A non-race failure (permissions, transient IO) must propagate
         # as itself — routing it into the heal path would tell the
         # operator to delete a version file that does not exist, and
-        # ConcurrentMergeError would send the caller into max_retries
+        # ConcurrentMergeError would send the caller into _MERGE_RETRIES
         # of full re-merges against a permanently failing filesystem
         # (r14 review finding).
         if not fs.exists(vfile):
@@ -592,7 +596,7 @@ def _read_buckets(
 
 
 def read_merge_target(
-    spark: SparkSession, target_dir: str, buckets=None, version: int | None = None
+    spark: SparkSession, target_dir: str, version: int | None = None
 ) -> DataFrame:
     """Read a merge/rollup/SCD2 target as of its current manifest — or,
     with ``version=k``, TIME-TRAVEL to archived snapshot k.
@@ -600,8 +604,8 @@ def read_merge_target(
     THE read path for anything `merge_into_partitioned_parquet`
     maintains — a plain ``spark.read.parquet(target_dir)`` would sweep
     superseded commit directories in with the live ones and double-read
-    rows. The manifest resolves to one snapshot; `buckets` prunes the
-    read to the named buckets. Old versions stay readable until
+    rows. The manifest resolves to one snapshot. Old versions stay
+    readable until
     :func:`vacuum_merge_staging` truncates history (the Delta/Iceberg
     vacuum-vs-time-travel contract).
     """
@@ -626,7 +630,7 @@ def read_merge_target(
                 f"(vacuumed, or never written)"
             )
         meta = _read_json_file(spark, fs, vfile)
-    return _read_buckets(spark, target_dir, meta, buckets)
+    return _read_buckets(spark, target_dir, meta)
 
 
 def list_merge_versions(spark: SparkSession, target_dir: str) -> list[int]:
@@ -657,7 +661,6 @@ def merge_into_partitioned_parquet(
     not_matched_insert: Column | bool = True,
     drop_cols: list[str] | None = None,
     n_buckets: int = 16,
-    max_retries: int = 3,
     expected_version: int | None = None,
 ) -> None:
     """SQL ``MERGE INTO`` over a bucket-partitioned parquet target,
@@ -726,7 +729,7 @@ def merge_into_partitioned_parquet(
     transparently re-run here against the fresh snapshot — the
     matched/unmatched joins re-read the new state, so the retried
     merge composes correctly with the interleaved one. After
-    ``max_retries`` lost races :class:`ConcurrentMergeError`
+    ``_MERGE_RETRIES`` lost races :class:`ConcurrentMergeError`
     propagates. Callers whose SOURCE rows were derived from a read of
     the target (read-modify-write, e.g. :func:`fold_into_rollup`)
     must instead pin ``expected_version`` to the version they read —
@@ -742,7 +745,7 @@ def merge_into_partitioned_parquet(
     if isinstance(not_matched_insert, bool):
         not_matched_insert = F.lit(not_matched_insert)
     fs, target_path = _hadoop_fs(spark, target_dir)
-    attempts = 1 if expected_version is not None else max_retries + 1
+    attempts = 1 if expected_version is not None else _MERGE_RETRIES + 1
     for attempt in range(attempts):
         try:
             return _merge_once(
@@ -910,7 +913,6 @@ def fold_into_rollup(
     key_cols: list[str],
     monoid: dict[str, str],
     rollup_dir: str,
-    n_buckets: int = 16,
 ) -> None:
     """Fold a pre-aggregated delta into a stored rollup table — the
     generic continuous-aggregate step: stored partials for ONLY the
@@ -975,7 +977,6 @@ def fold_into_rollup(
                 combined,
                 key_cols,
                 rollup_dir,
-                n_buckets=n_buckets,
                 expected_version=int(meta.get("version", 0)) if meta else 0,
             )
         except ConcurrentMergeError:
@@ -983,11 +984,7 @@ def fold_into_rollup(
                 raise
 
 
-def maintain_hourly_rollup(
-    batch_df: DataFrame,
-    rollup_dir: str,
-    n_buckets: int = 16,
-) -> None:
+def maintain_hourly_rollup(batch_df: DataFrame, rollup_dir: str) -> None:
     """Incrementally maintain an (user_id, hour) aggregate table from
     an events batch — the continuous-aggregate / hypertable-rollup
     pattern: the fact stream is never re-scanned; each batch folds its
@@ -1035,7 +1032,6 @@ def maintain_hourly_rollup(
         key_cols,
         {"n_events": "sum", "sum_value": "sum", "max_value": "max"},
         rollup_dir,
-        n_buckets=n_buckets,
     )
 
 

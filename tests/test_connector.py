@@ -571,6 +571,59 @@ def test_stream_reader_does_not_emit_an_unprojected_watermark():
         assert sorted(rows) == sorted((r["Id"], r["Priority"]) for r in server.rows)
 
 
+def test_stream_started_at_initial_watermark_reads_only_rows_above_it(spark, tmp_path):
+    """``initial_watermark=W`` (stream from a backfill's high-water
+    mark): availableNow delivers exactly the rows with SeqNo > W, and
+    latestOffset never reports less than W, also when no row is above
+    it. W=11 also checks the comparison is numeric ('9' > '11' as
+    strings)."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from sf_etl_spark.connector.datasource import SfIncrementalStreamReader
+    from sf_etl_spark.connector.datasource import register as register_fmt
+
+    server = MockSalesforce(n_rows=0, page_size=10)
+    server.rows = [{"Id": f"500{i:015d}", "SeqNo": str(i)} for i in range(30)]
+    url = server.start()
+    try:
+        opts = {
+            **sf_options(url),
+            "object": "Case",
+            "watermark_field": "SeqNo",
+            "initial_watermark": "11",
+        }
+        schema = StructType([StructField(n, StringType()) for n in ("Id", "SeqNo")])
+        reader = SfIncrementalStreamReader(schema, opts)
+        start = reader.initialOffset()
+        assert start == {"wm": "11"}
+        latest = reader.latestOffset()
+        assert latest == {"wm": 29}
+        assert sorted(int(r[1]) for r in _stream_rows(reader, start, latest)) == list(range(12, 30))
+
+        register_fmt(spark)
+        q = (
+            spark.readStream.format("sfetl")
+            .schema("Id string, SeqNo string")
+            .options(**opts)
+            .load()
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        back = spark.read.parquet(str(tmp_path / "out")).select("SeqNo")
+        assert sorted(int(r[0]) for r in back.collect()) == list(range(12, 30))
+
+        # nothing above W upstream: the offset stays at W, plans nothing
+        server.rows = server.rows[:12]
+        assert reader.latestOffset() == start
+        assert reader.partitions(start, reader.latestOffset()) == []
+    finally:
+        server.stop()
+
+
 def _stream_to_parquet(spark, url: str, out: str, ckpt: str) -> None:
     from sf_etl_spark.connector.datasource import register as register_fmt
 

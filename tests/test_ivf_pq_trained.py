@@ -266,7 +266,7 @@ def test_lloyd_tolerates_missing_seed_ids(spark):
 
     n = normalized_vectors(spark, SF_DIR).filter(~F.col("vec_id").isin(5, 11))
     seed = _seed(n)
-    cids, cb = _pq_train_codebooks(spark, n, seed, iters=2)
+    cids, cb = _pq_train_codebooks(spark, n, seed)
     assert cids.tolist() == seed[0].tolist()  # same key set in, same key set out
     assert not {5, 11} & set(cids.tolist())
     assert cb.shape == (PQ_M, PQ_C - 2, PQ_SUBDIM)
@@ -279,7 +279,7 @@ def test_empty_seed_codebook_degrades_to_empty(spark):
     from sf_etl_spark.queries.similarity import _pq_train_codebooks, normalized_vectors
 
     n = normalized_vectors(spark, SF_DIR).filter(F.col("vec_id") > PQ_C)
-    cids, cb = _pq_train_codebooks(spark, n, _seed(n), iters=2)
+    cids, cb = _pq_train_codebooks(spark, n, _seed(n))
     assert len(cids) == 0
     assert cb.shape == (PQ_M, 0, PQ_SUBDIM)
     with pytest.raises(ValueError):
@@ -287,11 +287,10 @@ def test_empty_seed_codebook_degrades_to_empty(spark):
 
 
 # SHA-256 of the sorted (m, c, w) codebook `_pq_train_codebooks(spark, n,
-# seed, iters=2)` fits on the sf0.001 embeddings: m and c as big-endian
-# int64, then w as big-endian doubles. Captured when a per-iteration
-# literal-expression Lloyd loop still ran beside the grouped fold and
-# both gave these exact bits, at local[1] and local[4].
-GOLDEN_CODEBOOK_SHA256 = "ccde9269d00ce7109062ec5e27fe7a9f8cb758ea997d261873be01488bf2962f"
+# seed)` fits (PQ_TRAIN_ITERS Lloyd iterations) on the sf0.001
+# embeddings: m and c as big-endian int64, then w as big-endian
+# doubles. Captured at local[1] and local[4], identical at both.
+GOLDEN_CODEBOOK_SHA256 = "dc145656612941429c6d4e2600d952e4c28e3721a34088b15368e07a29e6cf58"
 
 
 def _codebook_sha256(cb: tuple[np.ndarray, np.ndarray]) -> str:
@@ -325,7 +324,7 @@ def test_trained_codebook_matches_golden_hash(spark):
     try:
         for parts in ("1", "7"):
             spark.conf.set(key, parts)
-            cb = _pq_train_codebooks(spark, n, seed, iters=2)
+            cb = _pq_train_codebooks(spark, n, seed)
             assert _codebook_sha256(cb) == GOLDEN_CODEBOOK_SHA256, parts
     finally:
         spark.conf.set(key, prev)
@@ -345,6 +344,6 @@ def test_empty_training_sample_keeps_seed_codebook(spark):
     assert _train_sample(n, mod).count() == 0
     seed = _seed(n)
     assert len(seed[0])
-    cids, cb = _pq_train_codebooks(spark, n, seed, iters=2, train_sample_mod=mod)
+    cids, cb = _pq_train_codebooks(spark, n, seed, train_sample_mod=mod)
     assert cids.tolist() == seed[0].tolist()
     assert np.array_equal(cb, seed[1])

@@ -7,10 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sf_etl_spark.operators.layout import write_zordered
+from sf_etl_spark.operators.layout import Z_FILES, write_zordered
 from sf_etl_spark.sources import load_table
-
-N_FILES = 8
 
 
 def file_column_spans(path: str, column: str) -> list[tuple[float, float]]:
@@ -52,10 +50,10 @@ def test_zorder_bounds_both_columns(spark, sf_dir, tmp_path):
     ).first()
 
     zdir = str(tmp_path / "z")
-    write_zordered(orders, ("o_custkey", "o_totalprice"), zdir, n_files=N_FILES)
+    write_zordered(orders, ("o_custkey", "o_totalprice"), zdir)
     # each clustered column's average per-file span must be well under
     # the full range: with 8 files a random layout sits at ~1.0 on
-    # both; a z-curve bounds both around ~1/sqrt(n_files) or better
+    # both; a z-curve bounds both around ~1/sqrt(Z_FILES) or better
     k_frac = _avg_span_frac(zdir, "o_custkey", lo_k, hi_k)
     p_frac = _avg_span_frac(zdir, "o_totalprice", lo_p, hi_p)
     assert k_frac < 0.6, f"custkey spans too wide: {k_frac:.2f}"
@@ -66,7 +64,7 @@ def test_zorder_bounds_both_columns(spark, sf_dir, tmp_path):
     # plain sort, is the multi-column layout)
     sdir = str(tmp_path / "s")
     (
-        orders.repartitionByRange(N_FILES, "o_custkey")
+        orders.repartitionByRange(Z_FILES, "o_custkey")
         .sortWithinPartitions("o_custkey")
         .write.mode("overwrite")
         .parquet(sdir)
@@ -82,7 +80,7 @@ def test_zorder_roundtrip_schema_clean(spark, sf_dir, tmp_path):
     # no helper columns may leak into the written schema
     orders = load_table(spark, sf_dir, "orders")
     zdir = str(tmp_path / "z2")
-    write_zordered(orders, ("o_custkey", "o_totalprice"), zdir, n_files=4)
+    write_zordered(orders, ("o_custkey", "o_totalprice"), zdir)
     back = spark.read.parquet(zdir)
     assert sorted(back.columns) == sorted(orders.columns)
     assert back.count() == orders.count()

@@ -14,13 +14,27 @@ DRIVER_WINDOW = 50
 
 # Queries whose driver CORRECTNESS row most needs refreshing now
 # — they must sit inside the driver's ~50-row window. Rank is by
-# information value (the r15 verdict's task 8): (1) the 7 lanes the
-# quantiser change touched (the four PQ lanes, the two k-means IVF
-# lanes and embedding_quantize_int8); (2) 43 lanes of the stale block
-# (the 6 remaining r11-stale lanes, then 35 r12-stale and 2
-# r13-stale lanes), filling to 50. 7+43 = 50.
+# information value (the r15 verdict's task 8): (1) the 12 lanes the
+# parameter-to-constant change touched most (ann_cosine_topk, the
+# graph-operator, salted-join, write_parquet and asof_join lanes);
+# (2) the 7 lanes the quantiser change touched (the four PQ lanes, the
+# two k-means IVF lanes and embedding_quantize_int8); (3) 31 lanes of
+# the stale block (the 6 remaining r11-stale lanes, then 25 r12-stale
+# lanes), filling to 50. 12+7+31 = 50.
 # Everything re-proven since rotates behind the boundary.
 MUST_BE_IN_WINDOW = [
+    "ann_cosine_topk",
+    "pagerank_topk",
+    "keyword_textrank",
+    "bfs_shortest_paths",
+    "salted_join_revenue",
+    "linkage_survivorship",
+    "sink_roundtrip_partitioned",
+    "source_schema_evolution",
+    "asof_purchase_click",
+    "attribution_channels",
+    "dedup_cluster_components",
+    "dedup_cluster_bigstar",
     "ann_pq_adc_topk",
     "ann_ivf_pq_topk",
     "ann_pq_recall_metrics",
@@ -37,7 +51,6 @@ MUST_BE_IN_WINDOW = [
     "ab_test_lift",
     "ann_ivf_topk",
     "ann_srp_lsh_pairs",
-    "attribution_channels",
     "bucketed_join_colocated",
     "clean_text_normalize",
     "corpus_prep_pipeline",
@@ -60,17 +73,6 @@ MUST_BE_IN_WINDOW = [
     "repetition_metrics",
     "snapshot_diff_cdc",
     "source_json_roundtrip",
-    "source_orc_roundtrip",
-    "source_schema_evolution",
-    "split_train_test",
-    "stream_session_window",
-    "stream_stateful_user_agg",
-    "stream_stream_left_join_unmatched",
-    "stream_tumbling_1h",
-    "unpivot_metrics",
-    "vocab_top_terms",
-    "ann_binary_hamming_topk",
-    "ann_binary_recall_metrics",
 ]
 
 

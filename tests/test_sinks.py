@@ -137,8 +137,9 @@ def test_events_loader_tolerates_both_ts_encodings(spark, tmp_path):
 
 
 def test_compact_parquet_flat(spark, orders, tmp_path):
-    """Compaction must shrink the file count to the row-budget target
-    and preserve every row (count + keyed checksum identical)."""
+    """Compaction must shrink the file count to the row budget (one
+    file for a fixture far under COMPACT_ROWS_PER_FILE) and preserve
+    every row (count + keyed checksum identical)."""
     from sf_etl_spark.sinks import compact_parquet
 
     path = str(tmp_path / "frag")
@@ -147,8 +148,8 @@ def test_compact_parquet_flat(spark, orders, tmp_path):
     n_rows = before.count()
     chk_before = before.agg(F.sum(F.xxhash64(*before.columns).cast("decimal(38,0)"))).first()[0]
 
-    n_files = compact_parquet(spark, path, target_rows_per_file=n_rows // 2 + 1)
-    assert n_files == 2
+    n_files = compact_parquet(spark, path)
+    assert n_files == 1
     after = spark.read.parquet(path)
     assert after.count() == n_rows
     assert after.agg(F.sum(F.xxhash64(*after.columns).cast("decimal(38,0)"))).first()[0] == chk_before
@@ -164,9 +165,7 @@ def test_compact_parquet_partitioned_preserves_layout(spark, orders, tmp_path):
     frag = len(glob.glob(os.path.join(path, "o_orderstatus=*", "*.parquet")))
     n_rows = spark.read.parquet(path).count()
 
-    compact_parquet(
-        spark, path, target_rows_per_file=n_rows, partition_by=["o_orderstatus"]
-    )
+    compact_parquet(spark, path)  # partition columns read off the layout
     dirs = glob.glob(os.path.join(path, "o_orderstatus=*"))
     files = glob.glob(os.path.join(path, "o_orderstatus=*", "*.parquet"))
     assert dirs, "partition layout lost"
@@ -235,7 +234,7 @@ def test_compact_parquet_merge_target_atomic(spark, tmp_path):
         (r.k, r.v) for r in read_merge_target(spark, target).drop("_kbucket").collect()
     }
 
-    compact_parquet(spark, target, target_rows_per_file=1000, vacuum=True)
+    compact_parquet(spark, target, vacuum=True)
 
     commits = [d for d in os.listdir(target) if d.startswith("commit_")]
     assert len(commits) == 1  # one live commit, superseded ones vacuumed
@@ -253,18 +252,6 @@ def test_compact_parquet_merge_target_atomic(spark, tmp_path):
     )
     vals = {r.k: r.v for r in read_merge_target(spark, target).collect()}
     assert vals[3] == "post" and len(vals) == 100
-
-
-def test_compact_parquet_merge_target_refuses_flatten(spark, tmp_path):
-    from sf_etl_spark.sinks import compact_parquet
-    from sf_etl_spark.streaming.pipelines import merge_into_partitioned_parquet
-
-    target = str(tmp_path / "merge_noflat")
-    merge_into_partitioned_parquet(
-        spark.createDataFrame([(1, "a")], "k int, v string"), ["k"], target, n_buckets=2
-    )
-    with pytest.raises(ValueError, match="merge target"):
-        compact_parquet(spark, target, partition_by=["v"])
 
 
 def test_compact_parquet_default_keeps_time_travel(spark, tmp_path):
@@ -285,7 +272,7 @@ def test_compact_parquet_default_keeps_time_travel(spark, tmp_path):
     upd = spark.range(0, 20, 3).select(F.col("id").alias("k"), F.lit("v1").alias("v"))
     merge_into_partitioned_parquet(upd, ["k"], target, n_buckets=2)
 
-    compact_parquet(spark, target, target_rows_per_file=1000)  # no vacuum
+    compact_parquet(spark, target)  # no vacuum
 
     # pre-compaction snapshots still resolvable
     assert list_merge_versions(spark, target) == [1, 2, 3]

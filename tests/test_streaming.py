@@ -61,7 +61,7 @@ def test_session_stream_matches_batch(spark, sf_dir, staged):
 def test_append_mode_emits_closed_windows_only(spark, staged):
     """Append mode + watermark: only windows older than the final
     watermark are emitted — late-data discipline, not a bug."""
-    plan = stream_tumbling_agg(events_stream(spark, staged), watermark="10 minutes")
+    plan = stream_tumbling_agg(events_stream(spark, staged))
     name, _ = run_to_memory_table(plan, output_mode="append")
     got = spark.table(name)
     # every emitted row is final (matches the complete-mode result)
@@ -438,7 +438,7 @@ def test_fold_into_rollup_monoid_semantics(spark, tmp_path):
         [("a", 3, 7.5), ("c", 1, 2.0)], "k string, n bigint, mx double"
     )
     for b in (b1, b2):
-        fold_into_rollup(b, ["k"], {"n": "sum", "mx": "max"}, store, n_buckets=2)
+        fold_into_rollup(b, ["k"], {"n": "sum", "mx": "max"}, store)
     got = {
         r.k: (r.n, r.mx)
         for r in read_merge_target(spark, store).drop("_kbucket").collect()

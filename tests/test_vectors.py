@@ -8,6 +8,7 @@ oracles replay. PQ: the same codes and ADC distance bits as the DuckDB
 from __future__ import annotations
 
 import os
+import re
 import struct
 
 import duckdb
@@ -34,7 +35,7 @@ from sf_etl_spark.queries.similarity import (
     _vec,
     exact_cosine_pairs,
 )
-from sf_etl_spark.sources import load_table
+from sf_etl_spark.sources import TABLES, load_table
 from tests.oracle_compare import compare_query
 
 #: the benchmark's sf0.1 fixture: 2,000 embeddings
@@ -142,7 +143,7 @@ def test_sql_fold_cosine_is_null_on_zero_norm(spark):
     )
     n = e.select("vec_id", _vec().alias("v"), _norm(_vec()).alias("nm"))
     cand = spark.createDataFrame([(1, 2), (1, 3), (3, 3)], "vec_a bigint, vec_b bigint")
-    got = [tuple(r) for r in exact_cosine_pairs(n, cand, threshold=-1.0).collect()]
+    got = [tuple(r) for r in exact_cosine_pairs(n, cand).collect()]
     assert got == [(1, 2, 1.0)]
     for qid, want in ((1, {1: 1.0, 2: 1.0, 3: None}), (3, {1: None, 2: None, 3: None})):
         q = n.filter(F.col("vec_id") == qid).select(F.col("v").alias("qv"), F.col("nm").alias("qn"))
@@ -246,19 +247,54 @@ def test_pq_kernel_on_empty_arrow_batch():
     assert vectors._pq_adc(codes, np.ones((5, 2, 3))).shape == (5, 0)
 
 
-def test_int8_quantize_zero_vector_matches_oracle_under_ansi(spark, sf_dir, tmp_path):
+#: the vector the zero-vector tests zero: not a seed centroid (1..16),
+#: a query (0) or an evaluation query (0, 10, ..., 40)
+ZERO_ID = 123
+
+
+def _reads_only_embeddings(sql: str) -> bool:
+    return {t for t in TABLES if re.search(rf"\b{t}\b", sql, re.I)} == {"embeddings"}
+
+
+#: every lane whose oracle reads only the embeddings table
+EMBEDDINGS_LANES = sorted(
+    n for n, s in all_queries().items() if s.oracle and _reads_only_embeddings(s.oracle)
+)
+
+
+@pytest.fixture(scope="module")
+def zeroed(sf_dir, tmp_path_factory):
+    """(dir, DuckDB connection) over a copy of the fixture's embeddings
+    with vector ZERO_ID zeroed."""
+    out = tmp_path_factory.mktemp("zeroed")
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+    ids = t.column("vec_id").to_pylist()
+    emb = t.column("embedding").to_pylist()
+    i = ids.index(ZERO_ID)
+    emb[i] = [0.0] * len(emb[i])
+    col = t.schema.get_field_index("embedding")
+    t = t.set_column(col, "embedding", pa.array(emb, type=t.schema.field("embedding").type))
+    pq.write_table(t, out / "embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{out}/embeddings.parquet')")
+    yield str(out), con
+    con.close()
+
+
+@pytest.mark.parametrize("name", EMBEDDINGS_LANES)
+def test_embeddings_lane_zero_vector_matches_oracle_under_ansi(spark, zeroed, name):
+    """A zero-norm embedding gives the DuckDB oracle's result (NULL
+    cosines, not DIVIDE_BY_ZERO) in the default ANSI session."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    spec = all_queries()[name]
+    compare_query(spark, zeroed[1], spec.fn, spec.oracle, zeroed[0])
+
+
+def test_int8_quantize_zero_vector_matches_oracle_under_ansi(spark, zeroed):
     """A zero embedding has scale 0: the int8 lane gives the DuckDB
     oracle's NULL quotients (clipped to 127) and NULL reconstruction
     cosine in the default ANSI session instead of raising."""
-    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
-    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
-    emb = t.column("embedding").to_pylist()
-    emb[3] = [0.0] * len(emb[3])
-    t = t.set_column(1, "embedding", pa.array(emb, type=t.schema.field("embedding").type))
-    pq.write_table(t, tmp_path / "embeddings.parquet")
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{tmp_path}/embeddings.parquet')")
     spec = all_queries()["embedding_quantize_int8"]
-    compare_query(spark, con, spec.fn, spec.oracle, str(tmp_path))
-    zero = spec.fn(spark, str(tmp_path)).filter(F.col("vec_id") == t.column("vec_id")[3].as_py()).first()
+    compare_query(spark, zeroed[1], spec.fn, spec.oracle, zeroed[0])
+    zero = spec.fn(spark, zeroed[0]).filter(F.col("vec_id") == ZERO_ID).first()
     assert (zero["q_min"], zero["q_max"], zero["recon_cosine"]) == (127, 127, None)
